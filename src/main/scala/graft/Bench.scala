@@ -67,29 +67,6 @@ object Bench {
     try SparkEntry.queries("q_topk_orders")(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     catch { case _: Throwable => () }
-    // OPT-IN full-battery codegen warmup (r8, SPARK_GRAFT_WARMUP=1): an
-    // untimed pass of every query at the smallest SF, JMH-style. Measured
-    // A/B on this battery it does NOT reliably beat the ~0.3 s per-query
-    // floor — the floor is per-PLAN codegen compilation, which a warmup
-    // of different plans cannot pre-compile; only whole-JVM JIT warms,
-    // and host-contention variance is larger than that gain (BASELINE.md
-    // §r8). Off by default so the driver's bench wall-clock isn't doubled
-    // for noise-level benefit; kept as a knob for quiet-host experiments.
-    val warmDir = "/root/testdata/sf0.001"
-    if (sys.env.getOrElse("SPARK_GRAFT_WARMUP", "0") == "1" &&
-        warmDir != sfDir && new java.io.File(warmDir).isDirectory) {
-      val t0 = System.nanoTime()
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-        }
-      }
-      spark.catalog.clearCache()
-      System.gc()
-      System.err.println(
-        f"[bench] codegen warmup pass: ${(System.nanoTime() - t0) / 1e9}%.1f s (untimed)")
-    }
     // untimed setup: one-time index builds — the timed queries measure
     // the product paths (persistent stamp + stats-pruned filter; IVF
     // partition-pruned probe), not index construction

@@ -9,9 +9,9 @@ import graft.core._
   * equivalent of the reference's `CdlFS` (reference:
   * crates/cdl-fs/src/lib.rs:60-190).
   *
-  * The table is a parquet directory at `<dataset-root>/rootfs`, registered
-  * lazily as temp view `rootfs` on first query (mirroring the lazy
-  * `ctx.register_table(DIR_ROOTFS, …)` at crates/cdl-fs/src/lib.rs:112-118).
+  * The table is a parquet directory at `<dataset-root>/rootfs`, read with the
+  * fixed [[RootFs.schema]] plus `p0` from its paths (a column of another
+  * physical type fails at scan time) and registered as temp view `rootfs`.
   * All queries are declarative Spark SQL / DataFrame plans: Catalyst pushes
   * listing filters (`parent = …`, `size IS NOT NULL`) and column pruning
   * down to the parquet scan, so a listing never reads the `data` column's
@@ -46,17 +46,17 @@ final class CdlFs(
     if (root.dataset.scheme == Scheme.Local) tableLocation
     else CachedFileSystem.route(tableLocation)
 
-  /** Physical table incl. the `p0` partition column when present (tables
-    * written before partitioning, or by external writers, lack it). */
-  private def fullTable: DataFrame = spark.read.parquet(scanLocation)
+  /** Every rootfs scan: the pinned schema needs no inference job, and a
+    * column a file lacks (an external writer's `row_id`) reads as null. A
+    * list of files yields exactly the pinned columns (no `p0`). */
+  private def readRootfs(paths: String*): DataFrame =
+    spark.read.schema(RootFs.schema).parquet(paths: _*)
 
-  private def canonical(df: DataFrame): DataFrame = {
-    // tables written by external engines may predate the row_id column
-    val withRid =
-      if (df.columns.contains("row_id")) df
-      else df.withColumn("row_id", lit(null).cast("long"))
-    withRid.select(RootFs.schema.fieldNames.toIndexedSeq.map(col(_)): _*)
-  }
+  /** Physical table, listed on every call; `p0` when the paths carry it. */
+  private def fullTable: DataFrame = readRootfs(scanLocation)
+
+  private def canonical(df: DataFrame): DataFrame =
+    df.select(RootFs.schema.fieldNames.toIndexedSeq.map(col(_)): _*)
 
   private def hconf = spark.sparkContext.hadoopConfiguration
 
@@ -129,7 +129,7 @@ final class CdlFs(
     val routed =
       if (root.dataset.scheme == Scheme.Local) files
       else files.map(CachedFileSystem.route)
-    canonical(spark.read.parquet(routed: _*))
+    readRootfs(routed: _*)
   }
 
   /** Listing projection: metadata columns + BLANKED `data` (`x'' AS data`) so
@@ -328,7 +328,7 @@ final class CdlFs(
     // rewrite and the retire step below agree even if a concurrent
     // append lands mid-compact (its files survive untouched)
     val base = tableLocation.stripSuffix("/")
-    val src = canonical(spark.read.parquet(srcFiles.map(f => s"$base/$f"): _*))
+    val src = readRootfs(srcFiles.map(f => s"$base/$f"): _*)
     val clustered =
       if (zorderBy.nonEmpty)
         // Morton-code range write in place of the stamp/path-order range
@@ -472,8 +472,7 @@ final class CdlFs(
     }.toMap
     val pred = expr(condition)
     val keepPred = !coalesce(pred, lit(false))
-    def readFiles(rels: Seq[String]): DataFrame =
-      canonical(spark.read.parquet(rels.map(r => s"$base/$r"): _*))
+    def readFiles(rels: Seq[String]): DataFrame = readRootfs(rels.map(r => s"$base/$r"): _*)
     // 1. ONE pruned scan finds (touched file, matching rows): the
     //    predicate reaches the parquet scan, so files whose stats
     //    exclude it are never read. O(touched files) driver list —

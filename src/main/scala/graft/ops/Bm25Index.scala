@@ -371,11 +371,11 @@ object Bm25Index {
     // the old checkpoint job + separate bps-collect job. pmod over the
     // COLLECTED hash is bit-identical to bpOf (same xxhash64 value,
     // same modulus arithmetic).
-    val qtermRows = queries.select(col(queryIdCol).as("query_id"),
+    val qtermDf = queries.select(col(queryIdCol).as("query_id"),
         explode(TextAnalysis.tokens(col(queryCol))).as("term"))
       .distinct()
       .withColumn("__th", xxhash64(col("term")))
-      .collect()
+    val qtermRows = qtermDf.collect()
     // never-indexed query terms drop DRIVER-SIDE via the term bloom
     // (r14 verdict #5): without it they'd open their hashed partitions
     // to find nothing — a miss is definitively absent (no false
@@ -395,11 +395,10 @@ object Bm25Index {
     val bps = keptRows
       .map(r => (((r.getLong(2) % parts) + parts) % parts).toInt)
       .distinct.toIndexedSeq
-    val qterms = {
-      import spark.implicits._
-      keptRows.map(r => (r.getLong(0), r.getString(1))).toSeq
-        .toDF("query_id", "term")
-    }
+    // the kept rows under their ORIGINAL schema, as IvfIndex does with
+    // qcells: query_id keeps the caller's type and nullability
+    val qterms = spark.createDataFrame(
+      java.util.Arrays.asList(keptRows: _*), qtermDf.schema).drop("__th")
     // SEQLOCK read (r15 verdict #6): the rename-fence keeps a racing
     // retraction's partitions whole-old-or-whole-new, but a listing
     // taken inside its two-rename window still misses the partition,

@@ -3,8 +3,10 @@ package graft.fs
 import java.nio.file.{Files, Paths}
 
 import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions.col
-import graft.core.{DatasetCatalog, GlobalPath}
+import graft.core.{DatasetCatalog, GlobalPath, RootFs}
 
 /** End-to-end ingest → query → export over a fixture tree (FIXTURES §A2):
   * the reference `cdlake_cp.py` contract. */
@@ -323,5 +325,80 @@ class CdlFsSpec extends SparkSuite {
     fs.copyTo(dst)
     val fs2 = CdlFs.open(spark, fs.catalog, dst)
     assert(fs2.table.count() == 7)
+  }
+
+  /** The parquet scans a frame plans (planning runs no job). */
+  private def scans(df: DataFrame): Seq[FileSourceScanExec] =
+    df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+
+  test("flat external table: no p0 dirs, no row_id column, reads through the pinned schema") {
+    val fsF = CdlFs.open(spark, DatasetCatalog(),
+      GlobalPath.parse(s"$root/ds-flat").toOption.get)
+    // an external engine's table: the 11 reference columns, no row_id,
+    // written straight into tableLocation with no partition directories
+    spark.sql(
+      """SELECT * FROM VALUES
+        |  ('b.txt', '/', 2L, 0L, 0L, 2L, 'bb'),
+        |  ('a.txt', '/', 1L, 0L, 0L, 1L, 'a'),
+        |  ('c.bin', '/d', 5L, 0L, 0L, 3L, 'ccc'),
+        |  ('c.bin', '/d', NULL, 1L, 3L, 2L, 'cc')
+        |  AS t(name, parent, size, chunk_id, chunk_offset, chunk_size, d)""".stripMargin)
+      .selectExpr("name", "parent", "CAST(NULL AS TIMESTAMP) atime",
+        "CAST(NULL AS TIMESTAMP) ctime", "CAST(NULL AS TIMESTAMP) mtime",
+        "CAST(420 AS INT) mode", "size", "chunk_id", "chunk_offset",
+        "chunk_size", "CAST(d AS BINARY) data")
+      .write.parquet(fsF.tableLocation)
+    assert(fsF.table.columns.toSeq == RootFs.schema.fieldNames.toSeq)
+    assert(fsF.table.filter(col("row_id").isNull).count() == 4)
+    def names(df: DataFrame) = df.collect().map(_.getAs[String]("name")).toSeq
+    assert(names(fsF.readDir("/")) == Seq("a.txt", "b.txt"))
+    assert(names(fsF.readDir("/d")) == Seq("c.bin"))
+    assert(names(fsF.readDirAll()) == Seq("a.txt", "b.txt", "c.bin"))
+    assert(fsF.sql("SELECT count(*) FROM rootfs").collect().head.getLong(0) == 4)
+    assert(fsF.sql("SELECT sum(len(data)) FROM rootfs WHERE parent = '/d'")
+      .collect().head.getLong(0) == 5)
+    // fallback ordinal, (parent, name, chunk_id) order: a, b, c#0, c#1
+    assert(fsF.take(Seq(1L, 3L), Seq("name", "chunk_id")).orderBy("row_id")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq ==
+      Seq((1L, "b.txt", 0L), (3L, "c.bin", 1L)))
+    assert(scans(fsF.readDir("/")).forall(_.relation.partitionSchema.isEmpty))
+    // an ingested table keeps its p0 partition column, and readDir
+    // prunes on it
+    val partitioned = scans(fs.readDir("/"))
+    assert(partitioned.map(_.relation.partitionSchema.fieldNames.toSeq) == Seq(Seq("p0")))
+    assert(partitioned.head.partitionFilters.exists(_.references.exists(_.name == "p0")))
+  }
+
+  test("building read frames on a committed table starts no Spark job") {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val version = fs.versions.last // the lazy fixture ingests (jobs) first
+    val group = "cdlfs-build-no-jobs"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => jobs.add(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build")
+      val built = Seq(fs.readDir("/"), fs.readDirAll(),
+        fs.readFilesByCondition("name = 'small.txt'"),
+        fs.sql("SELECT count(*) FROM rootfs"), fs.table, fs.tableAt(version))
+      // fence: the listener bus delivers job starts in order, so every
+      // job the builds started is recorded before the fence's own start
+      sc.setJobGroup(group, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.contains("fence") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(jobs.asScala.toSeq == Seq("fence"))
+      // a file-list read (tableAt) carries exactly the pinned columns
+      assert(built.last.columns.toSeq == RootFs.schema.fieldNames.toSeq)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

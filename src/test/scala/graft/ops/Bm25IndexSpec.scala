@@ -27,9 +27,21 @@ class Bm25IndexSpec extends SparkSuite {
   test("index search equals the corpus-scan operator exactly") {
     val d = dir("parity")
     assert(Bm25Index.indexBatch(docs, d) == docs.count())
-    val got = rows(Bm25Index.search(spark, d, queries, k = 5))
-    val want = rows(Bm25.search(docs, queries, k = 5))
-    assert(got == want && got.nonEmpty)
+    // query_id keeps the caller's type and nullability: long, int,
+    // string, and a nullable long carrying a NULL id
+    val texts = Seq("hash join merge", "scan filter column")
+    val byType = Seq(queries,
+      texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("query_id", "query"),
+      texts.zipWithIndex.map { case (t, i) => (s"q$i", t) }.toDF("query_id", "query"),
+      texts.zip(Seq(Some(7L), None)).map(_.swap).toDF("query_id", "query"))
+    for (q <- byType) {
+      val search = Bm25Index.search(spark, d, q, k = 5)
+      assert(search.schema("query_id") == q.schema("query_id"))
+      val got = rows(search)
+      val want = rows(Bm25.search(docs, q, k = 5))
+      assert(got == want && got.nonEmpty)
+      assert(search.select("query_id").distinct().count() == 2)
+    }
   }
 
   test("incremental appends equal one build; replays append nothing") {
@@ -333,7 +345,8 @@ class Bm25IndexSpec extends SparkSuite {
     Bm25Index.indexBatch((stable +: churn).toDF("doc_id", "text"), d)
     val q = Seq((0L, "anchor")).toDF("query_id", "query")
     @volatile var stop = false
-    @volatile var churnError: Option[Throwable] = None
+    // every churn throwable, with whether it came after `stop`
+    @volatile var churnError: Option[(Throwable, Boolean)] = None
     val churner = new Thread(() => {
       try {
         // job group (thread-local): lets teardown cancel exactly this
@@ -346,10 +359,7 @@ class Bm25IndexSpec extends SparkSuite {
           Bm25Index.indexBatch(df, d)
         }
       } catch {
-        // post-stop exceptions (including a teardown cancelJobGroup) are
-        // orderly shutdown, not churn failures — only pre-stop errors
-        // indict the store machinery under race
-        case t: Throwable => if (!stop) churnError = Some(t)
+        case t: Throwable => churnError = Some((t, stop))
       }
     }, "bm25-churner")
     churner.start()
@@ -377,7 +387,17 @@ class Bm25IndexSpec extends SparkSuite {
       }
     }
     assert(!churner.isAlive, "churner thread did not terminate")
-    assert(churnError.isEmpty, s"churner failed: $churnError")
+    // after `stop`, only the teardown's own cancellation is orderly: a
+    // SparkException from cancelJobGroup("bm25-churn") or an interrupt
+    def cancellation(t: Throwable): Boolean =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).exists {
+        case _: InterruptedException => true
+        case e: org.apache.spark.SparkException =>
+          String.valueOf(e.getMessage).contains("cancelled job group bm25-churn")
+        case _ => false
+      }
+    assert(churnError.forall { case (t, afterStop) => afterStop && cancellation(t) },
+      s"churner failed: $churnError")
     // settled state is consistent: the stable doc still searches
     val fin = Bm25Index.search(spark, d, q, k = 30)
       .select("doc_id").collect().map(_.getLong(0)).toSet
