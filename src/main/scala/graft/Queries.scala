@@ -208,6 +208,11 @@ object Queries {
         (lit(1) + col("l_tax")), 6).as("charge"),
       round(col("l_extendedprice") * col("l_discount"), 4).as("disc_amt"))
 
+  /** [[projArithProjected]], totally ordered. Building the frame runs an
+    * eager `localCheckpoint`: it executes the scan and projection, pins
+    * the checkpoint blocks until the frame is garbage-collected, and
+    * truncates lineage, so the frame cannot recompute after an executor
+    * loss. */
   def qProjArith(s: SparkSession, dir: String): DataFrame =
     projArithProjected(s, dir)
       // materialize BEFORE the global sort (r21, guide §2.5): the range
@@ -455,6 +460,9 @@ object Queries {
       .agg(count(lit(1)).as("n"), round(sum("o_totalprice"), 2).as("total"))
       .orderBy("yr", "mo")
 
+  /** Math functions over lineitem, totally ordered. Like
+    * [[qProjArith]], building the frame runs an eager `localCheckpoint`
+    * (executes the scan, pins blocks until GC, truncates lineage). */
   def qMath(s: SparkSession, dir: String): DataFrame =
     rd(s, dir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"),

@@ -135,28 +135,37 @@ final class CdlFs(
   /** Listing projection: metadata columns + BLANKED `data` (`x'' AS data`) so
     * listings never ship payloads (reference list_by,
     * crates/cdl-fs/src/lib.rs:120-131). `size IS NOT NULL` keeps only
-    * chunk-0 rows — one row per logical file. */
-  private def listing(df: DataFrame): DataFrame =
+    * chunk-0 rows — one row per logical file. Sorted by `keys` in ONE
+    * partition: the scan stays parallel, only the matched, blanked rows
+    * shuffle, and one task sorts them (spilling to disk if it must). That
+    * is the single ordered stream the reference's per-partition sorts +
+    * merge return. */
+  private def listing(df: DataFrame, keys: String*): DataFrame =
     df.filter(col("size").isNotNull)
       .withColumn("data", lit(Array.emptyByteArray))
+      .repartition(1)
+      .sortWithinPartitions(keys.map(col(_).asc): _*)
 
   /** List one directory, files only, name-sorted (reference `read_dir`,
     * crates/cdl-fs/src/lib.rs:84-89). On a partitioned table the filter
     * hits the `p0` partition key first, so listing one directory of a
-    * 100 TB table scans only that top-level segment's partition. */
+    * 100 TB table scans only that top-level segment's partition. The sort
+    * runs in one partition ([[listing]]), not as a global `orderBy`: a
+    * range sort's sampler re-ran the filtered scan before its shuffle
+    * scanned it again, so a listing took 3 Spark jobs; it now takes 2
+    * (shuffle map + result). */
   def readDir(parent: String): DataFrame = {
     val ft = fullTable
     val seg = parent.split("/").find(_.nonEmpty).getOrElse("_root")
     val pruned =
       if (ft.columns.contains("p0")) ft.filter(col("p0") === seg) else ft
-    listing(canonical(pruned).filter(col("parent") === parent))
-      .orderBy(col("name").asc)
+    listing(canonical(pruned).filter(col("parent") === parent), "name")
   }
 
   /** Recursive listing, (parent, name)-sorted (reference `read_dir_all`,
-    * crates/cdl-fs/src/lib.rs:91-95). */
-  def readDirAll(): DataFrame =
-    listing(table).orderBy(col("parent").asc, col("name").asc)
+    * crates/cdl-fs/src/lib.rs:91-95); 2 Spark jobs, sorted in one
+    * partition like [[readDir]]. */
+  def readDirAll(): DataFrame = listing(table, "parent", "name")
 
   /** Arbitrary WHERE pushdown returning full records including payloads
     * (reference `read_files_by_condition`, crates/cdl-fs/src/lib.rs:97-108;

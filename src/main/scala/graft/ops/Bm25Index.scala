@@ -375,7 +375,7 @@ object Bm25Index {
         explode(TextAnalysis.tokens(col(queryCol))).as("term"))
       .distinct()
       .withColumn("__th", xxhash64(col("term")))
-    val qtermRows = qtermDf.collect()
+    val qtermRows = IncrementalDedup.collectPrelude(qtermDf, s"bm25 search on $dir")
     // never-indexed query terms drop DRIVER-SIDE via the term bloom
     // (r14 verdict #5): without it they'd open their hashed partitions
     // to find nothing — a miss is definitively absent (no false

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Incremental deduplication across corpus appends — the shape a 100 TB
@@ -2189,4 +2189,21 @@ object IncrementalDedup {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), false)
   }
 
+  /** Row bound on a search's query-side prelude (bm25 query terms, IVF
+    * probed cells), which is collected to the driver and broadcast into
+    * the scoring joins. */
+  private[ops] val MaxPreludeRows = 1000000
+
+  /** Collect a search prelude, failing with a clear message above `max`
+    * rows before anything is broadcast or scored. The check reads the
+    * collect's own result, so it starts no Spark job; the collect itself
+    * stays capped by `spark.driver.maxResultSize`. */
+  private[ops] def collectPrelude(
+      df: DataFrame, what: String, max: Int = MaxPreludeRows): Array[Row] = {
+    val rows = df.collect()
+    require(rows.length <= max,
+      s"$what: ${rows.length} query-side rows exceed the $max-row bound " +
+        "on what a search collects to the driver; split the query batch")
+    rows
+  }
 }

@@ -645,7 +645,7 @@ object IvfIndex {
     // blind to the captured file listing — served the dead generation's
     // files to every later attempt). A local relation cannot poison
     // anything: each retry recomputes it from live listings.
-    val qcellRows = qcells.collect()
+    val qcellRows = IncrementalDedup.collectPrelude(qcells, s"ivf search on $indexDir")
     val qcellsLocal: DataFrame = broadcast(
       spark.createDataFrame(
         java.util.Arrays.asList(qcellRows: _*), qcells.schema))

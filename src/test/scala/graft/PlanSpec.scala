@@ -45,6 +45,8 @@ class PlanSpec extends SparkSuite {
     val p = formatted(fs.readDirAll())
     val readSchema = p.linesIterator.filter(_.contains("ReadSchema")).mkString
     assert(!readSchema.contains("data"), readSchema)
+    // sorted in one partition: no range sort, whose sampler re-runs the scan
+    assert(!planOf(fs.readDirAll()).contains("rangepartitioning"), p)
   }
 
   test("read_dir prunes partitions on a partitioned table") {
@@ -60,6 +62,7 @@ class PlanSpec extends SparkSuite {
     val p = formatted(fs.readDir("/deep/x"))
     val pf = p.linesIterator.filter(_.contains("PartitionFilters")).mkString
     assert(pf.contains("p0"), p)
+    assert(!planOf(fs.readDir("/deep/x")).contains("rangepartitioning"), p)
     assert(fs.readDir("/deep/x").collect().map(_.getAs[String]("name")).toSeq ==
       Seq("inner.txt"))
   }

@@ -369,11 +369,14 @@ class CdlFsSpec extends SparkSuite {
     assert(partitioned.head.partitionFilters.exists(_.references.exists(_.name == "p0")))
   }
 
-  test("building read frames on a committed table starts no Spark job") {
+  /** What `body` returns, and the descriptions of the Spark jobs it
+    * starts. A fence job follows the body: the listener bus delivers job
+    * starts in order, so every job the body started is recorded before
+    * the fence's own start. */
+  private def jobsOf[T](body: => T): (T, Seq[String]) = {
     import scala.jdk.CollectionConverters._
     val sc = spark.sparkContext
-    val version = fs.versions.last // the lazy fixture ingests (jobs) first
-    val group = "cdlfs-build-no-jobs"
+    val group = "cdlfs-jobs"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
@@ -382,23 +385,67 @@ class CdlFsSpec extends SparkSuite {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "build")
-      val built = Seq(fs.readDir("/"), fs.readDirAll(),
-        fs.readFilesByCondition("name = 'small.txt'"),
-        fs.sql("SELECT count(*) FROM rootfs"), fs.table, fs.tableAt(version))
-      // fence: the listener bus delivers job starts in order, so every
-      // job the builds started is recorded before the fence's own start
+      sc.setJobGroup(group, "body")
+      val out = body
       sc.setJobGroup(group, "fence")
       sc.parallelize(Seq(1), 1).count()
       val deadline = System.currentTimeMillis() + 30000
       while (!jobs.contains("fence") && System.currentTimeMillis() < deadline)
         Thread.sleep(20)
-      assert(jobs.asScala.toSeq == Seq("fence"))
-      // a file-list read (tableAt) carries exactly the pinned columns
-      assert(built.last.columns.toSeq == RootFs.schema.fieldNames.toSeq)
+      val seen = jobs.asScala.toSeq
+      assert(seen.lastOption.contains("fence"), seen)
+      (out, seen.init)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("building read frames on a committed table starts no Spark job") {
+    val version = fs.versions.last // the lazy fixture ingests (jobs) first
+    val (built, jobs) = jobsOf(Seq(fs.readDir("/"), fs.readDirAll(),
+      fs.readFilesByCondition("name = 'small.txt'"),
+      fs.sql("SELECT count(*) FROM rootfs"), fs.table, fs.tableAt(version)))
+    assert(jobs.isEmpty, jobs)
+    // a file-list read (tableAt) carries exactly the pinned columns
+    assert(built.last.columns.toSeq == RootFs.schema.fieldNames.toSeq)
+  }
+
+  test("collecting a listing starts 2 Spark jobs: shuffle map + result, no sampler") {
+    fs.versions // the lazy fixture ingests (jobs) first
+    for (listing <- Seq(() => fs.readDir("/"), () => fs.readDirAll())) {
+      val (rows, jobs) = jobsOf(listing().collect())
+      assert(rows.nonEmpty)
+      assert(jobs.size == 2, jobs)
+    }
+  }
+
+  test("listings stay sorted across appends, files and p0 dirs") {
+    val fsO = CdlFs.open(spark, DatasetCatalog(maxChunkSize = 4),
+      GlobalPath.parse(s"$root/ds-order").toOption.get)
+    val rnd = new scala.util.Random(7)
+    // names interleave across appends (f0_0 < f0_1 < f1_0); files over 4
+    // bytes add size-NULL chunk rows the listings must drop
+    val written = for (k <- 0 until 3) yield {
+      val tree = s"$root/order$k"
+      val files = for {
+        d <- Seq("", "/a", "/a/b", "/z")
+        i <- rnd.shuffle((0 until 6).toList).take(4)
+      } yield {
+        Files.createDirectories(Paths.get(s"$tree$d"))
+        Files.write(Paths.get(s"$tree$d/f${i}_$k.txt"),
+          Array.fill[Byte](1 + rnd.nextInt(10))('x'))
+        (if (d.isEmpty) "/" else d, s"f${i}_$k.txt")
+      }
+      Ingest.run(fsO, tree)
+      files
+    }
+    val all = written.flatten
+    assert(fsO.versions == Seq(1, 2, 3))
+    def listed(df: DataFrame) = df.collect()
+      .map(r => (r.getAs[String]("parent"), r.getAs[String]("name"))).toSeq
+    assert(listed(fsO.readDirAll()) == all.sorted)
+    for (d <- Seq("/", "/a", "/a/b", "/z"))
+      assert(listed(fsO.readDir(d)) == all.filter(_._1 == d).sorted)
   }
 }

@@ -44,6 +44,15 @@ class Bm25IndexSpec extends SparkSuite {
     }
   }
 
+  test("a search prelude above its row bound fails with a clear message") {
+    val prelude = spark.range(6).toDF("query_id")
+    assert(IncrementalDedup.collectPrelude(prelude, "probe", max = 6).length == 6)
+    val e = intercept[IllegalArgumentException](
+      IncrementalDedup.collectPrelude(prelude, "probe", max = 5))
+    assert(e.getMessage.contains("probe: 6 query-side rows exceed the 5-row bound"),
+      e.getMessage)
+  }
+
   test("incremental appends equal one build; replays append nothing") {
     val d1 = dir("inc")
     val half = docs.count() / 2
