@@ -69,8 +69,15 @@ import org.apache.spark.sql.types.StructType
   * never a torn result. What is NOT protected: a blind
   * `spark.read.parquet(storeDir)` listing taken outside both the lock
   * and the seqlock on a pointer store sees only the legacy dirs —
-  * underscore prefixes hide `_parts` from partition discovery, so such
-  * a read is loudly incomplete (or empty), never silently torn.
+  * underscore prefixes hide `_parts` from partition discovery. Such a
+  * read misses every versioned generation, and it can also return rows
+  * the store no longer holds: a legacy dir a swap superseded stays on
+  * disk and listable until [[sweepGarbage]] collects it (as
+  * `prev = PrevLegacy` for the grace cycle, or hidden behind a
+  * tombstone until the tombstone's own grace expires), so a blind read
+  * after a retraction can return the retracted rows. Only the
+  * pointer-resolving reads ([[readDf]], [[readWholeInferred]]) see the
+  * committed state.
   *
   * Appends on a pointer store stage to an `_append_tmp-<pid>` dir and
   * MOVE files (never directories) into each touched partition's live

@@ -142,14 +142,7 @@ object Components {
           count(when(col("component") < col("__prev"), lit(1))).as("lowered"))
         .select("v", "component")
         .transform(ckpt)
-      val lowered = obs.get("lowered").asInstanceOf[Long]
-      // per-round telemetry for regression triage (r11 verdict: an
-      // artifact-level CPU inflation on this fixpoint could not be
-      // attributed without round counts) — stderr, env-gated, costless
-      // when off because the metric rode the checkpoint pass anyway
-      if (sys.env.get("GRAFT_COMPONENTS_LOG").contains("1"))
-        System.err.println(s"[components] round=$iter lowered=$lowered")
-      done = lowered == 0L
+      done = obs.get("lowered").asInstanceOf[Long] == 0L
       if (done) {
         labels = stepped
       } else {

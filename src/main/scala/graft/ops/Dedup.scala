@@ -105,10 +105,11 @@ object Dedup {
       graft.functions.SketchExprs.gramHashes(col(textCol), n, distinct = true)
     // one row per (doc, distinct gram) with the doc's gram count riding
     // — the posting-row trade the incremental variant already uses
-    // (ngramBatchLocked): sizes are in hand at the pair join, so the two
-    // O(corpus) size-fetch joins (each of which re-evaluated gramHashes
-    // over the full corpus) disappear from the plan — 2 Exchanges and 2
-    // gram passes fewer for 8 bytes/posting-row of shuffle width.
+    // (IncrementalDedup.ngramBatch): sizes are in hand at the pair join,
+    // so the two O(corpus) size-fetch joins (each of which re-evaluated
+    // gramHashes over the full corpus) disappear from the plan — 2
+    // Exchanges and 2 gram passes fewer for 8 bytes/posting-row of
+    // shuffle width.
     // fanOut: the gram hashing is the CPU-heavy pass; an under-parallel
     // scan (one small file) must not serialize it into one task
     val sh = Scale.fanOutForCompute(docs, col("doc_id"))

@@ -386,13 +386,8 @@ object IncrementalComponents {
     // empty, so the next cycle's driver-side collect is bounded by
     // cap + one batch's merges. (r21: the counts ride actions this
     // cycle already runs — the dedicated parquet re-count job is gone.)
-    if (mergeLogCap > 0 && mmRows + dethRows > mergeLogCap) {
-      val folded = compactLocked(spark, storeDir)
-      if (sys.env.contains("GRAFT_COMPONENTS_LOG"))
-        System.err.println(
-          s"[components] merge-log cap $mergeLogCap hit: folded, " +
-            s"$folded labels rewritten")
-    }
+    if (mergeLogCap > 0 && mmRows + dethRows > mergeLogCap)
+      compactLocked(spark, storeDir)
 
     // the batch view: resolved labels for this batch's vertices.
     // comp already holds the final canonical for every batch vertex —
@@ -467,11 +462,10 @@ object IncrementalComponents {
       labels0.filter(col("bp").isin(bps: _*))).count()
     val ownOf = Retract.semiOn(spark, ids, "v")
     val namedOf = Retract.semiOn(spark, ids, "component")
-    // allowPointer (r18 verdict #1): labels(), the fold, and the batch
-    // cycle all read this table through the pointer-aware readStoreRaw,
-    // so rename-less schemes commit this swap by pointer flip with NO
-    // override (and the fold itself commits by pointer too — see
-    // compactLocked)
+    // labels(), the fold, and the batch cycle all read this table
+    // through the pointer-aware readStoreRaw, so rename-less schemes
+    // commit this swap by pointer flip (and the fold itself commits by
+    // pointer too — see compactLocked)
     Retract.rewriteTouched(spark, lp, "bp",
       df => ownOf(df).unionByName(namedOf(df)),
       df => {

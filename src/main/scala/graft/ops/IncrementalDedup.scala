@@ -156,11 +156,6 @@ object IncrementalDedup {
   private[ops] def bpOf(parts: Int, keys: Column*): Column =
     pmod(xxhash64(keys: _*), lit(parts)).cast("int")
 
-  /** Distinct store partitions the batch touches — bounded by the
-    * store's partition count, so the collect is a small driver result. */
-  private def touched(batchRows: DataFrame): Seq[Int] =
-    batchRows.select("bp").distinct().collect().map(_.getInt(0)).toIndexedSeq
-
   /** The `collect_set(bp)` observe metric as partition ids. The metric
     * rides the batch checkpoint's own materialization (the Components
     * convergence pattern), so warm cycles get their touched-partition
@@ -182,10 +177,6 @@ object IncrementalDedup {
       case AdoptOrDefaultStoreParts => Some(mParts.getOrElse(DefaultStoreParts))
       case r                        => Some(r)
     }
-
-  private[ops] def knownParts(
-      spark: SparkSession, dir: String, requested: Int): Option[Int] =
-    knownPartsFrom(manifestParts(spark, dir), requested)
 
   /** Store geometry manifest (`_graft_store.json`, `_`-prefixed so
     * parquet discovery ignores it): a store is only readable under the
@@ -411,9 +402,19 @@ object IncrementalDedup {
       textCol: String = "text",
       storeParts: Int = AutoStoreParts,
       compactFiles: Int = 0): DataFrame =
-    graft.fs.StoreLock.withLock(storeDir,
-      docsNew.sparkSession.sparkContext.hadoopConfiguration) {
-      exactBatchLocked(docsNew, storeDir, textCol, storeParts, compactFiles)
+    StoreCycle.run(docsNew, storeDir, storeParts, compactFiles) { mf =>
+      val (binKeys, encMeta) = keyEncodingOf(mf)
+      val digestExpr =
+        if (binKeys) unhex(md5(col(textCol))) else md5(col(textCol))
+      // no fanOut here (measured): one md5 per doc is too cheap to repay
+      // the spread's exchange + per-task overhead at any batch size the
+      // under-split gate fires on — A/B'd at sf0.1, fan-out cost ~0.6-1.4s
+      // auto sizing sees one row per batch doc ≈ one distinct digest
+      StoreCycle.Family(StoreLayout.named("exact"),
+        docsNew.filter(col(textCol).isNotNull)
+          .select(col("doc_id"), digestExpr.as("digest")),
+        s"digest ${if (binKeys) "BINARY" else "STRING"}, keep_doc_id BIGINT, bp INT",
+        _ => encMeta, b => exactStep(b, binKeys))
     }
 
   /** Key-encoding resolution (r13 verdict #3): the md5-derived store
@@ -426,10 +427,9 @@ object IncrementalDedup {
     * forever; `rebuildStore` migrates it to binary. Returns
     * (binary?, meta fragment for checkOrWriteMeta). */
   private[ops] def keyEncodingOf(
-      spark: SparkSession, dir: String,
-      manifestExists: Boolean): (Boolean, Map[String, String]) = {
-    val mEnc =
-      if (manifestExists) manifestValue(spark, dir, "key_encoding") else None
+      manifest: Map[String, String]): (Boolean, Map[String, String]) = {
+    val manifestExists = manifest.contains("store_parts")
+    val mEnc = manifest.get("key_encoding")
     val bin = mEnc.map(_ == "binary").getOrElse(!manifestExists)
     val meta =
       if (manifestExists && mEnc.isEmpty) Map.empty[String, String]
@@ -437,47 +437,14 @@ object IncrementalDedup {
     (bin, meta)
   }
 
-  private def exactBatchLocked(
-      docsNew: DataFrame,
-      storeDir: String,
-      textCol: String,
-      requestedParts: Int,
-      compactFiles: Int = 0): DataFrame = {
-    val spark = docsNew.sparkSession
-    val mParts = manifestParts(spark, storeDir)
-    val (binKeys, encMeta) = keyEncodingOf(spark, storeDir, mParts.isDefined)
-    val digestExpr =
-      if (binKeys) unhex(md5(col(textCol))) else md5(col(textCol))
-    // no fanOut here (measured): one md5 per doc is too cheap to repay
-    // the spread's exchange + per-task overhead at any batch size the
-    // under-split gate fires on — A/B'd at sf0.1, fan-out cost ~0.6-1.4s
-    val digestedRaw = docsNew
-      .filter(col(textCol).isNotNull)
-      .select(col("doc_id"), digestExpr.as("digest"))
-    // auto sizing sees one row per batch doc ≈ one distinct digest
-    val (digested, touchedParts, storeParts, _) = resolveGeometry(
-      knownPartsFrom(mParts, requestedParts),
-      digestedRaw, Seq(col("digest")))
-    // doc→bp retraction index: stamped at creation, adopted thereafter
-    // (keyed keep_doc_id — the column takedown retraction matches)
-    val mfE = storeManifest(spark, storeDir)
-    val docIdx = mParts.isEmpty || docIndexEnabled(mfE)
-    val dpParts = mfE.get("doc_index_parts").map(_.toInt)
-      .getOrElse(dpPartsFor(storeParts))
-    checkOrWriteMeta(spark, storeDir,
-      Map("variant" -> "exact", "store_parts" -> storeParts.toString) ++
-        encMeta ++
-        (if (mParts.isEmpty) Map("doc_index" -> "1",
-          "doc_index_parts" -> dpParts.toString) else Map.empty))
-    val read = readStore(spark, storeDir,
-      s"digest ${if (binKeys) "BINARY" else "STRING"}, keep_doc_id BIGINT, bp INT")
-    val store =
-      if (read._2) prune(read._1, touchedParts) else read._1.drop("bp")
+  /** The exact family's compute: verdicts against the pruned store,
+    * doc-index pairs from the keepers, the novel digests to append. */
+  private def exactStep(b: StoreCycle.Batch, binKeys: Boolean): StoreCycle.Step = {
     // batch-internal keeper: min doc_id per digest within the batch
-    val batchKeep = digested.groupBy("digest")
+    val batchKeep = b.rows.groupBy("digest")
       .agg(min("doc_id").as("batch_keep"))
-    val out = digested.drop("bp")
-      .join(store.withColumnRenamed("keep_doc_id", "store_keep"),
+    val out = b.rows.drop("bp")
+      .join(b.store.withColumnRenamed("keep_doc_id", "store_keep"),
         Seq("digest"), "left")
       .join(batchKeep, Seq("digest"))
       // `store_keep =!= doc_id`: on a RETRIED batch the store already
@@ -490,45 +457,36 @@ object IncrementalDedup {
             col("batch_keep"))
           .otherwise(lit(null).cast("long")))
       .select("doc_id", "digest", "dup_of")
-      // materialize BEFORE the store append below: the plan reads the
-      // store directory, and a lazy frame re-evaluated after the append
-      // would see the batch's own digests and mark every doc a dup.
+      // materialize BEFORE the store append: the plan reads the store
+      // directory, and a lazy frame re-evaluated after the append would
+      // see the batch's own digests and mark every doc a dup.
       // (Unconditional: an A/B run skipping it on creation cycles —
       // where the store side is a local empty relation the append can't
       // invalidate — measured NEUTRAL-to-WORSE at the gate; deferring a
       // creation batch's verdict join into the caller's action just
       // moves the work under someone else's plan.)
       .localCheckpoint()
-    // retraction index BEFORE the store rows it covers (superset rule):
-    // pairs from the CHECKPOINTED verdicts — a retried batch re-derives
-    // the same pairs, and appendDocIndex tolerates the duplicates (its
-    // per-batch distinct doesn't anti-join the stored index; repeats are
-    // erased by retractDocIndex, and the distinct-bps consult absorbs
-    // them as pruning cost only)
-    if (docIdx) appendDocIndex(
-      out.filter(col("dup_of").isNull)
-        .select(col("doc_id").as("keep_doc_id"),
-          bpOf(storeParts, col("digest")).as("bp")),
-      storeDir, "keep_doc_id", dpParts)
-    // persist the batch's NOVEL digests (one keeper per new digest);
-    // anti-join the store so a RETRIED batch — whose keepers stay novel
-    // in the verdicts but whose digests are already stored — appends
-    // nothing (idempotent re-runs; equal digests share a bp, so the
-    // pruned view is a complete witness for the anti-join)
-    appendStore(
-      out.filter(col("dup_of").isNull)
-        .join(store.select("digest"), Seq("digest"), "left_anti")
+    val keepers = out.filter(col("dup_of").isNull)
+    StoreCycle.Step(
+      // the caller-facing digest is hex STRING regardless of the at-rest
+      // encoding (lower(hex(binary)) ≡ md5 hex — bit-exact, and the gate's
+      // DuckDB oracle never changes); a map-only projection over the
+      // checkpointed verdicts
+      if (binKeys) out.withColumn("digest", lower(hex(col("digest")))) else out,
+      // index pairs from the CHECKPOINTED verdicts — a retried batch
+      // re-derives the same pairs, and appendDocIndex tolerates the
+      // duplicates (its per-batch distinct doesn't anti-join the stored
+      // index; repeats are erased by retractDocIndex, and the
+      // distinct-bps consult absorbs them as pruning cost only)
+      keepers.select(col("doc_id").as("keep_doc_id"), b.bp.as("bp")),
+      // the batch's NOVEL digests (one keeper per new digest); the
+      // anti-join makes a RETRIED batch — whose keepers stay novel in the
+      // verdicts but whose digests are already stored — append nothing
+      // (equal digests share a bp, so the pruned view is a complete
+      // witness)
+      keepers.join(b.store.select("digest"), Seq("digest"), "left_anti")
         .select(col("digest"), col("doc_id").as("keep_doc_id"))
-        .withColumn("bp", bpOf(storeParts, col("digest"))),
-      storeDir, appendWidth(touchedParts, storeParts))
-    if (compactFiles > 0 && touchedParts.nonEmpty)
-      maybeCompactLocked(spark, storeDir, touchedParts, compactFiles)
-    // the caller-facing digest is hex STRING regardless of the at-rest
-    // encoding (lower(hex(binary)) ≡ md5 hex — bit-exact, and the gate's
-    // DuckDB oracle never changes); a map-only projection over the
-    // checkpointed verdicts
-    if (binKeys) out.withColumn("digest", lower(hex(col("digest"))))
-    else out
+        .withColumn("bp", b.bp))
   }
 
   /** MinHash near-dup pairs of one batch against the signature store at
@@ -550,109 +508,75 @@ object IncrementalDedup {
       threshold: Double = 0.5,
       storeParts: Int = AutoStoreParts,
       compactFiles: Int = 0): DataFrame =
-    graft.fs.StoreLock.withLock(storeDir,
-      docsNew.sparkSession.sparkContext.hadoopConfiguration) {
-      minhashBatchLocked(docsNew, storeDir, textCol, numHashes, bands,
-        threshold, storeParts, compactFiles)
+    StoreCycle.run(docsNew, storeDir, storeParts, compactFiles) { _ =>
+      // the ONE banding implementation (Dedup.bandSignatures): the store
+      // holds banded rows, so it is only usable if every batch bands
+      // identically — same bands, same rowsPerBand, same hash. Auto
+      // sizing sees banded rows = docs × bands exactly.
+      val bandedRaw = Dedup.bandSignatures(
+        Dedup.minhashSignatures(
+          // fanOut: signature compute is the batch's CPU pass (see
+          // Scale.fanOutForCompute — no-op on well-split scans)
+          Scale.fanOutForCompute(docsNew, col("doc_id")),
+          textCol, numHashes = numHashes),
+        bands, numHashes / bands)
+      StoreCycle.Family(StoreLayout.named("minhash"), bandedRaw,
+        "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bh BIGINT, bp INT",
+        _ => Map("num_hashes" -> numHashes.toString, "bands" -> bands.toString),
+        b => {
+          val batchBanded = b.rows.drop("bp")
+          // candidates: every bucket pair touching the batch. doc_a < doc_b
+          // normalizes orientation and drops self-pairs; dropDuplicates
+          // collapses pairs sharing several buckets.
+          // MERGE hint (r18, found at the 1000× soak): both sides of the
+          // bucket-candidate join scale with the corpus, but Catalyst's
+          // static size estimate for the computed-signature side can land
+          // under the auto-broadcast threshold — at 5M docs the optimizer
+          // tried to build a ~2.7 GB driver broadcast and died on
+          // maxResultSize (on a real cluster it would OOM executors). Pin
+          // the join to sort-merge: corpus×corpus joins must never ride a
+          // static-estimate broadcast.
+          val out = b.store.unionByName(batchBanded).as("a")
+            .join(batchBanded.as("b").hint("merge"), Seq("band", "bh"))
+            .filter(col("a.doc_id") =!= col("b.doc_id"))
+            .select(
+              least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+              greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
+              when(col("a.doc_id") < col("b.doc_id"), col("a.sig"))
+                .otherwise(col("b.sig")).as("sig_a"),
+              when(col("a.doc_id") < col("b.doc_id"), col("b.sig"))
+                .otherwise(col("a.sig")).as("sig_b"))
+            .dropDuplicates("doc_a", "doc_b")
+            .withColumn("est_jaccard",
+              Dedup.estJaccard(col("sig_a"), col("sig_b"), numHashes))
+            .filter(col("est_jaccard") >= threshold)
+            .select("doc_a", "doc_b", "est_jaccard")
+            // materialize BEFORE the store append rewrites the directory
+            // the `store` side of the join reads (unconditional — see the
+            // exact variant's A/B note)
+            .localCheckpoint()
+          rowStep(out, b, "doc_id", "band")
+        })
     }
 
-  private def minhashBatchLocked(
-      docsNew: DataFrame,
-      storeDir: String,
-      textCol: String,
-      numHashes: Int,
-      bands: Int,
-      threshold: Double,
-      requestedParts: Int,
-      compactFiles: Int = 0): DataFrame = {
-    val spark = docsNew.sparkSession
-    val rowsPerBand = numHashes / bands
-    // the ONE banding implementation (Dedup.bandSignatures): the store
-    // holds banded rows, so it is only usable if every batch bands
-    // identically — same bands, same rowsPerBand, same hash. One eager
-    // checkpoint feeds both join sides and the append; warm cycles fuse
-    // bp and the touched-partition observe metric into it (no probe
-    // job), creation-with-auto counts the checkpointed rows to size the
-    // store (banded rows = docs × bands exactly — no multiplier).
-    val bandedRaw = Dedup.bandSignatures(
-      Dedup.minhashSignatures(
-        // fanOut: signature compute is the batch's CPU pass (see
-        // Scale.fanOutForCompute — no-op on well-split scans)
-        Scale.fanOutForCompute(docsNew, col("doc_id")),
-        textCol, numHashes = numHashes),
-      bands, rowsPerBand)
-    // auto sizing sees banded rows = docs × bands exactly
-    val mf = storeManifest(spark, storeDir)
-    val (newBanded, touchedParts, storeParts, _) = resolveGeometry(
-      knownPartsFrom(mf.get("store_parts").map(_.toInt), requestedParts),
-      bandedRaw, Seq(col("band"), col("bh")))
-    // doc→bp retraction index: stamped at creation, adopted thereafter
-    // (a pre-index legacy store keeps full-scan takedown discovery)
-    val docIdx = mf.isEmpty || docIndexEnabled(mf)
-    val dpParts = mf.get("doc_index_parts").map(_.toInt)
-      .getOrElse(dpPartsFor(storeParts))
-    checkOrWriteMeta(spark, storeDir, Map(
-      "variant" -> "minhash", "store_parts" -> storeParts.toString,
-      "num_hashes" -> numHashes.toString, "bands" -> bands.toString) ++
-      (if (mf.isEmpty) Map("doc_index" -> "1",
-        "doc_index_parts" -> dpParts.toString) else Map.empty))
-    val read = readStore(spark, storeDir,
-      "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bh BIGINT, bp INT")
-    val store =
-      if (read._2) prune(read._1, touchedParts) else read._1.drop("bp")
-    val batchBanded = newBanded.drop("bp")
-    // candidates: every bucket pair touching the batch. doc_a < doc_b
-    // normalizes orientation and drops self-pairs; dropDuplicates
-    // collapses pairs sharing several buckets.
-    val all = store.unionByName(batchBanded)
-    // MERGE hint (r18, found at the 1000× soak): both sides of the
-    // bucket-candidate join scale with the corpus, but Catalyst's
-    // static size estimate for the computed-signature side can land
-    // under the auto-broadcast threshold — at 5M docs the optimizer
-    // tried to build a ~2.7 GB driver broadcast and died on
-    // maxResultSize (on a real cluster it would OOM executors). Pin
-    // the join to sort-merge: corpus×corpus joins must never ride a
-    // static-estimate broadcast.
-    val cand = all.as("a")
-      .join(batchBanded.as("b").hint("merge"), Seq("band", "bh"))
-      .filter(col("a.doc_id") =!= col("b.doc_id"))
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-        when(col("a.doc_id") < col("b.doc_id"), col("a.sig"))
-          .otherwise(col("b.sig")).as("sig_a"),
-        when(col("a.doc_id") < col("b.doc_id"), col("b.sig"))
-          .otherwise(col("a.sig")).as("sig_b"))
-      .dropDuplicates("doc_a", "doc_b")
-    val out = cand
-      .withColumn("est_jaccard",
-        Dedup.estJaccard(col("sig_a"), col("sig_b"), numHashes))
-      .filter(col("est_jaccard") >= threshold)
-      .select("doc_a", "doc_b", "est_jaccard")
-      // materialize BEFORE the store append below rewrites the directory
-      // the `store` side of the join reads (unconditional — see the
-      // exact variant's A/B note)
-      .localCheckpoint()
-    // retraction index BEFORE the store rows it covers (superset rule)
-    if (docIdx) appendDocIndex(newBanded, storeDir, "doc_id", dpParts)
-    // idempotent append: a retried batch (downstream failure, re-run)
-    // must not duplicate its rows — a doubled store would inflate every
-    // future batch's bucket join and break the batch-sequence =
-    // full-corpus parity contract. ROW-granular (doc_id, band) anti-join,
-    // not doc_id: a crashed append may have committed only SOME of a
-    // doc's band rows, and a doc-granular join would see one witness row
-    // and drop the rest forever (silent permanent recall loss); per-row,
-    // the retry appends exactly the missing rows and the store converges
-    // to complete. A retried row hashes to the SAME bucket (deterministic
-    // signatures), so the pruned view is a complete per-row witness.
-    appendStore(
-      newBanded.join(store.select("doc_id", "band"),
-        Seq("doc_id", "band"), "left_anti"),
-      storeDir, appendWidth(touchedParts, storeParts))
-    if (compactFiles > 0 && touchedParts.nonEmpty)
-      maybeCompactLocked(spark, storeDir, touchedParts, compactFiles)
-    out
-  }
+  /** The step tail of the stores that append the batch's own rows: index
+    * the whole batch, append the rows the pruned store lacks.
+    *
+    * Idempotent append: a retried batch (downstream failure, re-run)
+    * must not duplicate its rows — a doubled store would inflate every
+    * future batch's bucket join and break the batch-sequence =
+    * full-corpus parity contract. ROW-granular (id, band/table)
+    * anti-join, not id: a crashed append may have committed only SOME of
+    * a doc's band rows, and an id-granular join would see one witness row
+    * and drop the rest forever (silent permanent recall loss); per-row,
+    * the retry appends exactly the missing rows and the store converges
+    * to complete. A retried row hashes to the SAME bucket (deterministic
+    * signatures and planes), so the pruned view is a complete per-row
+    * witness. */
+  private def rowStep(out: DataFrame, b: StoreCycle.Batch,
+      rowKey: String*): StoreCycle.Step =
+    StoreCycle.Step(out, b.rows,
+      b.rows.join(b.store.select(rowKey.map(col): _*), rowKey, "left_anti"))
 
   /** Exact n-gram Jaccard near-dup pairs of one batch against the
     * posting-list store at `storeDir` (created if absent) — the
@@ -700,71 +624,52 @@ object IncrementalDedup {
       dfCap: Int = 1000,
       storeParts: Int = AutoStoreParts,
       compactFiles: Int = 0): DataFrame =
-    graft.fs.StoreLock.withLock(storeDir,
-      docsNew.sparkSession.sparkContext.hadoopConfiguration) {
-      ngramBatchLocked(docsNew, storeDir, textCol, n, threshold, dfCap,
-        storeParts, compactFiles)
+    StoreCycle.run(docsNew, storeDir, storeParts, compactFiles) { mf =>
+      val grams = graft.functions.SketchExprs
+        .gramHashes(col(textCol), n, distinct = true)
+      // gram-bloom geometry (r13): adopt from the manifest, or size at
+      // creation from this batch's posting rows with 4× headroom (rows
+      // upper-bound distinct grams; a store that outgrows the cap only
+      // DEGRADES the bloom's fp rate — probes drift back toward the
+      // touched-partition scan, never toward wrong answers — and
+      // `rebuildStore` re-sizes it). Legacy pre-bloom manifests stay
+      // keyless and skip the sidecar entirely (the vec_type rule).
+      val creating = !mf.contains("store_parts")
+      def bloomGeom(rows: Long): Option[(Long, Long)] =
+        if (!creating)
+          for {
+            c <- mf.get("bloom_cap").map(_.toLong)
+            b <- mf.get("bloom_bits").map(_.toLong)
+          } yield (c, b)
+        else Some(gramBloomGeometry(math.max(1L, rows)))
+      // one row per (doc, distinct gram), the doc's gram count riding —
+      // the posting-row trade (minhash variant doc): sizes are in hand at
+      // the pair join, no O(corpus) size-fetch join afterwards. Auto
+      // sizing sees one posting row per (doc, distinct gram) — more rows
+      // per doc than the banded sketch stores, same 4 Ki target.
+      // fanOut: gram hashing is the batch's CPU pass (see
+      // Scale.fanOutForCompute — no-op on well-split scans)
+      StoreCycle.Family(StoreLayout.named("ngram"),
+        Scale.fanOutForCompute(docsNew, col("doc_id"))
+          .select(col("doc_id"),
+            explode(grams).as("shingle"),
+            coalesce(size(grams), lit(0)).cast("long").as("nsh")),
+        "doc_id BIGINT, shingle BIGINT, nsh BIGINT, bp INT",
+        rows => Map("n" -> n.toString) ++
+          (if (creating) bloomGeom(rows).toSeq.flatMap { case (c, b) =>
+            Seq("bloom_cap" -> c.toString, "bloom_bits" -> b.toString)
+          } else Nil),
+        b => ngramStep(b, storeDir, bloomGeom(b.n), threshold, dfCap))
     }
 
-  private def ngramBatchLocked(
-      docsNew: DataFrame,
+  private def ngramStep(
+      b: StoreCycle.Batch,
       storeDir: String,
-      textCol: String,
-      n: Int,
+      bloomGeom: Option[(Long, Long)],
       threshold: Double,
-      dfCap: Int,
-      requestedParts: Int,
-      compactFiles: Int): DataFrame = {
-    val spark = docsNew.sparkSession
-    val grams = graft.functions.SketchExprs
-      .gramHashes(col(textCol), n, distinct = true)
-    // one row per (doc, distinct gram), the doc's gram count riding —
-    // the posting-row trade (minhash variant doc): sizes are in hand at
-    // the pair join, no O(corpus) size-fetch join afterwards
-    // fanOut: gram hashing is the batch's CPU pass (see
-    // Scale.fanOutForCompute — no-op on well-split scans)
-    val rawRows = Scale.fanOutForCompute(docsNew, col("doc_id"))
-      .select(col("doc_id"),
-        explode(grams).as("shingle"),
-        coalesce(size(grams), lit(0)).cast("long").as("nsh"))
-    // auto sizing sees one posting row per (doc, distinct gram) — more
-    // rows per doc than the banded sketch stores, same 4 Ki target
-    val mParts = manifestParts(spark, storeDir)
-    val manifestExists = mParts.isDefined
-    val (newBatch, touchedParts, storeParts, nBatchRows) = resolveGeometry(
-      knownPartsFrom(mParts, requestedParts),
-      rawRows, Seq(col("shingle")))
-    // gram-bloom geometry (r13): adopt from the manifest, or size at
-    // creation from this batch's posting rows with 4× headroom (rows
-    // upper-bound distinct grams; a store that outgrows the cap only
-    // DEGRADES the bloom's fp rate — probes drift back toward the
-    // touched-partition scan, never toward wrong answers — and
-    // `rebuildStore` re-sizes it). Legacy pre-bloom manifests stay
-    // keyless and skip the sidecar entirely (the vec_type rule).
-    val bloomGeom: Option[(Long, Long)] =
-      if (manifestExists)
-        for {
-          c <- manifestValue(spark, storeDir, "bloom_cap").map(_.toLong)
-          b <- manifestValue(spark, storeDir, "bloom_bits").map(_.toLong)
-        } yield (c, b)
-      else Some(gramBloomGeometry(math.max(1L, nBatchRows)))
-    val bloomMeta = bloomGeom match {
-      case Some((c, b)) if !manifestExists =>
-        Map("bloom_cap" -> c.toString, "bloom_bits" -> b.toString)
-      case _ => Map.empty[String, String]
-    }
-    // doc→bp retraction index: stamped at creation, adopted thereafter
-    val mfN = storeManifest(spark, storeDir)
-    val docIdx = !manifestExists || docIndexEnabled(mfN)
-    val dpParts = mfN.get("doc_index_parts").map(_.toInt)
-      .getOrElse(dpPartsFor(storeParts))
-    checkOrWriteMeta(spark, storeDir, Map(
-      "variant" -> "ngram", "store_parts" -> storeParts.toString,
-      "n" -> n.toString) ++ bloomMeta ++
-      (if (!manifestExists) Map("doc_index" -> "1",
-        "doc_index_parts" -> dpParts.toString) else Map.empty))
-    val read = readStore(spark, storeDir,
-      "doc_id BIGINT, shingle BIGINT, nsh BIGINT, bp INT")
+      dfCap: Int): StoreCycle.Step = {
+    val spark = b.rows.sparkSession
+    val newBatch = b.rows
     // warm cycles probe the sidecar bloom: a MISS gram is definitively
     // absent from the store (no false negatives), so partitions touched
     // only by never-seen grams drop out of every pruned scan below —
@@ -773,24 +678,21 @@ object IncrementalDedup {
     // missing sidecar under a bloom-keyed manifest (crash between the
     // sidecar's delete and rename) self-heals with one full posting
     // scan, the roll-forward discipline of the other store repairs.
-    val oldBloomBytes: Option[Array[Byte]] =
-      if (!read._2) None
-      else bloomGeom.map { case (c, b) =>
+    val oldBloomBytes: Option[Array[Byte]] = b.stored.flatMap { whole =>
+      bloomGeom.map { case (c, bits) =>
         readGramBloom(spark, storeDir).getOrElse(
-          bloomToBytes(read._1.stat.bloomFilter("shingle", c, b)))
+          bloomToBytes(whole.stat.bloomFilter("shingle", c, bits)))
       }
-    val store =
-      if (!read._2) read._1.drop("bp")
-      else oldBloomBytes match {
-        case Some(bytes) =>
-          val hitParts = newBatch
-            .filter(graft.functions.SketchExprs
-              .bloomMightContain(col("shingle"), bytes))
-            .select("bp").distinct().collect()
-            .map(_.getInt(0)).toIndexedSeq
-          prune(read._1, hitParts)
-        case None => prune(read._1, touchedParts)
-      }
+    }
+    val store = oldBloomBytes match {
+      case Some(bytes) =>
+        b.pruned(newBatch
+          .filter(graft.functions.SketchExprs
+            .bloomMightContain(col("shingle"), bytes))
+          .select("bp").distinct().collect()
+          .map(_.getInt(0)).toIndexedSeq)
+      case None => b.store
+    }
     // novel rows: the append payload AND the batch side of the unified
     // set — checkpointed once (bp riding for the partitioned append),
     // BEFORE the append rewrites the store dir
@@ -844,9 +746,9 @@ object IncrementalDedup {
     // find); an empty batch adds no grams, so skipping preserves the
     // superset invariant trivially. The emptiness fact rides
     // resolveGeometry's count metric — no separate isEmpty job.
-    bloomGeom.foreach { case (c, b) =>
-      if (nBatchRows > 0L) {
-        val batchBloom = newBatch.stat.bloomFilter("shingle", c, b)
+    bloomGeom.foreach { case (c, bits) =>
+      if (b.n > 0L) {
+        val batchBloom = newBatch.stat.bloomFilter("shingle", c, bits)
         val merged = oldBloomBytes match {
           case Some(bytes) =>
             val old = org.apache.spark.util.sketch.BloomFilter.readFrom(
@@ -857,12 +759,7 @@ object IncrementalDedup {
         writeGramBloom(spark, storeDir, merged)
       }
     }
-    // retraction index BEFORE the store rows it covers (superset rule)
-    if (docIdx) appendDocIndex(newBatch, storeDir, "doc_id", dpParts)
-    appendStore(newRows, storeDir, appendWidth(touchedParts, storeParts))
-    if (compactFiles > 0 && touchedParts.nonEmpty)
-      maybeCompactLocked(spark, storeDir, touchedParts, compactFiles)
-    out
+    StoreCycle.Step(out, newBatch, newRows)
   }
 
   /** SimHash near-dup pairs of one batch against the banded-signature
@@ -886,83 +783,43 @@ object IncrementalDedup {
       maxHamming: Int = 3,
       storeParts: Int = AutoStoreParts,
       compactFiles: Int = 0): DataFrame =
-    graft.fs.StoreLock.withLock(storeDir,
-      docsNew.sparkSession.sparkContext.hadoopConfiguration) {
-      simhashBatchLocked(docsNew, storeDir, textCol, maxHamming,
-        storeParts, compactFiles)
+    StoreCycle.run(docsNew, storeDir, storeParts, compactFiles) { _ =>
+      // the ONE banding implementation (Dedup.simhashBanded): the store
+      // holds banded rows, so every batch must band identically — same
+      // radius, same widths (max_hamming rides the manifest). Auto sizing
+      // sees banded rows = docs × (radius + 1) exactly.
+      val bandedRaw = Dedup.simhashBanded(
+        // fanOut: signature compute is the batch's CPU pass (see
+        // Scale.fanOutForCompute — no-op on well-split scans)
+        Dedup.simhash(Scale.fanOutForCompute(docsNew, col("doc_id")), textCol),
+        maxHamming)
+      StoreCycle.Family(StoreLayout.named("simhash"), bandedRaw,
+        "doc_id BIGINT, simhash BIGINT, band INT, bh BIGINT, bp INT",
+        _ => Map("max_hamming" -> maxHamming.toString),
+        b => {
+          val batchBanded = b.rows.drop("bp")
+          // candidates: every bucket pair touching the batch; the Hamming
+          // verify needs only the two 64-bit signatures already on the
+          // rows. merge hint: corpus×corpus candidate join — see the
+          // minhash variant's r18 note (static-estimate broadcast blowup
+          // at 1000×)
+          val out = b.store.unionByName(batchBanded).as("a")
+            .join(batchBanded.as("b").hint("merge"), Seq("band", "bh"))
+            .filter(col("a.doc_id") =!= col("b.doc_id"))
+            .select(
+              least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
+              greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
+              bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
+                .cast("long").as("hamming"))
+            .dropDuplicates("doc_a", "doc_b")
+            .filter(col("hamming") <= maxHamming)
+            // materialize BEFORE the store append rewrites the directory
+            // the `store` side of the join reads (unconditional — see the
+            // exact variant's A/B note)
+            .localCheckpoint()
+          rowStep(out, b, "doc_id", "band")
+        })
     }
-
-  private def simhashBatchLocked(
-      docsNew: DataFrame,
-      storeDir: String,
-      textCol: String,
-      maxHamming: Int,
-      requestedParts: Int,
-      compactFiles: Int): DataFrame = {
-    val spark = docsNew.sparkSession
-    // the ONE banding implementation (Dedup.simhashBanded): the store
-    // holds banded rows, so every batch must band identically — same
-    // radius, same widths (max_hamming rides the manifest). One eager
-    // checkpoint feeds both join sides and the append; warm cycles fuse
-    // bp and the touched-partition observe metric into it, creation
-    // counts the checkpointed rows (docs × (radius+1) bands exactly).
-    val bandedRaw = Dedup.simhashBanded(
-      // fanOut: signature compute is the batch's CPU pass (see
-      // Scale.fanOutForCompute — no-op on well-split scans)
-      Dedup.simhash(Scale.fanOutForCompute(docsNew, col("doc_id")), textCol),
-      maxHamming)
-    // auto sizing sees banded rows = docs × (radius + 1) exactly
-    val mf = storeManifest(spark, storeDir)
-    val (newBanded, touchedParts, storeParts, _) = resolveGeometry(
-      knownPartsFrom(mf.get("store_parts").map(_.toInt), requestedParts),
-      bandedRaw, Seq(col("band"), col("bh")))
-    // doc→bp retraction index: stamped at creation, adopted thereafter
-    val docIdx = mf.isEmpty || docIndexEnabled(mf)
-    val dpParts = mf.get("doc_index_parts").map(_.toInt)
-      .getOrElse(dpPartsFor(storeParts))
-    checkOrWriteMeta(spark, storeDir, Map(
-      "variant" -> "simhash", "store_parts" -> storeParts.toString,
-      "max_hamming" -> maxHamming.toString) ++
-      (if (mf.isEmpty) Map("doc_index" -> "1",
-        "doc_index_parts" -> dpParts.toString) else Map.empty))
-    val read = readStore(spark, storeDir,
-      "doc_id BIGINT, simhash BIGINT, band INT, bh BIGINT, bp INT")
-    val store =
-      if (read._2) prune(read._1, touchedParts) else read._1.drop("bp")
-    val batchBanded = newBanded.drop("bp")
-    // candidates: every bucket pair touching the batch; the Hamming
-    // verify needs only the two 64-bit signatures already on the rows
-    val all = store.unionByName(batchBanded)
-    // merge hint: corpus×corpus candidate join — see the minhash
-    // variant's r18 note (static-estimate broadcast blowup at 1000×)
-    val out = all.as("a")
-      .join(batchBanded.as("b").hint("merge"), Seq("band", "bh"))
-      .filter(col("a.doc_id") =!= col("b.doc_id"))
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .cast("long").as("hamming"))
-      .dropDuplicates("doc_a", "doc_b")
-      .filter(col("hamming") <= maxHamming)
-      // materialize BEFORE the store append below rewrites the directory
-      // the `store` side of the join reads (unconditional — see the
-      // exact variant's A/B note)
-      .localCheckpoint()
-    // retraction index BEFORE the store rows it covers (superset rule)
-    if (docIdx) appendDocIndex(newBanded, storeDir, "doc_id", dpParts)
-    // idempotent append: ROW-granular (doc_id, band) anti-join, same
-    // rationale as the minhash variant — a crashed append may have
-    // committed only SOME of a doc's band rows, and deterministic
-    // signatures route a retried row to the same pruned-view witness
-    appendStore(
-      newBanded.join(store.select("doc_id", "band"),
-        Seq("doc_id", "band"), "left_anti"),
-      storeDir, appendWidth(touchedParts, storeParts))
-    if (compactFiles > 0 && touchedParts.nonEmpty)
-      maybeCompactLocked(spark, storeDir, touchedParts, compactFiles)
-    out
-  }
 
   /** Embedding near-dup pairs of one batch against the vector store at
     * `storeDir` (created if absent) — the cosine-domain member of the
@@ -1035,231 +892,159 @@ object IncrementalDedup {
       storeParts: Int = AutoStoreParts,
       compactFiles: Int = 0,
       layout: String = "adopt"): DataFrame =
-    graft.fs.StoreLock.withLock(storeDir,
-      embsNew.sparkSession.sparkContext.hadoopConfiguration) {
-      embeddingBatchLocked(embsNew, storeDir, idCol, vecCol, threshold,
-        planes, tables, storeParts, compactFiles, layout)
-    }
-
-  private def embeddingBatchLocked(
-      embsNew: DataFrame,
-      storeDir: String,
-      idCol: String,
-      vecCol: String,
-      threshold: Double,
-      planes: Int,
-      tables: Int,
-      requestedParts: Int,
-      compactFiles: Int = 0,
-      layout: String = "adopt"): DataFrame = {
-    val spark = embsNew.sparkSession
-    // srcType: only a FLOAT source earns a float store; every other
-    // element type (double, but also int/long/decimal arrays a caller
-    // may hand us) is "double" and MUST be cast below — writing a raw
-    // non-double array into a store whose schema says ARRAY<DOUBLE>
-    // would make the store unreadable on the next batch
-    val srcElem = embsNew.schema(vecCol).dataType match {
-      case org.apache.spark.sql.types.ArrayType(e, _) => e
-      case other => throw new IllegalArgumentException(
-        s"$vecCol must be an array column, got ${other.sql}")
-    }
-    val srcType =
-      if (srcElem == org.apache.spark.sql.types.FloatType) "float"
-      else "double"
-    // store width: the manifest's vec_type beats everything; a manifest
-    // without one is a pre-vec_type store (always double); creation
-    // adopts the source width
-    require(layout == "inline" || layout == "split" || layout == "adopt",
-      s"layout must be inline, split, or adopt: $layout")
-    val mParts = manifestParts(spark, storeDir)
-    val manifestExists = mParts.isDefined
-    val mVecType =
-      if (manifestExists) manifestValue(spark, storeDir, "vec_type") else None
-    val vecType = mVecType.getOrElse(if (manifestExists) "double" else srcType)
-    // explicit layout is strict like every other structural constant
-    // (manifests predating the key are inline by construction); the
-    // "adopt" default follows the manifest — layout is DISCOVERABLE
-    // and result-neutral, so restarted streams and naive callers need
-    // no foreknowledge, unlike banding (which silently changes rows)
-    val mLayout =
-      if (manifestExists) manifestValue(spark, storeDir, "store_layout") else None
-    val storeLayout =
-      if (layout == "adopt") mLayout.getOrElse("inline")
-      else {
-        require(!manifestExists || mLayout.getOrElse("inline") == layout,
-          s"store $storeDir was created with layout " +
-            s"${mLayout.getOrElse("inline")} but this batch requests $layout — " +
-            "a store must be read with the constants it was written under")
-        layout
+    StoreCycle.run(embsNew, storeDir, storeParts, compactFiles) { mf =>
+      // srcType: only a FLOAT source earns a float store; every other
+      // element type (double, but also int/long/decimal arrays a caller
+      // may hand us) is "double" and MUST be cast below — writing a raw
+      // non-double array into a store whose schema says ARRAY<DOUBLE>
+      // would make the store unreadable on the next batch
+      val srcElem = embsNew.schema(vecCol).dataType match {
+        case org.apache.spark.sql.types.ArrayType(e, _) => e
+        case other => throw new IllegalArgumentException(
+          s"$vecCol must be an array column, got ${other.sql}")
       }
-    require(vecType == "double" || srcType == "float",
-      s"store $storeDir holds ARRAY<FLOAT> vectors (vec_type:float) but " +
-        s"this batch's $vecCol is double — narrowing would change scores; " +
-        "rebuild the store as double or cast the batch explicitly")
-    // cast unless the batch's ELEMENT type already equals the store
-    // width exactly — srcType alone is not enough (an int/long array is
-    // labeled "double" but still needs the cast)
-    val widthMatches = (vecType == "float" &&
-      srcElem == org.apache.spark.sql.types.FloatType) ||
-      (vecType == "double" &&
-        srcElem == org.apache.spark.sql.types.DoubleType)
-    // fanOut: the 16-table lshSignature explode below is the batch's CPU
-    // pass (see Scale.fanOutForCompute — no-op on well-split scans)
-    val newVecs = Scale.fanOutForCompute(embsNew, col(idCol))
-      .select(col(idCol).cast("long").as("vec_id"),
-        (if (widthMatches) col(vecCol)
-         else transform(col(vecCol), x => x.cast(vecType))).as("vec"))
-    // map-only bucket explode, shared with the batch path's geometry:
-    // same planes ⇒ the store blocks identically for every batch
-    def bucketed(v: DataFrame): DataFrame = v.select(
-      col("vec_id"), col("vec"),
-      explode(array((0 until tables).map { t =>
-        struct(lit(t).as("tbl"),
-          Similarity.lshSignature(col("vec"), planes, t * planes).as("bucket"))
-      }: _*)).as("tb"))
-      .select(col("vec_id"), col("vec"),
-        col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
-    // One eager checkpoint feeds both join sides and the append; warm
-    // cycles fuse bp + the touched-partition observe metric into it (no
-    // probe job), creation-with-auto counts the checkpointed rows to
-    // size the store (bucketed rows = vectors × tables exactly)
-    // split postings never persist the vector, so the checkpoint that
-    // feeds the bucket join and the append must not carry it either.
-    // Split layout pins the caller's upstream plan ONCE here: postings
-    // and the vectors/ rows must come from the same materialization — a
-    // nondeterministic source (sample, generated ids) re-executed per
-    // leg could commit vectors/ rows that disagree with postings/, and
-    // a posting id missing from vectors/ silently drops its candidate
-    // pair at the fetch join. Inline needs no pin: its one checkpointed
-    // frame carries both the posting and the vector.
-    val newVecsPinned =
-      if (storeLayout == "split") newVecs.localCheckpoint() else newVecs
-    val bucketedRaw =
-      if (storeLayout == "split") bucketed(newVecsPinned).drop("vec")
-      else bucketed(newVecs)
-    // auto sizing sees bucketed rows = vectors × tables exactly
-    val (newBucketed, touchedParts, storeParts, _) = resolveGeometry(
-      knownPartsFrom(mParts, requestedParts),
-      bucketedRaw, Seq(col("tbl"), col("bucket")))
-    // legacy (pre-vec_type) manifests: omit the key from the strict
-    // check — their implicit width is double and vecType already is
-    val typeMeta =
-      if (manifestExists && mVecType.isEmpty) Map.empty[String, String]
-      else Map("vec_type" -> vecType)
-    // same legacy rule as vec_type: a pre-layout manifest stays keyless
-    val layoutMeta =
-      if (manifestExists && mLayout.isEmpty) Map.empty[String, String]
-      else Map("store_layout" -> storeLayout)
-    // doc→bp retraction index on the bucket-partitioned arm (inline
-    // root / split postings/): stamped at creation, adopted thereafter
-    val mfEmb = storeManifest(spark, storeDir)
-    val docIdx = !manifestExists || docIndexEnabled(mfEmb)
-    val dpParts = mfEmb.get("doc_index_parts").map(_.toInt)
-      .getOrElse(dpPartsFor(storeParts))
-    checkOrWriteMeta(spark, storeDir, Map(
-      "variant" -> "embedding", "store_parts" -> storeParts.toString,
-      "planes" -> planes.toString, "tables" -> tables.toString) ++
-      typeMeta ++ layoutMeta ++
-      (if (!manifestExists) Map("doc_index" -> "1",
-        "doc_index_parts" -> dpParts.toString) else Map.empty))
-    if (storeLayout == "split")
-      return embeddingSplitCycle(spark, storeDir, newVecsPinned, newBucketed,
-        touchedParts, storeParts, vecType, threshold, compactFiles,
-        docIdx, dpParts)
-    val read = readStore(spark, storeDir,
-      s"vec_id BIGINT, vec ARRAY<${vecType.toUpperCase}>, tbl INT, " +
-        "bucket BIGINT, bp INT")
-    val store =
-      if (read._2) prune(read._1, touchedParts) else read._1.drop("bp")
-    val batchBucketed = newBucketed.drop("bp")
-    // fanOut on the JOIN key (r20): the candidate join's reduce side is
-    // where every cosine runs, and AQE's byte-based coalescing squeezed
-    // it to 2-3 tasks at small scale (2.1 s serialized, profiled) — the
-    // explicit small-input repartition pins a parallel width the
-    // coalescer can't see past; no-op when the inputs already carry
-    // ≥ width partitions (the at-scale case)
-    val out = Scale.fanOutForCompute(
-        store.unionByName(batchBucketed), col("tbl"), col("bucket")).as("a")
-      // merge hint: corpus×corpus candidate join — see the minhash
-      // variant's r18 note (static-estimate broadcast blowup at 1000×)
-      .join(Scale.fanOutForCompute(batchBucketed, col("tbl"), col("bucket"))
-        .as("b").hint("merge"), Seq("tbl", "bucket"))
-      .filter(col("a.vec_id") =!= col("b.vec_id"))
-      // score BEFORE the pair dedupe (cosine is symmetric, orientation
-      // free): the dedupe exchange then moves 32-byte rows, not vectors
-      .select(
-        least(col("a.vec_id"), col("b.vec_id")).as("id_a"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("id_b"),
-        round(Similarity.cosine(col("a.vec"), col("b.vec")), 4).as("cosine"))
-      .dropDuplicates("id_a", "id_b")
-      .filter(col("cosine") >= threshold)
-      // materialize BEFORE the store append below rewrites the directory
-      // the `store` side of the join reads (unconditional — see the
-      // exact variant's A/B note)
-      .localCheckpoint()
-    // retraction index BEFORE the store rows it covers (superset rule)
-    if (docIdx) appendDocIndex(newBucketed, storeDir, "vec_id", dpParts)
-    // idempotent append: a retried batch must not double its rows — a
-    // doubled store would emit every cross pair twice-blocked and break
-    // batch-sequence = full-corpus parity. ROW-granular (vec_id, tbl)
-    // anti-join for the same reason as the minhash path: a partially
-    // committed append is REPAIRED by the retry (only missing table
-    // rows append) instead of frozen incomplete by a vec-granular drop.
-    // A retried row buckets identically (deterministic planes), so the
-    // pruned view is a complete per-row witness.
-    appendStore(
-      newBucketed.join(store.select("vec_id", "tbl"),
-        Seq("vec_id", "tbl"), "left_anti"),
-      storeDir, appendWidth(touchedParts, storeParts))
-    if (compactFiles > 0 && touchedParts.nonEmpty)
-      maybeCompactLocked(spark, storeDir, touchedParts, compactFiles)
-    out
-  }
+      val srcType =
+        if (srcElem == org.apache.spark.sql.types.FloatType) "float"
+        else "double"
+      // store width: the manifest's vec_type beats everything; a manifest
+      // without one is a pre-vec_type store (always double); creation
+      // adopts the source width
+      require(layout == "inline" || layout == "split" || layout == "adopt",
+        s"layout must be inline, split, or adopt: $layout")
+      val manifestExists = mf.contains("store_parts")
+      val mVecType = mf.get("vec_type")
+      val vecType = mVecType.getOrElse(if (manifestExists) "double" else srcType)
+      // explicit layout is strict like every other structural constant
+      // (manifests predating the key are inline by construction); the
+      // "adopt" default follows the manifest — layout is DISCOVERABLE
+      // and result-neutral, so restarted streams and naive callers need
+      // no foreknowledge, unlike banding (which silently changes rows)
+      val mLayout = mf.get("store_layout")
+      val storeLayout =
+        if (layout == "adopt") mLayout.getOrElse("inline")
+        else {
+          require(!manifestExists || mLayout.getOrElse("inline") == layout,
+            s"store $storeDir was created with layout " +
+              s"${mLayout.getOrElse("inline")} but this batch requests $layout — " +
+              "a store must be read with the constants it was written under")
+          layout
+        }
+      require(vecType == "double" || srcType == "float",
+        s"store $storeDir holds ARRAY<FLOAT> vectors (vec_type:float) but " +
+          s"this batch's $vecCol is double — narrowing would change scores; " +
+          "rebuild the store as double or cast the batch explicitly")
+      // cast unless the batch's ELEMENT type already equals the store
+      // width exactly — srcType alone is not enough (an int/long array is
+      // labeled "double" but still needs the cast)
+      val widthMatches = (vecType == "float" &&
+        srcElem == org.apache.spark.sql.types.FloatType) ||
+        (vecType == "double" &&
+          srcElem == org.apache.spark.sql.types.DoubleType)
+      // fanOut: the 16-table lshSignature explode below is the batch's CPU
+      // pass (see Scale.fanOutForCompute — no-op on well-split scans)
+      val newVecs = Scale.fanOutForCompute(embsNew, col(idCol))
+        .select(col(idCol).cast("long").as("vec_id"),
+          (if (widthMatches) col(vecCol)
+           else transform(col(vecCol), x => x.cast(vecType))).as("vec"))
+      // map-only bucket explode, shared with the batch path's geometry:
+      // same planes ⇒ the store blocks identically for every batch
+      def bucketed(v: DataFrame): DataFrame = v.select(
+        col("vec_id"), col("vec"),
+        explode(array((0 until tables).map { t =>
+          struct(lit(t).as("tbl"),
+            Similarity.lshSignature(col("vec"), planes, t * planes).as("bucket"))
+        }: _*)).as("tb"))
+        .select(col("vec_id"), col("vec"),
+          col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"))
+      // legacy (pre-vec_type) manifests: omit the key from the strict
+      // check — their implicit width is double and vecType already is;
+      // same legacy rule for a pre-layout manifest
+      val meta = Map("planes" -> planes.toString, "tables" -> tables.toString) ++
+        (if (manifestExists && mVecType.isEmpty) Map.empty
+         else Map("vec_type" -> vecType)) ++
+        (if (manifestExists && mLayout.isEmpty) Map.empty
+         else Map("store_layout" -> storeLayout))
+      val vecDdl = s"vec ARRAY<${vecType.toUpperCase}>"
+      // One eager checkpoint feeds both join sides and the append; auto
+      // sizing sees bucketed rows = vectors × tables exactly
+      if (storeLayout == "split") {
+        // split postings never persist the vector, so the checkpoint that
+        // feeds the bucket join and the append must not carry it either.
+        // Split layout pins the caller's upstream plan ONCE here: postings
+        // and the vectors/ rows must come from the same materialization —
+        // a nondeterministic source (sample, generated ids) re-executed
+        // per leg could commit vectors/ rows that disagree with postings/,
+        // and a posting id missing from vectors/ silently drops its
+        // candidate pair at the fetch join. Inline needs no pin: its one
+        // checkpointed frame carries both the posting and the vector.
+        val pinned = newVecs.localCheckpoint()
+        val l = StoreLayout.named("embedding", "split")
+        StoreCycle.Family(l, bucketed(pinned).drop("vec"),
+          "vec_id BIGINT, tbl INT, bucket BIGINT, bp INT", _ => meta,
+          b => embeddingSplitStep(b, pinned, l.tables(1).dir(storeDir),
+            s"vec_id BIGINT, $vecDdl, bp INT", threshold))
+      } else
+        StoreCycle.Family(StoreLayout.named("embedding"), bucketed(newVecs),
+          s"vec_id BIGINT, $vecDdl, tbl INT, bucket BIGINT, bp INT", _ => meta,
+          b => {
+            val batchBucketed = b.rows.drop("bp")
+            // fanOut on the JOIN key (r20): the candidate join's reduce
+            // side is where every cosine runs, and AQE's byte-based
+            // coalescing squeezed it to 2-3 tasks at small scale (2.1 s
+            // serialized, profiled) — the explicit small-input repartition
+            // pins a parallel width the coalescer can't see past; no-op
+            // when the inputs already carry ≥ width partitions (the
+            // at-scale case)
+            val out = Scale.fanOutForCompute(
+                b.store.unionByName(batchBucketed), col("tbl"), col("bucket")).as("a")
+              // merge hint: corpus×corpus candidate join — see the minhash
+              // variant's r18 note (static-estimate broadcast blowup at 1000×)
+              .join(Scale.fanOutForCompute(batchBucketed, col("tbl"), col("bucket"))
+                .as("b").hint("merge"), Seq("tbl", "bucket"))
+              .filter(col("a.vec_id") =!= col("b.vec_id"))
+              // score BEFORE the pair dedupe (cosine is symmetric,
+              // orientation free): the dedupe exchange then moves 32-byte
+              // rows, not vectors
+              .select(
+                least(col("a.vec_id"), col("b.vec_id")).as("id_a"),
+                greatest(col("a.vec_id"), col("b.vec_id")).as("id_b"),
+                round(Similarity.cosine(col("a.vec"), col("b.vec")), 4).as("cosine"))
+              .dropDuplicates("id_a", "id_b")
+              .filter(col("cosine") >= threshold)
+              // materialize BEFORE the store append rewrites the directory
+              // the `store` side of the join reads (unconditional — see
+              // the exact variant's A/B note)
+              .localCheckpoint()
+            rowStep(out, b, "vec_id", "tbl")
+          })
+    }
 
-  /** The split-layout cycle body (see `embeddingBatch`'s layout doc):
+  /** The split-layout step (see `embeddingBatch`'s layout doc):
     * candidates from the vector-free posting join, deduped, then both
-    * vectors fetched from only the id-hash partitions the candidate
-    * ids live in. Runs under the already-held store lock. */
-  private def embeddingSplitCycle(
-      spark: SparkSession,
-      storeDir: String,
+    * vectors fetched from only the id-hash partitions the candidate ids
+    * live in. The vectors append here, BEFORE the cycle's postings
+    * append (the crash order in `embeddingBatch`'s doc). */
+  private def embeddingSplitStep(
+      b: StoreCycle.Batch,
       newVecs: DataFrame,
-      newBucketed: DataFrame,
-      touchedParts: Seq[Int],
-      storeParts: Int,
-      vecType: String,
-      threshold: Double,
-      compactFiles: Int,
-      docIdx: Boolean = false,
-      dpParts: Int = 0): DataFrame = {
-    var t0 = System.nanoTime()
-    def mark(label: String): Unit =
-      if (sys.env.contains("GRAFT_SPLIT_LOG")) {
-        System.err.println(
-          f"[split] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        t0 = System.nanoTime()
-      }
-    val postingsDir = s"$storeDir/postings"
-    val vectorsDir = s"$storeDir/vectors"
-    val readP = readStore(spark, postingsDir,
-      "vec_id BIGINT, tbl INT, bucket BIGINT, bp INT")
-    val storeP =
-      if (readP._2) prune(readP._1, touchedParts) else readP._1.drop("bp")
-    val batchP = newBucketed.drop("bp")
+      vectorsDir: String,
+      vectorsDdl: String,
+      threshold: Double): StoreCycle.Step = {
+    val spark = b.rows.sparkSession
+    val batchP = b.rows.drop("bp")
     // the batch's vectors, one row each, id-hash partitioned; the fused
     // observe yields the vector partitions the batch touches (append
     // witness + compaction scope)
     val obsV = Observation()
     val newVecRows = newVecs
-      .withColumn("bp", bpOf(storeParts, col("vec_id")))
+      .withColumn("bp", bpOf(b.parts, col("vec_id")))
       .observe(obsV, collect_set(col("bp")).as("touched"))
       .localCheckpoint()
     val batchVps = intSeqOf(obsV.get("touched"))
-    mark("newVecRows checkpoint")
     // candidates dedupe BEFORE any vector is in flight: the blocking
     // exchange moves 24-byte posting rows and the pair-dedupe 16-byte
     // id pairs — vectors never ride either
-    val cand = storeP.unionByName(batchP).as("a")
+    val cand = b.store.unionByName(batchP).as("a")
       // merge hint: corpus×corpus candidate join — see the minhash
       // variant's r18 note (static-estimate broadcast blowup at 1000×)
       .join(batchP.as("b").hint("merge"), Seq("tbl", "bucket"))
@@ -1269,18 +1054,16 @@ object IncrementalDedup {
         greatest(col("a.vec_id"), col("b.vec_id")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
       .localCheckpoint()
-    mark("cand join+dedupe checkpoint")
     // O(k) driver edge, the `touched` pattern: the candidate ids'
     // vector partitions — the fetch below scans ONLY those
     val candVps = cand.select(explode(array(
-        bpOf(storeParts, col("id_a")),
-        bpOf(storeParts, col("id_b")))).as("vp"))
+        bpOf(b.parts, col("id_a")),
+        bpOf(b.parts, col("id_b")))).as("vp"))
       .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    mark("candVps collect")
-    val readV = readStore(spark, vectorsDir,
-      s"vec_id BIGINT, vec ARRAY<${vecType.toUpperCase}>, bp INT")
-    val fetched = (if (readV._2) prune(readV._1, candVps)
-      else readV._1.drop("bp"))
+    val readV = readStore(spark, vectorsDir, vectorsDdl)
+    def vectors(ps: Seq[Int]): DataFrame =
+      if (readV._2) prune(readV._1, ps) else readV._1.drop("bp")
+    val fetched = vectors(candVps)
       .unionByName(newVecRows.drop("bp"))
       // a retried batch's ids exist on both sides; the rows are
       // identical, keep one
@@ -1293,32 +1076,14 @@ object IncrementalDedup {
       .select(col("id_a"), col("id_b"),
         round(Similarity.cosine(col("va"), col("vb")), 4).as("cosine"))
       .filter(col("cosine") >= threshold)
-      // materialize before the appends below rewrite the directories
-      // the fetch/anti-join plans read
+      // materialize before the appends rewrite the directories the
+      // fetch/anti-join plans read
       .localCheckpoint()
-    mark("verify fetch checkpoint")
     // vectors FIRST (crash-order contract in embeddingBatch's doc)
     appendStore(
-      newVecRows.join(
-        (if (readV._2) prune(readV._1, batchVps) else readV._1.drop("bp"))
-          .select("vec_id"),
-        Seq("vec_id"), "left_anti"),
+      newVecRows.join(vectors(batchVps).select("vec_id"), Seq("vec_id"), "left_anti"),
       vectorsDir, math.max(1, batchVps.size))
-    mark("vectors append")
-    // retraction index BEFORE the postings it covers (superset rule)
-    if (docIdx) appendDocIndex(newBucketed, postingsDir, "vec_id", dpParts)
-    appendStore(
-      newBucketed.join(storeP.select("vec_id", "tbl"),
-        Seq("vec_id", "tbl"), "left_anti"),
-      postingsDir, appendWidth(touchedParts, storeParts))
-    mark("postings append")
-    if (compactFiles > 0) {
-      if (touchedParts.nonEmpty)
-        maybeCompactLocked(spark, postingsDir, touchedParts, compactFiles)
-      if (batchVps.nonEmpty)
-        maybeCompactLocked(spark, vectorsDir, batchVps, compactFiles)
-    }
-    out
+    rowStep(out, b, "vec_id", "tbl").copy(alsoCompact = Seq((vectorsDir, batchVps)))
   }
 
   /** Streaming form of `exactBatch`: dedup a document STREAM against
@@ -1459,15 +1224,14 @@ object IncrementalDedup {
   def compactStore(spark: SparkSession, storeDir: String): Int =
     graft.fs.StoreLock.withLock(storeDir,
       spark.sparkContext.hadoopConfiguration) {
-      // split embedding and bm25 stores keep their hive dirs one level
-      // down; both halves compact under the one root lock. Heal any
-      // crashed retraction first — compaction lists live dirs directly.
-      val halves: Seq[String] =
-        if (manifestValue(spark, storeDir, "store_layout").contains("split"))
-          Seq(s"$storeDir/postings", s"$storeDir/vectors")
-        else if (manifestValue(spark, storeDir, "variant").contains("bm25"))
-          Seq(s"$storeDir/postings", s"$storeDir/docs")
-        else Seq(storeDir)
+      // every table of the layout compacts under the one root lock (the
+      // split embedding and bm25 stores keep theirs one level down); the
+      // components and IVF stores, whose tables their own modules
+      // maintain, keep the root-only pass. Heal any crashed retraction
+      // first — compaction lists live dirs directly.
+      val halves = StoreLayout.of(storeManifest(spark, storeDir))
+        .filterNot(l => l.variant == "components" || l.variant == "ivf")
+        .fold(Seq(storeDir))(_.tables.map(_.dir(storeDir)))
       halves.map { h =>
         Retract.sweep(spark, h)
         compactStoreLocked(spark, h)
@@ -1522,15 +1286,18 @@ object IncrementalDedup {
     val dstFs = dstPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(!dstFs.exists(dstPath) || dstFs.listStatus(dstPath).isEmpty,
       s"rebuild destination $dstDir exists and is not empty")
-    // bucket key per variant — the SAME keys the batch cycles hash, so
-    // the rebuilt store prunes identically to one created at this size
     val variant = manifest("variant")
     // the clusters store rebuilds THROUGH its merge log (resolution +
     // re-bucket in one) — its own module owns that logic
     if (variant == "components")
       return IncrementalComponents.rebuildLocked(
         spark, srcDir, dstDir, requestedParts)
-    val split = manifest.get("store_layout").contains("split")
+    // every table re-buckets on the layout's keys — the SAME keys the
+    // batch cycles hash, so the rebuilt store prunes identically to one
+    // created at this size (IVF cells are learned, not hashed)
+    val layout = StoreLayout.of(manifest).filter(_.tables.forall(_.keys.nonEmpty))
+      .getOrElse(sys.error(s"unknown store variant in manifest: $variant " +
+        "(exact|minhash|simhash|ngram|embedding|span|bm25|components)"))
     def hasParts(dir: String): Boolean = {
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1543,13 +1310,8 @@ object IncrementalDedup {
     // conversion runs BEFORE bp is rehashed, so the rebuilt store prunes
     // exactly like one created binary. Already-binary stores copy
     // verbatim. The dst manifest records the encoding either way.
-    val hexKeyCol: Option[String] = variant match {
-      case "exact" if !manifest.get("key_encoding").contains("binary") =>
-        Some("digest")
-      case "span" if !manifest.get("key_encoding").contains("binary") =>
-        Some("wh")
-      case _ => None
-    }
+    val hexKeyCol = layout.md5Key
+      .filterNot(_ => manifest.get("key_encoding").contains("binary"))
     def rebucket(src: String, dst: String, keys: Seq[String],
         parts: Int): Unit =
       if (hasParts(src)) { // a manifest-only store rebuilds to one
@@ -1564,39 +1326,15 @@ object IncrementalDedup {
           .repartition(col("bp"))
           .write.partitionBy("bp").mode("errorifexists").parquet(dst)
       }
-    val keys: Seq[String] = variant match {
-      case "exact"     => Seq("digest")
-      case "minhash"   => Seq("band", "bh")
-      case "simhash"   => Seq("band", "bh")
-      case "ngram"     => Seq("shingle")
-      case "embedding" => Seq("tbl", "bucket")
-      case "span"      => Seq("wh")
-      case "bm25"      => Seq("term")
-      case v => sys.error(s"unknown store variant in manifest: $v " +
-        "(exact|minhash|simhash|ngram|embedding|span|bm25|components)")
-    }
-    // bm25 shares the split shape: two hive tables one level down
-    // (postings on term hash, docs on id hash) plus the stats sidecar
-    val bm25 = variant == "bm25"
     // finish any crashed compaction or retraction swap FIRST: partitions
     // stranded in `_compact_trash` (or mid-retract) are invisible to the
     // parquet snapshot below, and a rebuild that missed them would
     // commit a silently smaller store
-    val secondHalf =
-      if (split) Some(("vectors", Seq("vec_id")))
-      else if (bm25) Some(("docs", Seq("doc_id")))
-      else None
-    if (secondHalf.isDefined) {
-      sweepCompactTrash(spark, s"$srcDir/postings")
-      sweepCompactTrash(spark, s"$srcDir/${secondHalf.get._1}")
-      Retract.sweep(spark, s"$srcDir/postings")
-      Retract.sweep(spark, s"$srcDir/${secondHalf.get._1}")
-    } else {
-      sweepCompactTrash(spark, srcDir)
-      Retract.sweep(spark, srcDir)
+    layout.tables.foreach { t =>
+      sweepCompactTrash(spark, t.dir(srcDir))
+      Retract.sweep(spark, t.dir(srcDir))
     }
-    val srcData =
-      if (secondHalf.isDefined) s"$srcDir/postings" else srcDir
+    val srcData = layout.data.dir(srcDir)
     val parts =
       if (requestedParts > 0) requestedParts
       else storePartsFor(
@@ -1604,20 +1342,16 @@ object IncrementalDedup {
           graft.fs.PartitionPointer.readWholeInferred(spark, srcData)
             .getOrElse(spark.read.parquet(srcData)).count()
         else 0L)
-    secondHalf match {
-      case Some((sub, subKeys)) =>
-        rebucket(s"$srcDir/postings", s"$dstDir/postings", keys, parts)
-        rebucket(s"$srcDir/$sub", s"$dstDir/$sub", subKeys, parts)
-        // bm25: the O(1) totals sidecar carries over byte-identical
-        if (bm25) {
-          val sp = new org.apache.hadoop.fs.Path(srcDir, "_bm25_stats")
-          val sfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (sfs.exists(sp))
-            org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dstFs,
-              new org.apache.hadoop.fs.Path(dstDir, "_bm25_stats"),
-              false, spark.sparkContext.hadoopConfiguration)
-        }
-      case None => rebucket(srcDir, dstDir, keys, parts)
+    layout.tables.foreach(t => rebucket(t.dir(srcDir), t.dir(dstDir), t.keys, parts))
+    // bm25: the O(1) totals sidecar carries over byte-identical
+    val bm25 = variant == "bm25"
+    if (bm25) {
+      val sp = new org.apache.hadoop.fs.Path(srcDir, "_bm25_stats")
+      val sfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (sfs.exists(sp))
+        org.apache.hadoop.fs.FileUtil.copy(sfs, sp, dstFs,
+          new org.apache.hadoop.fs.Path(dstDir, "_bm25_stats"),
+          false, spark.sparkContext.hadoopConfiguration)
     }
     // ngram: regenerate the gram-bloom sidecar with FRESH sizing from
     // the rebuilt store's actual rows — rebuild is both the saturation
@@ -1644,30 +1378,17 @@ object IncrementalDedup {
     // (bp was REHASHED above, so a carried-over index would be wrong) —
     // and the migration path that gives a pre-index legacy store its
     // first one, exactly like the gram bloom
-    val docIdxMeta: Map[String, String] = {
-      // (id column, bucket-partitioned data dir the index lives under)
-      val idx: Option[(String, String)] = variant match {
-        case "minhash" | "simhash" | "ngram" => Some(("doc_id", dstDir))
-        case "exact" | "span"                => Some(("keep_doc_id", dstDir))
-        case "embedding" if split            => Some(("vec_id", s"$dstDir/postings"))
-        case "embedding"                     => Some(("vec_id", dstDir))
-        case "bm25"                          => Some(("doc_id", s"$dstDir/postings"))
-        case _                               => None
-      }
-      idx match {
-        case Some((c, dataDir)) if hasParts(dataDir) =>
-          val dp = dpPartsFor(parts)
-          writeDocIndexFrom(spark, dataDir, dataDir, c, dp)
-          Map("doc_index" -> "1", "doc_index_parts" -> dp.toString)
-        case _ => Map.empty
-      }
+    val docIdxMeta: Map[String, String] = layout.indexed match {
+      case Some(t) if hasParts(t.dir(dstDir)) =>
+        val dp = dpPartsFor(parts)
+        writeDocIndexFrom(spark, t.dir(dstDir), t.dir(dstDir), t.idCol, dp)
+        Map("doc_index" -> "1", "doc_index_parts" -> dp.toString)
+      case _ => Map.empty
     }
     // manifest LAST — the commit point; every other key carries over
     // (exact/span stores leave a rebuild binary-keyed, migrated or not)
     val encMeta: Map[String, String] =
-      if (variant == "exact" || variant == "span")
-        Map("key_encoding" -> "binary")
-      else Map.empty
+      layout.md5Key.fold(Map.empty[String, String])(_ => Map("key_encoding" -> "binary"))
     val merged = manifest + ("store_parts" -> parts.toString) ++
       bloomMeta ++ encMeta ++ docIdxMeta
     // re-stamp required_features from the REBUILT feature set (rebuild

@@ -49,11 +49,25 @@ object IncrementalSpanDedup {
       w: Int = 10,
       textCol: String = "text",
       storeParts: Int = IncrementalDedup.AutoStoreParts,
-      compactFiles: Int = 0): DataFrame =
-    graft.fs.StoreLock.withLock(storeDir,
-      docsNew.sparkSession.sparkContext.hadoopConfiguration) {
-      spanBatchLocked(docsNew, storeDir, w, textCol, storeParts, compactFiles)
+      compactFiles: Int = 0): DataFrame = {
+    require(w >= 2, s"window width must be >= 2 tokens, got $w")
+    StoreCycle.run(docsNew, storeDir, storeParts, compactFiles) { mf =>
+      // key encoding (r13 verdict #3): new stores rest the window hash as
+      // 16-byte BINARY (unhex of the md5 hex the window expression emits)
+      // — the wh column IS the store's dominant at-rest cost (~one row
+      // per corpus token), so this halves it; legacy keyless manifests
+      // stay hex, rebuildStore migrates
+      val (binKeys, encMeta) = IncrementalDedup.keyEncodingOf(mf)
+      val win = SpanDedup.windows(docsNew, w, "doc_id", textCol)
+      // auto sizing sees the batch's window rows ≈ its token count — the
+      // store grows by ≤ that many rows per batch, the posting shape
+      StoreCycle.Family(StoreLayout.named("span"),
+        if (binKeys) win.withColumn("wh", unhex(col("wh"))) else win,
+        s"wh ${if (binKeys) "BINARY" else "STRING"}, keep_doc_id BIGINT, " +
+          "keep_pos BIGINT, bp INT",
+        _ => Map("w" -> w.toString) ++ encMeta, spanStep)
     }
+  }
 
   /** Streaming twin of [[spanBatch]] — duplicated spans of a document
     * stream against the persisted window store, one locked cycle per
@@ -74,56 +88,15 @@ object IncrementalSpanDedup {
     IncrementalDedup.streamCycles(docsStream, resultsDir, checkpointDir)(
       spanBatch(_, storeDir, w, textCol, storeParts, compactFiles))
 
-  private def spanBatchLocked(
-      docsNew: DataFrame,
-      storeDir: String,
-      w: Int,
-      textCol: String,
-      requestedParts: Int,
-      compactFiles: Int): DataFrame = {
-    require(w >= 2, s"window width must be >= 2 tokens, got $w")
-    val spark = docsNew.sparkSession
-    // key encoding (r13 verdict #3): new stores rest the window hash as
-    // 16-byte BINARY (unhex of the md5 hex the window expression emits)
-    // — the wh column IS the store's dominant at-rest cost (~one row
-    // per corpus token), so this halves it; legacy keyless manifests
-    // stay hex, rebuildStore migrates
-    val mParts = IncrementalDedup.manifestParts(spark, storeDir)
-    val (binKeys, encMeta) =
-      IncrementalDedup.keyEncodingOf(spark, storeDir, mParts.isDefined)
-    val winRaw0 = SpanDedup.windows(docsNew, w, "doc_id", textCol)
-    val winRaw =
-      if (binKeys) winRaw0.withColumn("wh", unhex(col("wh"))) else winRaw0
-    // auto sizing sees the batch's window rows ≈ its token count — the
-    // store grows by ≤ that many rows per batch, the posting shape
-    val (win, touchedParts, storeParts, _) = IncrementalDedup.resolveGeometry(
-      IncrementalDedup.knownPartsFrom(mParts, requestedParts),
-      winRaw, Seq(col("wh")))
-    // doc→bp retraction index: stamped at creation, adopted thereafter
-    // (keyed keep_doc_id — the column takedown retraction matches)
-    val mfS = IncrementalDedup.storeManifest(spark, storeDir)
-    val docIdx = mParts.isEmpty || IncrementalDedup.docIndexEnabled(mfS)
-    val dpParts = mfS.get("doc_index_parts").map(_.toInt)
-      .getOrElse(IncrementalDedup.dpPartsFor(storeParts))
-    IncrementalDedup.checkOrWriteMeta(spark, storeDir,
-      Map("variant" -> "span", "w" -> w.toString,
-        "store_parts" -> storeParts.toString) ++ encMeta ++
-        (if (mParts.isEmpty) Map("doc_index" -> "1",
-          "doc_index_parts" -> dpParts.toString) else Map.empty))
-    val read = IncrementalDedup.readStore(spark, storeDir,
-      s"wh ${if (binKeys) "BINARY" else "STRING"}, keep_doc_id BIGINT, " +
-        "keep_pos BIGINT, bp INT")
-    val store =
-      if (read._2) IncrementalDedup.prune(read._1, touchedParts)
-      else read._1.drop("bp")
+  private def spanStep(b: StoreCycle.Batch): StoreCycle.Step = {
     // batch-internal keeper per window content
-    val batchKeep = win.groupBy("wh")
+    val batchKeep = b.rows.groupBy("wh")
       .agg(min(struct(col("doc_id"), col("pos"))).as("bk"),
         count(lit(1)).as("batch_occ"))
       .select(col("wh"), col("bk.doc_id").as("bk_doc"),
         col("bk.pos").as("bk_pos"), col("batch_occ"))
-    val out = win.drop("bp")
-      .join(store, Seq("wh"), "left")
+    val out = b.rows.drop("bp")
+      .join(b.store, Seq("wh"), "left")
       .join(batchKeep, Seq("wh"))
       // store keeper wins; else the batch keeper, only when the window
       // actually duplicates within the batch; a keeper is never its own
@@ -142,30 +115,21 @@ object IncrementalSpanDedup {
       // directory, and re-evaluation after the append would see this
       // batch's own keepers and mark every window a duplicate
       .localCheckpoint()
-    // retraction index BEFORE the store rows it covers (superset rule):
-    // pairs from ALL batch keepers, not the anti-joined novel slice —
-    // already-stored windows add over-claiming pairs only (pruning
-    // cost), and exact repeats are likewise tolerated: appendDocIndex
-    // dedupes within the batch only (no anti-join against the stored
-    // index); duplicates cost distinct-bps pruning work and are erased
-    // by retractDocIndex
-    if (docIdx) IncrementalDedup.appendDocIndex(
-      batchKeep.select(col("bk_doc").as("keep_doc_id"),
-        IncrementalDedup.bpOf(storeParts, col("wh")).as("bp")),
-      storeDir, "keep_doc_id", dpParts)
-    // persist the batch's novel window keepers; anti-join makes a
-    // retried batch append nothing (equal wh shares a bp, so the pruned
-    // view is a complete witness)
-    IncrementalDedup.appendStore(
+    StoreCycle.Step(out,
+      // index pairs from ALL batch keepers, not the anti-joined novel
+      // slice — already-stored windows add over-claiming pairs only
+      // (pruning cost), and exact repeats are likewise tolerated:
+      // appendDocIndex dedupes within the batch only (no anti-join
+      // against the stored index); duplicates cost distinct-bps pruning
+      // work and are erased by retractDocIndex
+      batchKeep.select(col("bk_doc").as("keep_doc_id"), b.bp.as("bp")),
+      // the batch's novel window keepers; the anti-join makes a retried
+      // batch append nothing (equal wh shares a bp, so the pruned view
+      // is a complete witness)
       batchKeep
-        .join(store.select("wh"), Seq("wh"), "left_anti")
+        .join(b.store.select("wh"), Seq("wh"), "left_anti")
         .select(col("wh"), col("bk_doc").as("keep_doc_id"),
           col("bk_pos").as("keep_pos"))
-        .withColumn("bp", IncrementalDedup.bpOf(storeParts, col("wh"))),
-      storeDir, IncrementalDedup.appendWidth(touchedParts, storeParts))
-    if (compactFiles > 0 && touchedParts.nonEmpty)
-      IncrementalDedup.maybeCompactLocked(
-        spark, storeDir, touchedParts, compactFiles)
-    out
+        .withColumn("bp", b.bp))
   }
 }

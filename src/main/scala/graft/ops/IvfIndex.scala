@@ -278,10 +278,10 @@ object IvfIndex {
       spark.sparkContext.hadoopConfiguration) {
       sweepRebuild(spark, indexDir)
       val dd = ids.distinct
-      // allowPointer (r18 verdict #1): the whole IVF read surface
-      // (search, occupancy, rebuild, append anti-join) resolves the
-      // partition pointer via assignmentsDf/centroidsDf, so rename-less
-      // schemes commit this swap by pointer flip with NO override
+      // the whole IVF read surface (search, occupancy, rebuild, append
+      // anti-join) resolves the partition pointer via
+      // assignmentsDf/centroidsDf, so rename-less schemes commit this
+      // swap by pointer flip
       Retract.rewriteTouched(spark, s"$indexDir/assignments", "cell",
         Retract.semiOn(spark, dd, "id"), Retract.antiOn(spark, dd, "id"),
         sortCols = Seq("cell", "id"))

@@ -83,49 +83,43 @@ object Retract {
         rewriteTouched(spark, dir, "bp", semiOn(spark, ids, idCol),
           antiOn(spark, ids, idCol), prefilter = prefilter)
       }
-      // bucket-partitioned stores with a doc→bp index (r16): the index
+      // bucket-partitioned tables with a doc→bp index (r16): the index
       // names the exact candidate bps for the batch — the discovery
       // scan prunes to them (O(touched), no full id-column pass) — and
       // the index's own rows for the retired ids are erased afterwards
-      // (it over-claims between the two steps: pruning cost only)
-      // the index lives UNDER the bucket-partitioned data dir it maps
-      // (the store root for single-table stores, `postings/` for the
-      // split/bm25 two-table layouts)
-      def delIndexedAt(dataDir: String, idCol: String): Long = {
-        val dpParts = manifest.get("doc_index_parts").map(_.toInt)
-          .getOrElse(manifest("store_parts").toInt)
-        val pre =
-          if (IncrementalDedup.docIndexEnabled(manifest))
-            // None (index dir gone despite the flag) → full-scan
-            // discovery, never a silent no-op takedown
-            IncrementalDedup.docIndexBps(spark, dataDir, ids, dpParts)
-              .map(bps => col("bp").isin(bps: _*))
-          else None // legacy store: full-scan discovery
-        val n = del(dataDir, idCol, prefilter = pre)
-        IncrementalDedup.retractDocIndex(spark, dataDir, ids, dpParts)
-        n
+      // (it over-claims between the two steps: pruning cost only). A
+      // table bucketed on its own id (the split layout's `vectors/`)
+      // takes its candidate bps from the ids themselves — pruning
+      // end-to-end, no discovery scan.
+      def delTable(t: StoreTable): Long = {
+        val dataDir = t.dir(storeDir)
+        if (t.idHashed)
+          del(dataDir, t.idCol, prefilter = Some(col("bp").isin(
+            bpsOf(spark, ids, manifest("store_parts").toInt): _*)))
+        else {
+          val dpParts = manifest.get("doc_index_parts").map(_.toInt)
+            .getOrElse(manifest("store_parts").toInt)
+          val pre =
+            if (IncrementalDedup.docIndexEnabled(manifest))
+              // None (index dir gone despite the flag) → full-scan
+              // discovery, never a silent no-op takedown
+              IncrementalDedup.docIndexBps(spark, dataDir, ids, dpParts)
+                .map(bps => col("bp").isin(bps: _*))
+            else None // legacy store: full-scan discovery
+          val n = del(dataDir, t.idCol, prefilter = pre)
+          IncrementalDedup.retractDocIndex(spark, dataDir, ids, dpParts)
+          n
+        }
       }
-      def delIndexed(idCol: String): Long = delIndexedAt(storeDir, idCol)
       manifest("variant") match {
-        case "exact"               => delIndexed("keep_doc_id")
-        case "span"                => delIndexed("keep_doc_id")
-        case "minhash" | "simhash" => delIndexed("doc_id")
-        case "ngram"               => delIndexed("doc_id")
-        case "embedding" =>
-          if (manifest.get("store_layout").contains("split")) {
-            // vectors/ is id-hash partitioned: candidate bps from the
-            // ids themselves — pruning end-to-end, no discovery scan;
-            // postings/ is bucket-hash partitioned → doc index
-            val parts = manifest("store_parts").toInt
-            delIndexedAt(s"$storeDir/postings", "vec_id") +
-              del(s"$storeDir/vectors", "vec_id",
-                prefilter = Some(col("bp").isin(bpsOf(spark, ids, parts): _*)))
-          } else delIndexed("vec_id")
         case "components" =>
           IncrementalComponents.retractLocked(spark, storeDir, ids)
         case "bm25" =>
           Bm25Index.retractLocked(spark, storeDir, ids)
-        case v => sys.error(s"unknown store variant in manifest: $v")
+        case v =>
+          StoreLayout.of(manifest)
+            .getOrElse(sys.error(s"unknown store variant in manifest: $v"))
+            .tables.map(delTable).sum
       }
     }
   }
@@ -186,8 +180,7 @@ object Retract {
       matcher: DataFrame => DataFrame,
       transform: DataFrame => DataFrame,
       sortCols: Seq[String] = Nil,
-      prefilter: Option[Column] = None,
-      allowPointer: Boolean = true): Long = {
+      prefilter: Option[Column] = None): Long = {
     import org.apache.hadoop.fs.Path
     sweep(spark, dataDir)
     val root = new Path(dataDir)
@@ -197,21 +190,9 @@ object Retract {
     // refusal to real support): staging is identical, but each staged
     // partition moves to a fresh unreferenced versioned path and ONE
     // small-file PUT of the partition->version map commits the whole
-    // swap — see graft.fs.PartitionPointer. `allowPointer=false` callers
-    // (IVF assignments, components labels) read their stores with
-    // direct spark.read.parquet listings that cannot resolve a pointer,
-    // so they keep the r16 gate + rename path until their reads are
-    // centralized.
-    val pointerMode = !graft.fs.AtomicRename.isAtomic(root) && allowPointer
-    if (!pointerMode)
-      // swap-fence scheme gate (r16 verdict #1): the whole-old/whole-new
-      // reader contract below rides atomic directory renames — on a
-      // rename-less scheme fail loudly BEFORE any staging, unless the
-      // operator quiesced readers and set the override. The sweep above
-      // is deliberately ungated: healing an already-committed marker
-      // must always finish.
-      graft.fs.AtomicRename.requireForSwap(root,
-        spark.sparkContext.hadoopConfiguration, "store retraction/rewrite")
+    // swap — see graft.fs.PartitionPointer. Every store's readers
+    // resolve the pointer, so every caller commits this way.
+    val pointerMode = !graft.fs.AtomicRename.isAtomic(root)
     val hasData = (fs.exists(root) && fs.listStatus(root)
       .exists(_.getPath.getName.startsWith(s"$partCol="))) ||
       graft.fs.PartitionPointer.hasLive(fs, root)

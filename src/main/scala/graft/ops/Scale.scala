@@ -30,7 +30,6 @@ object Scale {
     // streaming frames have no .rdd and their micro-batches are already
     // planned per-trigger — pass through untouched
     if (df.isStreaming) return df
-    if (sys.env.get("GRAFT_NO_FANOUT").contains("1")) return df // A/B switch
     // width: BOUNDED spread, not full parallelism. The gate only fires
     // on under-split (small) inputs, where each extra task costs a
     // measured ~85 ms of fixed CPU (task setup + operator buffers —
@@ -40,8 +39,7 @@ object Scale {
     // at ~0.7 core-s while cutting a multi-second serial pass to ~1/8;
     // wider only trades CPU for nothing once the serial remainder is
     // sub-100 ms. Clamped by defaultParallelism for small machines.
-    val target = sys.env.get("GRAFT_FANOUT_PARTS").map(_.toInt).getOrElse(
-      math.min(df.sparkSession.sparkContext.defaultParallelism, 8))
+    val target = math.min(df.sparkSession.sparkContext.defaultParallelism, 8)
     // probe via toRdd, not df.rdd (r21 verdict #7): .rdd appends a
     // row-DESERIALIZER plan node to the subtree and pays its codegen
     // just to read a partition count; toRdd asks the same physical plan

@@ -84,10 +84,6 @@ object StoreFsck {
   private def err(kind: Kind, detail: String) = Finding("error", kind, detail)
   private def warn(kind: Kind, detail: String) = Finding("warn", kind, detail)
 
-  private val KnownVariants =
-    Set("exact", "span", "minhash", "simhash", "ngram", "embedding",
-      "components", "bm25", "ivf")
-
   /** Audit the store at `dir`. */
   def fsck(spark: SparkSession, dir: String, deep: Boolean = false): Seq[Finding] = {
     import org.apache.hadoop.fs.Path
@@ -108,8 +104,10 @@ object StoreFsck {
       return Seq(err(Kind.Manifest,
         s"$dir has no _graft_store.json — foreign or pre-manifest store"))
     val variant = mf.getOrElse("variant", "")
-    if (!KnownVariants(variant))
-      return (out += err(Kind.Manifest, s"unknown variant '$variant'")).toList
+    val layout = StoreLayout.of(mf)
+    if (layout.isEmpty)
+      return (out += err(Kind.Manifest, s"unknown variant '$variant'" +
+        mf.get("store_layout").fold("")(l => s" (store_layout '$l')"))).toList
     val partsOpt = mf.get("store_parts").flatMap(s => s.toIntOption)
     // ivf indexes are cell-partitioned on learned centroids — their
     // geometry key is nlist, not store_parts
@@ -124,28 +122,11 @@ object StoreFsck {
         s"store demands feature(s) this binary does not implement: " +
           unknownFeats.mkString(", "))
 
-    // ---- layout: the bucket-partitioned data dirs this variant owns ----
-    val split = mf.get("store_layout").contains("split")
-    // (relative data dir, partition column, bucket key columns)
-    val dataDirs: Seq[(String, String, Seq[String])] = variant match {
-      case "exact"      => Seq(("", "bp", Seq("digest")))
-      case "span"       => Seq(("", "bp", Seq("wh")))
-      case "minhash"    => Seq(("", "bp", Seq("band", "bh")))
-      case "simhash"    => Seq(("", "bp", Seq("band", "bh")))
-      case "ngram"      => Seq(("", "bp", Seq("shingle")))
-      case "embedding" if split =>
-        Seq(("postings", "bp", Seq("tbl", "bucket")),
-          ("vectors", "bp", Seq("vec_id")))
-      case "embedding"  => Seq(("", "bp", Seq("tbl", "bucket")))
-      case "bm25"       => Seq(("postings", "bp", Seq("term")),
-        ("docs", "bp", Seq("doc_id")))
-      case "components" => Seq(("labels", "bp", Seq("v")))
-      case "ivf"        => Seq(("assignments", "cell", Nil)) // cell = learned, not hashed
-      case _            => Nil
-    }
+    // ---- layout: the partitioned data tables this variant owns ----
+    val tables = layout.get.tables
     def abs(rel: String): String = if (rel.isEmpty) dir else s"$dir/$rel"
 
-    dataDirs.foreach { case (rel, partCol, _) =>
+    tables.foreach { case StoreTable(rel, partCol, _, _) =>
       val p = new Path(abs(rel))
       if (rel.nonEmpty && !fs.exists(p))
         out += warn(Kind.Layout, s"${abs(rel)} absent (empty store, or a " +
@@ -276,14 +257,8 @@ object StoreFsck {
     }
     // doc-index flag vs directory
     val docIdxFlag = IncrementalDedup.docIndexEnabled(mf)
-    val docIdxDirOf: Option[String] = variant match {
-      case "exact" | "span" | "minhash" | "simhash" | "ngram" => Some(dir)
-      case "embedding" if split => Some(s"$dir/postings")
-      case "embedding"          => Some(dir)
-      case "bm25"               => Some(s"$dir/postings")
-      case _                    => None
-    }
-    docIdxDirOf.foreach { dd =>
+    val indexed = layout.flatMap(_.indexed)
+    indexed.map(_.dir(dir)).foreach { dd =>
       val ip = new Path(dd, IncrementalDedup.DocIndexDir)
       if (docIdxFlag && !fs.exists(ip))
         out += warn(Kind.DocIndexMissing, s"manifest says doc_index=1 but " +
@@ -299,7 +274,7 @@ object StoreFsck {
 
     // ---- deep: content-level invariants ----
     partsOpt.foreach { parts =>
-      dataDirs.foreach { case (rel, partCol, keys) =>
+      tables.foreach { case StoreTable(rel, partCol, keys, _) =>
         if (keys.nonEmpty) {
           val d = abs(rel)
           val p = new Path(d)
@@ -322,7 +297,8 @@ object StoreFsck {
         }
       }
       // 2. doc-index SUPERSET: every stored row's (id, bp) must be claimed
-      docIdxDirOf.filter(_ => docIdxFlag).foreach { dd =>
+      indexed.filter(_ => docIdxFlag).foreach { t =>
+        val dd = t.dir(dir)
         val ip = new Path(dd, IncrementalDedup.DocIndexDir)
         // a fully-retracted store keeps only the index (over-claiming is
         // legal — supersets cost pruning only): the check is vacuous
@@ -333,11 +309,6 @@ object StoreFsck {
             .exists(_.getPath.getName.startsWith("bp="))) ||
           graft.fs.PartitionPointer.hasLive(fs, new Path(dd))
         if (fs.exists(ip) && ddHasData) {
-          val idCol = variant match {
-            case "exact" | "span" => "keep_doc_id"
-            case "embedding"      => "vec_id"
-            case _                => "doc_id"
-          }
           // tolerate a corrupted manifest value (r17 ADVICE): fsck's
           // whole job is to SURVIVE and NAME metadata damage — a bare
           // .toInt would throw NumberFormatException here instead of
@@ -356,7 +327,7 @@ object StoreFsck {
           }
           val data = graft.fs.PartitionPointer.readWholeInferred(spark, dd)
             .getOrElse(spark.read.parquet(dd))
-            .select(col(idCol).cast("long").as("doc_id"),
+            .select(col(t.idCol).cast("long").as("doc_id"),
               col("bp").cast("int").as("bp")).distinct()
           // an index dir emptied of every dp= partition while data rows
           // remain is itself maximal under-claiming — report it as such
@@ -451,13 +422,9 @@ object StoreFsck {
     }
     // 5. one keeper per key (exact/span): duplicates witness a
     // double-commit the store lock exists to prevent
-    if (variant == "exact" || variant == "span") {
-      val keyCol = if (variant == "exact") "digest" else "wh"
-      val ddl =
-        if (variant == "exact")
-          "digest BINARY, keep_doc_id BIGINT, bp INT"
-        else "wh BINARY, keep_doc_id BIGINT, keep_pos BIGINT, bp INT"
-      val (read, has) = IncrementalDedup.readStoreRaw(spark, dir, ddl)
+    layout.flatMap(_.md5Key).foreach { keyCol =>
+      val (read, has) =
+        IncrementalDedup.readStoreRaw(spark, dir, s"$keyCol BINARY, bp INT")
       if (has) {
         val dups = read.groupBy(keyCol).agg(count(lit(1)).as("n"))
           .filter(col("n") > 1).count()
@@ -552,16 +519,13 @@ object StoreFsck {
       try IncrementalDedup.storeManifest(spark, dir)
       catch { case _: Exception => Map.empty[String, String] }
     val variant = mf.getOrElse("variant", "")
-    val split = mf.get("store_layout").contains("split")
     val partsOpt = mf.get("store_parts").flatMap(_.toIntOption)
-    val dataRels: Seq[String] = variant match {
-      case "embedding" if split => Seq("postings", "vectors")
-      case "bm25"               => Seq("postings", "docs")
-      case "components"         => Seq("labels")
-      case "ivf"                => Seq("assignments")
-      case _                    => Seq("")
-    }
-    def abs(rel: String) = if (rel.isEmpty) dir else s"$dir/$rel"
+    val layout = StoreLayout.of(mf)
+    val dataDirs = layout.fold(Seq(dir))(_.tables.map(_.dir(dir)))
+    // the table the doc index lives under (fsck reports doc-index
+    // findings only for layouts that have one)
+    val indexed = layout.flatMap(_.indexed)
+      .getOrElse(StoreTable("", "bp", Nil, "doc_id"))
     // each heal runs at most once even when several findings share it
     var swept = false
     var statsDone = false
@@ -569,9 +533,9 @@ object StoreFsck {
     var refDone = false
     def sweepAll(): String = {
       if (!swept) {
-        dataRels.foreach { rel =>
-          IncrementalDedup.sweepCompactTrash(spark, abs(rel))
-          Retract.sweep(spark, abs(rel))
+        dataDirs.foreach { dd =>
+          IncrementalDedup.sweepCompactTrash(spark, dd)
+          Retract.sweep(spark, dd)
         }
         if (variant == "bm25" && Retract.armBusy(spark, s"$dir/postings")) {
           // the crashed arm's idempotent tail (Bm25Index.ensureReadable)
@@ -583,7 +547,7 @@ object StoreFsck {
         // a stranded arm sentinel on any other data dir has no sidecar
         // tail to recompute — the safe heal is bump (force seqlock
         // readers to re-snapshot) then clear
-        dataRels.map(abs).foreach { dd =>
+        dataDirs.foreach { dd =>
           if (Retract.armBusy(spark, dd) &&
               !(variant == "bm25" && dd == s"$dir/postings")) {
             Retract.bumpEpochAt(spark, dd)
@@ -629,13 +593,7 @@ object StoreFsck {
     }
     def healDocIndex(): String = {
       if (!docIdxDone) {
-        val (dd, idCol) = variant match {
-          case "exact" | "span"     => (dir, "keep_doc_id")
-          case "embedding" if split => (s"$dir/postings", "vec_id")
-          case "embedding"          => (dir, "vec_id")
-          case "bm25"               => (s"$dir/postings", "doc_id")
-          case _                    => (dir, "doc_id")
-        }
+        val dd = indexed.dir(dir)
         val ip = new Path(dd, IncrementalDedup.DocIndexDir)
         fs.delete(ip, true)
         val hasData = (fs.exists(new Path(dd)) && fs.listStatus(new Path(dd))
@@ -651,7 +609,7 @@ object StoreFsck {
           .orElse(partsOpt)
           .getOrElse(64)
         if (hasData)
-          IncrementalDedup.writeDocIndexFrom(spark, dd, dd, idCol, dpParts)
+          IncrementalDedup.writeDocIndexFrom(spark, dd, dd, indexed.idCol, dpParts)
         if (!mf.get("doc_index_parts").flatMap(_.toIntOption).contains(dpParts))
           IncrementalDedup.updateManifest(fs, dir,
             mf ++ Map("doc_index_parts" -> dpParts.toString))
@@ -695,9 +653,7 @@ object StoreFsck {
           (a, !a.startsWith("refused"))
         case Kind.DocIndexUnflagged =>
           // an unflagged index is ignored-and-drifting: remove it
-          val dd = if (variant == "bm25" || (variant == "embedding" && split))
-            s"$dir/postings" else dir
-          fs.delete(new Path(dd, IncrementalDedup.DocIndexDir), true)
+          fs.delete(new Path(indexed.dir(dir), IncrementalDedup.DocIndexDir), true)
           ("deleted the unflagged (ignored, drifting) _doc_index", true)
         case Kind.DocIndexMissing | Kind.DocIndexSuperset |
             Kind.DocIndexPartitioning =>

@@ -23,4 +23,36 @@ object SparkTestBase {
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark // stable id for implicits
   def sf: String = SparkTestBase.sf
+
+  /** What `body` returns, and the descriptions of the Spark jobs it
+    * starts. A fence job follows the body: the listener bus delivers job
+    * starts in order, so every job the body started is recorded before
+    * the fence's own start. */
+  def jobsOf[T](body: => T): (T, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = "suite-jobs"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => jobs.add(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      val out = body
+      sc.setJobGroup(group, "fence")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 30000
+      while (!jobs.contains("fence") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      val seen = jobs.asScala.toSeq
+      assert(seen.lastOption.contains("fence"), seen)
+      (out, seen.init)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
