@@ -187,9 +187,9 @@ object Ingest {
         // (parent, name, chunk_id) alone is NOT total when the source
         // holds several generations of the same path — interleaving their
         // chunks would break the row_id-contiguity invariant that
-        // Export.latestGeneration keys on (row_id - chunk_id constant per
-        // append). The source's own generation key joins the ordering so
-        // each generation re-stamps contiguously.
+        // Export.dumpAll's generation key relies on (row_id - chunk_id
+        // constant per append). The source's own generation key joins
+        // the ordering so each generation re-stamps contiguously.
         // sentinel −1 for unstamped rows: genuine generation keys are
         // ≥ 0, so unstamped rows can never interleave with a stamped
         // generation of the same path (several unstamped generations of

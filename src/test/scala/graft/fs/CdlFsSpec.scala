@@ -148,16 +148,90 @@ class CdlFsSpec extends SparkSuite {
   }
 
   test("export generation sentinel: first stamped append beats an unstamped re-append") {
-    import spark.implicits._
+    import org.apache.spark.sql.functions.lit
     // generation key of the table's FIRST stamped append is 0 (row_id 0
     // - chunk_id 0): the unstamped sentinel must sort BELOW it, never
     // tie it — a tie would let two generations' positional writes race
-    val t = Seq(
-      ("/", "f.txt", 0L, Some(0L), "new"),
-      ("/", "f.txt", 0L, None, "old"))
-      .toDF("parent", "name", "chunk_id", "row_id", "tag")
-    val kept = graft.fs.Export.latestGeneration(t).collect()
-    assert(kept.length == 1 && kept.head.getAs[String]("tag") == "new")
+    val fsS = CdlFs.open(spark, DatasetCatalog(),
+      GlobalPath.parse(s"$root/ds-sentinel").toOption.get)
+    val tree = s"$root/treeS"
+    Files.createDirectories(Paths.get(tree))
+    Files.write(Paths.get(s"$tree/f.txt"), "new".getBytes)
+    Ingest.run(fsS, tree)
+    fsS.table.filter(lit(false)) // schema template
+      .unionByName(spark.sql(
+        """SELECT 'f.txt' AS name, '/' AS parent,
+          |  CAST(NULL AS TIMESTAMP) atime, CAST(NULL AS TIMESTAMP) ctime,
+          |  CAST(NULL AS TIMESTAMP) mtime, CAST(NULL AS INT) mode,
+          |  CAST(5 AS BIGINT) size, CAST(0 AS BIGINT) chunk_id,
+          |  CAST(0 AS BIGINT) chunk_offset, CAST(5 AS BIGINT) chunk_size,
+          |  CAST('older' AS BINARY) data, CAST(NULL AS BIGINT) row_id""".stripMargin))
+      .write.mode("append").parquet(s"${fsS.tableLocation}/p0=_root")
+    assert(fsS.table.filter(col("row_id").isNull).count() == 1)
+    val dest = s"$root/restore-sentinel"
+    Export.dumpAll(fsS, dest)
+    assert(new String(Files.readAllBytes(Paths.get(s"$dest/f.txt"))) == "new")
+  }
+
+  /** A flat external table (no p0 dirs, no row_id column) holding `values`:
+    * (name, parent, size, chunk_id, chunk_offset, chunk_size, data) rows
+    * in SQL VALUES syntax, with a NULL `data` allowed. */
+  private def externalTable(ds: String, values: String): CdlFs = {
+    val f = CdlFs.open(spark, DatasetCatalog(),
+      GlobalPath.parse(s"$root/$ds").toOption.get)
+    spark.sql(
+      s"""SELECT * FROM VALUES $values
+         |  AS t(name, parent, size, chunk_id, chunk_offset, chunk_size, d)""".stripMargin)
+      .selectExpr("name", "parent", "CAST(NULL AS TIMESTAMP) atime",
+        "CAST(NULL AS TIMESTAMP) ctime", "CAST(NULL AS TIMESTAMP) mtime",
+        "CAST(420 AS INT) mode", "size", "chunk_id", "chunk_offset",
+        "chunk_size", "CAST(d AS BINARY) data")
+      .write.parquet(f.tableLocation)
+    f
+  }
+
+  test("export sets a file to its size: trailing metadata-only chunks read as zeros") {
+    // chunk 1 carries no payload (data is nullable for external
+    // writers): the exported file still has `size` bytes, zero-filled
+    val fsZ = externalTable("ds-zero-tail",
+      "('f.bin', '/', 6L, 0L, 0L, 3L, 'abc'), ('f.bin', '/', NULL, 1L, 3L, 3L, NULL)")
+    val dest = s"$root/restore-zero-tail"
+    Export.dumpAll(fsZ, dest)
+    assert(Files.readAllBytes(Paths.get(s"$dest/f.bin")).toSeq ==
+      "abc".getBytes.toSeq ++ Seq[Byte](0, 0, 0))
+  }
+
+  test("export onto a longer stale file cuts it to size") {
+    // the stale bytes neither outlast `size` nor show through the
+    // chunk that carries no payload
+    val fsT = externalTable("ds-stale",
+      "('f.bin', '/', 6L, 0L, 0L, 3L, 'abc'), ('f.bin', '/', NULL, 1L, 3L, 3L, NULL)")
+    val dest = s"$root/restore-stale"
+    Files.createDirectories(Paths.get(dest))
+    Files.write(Paths.get(s"$dest/f.bin"), Array.fill[Byte](100)('z'))
+    Export.dumpAll(fsT, dest)
+    assert(Files.readAllBytes(Paths.get(s"$dest/f.bin")).toSeq ==
+      "abc".getBytes.toSeq ++ Seq[Byte](0, 0, 0))
+  }
+
+  test("export skips a path whose newest generation has no size row") {
+    // data rows without a `size IS NOT NULL` row are no file (the
+    // listings' rule): the export completes and writes none for them
+    val fsM = externalTable("ds-no-size",
+      "('ok.txt', '/', 2L, 0L, 0L, 2L, 'ok'), ('orphan.bin', '/d', NULL, 0L, 0L, 3L, 'xyz')")
+    assert(fsM.readDirAll().collect().map(_.getAs[String]("name")).toSeq == Seq("ok.txt"))
+    val dest = s"$root/restore-no-size"
+    Export.dumpAll(fsM, dest)
+    assert(new String(Files.readAllBytes(Paths.get(s"$dest/ok.txt"))) == "ok")
+    assert(!Files.exists(Paths.get(s"$dest/d/orphan.bin")))
+  }
+
+  test("an export starts 2 Spark jobs: shuffle map + the writing pass") {
+    fs.versions // the lazy fixture ingests (jobs) first
+    val (_, jobs) = jobsOf(Export.dumpAll(fs, s"$root/restore-jobs"))
+    assert(jobs.size == 2, jobs)
+    assert(Files.readAllBytes(Paths.get(s"$root/restore-jobs/small.txt"))
+      .sameElements("hello rootfs".getBytes))
   }
 
   test("take falls back when external rows lack the row_id stamp") {
@@ -292,6 +366,12 @@ class CdlFsSpec extends SparkSuite {
     Export.dumpAll(fsG2, dest)
     assert(new String(Files.readAllBytes(Paths.get(s"$dest/f.bin"))) ==
       "333344445555")
+    // a newer generation with FEWER chunks than the older ones, exported
+    // onto the same destination: exactly its bytes and length remain
+    Files.write(Paths.get(s"$tree/f.bin"), "66".getBytes) // 1 chunk
+    Ingest.run(fsG, tree)
+    Export.dumpAll(fsG, dest)
+    assert(new String(Files.readAllBytes(Paths.get(s"$dest/f.bin"))) == "66")
   }
 
   test("commit log: each append is a version; time travel reads old snapshots") {
@@ -332,22 +412,13 @@ class CdlFsSpec extends SparkSuite {
     df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
 
   test("flat external table: no p0 dirs, no row_id column, reads through the pinned schema") {
-    val fsF = CdlFs.open(spark, DatasetCatalog(),
-      GlobalPath.parse(s"$root/ds-flat").toOption.get)
     // an external engine's table: the 11 reference columns, no row_id,
     // written straight into tableLocation with no partition directories
-    spark.sql(
-      """SELECT * FROM VALUES
-        |  ('b.txt', '/', 2L, 0L, 0L, 2L, 'bb'),
-        |  ('a.txt', '/', 1L, 0L, 0L, 1L, 'a'),
-        |  ('c.bin', '/d', 5L, 0L, 0L, 3L, 'ccc'),
-        |  ('c.bin', '/d', NULL, 1L, 3L, 2L, 'cc')
-        |  AS t(name, parent, size, chunk_id, chunk_offset, chunk_size, d)""".stripMargin)
-      .selectExpr("name", "parent", "CAST(NULL AS TIMESTAMP) atime",
-        "CAST(NULL AS TIMESTAMP) ctime", "CAST(NULL AS TIMESTAMP) mtime",
-        "CAST(420 AS INT) mode", "size", "chunk_id", "chunk_offset",
-        "chunk_size", "CAST(d AS BINARY) data")
-      .write.parquet(fsF.tableLocation)
+    val fsF = externalTable("ds-flat",
+      """('b.txt', '/', 2L, 0L, 0L, 2L, 'bb'),
+        |('a.txt', '/', 1L, 0L, 0L, 1L, 'a'),
+        |('c.bin', '/d', 5L, 0L, 0L, 3L, 'ccc'),
+        |('c.bin', '/d', NULL, 1L, 3L, 2L, 'cc')""".stripMargin)
     assert(fsF.table.columns.toSeq == RootFs.schema.fieldNames.toSeq)
     assert(fsF.table.filter(col("row_id").isNull).count() == 4)
     def names(df: DataFrame) = df.collect().map(_.getAs[String]("name")).toSeq
