@@ -776,14 +776,7 @@ final class CdlFs(
     val merged = readCascadePending(haveLock = true) match {
       case None => json
       case Some((oldIds, oldStores)) =>
-        val m = jsonMapper
-        val n = m.readTree(json)
-        import scala.jdk.CollectionConverters._
-        val newIds = Option(n.get("ids")).map(_.fields().asScala.map(e =>
-          e.getKey -> e.getValue.elements().asScala.map(_.asLong).toSeq).toMap)
-          .getOrElse(Map.empty[String, Seq[Long]])
-        val newStores = n.get("stores").elements().asScala
-          .map(e => (e.get("dir").asText, e.get("id_col").asText)).toSeq
+        val (newIds, newStores) = parseCascadePending(json)
         val ids = (oldIds.keySet ++ newIds.keySet).map(c =>
           c -> (oldIds.getOrElse(c, Nil) ++ newIds.getOrElse(c, Nil)).distinct.toSeq
         ).toMap
@@ -834,15 +827,22 @@ final class CdlFs(
       val body =
         try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
         finally in.close()
-      import scala.jdk.CollectionConverters._
-      val n = jsonMapper.readTree(body)
-      val ids = Option(n.get("ids")).map(_.fields().asScala.map(e =>
-        e.getKey -> e.getValue.elements().asScala.map(_.asLong).toSeq).toMap)
-        .getOrElse(Map.empty[String, Seq[Long]])
-      val stores = n.get("stores").elements().asScala
-        .map(e => (e.get("dir").asText, e.get("id_col").asText)).toSeq
-      Some((ids, stores))
+      Some(parseCascadePending(body))
     }
+  }
+
+  /** A cascade-pending body: the retired ids per id column, and the
+    * (store dir, id column) pairs still owed the retraction. */
+  private def parseCascadePending(
+      json: String): (Map[String, Seq[Long]], Seq[(String, String)]) = {
+    import scala.jdk.CollectionConverters._
+    val n = jsonMapper.readTree(json)
+    val ids = Option(n.get("ids")).map(_.properties().asScala.map(e =>
+      e.getKey -> e.getValue.elements().asScala.map(_.asLong).toSeq).toMap)
+      .getOrElse(Map.empty[String, Seq[Long]])
+    val stores = n.get("stores").elements().asScala
+      .map(e => (e.get("dir").asText, e.get("id_col").asText)).toSeq
+    (ids, stores)
   }
 
   /** Stores still owed a retraction by a pending cascade (empty when

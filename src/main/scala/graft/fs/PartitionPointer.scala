@@ -75,9 +75,10 @@ import org.apache.spark.sql.types.StructType
   * disk and listable until [[sweepGarbage]] collects it (as
   * `prev = PrevLegacy` for the grace cycle, or hidden behind a
   * tombstone until the tombstone's own grace expires), so a blind read
-  * after a retraction can return the retracted rows. Only the
-  * pointer-resolving reads ([[readDf]], [[readWholeInferred]]) see the
-  * committed state.
+  * after a retraction can return the retracted rows. Only reads through
+  * [[readDf]] see the committed state: every store table reads through
+  * it with its pinned schema (`graft.ops.StoreTable.readRaw`), and the
+  * IVF assignments with an inferred one (`graft.ops.IvfIndex.assignmentsDf`).
   *
   * Appends on a pointer store stage to an `_append_tmp-<pid>` dir and
   * MOVE files (never directories) into each touched partition's live
@@ -310,11 +311,6 @@ object PartitionPointer {
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s), false))
     }
   }
-
-  /** [[readDf]] without a caller schema — for whole-store maintenance
-    * reads (rebuild, fsck) that infer. */
-  def readWholeInferred(spark: SparkSession, dir: String): Option[DataFrame] =
-    readDf(spark, dir, None).collect { case (df, true) => df }
 
   /** Pointer-aware partitioned append. Returns false when the dir has
     * no pointer — the caller keeps its plain

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.functions._
 
 /** Persisted BM25 inverted index — the LEXICAL twin of [[IvfIndex]]
@@ -54,6 +54,8 @@ object Bm25Index {
 
   private val StatsFile = "_bm25_stats"
   private val TermBloomFile = "_term_bloom"
+  private val Postings = StoreLayout.named("bm25").tables(0)
+  private val Docs = StoreLayout.named("bm25").tables(1)
 
   /** One locked index cycle: add `docsNew` (novel docs only — replays
     * and id-reuse are doc-granular no-ops) to the index at `dir`,
@@ -164,8 +166,7 @@ object Bm25Index {
     // doc-granular novelty from docs/ (pruned to the batch's id hashes);
     // dl NULL for NULL text — the search stats convention: such docs
     // count in N but not in avgdl
-    val readD = IncrementalDedup.readStore(spark, s"$dir/docs",
-      "doc_id BIGINT, dl DOUBLE, bp INT")
+    val readD = Docs.read(spark, dir, mfB)
     // docBps rides the checkpoint's own materialization as an observe
     // metric (the resolveGeometry pattern, r21) — no separate probe job
     val docObs = org.apache.spark.sql.Observation()
@@ -202,15 +203,14 @@ object Bm25Index {
       // heal a lost sidecar HERE too, or the documented "next locked
       // cycle self-heals" contract breaks under pure-replay workloads
       // (indexStream retries are exactly the dN == 0 shape)
-      healTermBloomLocked(spark, dir, bloomGeom)
+      healTermBloomLocked(spark, dir, bloomGeom, mfB)
       return 0L
     }
     // postings of the NOVEL docs only; row-granular (doc_id, term)
     // anti-join against the term-pruned store so a crashed append's
     // retry appends exactly the missing rows (equal terms share a bp —
     // the pruned view is a complete witness)
-    val readP = IncrementalDedup.readStore(spark, s"$dir/postings",
-      "term STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, bp INT")
+    val readP = Postings.read(spark, dir, mfB)
     // warm cycles probe the term bloom: a MISS term is definitively
     // absent, so partitions touched only by never-indexed terms drop
     // out of the anti-join's pruned read (the ngram hitParts pattern).
@@ -277,7 +277,7 @@ object Bm25Index {
     })
     if (compactFiles > 0 && touchedParts.nonEmpty)
       IncrementalDedup.maybeCompactLocked(
-        spark, s"$dir/postings", touchedParts, compactFiles)
+        spark, dir, Postings, mfB, touchedParts, compactFiles)
     dN
   }
 
@@ -288,11 +288,10 @@ object Bm25Index {
     * store lock; a present sidecar is a no-op probe. */
   private def healTermBloomLocked(
       spark: SparkSession, dir: String,
-      bloomGeom: Option[(Long, Long)]): Unit =
+      bloomGeom: Option[(Long, Long)], manifest: Map[String, String]): Unit =
     bloomGeom.foreach { case (c, b) =>
       if (IncrementalDedup.readBloomSidecar(spark, dir, TermBloomFile).isEmpty) {
-        val readP = IncrementalDedup.readStore(spark, s"$dir/postings",
-          "term STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, bp INT")
+        val readP = Postings.read(spark, dir, manifest)
         if (readP._2)
           IncrementalDedup.writeBloomSidecar(spark, dir, TermBloomFile,
             readP._1.select(xxhash64(col("term")).as("th"))
@@ -417,8 +416,7 @@ object Bm25Index {
       s"bm25 search on $dir", () => ensureReadable(spark, dir),
       refreshPath = Some(dir)) { () =>
       val statsOpt = readStats(spark, dir)
-      val readP = IncrementalDedup.readStoreRaw(spark, postingsDir,
-        "term STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, bp INT")
+      val readP = Postings.readRaw(spark, dir, manifest)
       require(statsOpt.isDefined || !readP._2,
         s"$dir holds postings but no $StatsFile — a crash between an " +
           "append's table writes and its stats write; run recomputeStats " +
@@ -496,8 +494,8 @@ object Bm25Index {
     * scans, never correctness; `rebuildStore` re-derives it tight.
     * Returns posting+doc rows removed. */
   private[ops] def retractLocked(
-      spark: SparkSession, dir: String, ids: Seq[Long]): Long = {
-    val mf = IncrementalDedup.storeManifest(spark, dir)
+      spark: SparkSession, dir: String, ids: Seq[Long],
+      mf: Map[String, String]): Long = {
     val parts = mf.get("store_parts").map(_.toInt).getOrElse(
       sys.error(s"$dir has no store_parts in its manifest"))
     val bps = Retract.bpsOf(spark, ids, parts)
@@ -520,18 +518,16 @@ object Bm25Index {
     val dpParts = mf.get("doc_index_parts").map(_.toInt).getOrElse(parts)
     val prePost =
       if (IncrementalDedup.docIndexEnabled(mf))
-        IncrementalDedup.docIndexBps(spark, s"$dir/postings", ids, dpParts)
+        IncrementalDedup.docIndexBps(spark, Postings.dir(dir), ids, dpParts, mf)
           .map(c => col("bp").isin(c: _*))
       else None
-    val removedP = Retract.rewriteTouched(spark, s"$dir/postings", "bp",
-      Retract.semiOn(spark, ids, "doc_id"),
-      Retract.antiOn(spark, ids, "doc_id"),
-      prefilter = prePost)
-    val removedD = Retract.rewriteTouched(spark, s"$dir/docs", "bp",
-      Retract.semiOn(spark, ids, "doc_id"),
-      Retract.antiOn(spark, ids, "doc_id"),
-      prefilter = Some(col("bp").isin(bps: _*)))
-    IncrementalDedup.retractDocIndex(spark, s"$dir/postings", ids, dpParts)
+    def rewrite(t: StoreTable, prefilter: Option[Column]): Long =
+      Retract.rewriteTouched(spark, t.dir(dir), t.partCol, t.readRaw(spark, dir, mf),
+        Retract.semiOn(spark, ids, "doc_id"), Retract.antiOn(spark, ids, "doc_id"),
+        prefilter = prefilter)
+    val removedP = rewrite(Postings, prePost)
+    val removedD = rewrite(Docs, Some(col("bp").isin(bps: _*)))
+    IncrementalDedup.retractDocIndex(spark, Postings.dir(dir), ids, dpParts, mf)
     recomputeStatsLocked(spark, dir)
     // the retraction's consistency surface includes the stats the
     // search scores with — re-bump the postings epoch AFTER the stats
@@ -560,8 +556,7 @@ object Bm25Index {
     }
 
   private[ops] def recomputeStatsLocked(spark: SparkSession, dir: String): Unit = {
-    val readD = IncrementalDedup.readStore(spark, s"$dir/docs",
-      "doc_id BIGINT, dl DOUBLE, bp INT")
+    val readD = Docs.read(spark, dir, IncrementalDedup.storeManifest(spark, dir))
     val row = readD._1.agg(count(lit(1)).as("n"), count(col("dl")).as("nt"),
       coalesce(sum(col("dl")), lit(0.0)).as("td")).collect().head
     writeStats(spark, dir, (row.getLong(0), row.getLong(1), row.getDouble(2)))

@@ -47,7 +47,8 @@ import org.apache.spark.sql.functions._
   * idempotent); duplicate log rows are cleared by the next compact. */
 object IncrementalComponents {
 
-  private val LabelsDir = "labels"
+  private val Labels = StoreLayout.named("components").data
+  private val LabelsDir = Labels.rel
   private val MergesDir = "merges"
 
   private def bpOf(parts: Int, v: org.apache.spark.sql.Column) =
@@ -145,6 +146,7 @@ object IncrementalComponents {
     val lp = s"$storeDir/$LabelsDir"
     val ready = new org.apache.hadoop.fs.Path(storeDir, "_compact_ready")
     val fs = ready.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mf = IncrementalDedup.storeManifest(spark, storeDir)
     // SEQLOCK bracket (r19 ADVICE: labels() was lock-free with only the
     // merge-log read retried — a read racing two successive pointer
     // folds could lose its resolved generation when the second fold's
@@ -175,13 +177,8 @@ object IncrementalComponents {
       // with either generation. Listing labels first would permit
       // old-labels + partial-log — under-resolved components.
       val mm = mergeMap(spark, storeDir, locked = false)
-      val (base, has) = IncrementalDedup.readStoreRaw(spark, lp,
-        "v BIGINT, component BIGINT, bp INT")
-      if (!has)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "v BIGINT, component BIGINT"))
+      val (base, has) = Labels.readRaw(spark, storeDir, mf)
+      if (!has) base.drop("bp")
       else resolve(base.drop("bp"), mm).localCheckpoint()
     }
   }
@@ -210,11 +207,9 @@ object IncrementalComponents {
     * variants. */
   private[ops] def rebuildLocked(
       spark: SparkSession, srcDir: String, dstDir: String,
-      requestedParts: Int): Int = {
+      requestedParts: Int, manifest: Map[String, String]): Int = {
     sweepCompact(spark, srcDir) // finish any crashed compact swap first
-    Retract.sweep(spark, s"$srcDir/$LabelsDir")
-    val readL = IncrementalDedup.readStoreRaw(spark, s"$srcDir/$LabelsDir",
-      "v BIGINT, component BIGINT, bp INT")
+    val readL = Labels.read(spark, srcDir, manifest)
     val resolved =
       if (!readL._2) None
       else Some(resolve(readL._1.drop("bp"),
@@ -274,6 +269,8 @@ object IncrementalComponents {
     // heal a crashed compaction or retraction swap BEFORE reading anything
     sweepCompact(spark, storeDir)
     Retract.sweep(spark, s"$storeDir/$LabelsDir")
+    val mf = IncrementalDedup.storeManifest(spark, storeDir)
+    val mParts = mf.get("store_parts").map(_.toInt)
     val edges = pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .localCheckpoint()
@@ -284,11 +281,9 @@ object IncrementalComponents {
     // precedence; a mismatched explicit fails loudly in the meta check);
     // the streaming sentinel adopts the manifest, creates at the default
     val knownParts: Option[Int] = requestedParts match {
-      case IncrementalDedup.AutoStoreParts =>
-        IncrementalDedup.manifestParts(spark, storeDir)
+      case IncrementalDedup.AutoStoreParts => mParts
       case IncrementalDedup.AdoptOrDefaultStoreParts =>
-        Some(IncrementalDedup.manifestParts(spark, storeDir)
-          .getOrElse(IncrementalDedup.DefaultStoreParts))
+        Some(mParts.getOrElse(IncrementalDedup.DefaultStoreParts))
       case r => Some(r)
     }
     // geometry-known cycles ride the touched-partition probe on the
@@ -324,14 +319,9 @@ object IncrementalComponents {
     // the batch's own hash range, resolved through the merge log —
     // pointer-aware read (rename-less schemes commit folds/retractions
     // by pointer flip; a blind listing would miss versioned partitions)
-    val readL = IncrementalDedup.readStoreRaw(spark, lp,
-      "v BIGINT, component BIGINT, bp INT")
+    val readL = Labels.readRaw(spark, storeDir, mf)
     val existing =
-      if (!readL._2)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "v BIGINT, component BIGINT"))
+      if (!readL._2) readL._1.drop("bp")
       else {
         // touched set rode the verts checkpoint (observe); creation-only
         // cycles never reach here (an absent manifest means no data)
@@ -444,18 +434,16 @@ object IncrementalComponents {
     * retired ID (as a vertex and as a name); RetractSpec pins both.
     * Returns label rows removed (renames are updates, not removals). */
   private[ops] def retractLocked(
-      spark: SparkSession, storeDir: String, ids: Seq[Long]): Long = {
+      spark: SparkSession, storeDir: String, ids: Seq[Long],
+      manifest: Map[String, String]): Long = {
     sweepCompact(spark, storeDir)
     compactLocked(spark, storeDir)
-    val lp = s"$storeDir/$LabelsDir"
-    val parts = IncrementalDedup.manifestParts(spark, storeDir).getOrElse(
+    val parts = manifest.get("store_parts").map(_.toInt).getOrElse(
       sys.error(s"$storeDir has no store_parts in its manifest"))
     // removed = own rows only (renames are updates): one column-pruned
     // count, bp-prefiltered — the compound matcher below can't report
     // it (its hit count includes renamed members)
-    Retract.sweep(spark, lp)
-    val (labels0, hasData) = IncrementalDedup.readStoreRaw(
-      spark, lp, "v BIGINT, component BIGINT, bp INT")
+    val (labels0, hasData) = Labels.read(spark, storeDir, manifest)
     if (!hasData) return 0L
     val bps = Retract.bpsOf(spark, ids, parts)
     val removed = Retract.semiOn(spark, ids, "v")(
@@ -463,10 +451,11 @@ object IncrementalComponents {
     val ownOf = Retract.semiOn(spark, ids, "v")
     val namedOf = Retract.semiOn(spark, ids, "component")
     // labels(), the fold, and the batch cycle all read this table
-    // through the pointer-aware readStoreRaw, so rename-less schemes
+    // through the pointer-aware StoreTable reader, so rename-less schemes
     // commit this swap by pointer flip (and the fold itself commits by
     // pointer too — see compactLocked)
-    Retract.rewriteTouched(spark, lp, "bp",
+    Retract.rewriteTouched(spark, Labels.dir(storeDir), Labels.partCol,
+      Labels.readRaw(spark, storeDir, manifest),
       df => ownOf(df).unionByName(namedOf(df)),
       df => {
         val kept = Retract.antiOn(spark, ids, "v")(df)
@@ -535,8 +524,8 @@ object IncrementalComponents {
           graft.fs.AtomicRename.requireForSwap(root,
             spark.sparkContext.hadoopConfiguration,
             "clusters-store compaction fold")
-        val (base0, hasData) = IncrementalDedup.readStoreRaw(spark, lp,
-          "v BIGINT, component BIGINT, bp INT")
+        val (base0, hasData) = Labels.readRaw(spark, storeDir,
+          IncrementalDedup.storeManifest(spark, storeDir))
         if (!hasData) return 0L
         val obs = org.apache.spark.sql.Observation()
         val resolved = resolve(

@@ -136,7 +136,7 @@ object IncrementalDedup {
           finally in.close()
         val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
         import scala.jdk.CollectionConverters._
-        node.fields().asScala.map(e => e.getKey -> e.getValue.asText).toMap
+        node.properties().asScala.map(e => e.getKey -> e.getValue.asText).toMap
       }
     } catch { case _: Exception => Map.empty }
   }
@@ -413,7 +413,6 @@ object IncrementalDedup {
       StoreCycle.Family(StoreLayout.named("exact"),
         docsNew.filter(col(textCol).isNotNull)
           .select(col("doc_id"), digestExpr.as("digest")),
-        s"digest ${if (binKeys) "BINARY" else "STRING"}, keep_doc_id BIGINT, bp INT",
         _ => encMeta, b => exactStep(b, binKeys))
     }
 
@@ -521,7 +520,6 @@ object IncrementalDedup {
           textCol, numHashes = numHashes),
         bands, numHashes / bands)
       StoreCycle.Family(StoreLayout.named("minhash"), bandedRaw,
-        "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bh BIGINT, bp INT",
         _ => Map("num_hashes" -> numHashes.toString, "bands" -> bands.toString),
         b => {
           val batchBanded = b.rows.drop("bp")
@@ -654,7 +652,6 @@ object IncrementalDedup {
           .select(col("doc_id"),
             explode(grams).as("shingle"),
             coalesce(size(grams), lit(0)).cast("long").as("nsh")),
-        "doc_id BIGINT, shingle BIGINT, nsh BIGINT, bp INT",
         rows => Map("n" -> n.toString) ++
           (if (creating) bloomGeom(rows).toSeq.flatMap { case (c, b) =>
             Seq("bloom_cap" -> c.toString, "bloom_bits" -> b.toString)
@@ -794,7 +791,6 @@ object IncrementalDedup {
         Dedup.simhash(Scale.fanOutForCompute(docsNew, col("doc_id")), textCol),
         maxHamming)
       StoreCycle.Family(StoreLayout.named("simhash"), bandedRaw,
-        "doc_id BIGINT, simhash BIGINT, band INT, bh BIGINT, bp INT",
         _ => Map("max_hamming" -> maxHamming.toString),
         b => {
           val batchBanded = b.rows.drop("bp")
@@ -964,7 +960,6 @@ object IncrementalDedup {
          else Map("vec_type" -> vecType)) ++
         (if (manifestExists && mLayout.isEmpty) Map.empty
          else Map("store_layout" -> storeLayout))
-      val vecDdl = s"vec ARRAY<${vecType.toUpperCase}>"
       // One eager checkpoint feeds both join sides and the append; auto
       // sizing sees bucketed rows = vectors × tables exactly
       if (storeLayout == "split") {
@@ -979,14 +974,11 @@ object IncrementalDedup {
         // checkpointed frame carries both the posting and the vector.
         val pinned = newVecs.localCheckpoint()
         val l = StoreLayout.named("embedding", "split")
-        StoreCycle.Family(l, bucketed(pinned).drop("vec"),
-          "vec_id BIGINT, tbl INT, bucket BIGINT, bp INT", _ => meta,
-          b => embeddingSplitStep(b, pinned, l.tables(1).dir(storeDir),
-            s"vec_id BIGINT, $vecDdl, bp INT", threshold))
+        StoreCycle.Family(l, bucketed(pinned).drop("vec"), _ => meta,
+          b => embeddingSplitStep(b, pinned, storeDir, l.tables(1), threshold))
       } else
         StoreCycle.Family(StoreLayout.named("embedding"), bucketed(newVecs),
-          s"vec_id BIGINT, $vecDdl, tbl INT, bucket BIGINT, bp INT", _ => meta,
-          b => {
+          _ => meta, b => {
             val batchBucketed = b.rows.drop("bp")
             // fanOut on the JOIN key (r20): the candidate join's reduce
             // side is where every cosine runs, and AQE's byte-based
@@ -1027,8 +1019,8 @@ object IncrementalDedup {
   private def embeddingSplitStep(
       b: StoreCycle.Batch,
       newVecs: DataFrame,
-      vectorsDir: String,
-      vectorsDdl: String,
+      storeDir: String,
+      vectors: StoreTable,
       threshold: Double): StoreCycle.Step = {
     val spark = b.rows.sparkSession
     val batchP = b.rows.drop("bp")
@@ -1060,10 +1052,10 @@ object IncrementalDedup {
         bpOf(b.parts, col("id_a")),
         bpOf(b.parts, col("id_b")))).as("vp"))
       .distinct().collect().map(_.getInt(0)).toIndexedSeq
-    val readV = readStore(spark, vectorsDir, vectorsDdl)
-    def vectors(ps: Seq[Int]): DataFrame =
+    val readV = vectors.read(spark, storeDir, b.manifest)
+    def stored(ps: Seq[Int]): DataFrame =
       if (readV._2) prune(readV._1, ps) else readV._1.drop("bp")
-    val fetched = vectors(candVps)
+    val fetched = stored(candVps)
       .unionByName(newVecRows.drop("bp"))
       // a retried batch's ids exist on both sides; the rows are
       // identical, keep one
@@ -1081,9 +1073,9 @@ object IncrementalDedup {
       .localCheckpoint()
     // vectors FIRST (crash-order contract in embeddingBatch's doc)
     appendStore(
-      newVecRows.join(vectors(batchVps).select("vec_id"), Seq("vec_id"), "left_anti"),
-      vectorsDir, math.max(1, batchVps.size))
-    rowStep(out, b, "vec_id", "tbl").copy(alsoCompact = Seq((vectorsDir, batchVps)))
+      newVecRows.join(stored(batchVps).select("vec_id"), Seq("vec_id"), "left_anti"),
+      vectors.dir(storeDir), math.max(1, batchVps.size))
+    rowStep(out, b, "vec_id", "tbl").copy(alsoCompact = Seq((vectors, batchVps)))
   }
 
   /** Streaming form of `exactBatch`: dedup a document STREAM against
@@ -1227,15 +1219,15 @@ object IncrementalDedup {
       // every table of the layout compacts under the one root lock (the
       // split embedding and bm25 stores keep theirs one level down); the
       // components and IVF stores, whose tables their own modules
-      // maintain, keep the root-only pass. Heal any crashed retraction
-      // first — compaction lists live dirs directly.
-      val halves = StoreLayout.of(storeManifest(spark, storeDir))
+      // maintain, are left alone. Heal any crashed retraction first —
+      // compaction lists live dirs directly.
+      val mf = storeManifest(spark, storeDir)
+      StoreLayout.of(mf)
         .filterNot(l => l.variant == "components" || l.variant == "ivf")
-        .fold(Seq(storeDir))(_.tables.map(_.dir(storeDir)))
-      halves.map { h =>
-        Retract.sweep(spark, h)
-        compactStoreLocked(spark, h)
-      }.sum
+        .toSeq.flatMap(_.tables).map { t =>
+          Retract.sweep(spark, t.dir(storeDir))
+          compactStoreLocked(spark, storeDir, t, mf)
+        }.sum
     }
 
   /** Rebuild a store under NEW partition geometry, into a fresh
@@ -1291,20 +1283,13 @@ object IncrementalDedup {
     // re-bucket in one) — its own module owns that logic
     if (variant == "components")
       return IncrementalComponents.rebuildLocked(
-        spark, srcDir, dstDir, requestedParts)
+        spark, srcDir, dstDir, requestedParts, manifest)
     // every table re-buckets on the layout's keys — the SAME keys the
     // batch cycles hash, so the rebuilt store prunes identically to one
     // created at this size (IVF cells are learned, not hashed)
     val layout = StoreLayout.of(manifest).filter(_.tables.forall(_.keys.nonEmpty))
       .getOrElse(sys.error(s"unknown store variant in manifest: $variant " +
         "(exact|minhash|simhash|ngram|embedding|span|bm25|components)"))
-    def hasParts(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      (fs.exists(p) &&
-        fs.listStatus(p).exists(_.getPath.getName.startsWith("bp="))) ||
-        graft.fs.PartitionPointer.hasLive(fs, p)
-    }
     // key-encoding migration (r13 verdict #3): rebuilding a legacy HEX
     // exact/span store converts its md5 key to 16-byte BINARY — the
     // conversion runs BEFORE bp is rehashed, so the rebuilt store prunes
@@ -1312,20 +1297,8 @@ object IncrementalDedup {
     // verbatim. The dst manifest records the encoding either way.
     val hexKeyCol = layout.md5Key
       .filterNot(_ => manifest.get("key_encoding").contains("binary"))
-    def rebucket(src: String, dst: String, keys: Seq[String],
-        parts: Int): Unit =
-      if (hasParts(src)) { // a manifest-only store rebuilds to one
-        // pointer-aware source read (rename-less schemes): a rebuild
-        // that listed only the legacy dirs would silently drop every
-        // versioned generation
-        val raw = graft.fs.PartitionPointer.readWholeInferred(spark, src)
-          .getOrElse(spark.read.parquet(src)).drop("bp")
-        val converted = hexKeyCol.fold(raw)(k =>
-          raw.withColumn(k, unhex(col(k))))
-        converted.withColumn("bp", bpOf(parts, keys.map(col): _*))
-          .repartition(col("bp"))
-          .write.partitionBy("bp").mode("errorifexists").parquet(dst)
-      }
+    val encMeta: Map[String, String] =
+      layout.md5Key.fold(Map.empty[String, String])(_ => Map("key_encoding" -> "binary"))
     // finish any crashed compaction or retraction swap FIRST: partitions
     // stranded in `_compact_trash` (or mid-retract) are invisible to the
     // parquet snapshot below, and a rebuild that missed them would
@@ -1334,18 +1307,30 @@ object IncrementalDedup {
       sweepCompactTrash(spark, t.dir(srcDir))
       Retract.sweep(spark, t.dir(srcDir))
     }
-    val srcData = layout.data.dir(srcDir)
+    // pointer-aware source reads (rename-less schemes): a rebuild that
+    // listed only the legacy dirs would silently drop every versioned
+    // generation
+    val src = layout.tables.map(_.readRaw(spark, srcDir, manifest))
     val parts =
       if (requestedParts > 0) requestedParts
-      else storePartsFor(
-        if (hasParts(srcData))
-          graft.fs.PartitionPointer.readWholeInferred(spark, srcData)
-            .getOrElse(spark.read.parquet(srcData)).count()
-        else 0L)
-    layout.tables.foreach(t => rebucket(t.dir(srcDir), t.dir(dstDir), t.keys, parts))
+      else storePartsFor(src.head match {
+        case (rows, true) => rows.count()
+        case _            => 0L
+      })
+    layout.tables.zip(src).foreach {
+      case (t, (rows, true)) => // a manifest-only store rebuilds to one
+        val raw = rows.drop("bp")
+        hexKeyCol.fold(raw)(k => raw.withColumn(k, unhex(col(k))))
+          .withColumn("bp", bpOf(parts, t.keys.map(col): _*))
+          .repartition(col("bp"))
+          .write.partitionBy("bp").mode("errorifexists").parquet(t.dir(dstDir))
+      case _ => ()
+    }
+    // the rebuilt tables, read as the new manifest will name them
+    val dstMf = manifest ++ encMeta
+    val (dstData, dstHas) = layout.data.readRaw(spark, dstDir, dstMf)
     // bm25: the O(1) totals sidecar carries over byte-identical
-    val bm25 = variant == "bm25"
-    if (bm25) {
+    if (variant == "bm25") {
       val sp = new org.apache.hadoop.fs.Path(srcDir, "_bm25_stats")
       val sfs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (sfs.exists(sp))
@@ -1353,42 +1338,38 @@ object IncrementalDedup {
           new org.apache.hadoop.fs.Path(dstDir, "_bm25_stats"),
           false, spark.sparkContext.hadoopConfiguration)
     }
-    // ngram: regenerate the gram-bloom sidecar with FRESH sizing from
-    // the rebuilt store's actual rows — rebuild is both the saturation
-    // escape hatch for an outgrown bloom and the migration path that
+    // the ngram gram bloom and the bm25 term bloom: FRESH sizing from
+    // the rebuilt rows — rebuild is the saturation escape hatch for an
+    // outgrown bloom, the retraction tightener (the incremental sidecar
+    // stays a superset of retired keys), and the migration path that
     // gives a pre-bloom legacy store its first sidecar
-    val bloomMeta: Map[String, String] =
-      if (variant == "ngram" && hasParts(dstDir)) {
-        val postings = spark.read.parquet(dstDir)
-        val (c, b) = gramBloomGeometry(math.max(1L, postings.count()))
-        writeGramBloom(spark, dstDir, postings.stat.bloomFilter("shingle", c, b))
-        Map("bloom_cap" -> c.toString, "bloom_bits" -> b.toString)
-      } else if (bm25 && hasParts(s"$dstDir/postings")) {
-        // bm25 term bloom: fresh sizing from the rebuilt postings —
-        // rebuild is the saturation escape hatch, the retraction
-        // tightener (the incremental sidecar stays a superset of
-        // retired terms), and the legacy-store migration path
-        val postings = spark.read.parquet(s"$dstDir/postings")
-        val (c, b) = gramBloomGeometry(math.max(1L, postings.count()))
-        writeBloomSidecar(spark, dstDir, "_term_bloom", postings
-          .select(xxhash64(col("term")).as("th")).stat.bloomFilter("th", c, b))
-        Map("term_bloom_cap" -> c.toString, "term_bloom_bits" -> b.toString)
-      } else Map.empty
+    val bloomMeta: Map[String, String] = (variant match {
+      case "ngram" => Some((GramBloomFile, col("shingle"), "bloom_cap", "bloom_bits"))
+      case "bm25" => Some(("_term_bloom", xxhash64(col("term")),
+        "term_bloom_cap", "term_bloom_bits"))
+      case _ => None
+    }) match {
+      case Some((file, key, capKey, bitsKey)) if dstHas =>
+        val keys = dstData.select(key.as("__k"))
+        val (c, b) = gramBloomGeometry(math.max(1L, keys.count()))
+        writeBloomSidecar(spark, dstDir, file, keys.stat.bloomFilter("__k", c, b))
+        Map(capKey -> c.toString, bitsKey -> b.toString)
+      case _ => Map.empty
+    }
     // doc→bp retraction index: re-derived fresh from the rebuilt rows
     // (bp was REHASHED above, so a carried-over index would be wrong) —
     // and the migration path that gives a pre-index legacy store its
     // first one, exactly like the gram bloom
-    val docIdxMeta: Map[String, String] = layout.indexed match {
-      case Some(t) if hasParts(t.dir(dstDir)) =>
-        val dp = dpPartsFor(parts)
-        writeDocIndexFrom(spark, t.dir(dstDir), t.dir(dstDir), t.idCol, dp)
-        Map("doc_index" -> "1", "doc_index_parts" -> dp.toString)
-      case _ => Map.empty
-    }
+    val docIdxMeta: Map[String, String] = layout.indexed
+      .map(t => t -> t.readRaw(spark, dstDir, dstMf)) match {
+        case Some((t, (rows, true))) =>
+          val dp = dpPartsFor(parts)
+          writeDocIndexFrom(rows, t.idCol, t.dir(dstDir), dp)
+          Map("doc_index" -> "1", "doc_index_parts" -> dp.toString)
+        case _ => Map.empty
+      }
     // manifest LAST — the commit point; every other key carries over
     // (exact/span stores leave a rebuild binary-keyed, migrated or not)
-    val encMeta: Map[String, String] =
-      layout.md5Key.fold(Map.empty[String, String])(_ => Map("key_encoding" -> "binary"))
     val merged = manifest + ("store_parts" -> parts.toString) ++
       bloomMeta ++ encMeta ++ docIdxMeta
     // re-stamp required_features from the REBUILT feature set (rebuild
@@ -1410,9 +1391,9 @@ object IncrementalDedup {
     * `threshold` appends, which is the knob's meaning. Runs under the
     * already-held cycle lock. */
   private[ops] def maybeCompactLocked(
-      spark: SparkSession, storeDir: String,
-      parts: Seq[Int], threshold: Int): Unit = {
-    val root = new org.apache.hadoop.fs.Path(storeDir)
+      spark: SparkSession, storeDir: String, table: StoreTable,
+      manifest: Map[String, String], parts: Seq[Int], threshold: Int): Unit = {
+    val root = new org.apache.hadoop.fs.Path(table.dir(storeDir))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // pointer stores: a touched partition's LIVE files may sit in its
     // versioned generation rather than the legacy hive dir
@@ -1429,7 +1410,7 @@ object IncrementalDedup {
       loc.exists(d => fs.exists(d) && fs.listStatus(d)
         .count(_.getPath.getName.endsWith(".parquet")) > threshold)
     }
-    if (frag) { compactStoreLocked(spark, storeDir); () }
+    if (frag) { compactStoreLocked(spark, storeDir, table, manifest); () }
   }
 
   /** Recovery sweep for a crashed [[compactStoreLocked]] swap: restore
@@ -1472,10 +1453,12 @@ object IncrementalDedup {
     fs.delete(tmp, true)
   }
 
-  private def compactStoreLocked(spark: SparkSession, storeDir: String): Int = {
+  private def compactStoreLocked(spark: SparkSession, storeDir: String,
+      table: StoreTable, manifest: Map[String, String]): Int = {
     locally {
       import org.apache.hadoop.fs.Path
-      val root = new Path(storeDir)
+      val dataDir = table.dir(storeDir)
+      val root = new Path(dataDir)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val trash = new Path(root, "_compact_trash")
       val tmp = new Path(root, "_compact_tmp")
@@ -1485,7 +1468,7 @@ object IncrementalDedup {
       // live partition on the place step. Fail loudly instead.
       def mustRename(src: Path, dst: Path): Unit =
         require(fs.rename(src, dst), s"rename failed: $src -> $dst")
-      sweepCompactTrash(spark, storeDir)
+      sweepCompactTrash(spark, dataDir)
       // rename-less schemes compact by POINTER FLIP (r18, extending the
       // r17-verdict-#1 swap-by-pointer from retraction to compaction —
       // object stores need compaction MOST, every append adds files):
@@ -1517,23 +1500,21 @@ object IncrementalDedup {
           // (partition filters push into both arms); one file per
           // partition via the same repartition-on-bp discipline
           val fragVals = frag.map(_.stripPrefix("bp=").toInt)
-          graft.fs.PartitionPointer.readDf(spark, storeDir, None)
-            .map(_._1)
-            .getOrElse(spark.read.parquet(storeDir))
+          table.readRaw(spark, storeDir, manifest)._1
             .filter(col("bp").isin(fragVals: _*))
             .repartition(col("bp"))
             .write.partitionBy("bp").mode("overwrite").parquet(tmp.toString)
           graft.fs.PartitionPointer.commitSwap(spark, root, "bp",
             frag.map(n => s"replace:$n"), tmp,
-            () => Retract.bumpEpochAt(spark, storeDir))
+            () => Retract.bumpEpochAt(spark, dataDir))
           frag.length
         } else {
           val fragNames = frag.toSet
           // read ONLY the fragmented partitions (basePath keeps the bp
           // column)
-          spark.read
-            .option("basePath", storeDir)
-            .parquet(frag.map(n => s"$storeDir/$n"): _*)
+          spark.read.schema(table.schema(manifest))
+            .option("basePath", dataDir)
+            .parquet(frag.map(n => s"$dataDir/$n"): _*)
             .repartition(col("bp"))
             .write.partitionBy("bp").mode("overwrite").parquet(tmp.toString)
           fs.mkdirs(trash)
@@ -1664,35 +1645,6 @@ object IncrementalDedup {
   private[ops] def docIndexEnabled(manifest: Map[String, String]): Boolean =
     manifest.get("doc_index").contains("1")
 
-  /** The index rows present for the batch's dp partitions — a pruned
-    * read (never the whole index), empty-framed when absent. */
-  private def readDocIndexPruned(
-      spark: SparkSession, storeDir: String, dps: Seq[Int]): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(storeDir, DocIndexDir)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pointer-aware (the index is itself a dp-partitioned store and is
-    // retracted through rewriteTouched, so on rename-less schemes it
-    // carries its own pointer)
-    val base = graft.fs.PartitionPointer
-      .readWholeInferred(spark, dir.toString)
-      .orElse {
-        val has = fs.exists(dir) && !graft.fs.PartitionPointer.active(fs, dir) &&
-          fs.listStatus(dir).exists(_.getPath.getName.startsWith("dp="))
-        if (has) Some(spark.read.parquet(dir.toString)) else None
-      }
-    base match {
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "doc_id BIGINT, bp INT, dp INT"))
-      case Some(df) => df
-        .filter(col("dp").isin(dps: _*))
-        .select(col("doc_id").cast("long").as("doc_id"),
-          col("bp").cast("int").as("bp"), col("dp").cast("int").as("dp"))
-    }
-  }
-
   /** Append the batch's (id, bp) pairs to the index — call BEFORE the
     * main store append (superset discipline above). `rows` is any frame
     * carrying `idCol` and `bp`; feeding the WHOLE batch (not the
@@ -1732,12 +1684,16 @@ object IncrementalDedup {
     * also safe under the fallback: the full scan of nothing is free.) */
   private[ops] def docIndexBps(
       spark: SparkSession, storeDir: String, ids: Seq[Long],
-      dpParts: Int): Option[Seq[Int]] = {
+      dpParts: Int, manifest: Map[String, String]): Option[Seq[Int]] = {
     val dir = new org.apache.hadoop.fs.Path(storeDir, DocIndexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return None
     val dps = Retract.bpsOf(spark, ids, dpParts) // same pmod(xxhash64) hash
-    Some(readDocIndexPruned(spark, storeDir, dps)
+    // pointer-aware (the index is itself a dp-partitioned table and is
+    // retracted through rewriteTouched, so on rename-less schemes it
+    // carries its own pointer); only the batch's dp partitions are read
+    val (index, _) = StoreLayout.docIndex.readRaw(spark, storeDir, manifest)
+    Some(index.filter(col("dp").isin(dps: _*))
       .join(org.apache.spark.sql.functions.broadcast {
         import spark.implicits._
         ids.toDF("doc_id")
@@ -1751,31 +1707,31 @@ object IncrementalDedup {
     * id-hash partitioned, so this rewrite is O(batch) by construction. */
   private[ops] def retractDocIndex(
       spark: SparkSession, storeDir: String, ids: Seq[Long],
-      dpParts: Int): Unit = {
-    val dir = s"$storeDir/$DocIndexDir"
-    val p = new org.apache.hadoop.fs.Path(dir)
+      dpParts: Int, manifest: Map[String, String]): Unit = {
+    val t = StoreLayout.docIndex
+    val p = new org.apache.hadoop.fs.Path(t.dir(storeDir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
     val dps = Retract.bpsOf(spark, ids, dpParts)
-    Retract.rewriteTouched(spark, dir, "dp",
+    Retract.rewriteTouched(spark, t.dir(storeDir), t.partCol,
+      t.readRaw(spark, storeDir, manifest),
       Retract.semiOn(spark, ids, "doc_id"),
       Retract.antiOn(spark, ids, "doc_id"),
       prefilter = Some(col("dp").isin(dps: _*)))
     ()
   }
 
-  /** Derive a fresh, tight index from a (re)built store's rows — the
-    * rebuild migration path, mirroring the gram-bloom regeneration. */
+  /** Derive a fresh, tight index for the table at `dataDir` from its
+    * rows (carrying `idCol` and `bp`) — the rebuild migration path,
+    * mirroring the gram-bloom regeneration. */
   private[ops] def writeDocIndexFrom(
-      spark: SparkSession, dataDir: String, storeDir: String,
-      idCol: String, dpParts: Int): Unit =
-    graft.fs.PartitionPointer.readWholeInferred(spark, dataDir)
-      .getOrElse(spark.read.parquet(dataDir))
+      rows: DataFrame, idCol: String, dataDir: String, dpParts: Int): Unit =
+    rows
       .select(col(idCol).cast("long").as("doc_id"), col("bp").cast("int").as("bp"))
       .distinct()
       .withColumn("dp", dpOf(dpParts, col("doc_id")))
       .repartition(col("dp")).write.partitionBy("dp").mode("errorifexists")
-      .parquet(s"$storeDir/$DocIndexDir")
+      .parquet(s"$dataDir/$DocIndexDir")
 
   // ---------- ngram gram-bloom sidecar (r13) ----------
 
@@ -1864,50 +1820,6 @@ object IncrementalDedup {
           fs.setTimes(dst, pm + 1, -1)
       catch { case _: UnsupportedOperationException | _: java.io.IOException => () }
     }
-  }
-
-  /** Read a store dir that may not exist yet (first batch): an empty
-    * frame with the right schema keeps the joins well-typed. Data lives
-    * under `bp=<n>/` hive directories; the lock file and its heartbeat
-    * temps start with `_`, which parquet partition discovery ignores.
-    * Returns the frame plus whether the store held data — a CREATION
-    * cycle's caller skips the touched-partition probe job entirely
-    * (pruning an empty store buys nothing, and the probe is a full pass
-    * over the batch's checkpointed blocks). */
-  private[ops] def readStore(
-      spark: SparkSession, dir: String, ddl: String): (DataFrame, Boolean) = {
-    // heal a crashed retraction before reading — every call site holds
-    // the store lock, so this is the family's retract-sweep hook (the
-    // sweepCompact/sweepRebuild discipline, one level down)
-    Retract.sweep(spark, dir)
-    readStoreRaw(spark, dir, ddl)
-  }
-
-  /** The pure read half of [[readStore]] — for LOCK-FREE read paths
-    * (Bm25Index.search) that must not run the mutating sweep; they heal
-    * via the marker-probe + brief-lock ensureReadable discipline
-    * instead. */
-  private[ops] def readStoreRaw(
-      spark: SparkSession, dir: String, ddl: String): (DataFrame, Boolean) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    // pointer stores (rename-less schemes, graft.fs.PartitionPointer):
-    // live data is the pointer-resolved union of legacy hive dirs and
-    // versioned generations — a blind listing would miss the latter
-    graft.fs.PartitionPointer.readDf(spark, dir, Some(schema)) match {
-      case Some(r) => return r
-      case None    => ()
-    }
-    val hasData = fs.exists(p) && fs.listStatus(p).exists { s =>
-      s.getPath.getName.startsWith("bp=") ||
-        s.getPath.getName.endsWith(".parquet")
-    }
-    if (hasData)
-      (spark.read.schema(schema).parquet(dir), true)
-    else
-      (spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), false)
   }
 
   /** Row bound on a search's query-side prelude (bm25 query terms, IVF

@@ -63,8 +63,6 @@ object IncrementalSpanDedup {
       // store grows by ≤ that many rows per batch, the posting shape
       StoreCycle.Family(StoreLayout.named("span"),
         if (binKeys) win.withColumn("wh", unhex(col("wh"))) else win,
-        s"wh ${if (binKeys) "BINARY" else "STRING"}, keep_doc_id BIGINT, " +
-          "keep_pos BIGINT, bp INT",
         _ => Map("w" -> w.toString) ++ encMeta, spanStep)
     }
   }

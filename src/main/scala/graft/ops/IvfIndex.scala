@@ -20,6 +20,8 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
+  private val Assignments = StoreLayout.named("ivf").data
+
   /** Build the index at `indexDir` (overwrites): assigns every candidate
     * to its nearest centroid (first-`nlist` seed, or `kmeansIters` Lloyd
     * rounds) and writes the cell-partitioned corpus + centroid table. */
@@ -75,14 +77,22 @@ object IvfIndex {
     * union of legacy `cell=` dirs and versioned generations — a blind
     * `spark.read.parquet` listing would miss the latter. EVERY read
     * surface (search probe, occupancy, append anti-join + width guard,
-    * rebuild corpus) goes through here; that centralization is what
-    * lets retraction AND the recluster's whole-layout swap run on
-    * object stores with NO override. Rename-atomic stores never grow a
-    * pointer, so their read is byte-identical to before. */
+    * rebuild corpus, retraction) goes through here; that centralization
+    * is what lets retraction AND the recluster's whole-layout swap run
+    * on object stores with NO override. Rename-atomic stores never grow
+    * a pointer, so their read is byte-identical to before.
+    *
+    * The one store table read with an INFERRED schema (every other
+    * reads through [[StoreTable.readRaw]]): the caller's `idCol` and
+    * `vecCol` types ride into `id` and `vec` unchanged, and indexes
+    * built before the int8 probe lack the `code` column, so no schema
+    * can be pinned from the manifest. The inference costs one Spark
+    * job per read. */
   private[ops] def assignmentsDf(
       spark: SparkSession, indexDir: String): DataFrame = {
-    val dir = s"$indexDir/assignments"
-    graft.fs.PartitionPointer.readWholeInferred(spark, dir)
+    val dir = Assignments.dir(indexDir)
+    graft.fs.PartitionPointer.readDf(spark, dir, None)
+      .collect { case (df, true) => df }
       .getOrElse(spark.read.parquet(dir))
   }
 
@@ -282,7 +292,9 @@ object IvfIndex {
       // anti-join) resolves the partition pointer via
       // assignmentsDf/centroidsDf, so rename-less schemes commit this
       // swap by pointer flip
-      Retract.rewriteTouched(spark, s"$indexDir/assignments", "cell",
+      Retract.rewriteTouched(spark, Assignments.dir(indexDir), Assignments.partCol,
+        if (Assignments.holdsData(spark, indexDir)) (assignmentsDf(spark, indexDir), true)
+        else (spark.emptyDataFrame, false),
         Retract.semiOn(spark, dd, "id"), Retract.antiOn(spark, dd, "id"),
         sortCols = Seq("cell", "id"))
     }

@@ -74,14 +74,14 @@ object Retract {
         s"$storeDir has no readable _graft_store.json manifest — not a " +
           "graft store")
       val ids = docIds.distinct
-      def del(dir: String, idCol: String,
-          prefilter: Option[Column] = None): Long = {
+      def del(t: StoreTable, prefilter: Option[Column]): Long = {
         // finish any crashed compaction swap first: rows stranded in
         // `_compact_trash` are invisible to the discovery scan, and a
         // retired row hiding there would resurface on the next compact
-        IncrementalDedup.sweepCompactTrash(spark, dir)
-        rewriteTouched(spark, dir, "bp", semiOn(spark, ids, idCol),
-          antiOn(spark, ids, idCol), prefilter = prefilter)
+        IncrementalDedup.sweepCompactTrash(spark, t.dir(storeDir))
+        rewriteTouched(spark, t.dir(storeDir), t.partCol,
+          t.readRaw(spark, storeDir, manifest), semiOn(spark, ids, t.idCol),
+          antiOn(spark, ids, t.idCol), prefilter = prefilter)
       }
       // bucket-partitioned tables with a doc→bp index (r16): the index
       // names the exact candidate bps for the batch — the discovery
@@ -94,7 +94,7 @@ object Retract {
       def delTable(t: StoreTable): Long = {
         val dataDir = t.dir(storeDir)
         if (t.idHashed)
-          del(dataDir, t.idCol, prefilter = Some(col("bp").isin(
+          del(t, Some(col("bp").isin(
             bpsOf(spark, ids, manifest("store_parts").toInt): _*)))
         else {
           val dpParts = manifest.get("doc_index_parts").map(_.toInt)
@@ -103,19 +103,19 @@ object Retract {
             if (IncrementalDedup.docIndexEnabled(manifest))
               // None (index dir gone despite the flag) → full-scan
               // discovery, never a silent no-op takedown
-              IncrementalDedup.docIndexBps(spark, dataDir, ids, dpParts)
+              IncrementalDedup.docIndexBps(spark, dataDir, ids, dpParts, manifest)
                 .map(bps => col("bp").isin(bps: _*))
             else None // legacy store: full-scan discovery
-          val n = del(dataDir, t.idCol, prefilter = pre)
-          IncrementalDedup.retractDocIndex(spark, dataDir, ids, dpParts)
+          val n = del(t, pre)
+          IncrementalDedup.retractDocIndex(spark, dataDir, ids, dpParts, manifest)
           n
         }
       }
       manifest("variant") match {
         case "components" =>
-          IncrementalComponents.retractLocked(spark, storeDir, ids)
+          IncrementalComponents.retractLocked(spark, storeDir, ids, manifest)
         case "bm25" =>
-          Bm25Index.retractLocked(spark, storeDir, ids)
+          Bm25Index.retractLocked(spark, storeDir, ids, manifest)
         case v =>
           StoreLayout.of(manifest)
             .getOrElse(sys.error(s"unknown store variant in manifest: $v"))
@@ -170,13 +170,17 @@ object Retract {
   /** Rewrite the partitions of `dataDir` that hold `matcher`-selected
     * rows — and ONLY those — replacing each touched partition's content
     * with `transform` of it. Returns the number of matching rows found.
-    * `prefilter` (partition-column-only) narrows the discovery scan for
+    * `read` is the table's (live rows, holds data), evaluated only after
+    * the sweep has healed any crashed swap: the caller knows the table's
+    * schema ([[StoreTable.readRaw]]; IVF infers its own). `prefilter`
+    * (partition-column-only) narrows the discovery scan for
     * id-hash-partitioned stores. Caller holds the store lock; the swap
     * is the marker roll-forward documented on the object. */
   private[ops] def rewriteTouched(
       spark: SparkSession,
       dataDir: String,
       partCol: String,
+      read: => (DataFrame, Boolean),
       matcher: DataFrame => DataFrame,
       transform: DataFrame => DataFrame,
       sortCols: Seq[String] = Nil,
@@ -193,12 +197,8 @@ object Retract {
     // swap — see graft.fs.PartitionPointer. Every store's readers
     // resolve the pointer, so every caller commits this way.
     val pointerMode = !graft.fs.AtomicRename.isAtomic(root)
-    val hasData = (fs.exists(root) && fs.listStatus(root)
-      .exists(_.getPath.getName.startsWith(s"$partCol="))) ||
-      graft.fs.PartitionPointer.hasLive(fs, root)
+    val (df0, hasData) = read
     if (!hasData) return 0L
-    val df0 = graft.fs.PartitionPointer.readWholeInferred(spark, dataDir)
-      .getOrElse(spark.read.parquet(dataDir))
     val scan = prefilter.map(df0.filter).getOrElse(df0)
     // discovery: (id, partition) only — column-pruned, no data columns
     val hits = matcher(scan)

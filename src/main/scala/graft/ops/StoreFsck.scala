@@ -114,6 +114,12 @@ object StoreFsck {
     if (partsOpt.isEmpty && variant != "ivf")
       out += err(Kind.Manifest, s"store_parts missing or non-integer: " +
         mf.getOrElse("store_parts", "<absent>"))
+    // the pinned reads parse vec_type into their schema: a damaged value
+    // is named here, and the deep checks (which read content) skip
+    val badVecType = mf.get("vec_type").filterNot(StoreLayout.VecTypes)
+    badVecType.foreach(v => out += err(Kind.Manifest, s"vec_type '$v' is " +
+      s"not one of ${StoreLayout.VecTypes.mkString("/")} — deep checks " +
+      "skipped; restore the manifest's vec_type"))
     val demanded = mf.get("required_features").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     val unknownFeats = demanded.filterNot(IncrementalDedup.UnderstoodFeatures)
@@ -126,7 +132,7 @@ object StoreFsck {
     val tables = layout.get.tables
     def abs(rel: String): String = if (rel.isEmpty) dir else s"$dir/$rel"
 
-    tables.foreach { case StoreTable(rel, partCol, _, _) =>
+    tables.foreach { case StoreTable(rel, partCol, _, _, _) =>
       val p = new Path(abs(rel))
       if (rel.nonEmpty && !fs.exists(p))
         out += warn(Kind.Layout, s"${abs(rel)} absent (empty store, or a " +
@@ -247,11 +253,7 @@ object StoreFsck {
             "writer (swept opportunistically by later cycles)"))
     // bm25 stats sidecar presence
     if (variant == "bm25") {
-      val hasPosts = (fs.exists(new Path(dir, "postings")) &&
-        fs.listStatus(new Path(dir, "postings"))
-          .exists(_.getPath.getName.startsWith("bp="))) ||
-        graft.fs.PartitionPointer.hasLive(fs, new Path(dir, "postings"))
-      if (hasPosts && !fs.exists(new Path(dir, "_bm25_stats")))
+      if (tables.head.holdsData(spark, dir) && !fs.exists(new Path(dir, "_bm25_stats")))
         out += err(Kind.Bm25Stats, s"$dir holds postings but no _bm25_stats " +
           "— run recomputeStats AND retry the crashed batch")
     }
@@ -270,30 +272,23 @@ object StoreFsck {
           "rebuild")
     }
 
-    if (!deep) return out.toList
+    if (!deep || badVecType.nonEmpty) return out.toList
 
     // ---- deep: content-level invariants ----
     partsOpt.foreach { parts =>
-      tables.foreach { case StoreTable(rel, partCol, keys, _) =>
-        if (keys.nonEmpty) {
-          val d = abs(rel)
-          val p = new Path(d)
-          val hasData = (fs.exists(p) &&
-            fs.listStatus(p).exists(_.getPath.getName.startsWith(s"$partCol="))) ||
-            graft.fs.PartitionPointer.hasLive(fs, p)
-          if (hasData) {
-            val df = graft.fs.PartitionPointer.readWholeInferred(spark, d)
-              .getOrElse(spark.read.parquet(d))
-            // 1. bp recompute: a mis-bucketed row is unreachable to every
-            // pruned read — the silent-wrong-answer class
-            val bad = df.filter(
-              col(partCol) =!= IncrementalDedup.bpOf(parts, keys.map(col): _*))
-              .count()
-            if (bad > 0)
-              out += err(Kind.Bucketing, s"$d: $bad row(s) whose $partCol does " +
-                s"not match pmod(xxhash64(${keys.mkString(",")}), $parts) — " +
-                "pruned reads will never see them; rebuildStore re-buckets")
-          }
+      tables.filter(_.keys.nonEmpty).foreach { t =>
+        val (df, hasData) = t.readRaw(spark, dir, mf)
+        if (hasData) {
+          // 1. bp recompute: a mis-bucketed row is unreachable to every
+          // pruned read — the silent-wrong-answer class
+          val bad = df.filter(
+            col(t.partCol) =!= IncrementalDedup.bpOf(parts, t.keys.map(col): _*))
+            .count()
+          if (bad > 0)
+            out += err(Kind.Bucketing, s"${t.dir(dir)}: $bad row(s) whose " +
+              s"${t.partCol} does not match pmod(xxhash64(" +
+              s"${t.keys.mkString(",")}), $parts) — pruned reads will never " +
+              "see them; rebuildStore re-buckets")
         }
       }
       // 2. doc-index SUPERSET: every stored row's (id, bp) must be claimed
@@ -302,12 +297,8 @@ object StoreFsck {
         val ip = new Path(dd, IncrementalDedup.DocIndexDir)
         // a fully-retracted store keeps only the index (over-claiming is
         // legal — supersets cost pruning only): the check is vacuous
-        // without data rows, and the raw read would fail schema
-        // inference on a bp=-less directory (lifecycle-fuzzer find)
-        val ddHasData = (fs.exists(new Path(dd)) &&
-          fs.listStatus(new Path(dd))
-            .exists(_.getPath.getName.startsWith("bp="))) ||
-          graft.fs.PartitionPointer.hasLive(fs, new Path(dd))
+        // without data rows (lifecycle-fuzzer find)
+        val (rows, ddHasData) = t.readRaw(spark, dir, mf)
         if (fs.exists(ip) && ddHasData) {
           // tolerate a corrupted manifest value (r17 ADVICE): fsck's
           // whole job is to SURVIVE and NAME metadata damage — a bare
@@ -325,24 +316,12 @@ object StoreFsck {
               p
             case None => Some(parts)
           }
-          val data = graft.fs.PartitionPointer.readWholeInferred(spark, dd)
-            .getOrElse(spark.read.parquet(dd))
-            .select(col(t.idCol).cast("long").as("doc_id"),
-              col("bp").cast("int").as("bp")).distinct()
+          val data = rows.select(col(t.idCol).as("doc_id"), col("bp")).distinct()
           // an index dir emptied of every dp= partition while data rows
           // remain is itself maximal under-claiming — report it as such
-          // (and a raw read of it would fail schema inference)
-          val ipHasData = fs.listStatus(ip)
-            .exists(_.getPath.getName.startsWith("dp=")) ||
-            graft.fs.PartitionPointer.hasLive(fs, ip)
-          def idxRead = graft.fs.PartitionPointer
-            .readWholeInferred(spark, ip.toString)
-            .getOrElse(spark.read.parquet(s"$dd/${IncrementalDedup.DocIndexDir}"))
-          val idx =
-            if (ipHasData)
-              idxRead.select(col("doc_id").cast("long"), col("bp").cast("int"))
-            else data.limit(0)
-          val missing = data.join(idx, Seq("doc_id", "bp"), "left_anti").count()
+          val (idx, ipHasData) = StoreLayout.docIndex.readRaw(spark, dd, mf)
+          val missing = data.join(idx.select("doc_id", "bp"), Seq("doc_id", "bp"),
+            "left_anti").count()
           if (missing > 0)
             out += err(Kind.DocIndexSuperset, s"$dd: $missing stored " +
               "(id, bp) pair(s) unclaimed by _doc_index — an indexed " +
@@ -352,9 +331,8 @@ object StoreFsck {
           // (dp is the hive partition column — read it directly)
           val wrongDp =
             if (!ipHasData || dpPartsOpt.isEmpty) 0L
-            else idxRead
-              .filter(col("dp").cast("int") =!=
-                IncrementalDedup.dpOf(dpPartsOpt.get, col("doc_id").cast("long")))
+            else idx
+              .filter(col("dp") =!= IncrementalDedup.dpOf(dpPartsOpt.get, col("doc_id")))
               .count()
           if (wrongDp > 0)
             out += err(Kind.DocIndexPartitioning, s"$dd: $wrongDp index " +
@@ -367,8 +345,7 @@ object StoreFsck {
     if (variant == "ngram")
       IncrementalDedup.readBloomSidecar(spark, dir, "_gram_bloom")
         .foreach { bytes =>
-          val (read, has) = IncrementalDedup.readStoreRaw(spark, dir,
-            "doc_id BIGINT, shingle BIGINT, nsh BIGINT, bp INT")
+          val (read, has) = tables.head.readRaw(spark, dir, mf)
           if (has) {
             val miss = read.filter(!graft.functions.SketchExprs
               .bloomMightContain(col("shingle"), bytes)).count()
@@ -381,9 +358,7 @@ object StoreFsck {
     if (variant == "bm25")
       IncrementalDedup.readBloomSidecar(spark, dir, "_term_bloom")
         .foreach { bytes =>
-          val (read, has) = IncrementalDedup.readStoreRaw(spark,
-            s"$dir/postings",
-            "term STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, bp INT")
+          val (read, has) = tables.head.readRaw(spark, dir, mf)
           if (has) {
             val miss = read.filter(!graft.functions.SketchExprs
               .bloomMightContain(xxhash64(col("term")), bytes)).count()
@@ -395,11 +370,8 @@ object StoreFsck {
         }
     // 4. bm25: stats exactness + postings⊆docs referential invariant
     if (variant == "bm25") {
-      val (docsDf, hasDocs) = IncrementalDedup.readStoreRaw(spark,
-        s"$dir/docs", "doc_id BIGINT, dl DOUBLE, bp INT")
-      val (postsDf, hasPosts) = IncrementalDedup.readStoreRaw(spark,
-        s"$dir/postings",
-        "term STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, bp INT")
+      val Seq((postsDf, hasPosts), (docsDf, hasDocs)) =
+        tables.map(_.readRaw(spark, dir, mf))
       if (hasDocs) Bm25Index.readStats(spark, dir).foreach {
         case (n, nt, td) =>
           val row = docsDf.agg(count(lit(1)), count(col("dl")),
@@ -411,9 +383,8 @@ object StoreFsck {
       }
       if (hasPosts) {
         val orphans = postsDf.select("doc_id").distinct()
-          .join(if (hasDocs) docsDf.select("doc_id").distinct()
-            else postsDf.select("doc_id").limit(0),
-            Seq("doc_id"), "left_anti").count()
+          .join(docsDf.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
+          .count()
         if (orphans > 0)
           out += err(Kind.Bm25Referential, s"$dir: $orphans posting doc_id(s) " +
             "with no docs/ row — the postings-first append-crash shape; " +
@@ -423,8 +394,7 @@ object StoreFsck {
     // 5. one keeper per key (exact/span): duplicates witness a
     // double-commit the store lock exists to prevent
     layout.flatMap(_.md5Key).foreach { keyCol =>
-      val (read, has) =
-        IncrementalDedup.readStoreRaw(spark, dir, s"$keyCol BINARY, bp INT")
+      val (read, has) = tables.head.readRaw(spark, dir, mf)
       if (has) {
         val dups = read.groupBy(keyCol).agg(count(lit(1)).as("n"))
           .filter(col("n") > 1).count()
@@ -445,10 +415,7 @@ object StoreFsck {
       // under the assignments pointer and retires the legacy dir
       val hasCents = fs.exists(new Path(dir, "centroids")) ||
         graft.fs.PartitionPointer.liveTable(fs, ap, "centroids").isDefined
-      val hasAssign = (fs.exists(ap) &&
-        fs.listStatus(ap).exists(_.getPath.getName.startsWith("cell="))) ||
-        graft.fs.PartitionPointer.hasLive(fs, ap)
-      if (hasCents && hasAssign) {
+      if (hasCents && tables.head.holdsData(spark, dir)) {
         val cells = IvfIndex.centroidsDf(spark, dir).select("cell")
         val assigned = IvfIndex.assignmentsDf(spark, dir)
         val orphanCells = assigned.select("cell").distinct()
@@ -468,8 +435,7 @@ object StoreFsck {
     }
     // 7. components: one label per vertex
     if (variant == "components") {
-      val (labelsDf, hasLabels) = IncrementalDedup.readStoreRaw(spark,
-        s"$dir/labels", "v BIGINT, component BIGINT, bp INT")
+      val (labelsDf, hasLabels) = tables.head.readRaw(spark, dir, mf)
       if (hasLabels) {
         val dups = labelsDf
           .groupBy("v").agg(count(lit(1)).as("n"))
@@ -521,11 +487,11 @@ object StoreFsck {
     val variant = mf.getOrElse("variant", "")
     val partsOpt = mf.get("store_parts").flatMap(_.toIntOption)
     val layout = StoreLayout.of(mf)
+    val tables = layout.toSeq.flatMap(_.tables)
     val dataDirs = layout.fold(Seq(dir))(_.tables.map(_.dir(dir)))
     // the table the doc index lives under (fsck reports doc-index
     // findings only for layouts that have one)
     val indexed = layout.flatMap(_.indexed)
-      .getOrElse(StoreTable("", "bp", Nil, "doc_id"))
     // each heal runs at most once even when several findings share it
     var swept = false
     var statsDone = false
@@ -574,11 +540,7 @@ object StoreFsck {
         // recompute sees a consistent index
         val parts = partsOpt.getOrElse(
           return "refused: no store_parts geometry to bucket the rebuilt docs rows")
-        val (postsDf, hasP) = IncrementalDedup.readStoreRaw(spark,
-          s"$dir/postings",
-          "term STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, bp INT")
-        val (docsDf, _) = IncrementalDedup.readStoreRaw(spark,
-          s"$dir/docs", "doc_id BIGINT, dl DOUBLE, bp INT")
+        val Seq((postsDf, hasP), (docsDf, _)) = tables.map(_.readRaw(spark, dir, mf))
         if (hasP) {
           val orphan = postsDf.select(col("doc_id"), col("dl")).distinct()
             .join(docsDf.select("doc_id"), Seq("doc_id"), "left_anti")
@@ -591,14 +553,11 @@ object StoreFsck {
       }
       "reconstructed missing docs/ rows from orphan postings; stats recomputed"
     }
-    def healDocIndex(): String = {
+    def healDocIndex(t: StoreTable): String = {
       if (!docIdxDone) {
-        val dd = indexed.dir(dir)
-        val ip = new Path(dd, IncrementalDedup.DocIndexDir)
-        fs.delete(ip, true)
-        val hasData = (fs.exists(new Path(dd)) && fs.listStatus(new Path(dd))
-          .exists(_.getPath.getName.startsWith("bp="))) ||
-          graft.fs.PartitionPointer.hasLive(fs, new Path(dd))
+        val dd = t.dir(dir)
+        fs.delete(new Path(dd, IncrementalDedup.DocIndexDir), true)
+        val (rows, hasData) = t.readRaw(spark, dir, mf)
         // manifest-absent fallback MUST match fsck's dp-hash check and
         // the consult paths (Retract.delIndexedAt, Bm25Index.retract),
         // which all fall back to store_parts — the old dpPartsFor
@@ -608,8 +567,7 @@ object StoreFsck {
         val dpParts = mf.get("doc_index_parts").flatMap(_.toIntOption)
           .orElse(partsOpt)
           .getOrElse(64)
-        if (hasData)
-          IncrementalDedup.writeDocIndexFrom(spark, dd, dd, indexed.idCol, dpParts)
+        if (hasData) IncrementalDedup.writeDocIndexFrom(rows, t.idCol, dd, dpParts)
         if (!mf.get("doc_index_parts").flatMap(_.toIntOption).contains(dpParts))
           IncrementalDedup.updateManifest(fs, dir,
             mf ++ Map("doc_index_parts" -> dpParts.toString))
@@ -618,14 +576,10 @@ object StoreFsck {
       "re-derived _doc_index from a full data scan"
     }
     def healBloom(file: String, capKey: String, bitsKey: String): String = {
-      val (dataDir, ddl, keyExpr) =
-        if (variant == "bm25")
-          (s"$dir/postings",
-            "term STRING, doc_id BIGINT, dl DOUBLE, tf DOUBLE, bp INT",
-            xxhash64(col("term")).as("__k"))
-        else (dir, "doc_id BIGINT, shingle BIGINT, nsh BIGINT, bp INT",
-          col("shingle").as("__k"))
-      val (read, has) = IncrementalDedup.readStoreRaw(spark, dataDir, ddl)
+      val keyExpr =
+        if (variant == "bm25") xxhash64(col("term")).as("__k")
+        else col("shingle").as("__k")
+      val (read, has) = tables.head.readRaw(spark, dir, mf)
       if (!has) return "refused: no data rows to derive the bloom from"
       val keys = read.select(keyExpr)
       val (cap, bits) =
@@ -653,11 +607,12 @@ object StoreFsck {
           (a, !a.startsWith("refused"))
         case Kind.DocIndexUnflagged =>
           // an unflagged index is ignored-and-drifting: remove it
-          fs.delete(new Path(indexed.dir(dir), IncrementalDedup.DocIndexDir), true)
+          indexed.foreach(t =>
+            fs.delete(new Path(t.dir(dir), IncrementalDedup.DocIndexDir), true))
           ("deleted the unflagged (ignored, drifting) _doc_index", true)
         case Kind.DocIndexMissing | Kind.DocIndexSuperset |
             Kind.DocIndexPartitioning =>
-          (healDocIndex(), true)
+          (healDocIndex(indexed.get), true)
         case Kind.GramBloomSuperset =>
           val a = healBloom("_gram_bloom", "bloom_cap", "bloom_bits")
           (a, !a.startsWith("refused"))

@@ -124,8 +124,8 @@ object DeleteSoak {
     if (withPointer) fsys.attachStore(ptrStore)
     // pointer-aware store read for the leftover counts (a blind listing
     // on a pointer store misses versioned generations)
-    def storeDf(dir: String) = graft.fs.PartitionPointer
-      .readWholeInferred(spark, dir)
+    def storeDf(dir: String) = graft.fs.PartitionPointer.readDf(spark, dir, None)
+      .collect { case (df, true) => df }
       .getOrElse(spark.read.parquet(dir))
     // bp-partition rewrite fraction of a store dir between two snapshots
     // — the O(touched) witness at scale (r15 verdict #2)

@@ -24,6 +24,24 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark // stable id for implicits
   def sf: String = SparkTestBase.sf
 
+  /** Stop a background thread that runs Spark jobs under the job group
+    * `group` (set on that thread), and wait until it has ended: `stop`
+    * signals it, then one join; a cycle still in flight after that is
+    * cancelled through its job group and joined again. Returns whether
+    * the thread outlived the second join, which the caller must fail
+    * on (after any failure of its own body): a task of it still running
+    * when the shared context stops at JVM exit lands its result on the
+    * terminated TaskResultGetter pool and fails the whole run. */
+  def quiesce(thread: Thread, group: String)(stop: => Unit): Boolean = {
+    stop
+    thread.join(120000)
+    if (thread.isAlive) {
+      spark.sparkContext.cancelJobGroup(group)
+      thread.join(120000)
+    }
+    thread.isAlive
+  }
+
   /** What `body` returns, and the descriptions of the Spark jobs it
     * starts. A fence job follows the body: the listener bus delivers job
     * starts in order, so every job the body started is recorded before

@@ -119,10 +119,10 @@ class Bm25IndexSpec extends SparkSuite {
     val trueBps = spark.read.parquet(s"$d/postings")
       .filter(col("doc_id") === 3L)
       .select("bp").distinct().collect().map(_.getInt(0)).toSet
-    assert(IncrementalDedup.docIndexBps(spark, s"$d/postings", Seq(3L), dp)
+    assert(IncrementalDedup.docIndexBps(spark, s"$d/postings", Seq(3L), dp, mf)
       .map(_.toSet).contains(trueBps))
     Retract.retract(spark, d, Seq(3L))
-    assert(IncrementalDedup.docIndexBps(spark, s"$d/postings", Seq(3L), dp)
+    assert(IncrementalDedup.docIndexBps(spark, s"$d/postings", Seq(3L), dp, mf)
       .contains(Seq.empty))
     assert(spark.read.parquet(s"$d/postings")
       .filter(col("doc_id") === 3L).count() == 0)
@@ -372,6 +372,7 @@ class Bm25IndexSpec extends SparkSuite {
       }
     }, "bm25-churner")
     churner.start()
+    var outlived = false
     try {
       var misses = 0
       for (i <- 1 to 110) {
@@ -381,21 +382,10 @@ class Bm25IndexSpec extends SparkSuite {
       }
       assert(misses == 0, s"stable doc dropped from $misses results")
     } finally {
-      // quiesce the churner COMPLETELY before leaving the test: a churn
-      // task still in flight when the shared SparkContext stops at JVM
-      // exit lands a task result on the terminated TaskResultGetter pool
-      // (RejectedExecutionException in TaskSchedulerImpl.statusUpdate)
-      // and reddens the whole suite run. On a contended host one locked
-      // cycle can outlive the first join — cancel its job group and
-      // wait again rather than walking away from a live thread.
-      stop = true
-      churner.join(120000)
-      if (churner.isAlive) {
-        spark.sparkContext.cancelJobGroup("bm25-churn")
-        churner.join(120000)
-      }
+      // on a contended host one locked cycle can outlive the first join
+      outlived = quiesce(churner, "bm25-churn") { stop = true }
     }
-    assert(!churner.isAlive, "churner thread did not terminate")
+    assert(!outlived, "churner thread did not terminate")
     // after `stop`, only the teardown's own cancellation is orderly: a
     // SparkException from cancelJobGroup("bm25-churn") or an interrupt
     def cancellation(t: Throwable): Boolean =

@@ -929,6 +929,34 @@ class IncrementalDedupSpec extends SparkSuite {
     val legacyVerdicts = IncrementalDedup.exactBatch(b2, legacy)
       .collect().map(r => r.getLong(0) -> Option(r.get(2))).toMap
     assert(legacyVerdicts == Map(10L -> Some(1L), 11L -> None))
+    // deep fsck reads the hex store with its STRING digest, and its
+    // bucketing check hashes that digest as the batches did
+    assert(StoreFsck.fsck(spark, legacy, deep = true).isEmpty)
+
+    // retraction through the hex schema, on one-partition twins so the
+    // rewritten partition keeps other rows: it must keep its STRING key
+    // (a reader pinning BINARY would rewrite it binary, and the
+    // merged-schema read would say so), and deep fsck must read it clean
+    def retractHex(tag: String, key: String, json: String, removed: Long)(
+        seed: String => Unit): String = {
+      val d = base.toString + s"/${tag}_one"
+      writeLegacyManifest(d, json)
+      seed(d)
+      assert(Retract.retract(spark, d, Seq(2L)) == removed)
+      assert(spark.read.option("mergeSchema", "true").parquet(d)
+        .schema(key).dataType == StringType)
+      assert(StoreFsck.fsck(spark, d, deep = true).isEmpty)
+      d
+    }
+    val legacyOne = retractHex("legacy", "digest",
+      """{"store_parts":"1","variant":"exact"}""", 1L)(
+      d => Seq(b1, b2).foreach(IncrementalDedup.exactBatch(_, d)))
+    assert(StoreRows(spark, legacyOne)._1.select("keep_doc_id").collect()
+      .map(_.getLong(0)).toSet == Set(1L, 11L))
+    retractHex("span_legacy", "wh",
+      """{"store_parts":"1","variant":"span","w":"3"}""", 3L)(
+      d => IncrementalSpanDedup.spanBatch(
+        Seq((1L, "a b c d e f"), (2L, "p q r s t")).toDF("doc_id", "text"), d, w = 3))
 
     // NEW store: binary at rest, hex-identical verdict digests out
     val fresh = base.toString + "/fresh"
@@ -961,6 +989,7 @@ class IncrementalDedupSpec extends SparkSuite {
     IncrementalSpanDedup.spanBatch(
       Seq((1L, "a b c d e f")).toDF("doc_id", "text"), spanLegacy, w = 3)
     assert(spark.read.parquet(spanLegacy).schema("wh").dataType == StringType)
+    assert(StoreFsck.fsck(spark, spanLegacy, deep = true).isEmpty)
     val spanMigrated = base.toString + "/span_migrated"
     IncrementalDedup.rebuildStore(spark, spanLegacy, spanMigrated)
     assert(spark.read.parquet(spanMigrated).schema("wh").dataType == BinaryType)

@@ -28,8 +28,7 @@ class PointerSwapSpec extends SparkSuite {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def keepers(dir: String): Set[Long] =
-    IncrementalDedup.readStoreRaw(spark, dir,
-      "digest BINARY, keep_doc_id BIGINT, bp INT")._1
+    StoreRows(spark, dir)._1
       .select("keep_doc_id").collect().map(_.getLong(0)).toSet
 
   test("generations: second swap retires the first; sweep GC collects it after the grace cycle") {
@@ -119,8 +118,7 @@ class PointerSwapSpec extends SparkSuite {
       (1L to 60L).map(i => (i, s"unique body $i")).toDF("doc_id", "text"), dir)
       .collect()
     Retract.retract(spark, dir, Seq(1L)) // one partition goes versioned
-    val (df, has) = IncrementalDedup.readStoreRaw(spark, dir,
-      "digest BINARY, keep_doc_id BIGINT, bp INT")
+    val (df, has) = StoreRows(spark, dir)
     assert(has)
     val plan = df.filter(col("bp") === 0)
       .queryExecution.executedPlan.toString
@@ -177,8 +175,7 @@ class PointerSwapSpec extends SparkSuite {
     assert(searches >= 5, s"race vacuous: only $searches searches")
     assert(misses == 0, s"$misses/$searches searches lost the stable doc")
     // steady state after the race: exactly the original corpus
-    val left = IncrementalDedup.readStoreRaw(spark, s"$dir/docs",
-      "doc_id BIGINT, dl DOUBLE, bp INT")._1
+    val left = StoreRows(spark, dir, "docs")._1
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(left == (1L to 30L).toSet, s"doc set after churn: $left")
   }

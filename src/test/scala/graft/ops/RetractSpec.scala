@@ -111,10 +111,12 @@ class RetractSpec extends SparkSuite {
         IncrementalDedup.storeManifest(spark, d)("doc_index_parts").toInt
       val trueBps = spark.read.parquet(dataDir).filter(col("vec_id") === 1L)
         .select("bp").distinct().collect().map(_.getInt(0)).toSet
-      assert(IncrementalDedup.docIndexBps(spark, dataDir, Seq(1L), dpParts)
+      assert(IncrementalDedup.docIndexBps(spark, dataDir, Seq(1L), dpParts,
+        IncrementalDedup.storeManifest(spark, d))
         .map(_.toSet).contains(trueBps), s"$layout: index bps wrong")
       Retract.retract(spark, d, Seq(1L, 10L))
-      assert(IncrementalDedup.docIndexBps(spark, dataDir, Seq(1L, 10L), dpParts)
+      assert(IncrementalDedup.docIndexBps(spark, dataDir, Seq(1L, 10L), dpParts,
+        IncrementalDedup.storeManifest(spark, d))
         .contains(Seq.empty), s"$layout: retired pairs survived the index")
       assert(spark.read.parquet(dataDir)
         .filter(col("vec_id").isin(1L, 10L)).count() == 0)
@@ -392,7 +394,8 @@ class RetractSpec extends SparkSuite {
     val trueBps = spark.read.parquet(d).filter(col("doc_id") === 7L)
       .select("bp").distinct().collect().map(_.getInt(0)).toSet
     val dpParts = IncrementalDedup.storeManifest(spark, d)("doc_index_parts").toInt
-    val idxBps = IncrementalDedup.docIndexBps(spark, d, Seq(7L), dpParts)
+    val idxBps = IncrementalDedup.docIndexBps(spark, d, Seq(7L), dpParts,
+      IncrementalDedup.storeManifest(spark, d))
     assert(idxBps.map(_.toSet).contains(trueBps))
     // input-records differential: the indexed takedown reads the dp
     // partitions + touched bps; the legacy full-scan discovery reads
@@ -423,7 +426,8 @@ class RetractSpec extends SparkSuite {
     val (removedIdx, readIdx) = meterRead(Retract.retract(spark, d, Seq(7L)))
     assert(removedIdx == 16L) // 16 band rows
     // the retired doc's pairs left the index itself
-    assert(IncrementalDedup.docIndexBps(spark, d, Seq(7L), dpParts)
+    assert(IncrementalDedup.docIndexBps(spark, d, Seq(7L), dpParts,
+      IncrementalDedup.storeManifest(spark, d))
       .contains(Seq.empty))
     assert(spark.read.parquet(d).filter(col("doc_id") === 7L).count() == 0)
     // legacy twin: same store content, index disabled — full discovery
@@ -471,7 +475,8 @@ class RetractSpec extends SparkSuite {
       Seq((999L, 3)).toDF("doc_id", "bp"), d, "doc_id", dpS)
     assert(Retract.retract(spark, d, Seq(999L)) == 0L) // no rows, no error
     // and the over-claimed pair was erased with the takedown
-    assert(IncrementalDedup.docIndexBps(spark, d, Seq(999L), dpS)
+    assert(IncrementalDedup.docIndexBps(spark, d, Seq(999L), dpS,
+      IncrementalDedup.storeManifest(spark, d))
       .contains(Seq.empty))
   }
 
@@ -494,10 +499,12 @@ class RetractSpec extends SparkSuite {
       IncrementalDedup.storeManifest(spark, d)("doc_index_parts").toInt
     val trueBps7 = spark.read.parquet(d).filter(col("doc_id") === 7L)
       .select("bp").distinct().collect().map(_.getInt(0)).toSet
-    assert(IncrementalDedup.docIndexBps(spark, d, Seq(7L), dpParts)
+    assert(IncrementalDedup.docIndexBps(spark, d, Seq(7L), dpParts,
+      IncrementalDedup.storeManifest(spark, d))
       .map(_.toSet).contains(trueBps7))
     assert(Retract.retract(spark, d, Seq(7L)) == 16L)
-    assert(IncrementalDedup.docIndexBps(spark, d, Seq(7L), dpParts)
+    assert(IncrementalDedup.docIndexBps(spark, d, Seq(7L), dpParts,
+      IncrementalDedup.storeManifest(spark, d))
       .contains(Seq.empty))
     assert(spark.read.parquet(d).filter(col("doc_id") === 7L).count() == 0)
     // rebuild re-derives the index against the REHASHED bps and stamps
@@ -512,7 +519,8 @@ class RetractSpec extends SparkSuite {
     val trueBps = spark.read.parquet(d3).filter(col("doc_id") === 8L)
       .select("bp").distinct().collect().map(_.getInt(0)).toSet
     val dpR = IncrementalDedup.storeManifest(spark, d3)("doc_index_parts").toInt
-    assert(IncrementalDedup.docIndexBps(spark, d3, Seq(8L), dpR)
+    assert(IncrementalDedup.docIndexBps(spark, d3, Seq(8L), dpR,
+      IncrementalDedup.storeManifest(spark, d3))
       .map(_.toSet).contains(trueBps))
     assert(Retract.retract(spark, d3, Seq(8L)) == 16L)
   }

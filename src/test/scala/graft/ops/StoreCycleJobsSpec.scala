@@ -65,4 +65,19 @@ class StoreCycleJobsSpec extends SparkSuite {
       assert(got == (created, warm), s"$name (creation, warm) jobs")
     }
   }
+
+  /** Every table is read with its pinned schema, so the takedown starts
+    * no schema-inference job: not for the data table, nor for the doc
+    * index it consults and then rewrites. */
+  private val retractJobs = 15
+
+  test(s"retract: a 5-id retract of an indexed exact store starts $retractJobs Spark jobs") {
+    val dir = Files.createTempDirectory("cyclejobs_retract").toString + "/store"
+    IncrementalDedup.exactBatch(d1, dir)
+    IncrementalDedup.exactBatch(d2, dir)
+    assert(IncrementalDedup.docIndexEnabled(IncrementalDedup.storeManifest(spark, dir)))
+    val (removed, jobs) = jobsOf(Retract.retract(spark, dir, (1L to 5L)))
+    assert(removed == 5L)
+    assert(jobs.size == retractJobs, jobs.mkString("\n"))
+  }
 }

@@ -59,8 +59,7 @@ class StoreFsckRepairSpec extends SparkSuite {
     cleanBoth(d)
     // the reconstructed docs/ row is exactly what the crashed batch
     // would have written: (99, dl=2.0) — and searches now score zeta
-    val docs = IncrementalDedup.readStoreRaw(spark, s"$d/docs",
-      "doc_id BIGINT, dl DOUBLE, bp INT")._1
+    val docs = StoreRows(spark, d, "docs")._1
       .filter(col("doc_id") === 99L).collect()
     assert(docs.length == 1 && docs.head.getDouble(1) == 2.0, docs.toSeq)
   }
@@ -70,8 +69,8 @@ class StoreFsckRepairSpec extends SparkSuite {
     IncrementalDedup.exactBatch(
       Seq((1L, "alpha"), (2L, "beta"), (3L, "gamma")).toDF("doc_id", "text"),
       d).collect()
-    IncrementalDedup.retractDocIndex(spark, d, Seq(1L),
-      IncrementalDedup.storeManifest(spark, d)("doc_index_parts").toInt)
+    val mf = IncrementalDedup.storeManifest(spark, d)
+    IncrementalDedup.retractDocIndex(spark, d, Seq(1L), mf("doc_index_parts").toInt, mf)
     val acts = StoreFsck.repair(spark, d, deep = true)
     assert(acts.exists(a => a.finding.check == "doc_index_superset" &&
       a.applied), acts.toString)

@@ -65,8 +65,8 @@ class StoreFsckSpec extends SparkSuite {
     assert(StoreFsck.fsck(spark, d, deep = true).isEmpty)
     // erase one id's index rows while its store rows remain — the exact
     // silent-leftover takedown hazard the index's contract forbids
-    IncrementalDedup.retractDocIndex(spark, d, Seq(1L),
-      IncrementalDedup.storeManifest(spark, d)("doc_index_parts").toInt)
+    val mf = IncrementalDedup.storeManifest(spark, d)
+    IncrementalDedup.retractDocIndex(spark, d, Seq(1L), mf("doc_index_parts").toInt, mf)
     val f = errs(StoreFsck.fsck(spark, d, deep = true))
     assert(f.exists(_.check == "doc_index_superset"), f.toString)
   }
@@ -188,6 +188,18 @@ class StoreFsckSpec extends SparkSuite {
       f.detail.contains("_retract_arm")), f2.toString)
     Retract.armClear(spark, d)
     assert(StoreFsck.fsck(spark, d).isEmpty)
+    // a damaged vec_type → manifest error, not a schema parse crash
+    val em = tmp("vectype")
+    IncrementalDedup.embeddingBatch(Seq((1L, Seq(1.0, 0.0))).toDF("vec_id", "embedding"),
+      em).collect()
+    val emMp = java.nio.file.Paths.get(s"$em/_graft_store.json")
+    java.nio.file.Files.write(emMp, new String(java.nio.file.Files.readAllBytes(emMp))
+      .replace("\"vec_type\":\"double\"", "\"vec_type\":\"fp32\"").getBytes)
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$em/._graft_store.json.crc"))
+    val fv = StoreFsck.fsck(spark, em, deep = true)
+    assert(errs(fv).exists(f => f.check == "manifest" &&
+      f.detail.contains("vec_type 'fp32'")), fv.toString)
     // bm25 with postings but no stats file → error naming the remedy
     val bm = tmp("nostats")
     Bm25Index.indexBatch(Seq((1L, "alpha")).toDF("doc_id", "text"), bm)

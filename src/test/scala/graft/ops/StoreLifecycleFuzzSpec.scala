@@ -111,8 +111,7 @@ class StoreLifecycleFuzzSpec extends SparkSuite {
         },
         compact = () => { IncrementalDedup.compactStore(spark, dir); () },
         check = (_, hist) => {
-          val got = IncrementalDedup.readStoreRaw(spark, dir,
-            "digest BINARY, keep_doc_id BIGINT, bp INT")._1
+          val got = StoreRows(spark, dir)._1
             .select("keep_doc_id").collect().map(_.getLong(0)).toSet
           assert(got == keepers.values.toSet,
             s"store keepers $got != model ${keepers.values.toSet}\n$hist")
@@ -131,10 +130,9 @@ class StoreLifecycleFuzzSpec extends SparkSuite {
           // postings must be EXACTLY the live docs' distinct 3-grams —
           // novelty anti-joins must not lose rows, retraction must not
           // leave them (docs with dup'd text still post: the ngram
-          // store is per-doc, not keeper'd). readStoreRaw handles the
+          // store is per-doc, not keeper'd). StoreRows handles the
           // fully-retracted store (no parquet files left — schema given)
-          val got = IncrementalDedup.readStoreRaw(spark, dir,
-            "doc_id BIGINT, shingle BIGINT, nsh BIGINT, bp INT")._1
+          val got = StoreRows(spark, dir)._1
             .select("doc_id", "shingle").distinct().count()
           val want =
             if (live.isEmpty) 0L
@@ -156,8 +154,7 @@ class StoreLifecycleFuzzSpec extends SparkSuite {
         compact = () => { IncrementalDedup.compactStore(spark, dir); () },
         check = (live, hist) => {
           // doc membership: signature rows for exactly the live docs
-          val got = IncrementalDedup.readStoreRaw(spark, dir,
-            "doc_id BIGINT, sig ARRAY<BIGINT>, band INT, bh BIGINT, bp INT")._1
+          val got = StoreRows(spark, dir)._1
             .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
           assert(got == live.keySet, s"minhash docs $got != ${live.keySet}\n$hist")
         })
@@ -195,11 +192,9 @@ class StoreLifecycleFuzzSpec extends SparkSuite {
         if (live.nonEmpty || step > 1) {
           val f = StoreFsck.fsck(spark, dir, deep = true)
           assert(f.isEmpty, s"seed=$seed step=$step fsck dirty: $f")
-          val posts = IncrementalDedup.readStoreRaw(spark, s"$dir/postings",
-            "vec_id BIGINT, tbl INT, bucket BIGINT, bp INT")._1
+          val posts = StoreRows(spark, dir, "postings")._1
             .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
-          val vecs = IncrementalDedup.readStoreRaw(spark, s"$dir/vectors",
-            "vec_id BIGINT, vec ARRAY<DOUBLE>, bp INT")._1
+          val vecs = StoreRows(spark, dir, "vectors")._1
             .select("vec_id").distinct().collect().map(_.getLong(0)).toSet
           assert(posts == live && vecs == live,
             s"seed=$seed step=$step postings=$posts vectors=$vecs live=$live")
@@ -216,8 +211,7 @@ class StoreLifecycleFuzzSpec extends SparkSuite {
         retractIds = ids => { Retract.retract(spark, dir, ids); () },
         compact = () => (), // bm25 compaction rides rebuildStore; out of scope
         check = (live, hist) => {
-          val gotDocs = IncrementalDedup.readStoreRaw(spark, s"$dir/docs",
-            "doc_id BIGINT, dl DOUBLE, bp INT")._1
+          val gotDocs = StoreRows(spark, dir, "docs")._1
             .select("doc_id").collect().map(_.getLong(0)).toSet
           assert(gotDocs == live.keySet,
             s"docs/ $gotDocs != live ${live.keySet}\n$hist")
@@ -254,8 +248,7 @@ class StoreLifecycleFuzzSpec extends SparkSuite {
         },
         compact = () => { IncrementalDedup.compactStore(spark, dir); () },
         check = (_, hist) => {
-          val got = IncrementalDedup.readStoreRaw(spark, dir,
-            "digest BINARY, keep_doc_id BIGINT, bp INT")._1
+          val got = StoreRows(spark, dir)._1
             .select("keep_doc_id").collect().map(_.getLong(0)).toSet
           assert(got == keepers.values.toSet,
             s"pointer store keepers $got != model ${keepers.values.toSet}\n$hist")
@@ -536,8 +529,7 @@ class StoreLifecycleFuzzSpec extends SparkSuite {
     // repair still a no-op
     assert(StoreFsck.fsck(spark, dir, deep = true).isEmpty)
     assert(StoreFsck.repair(spark, dir, deep = true).isEmpty)
-    val got = IncrementalDedup.readStoreRaw(spark, dir,
-      "digest BINARY, keep_doc_id BIGINT, bp INT")._1
+    val got = StoreRows(spark, dir)._1
       .select("keep_doc_id").collect().map(_.getLong(0)).toSet
     assert(got == keepers.values.toSet,
       s"post-race keepers $got != model ${keepers.values.toSet}")
@@ -555,8 +547,7 @@ class StoreLifecycleFuzzSpec extends SparkSuite {
       graft.fs.PartitionPointer.sweepGarbage(spark, dir)
     }
     assert(!fsP.exists(orphan), "orphan pv dir survived the GC sweep")
-    val got2 = IncrementalDedup.readStoreRaw(spark, dir,
-      "digest BINARY, keep_doc_id BIGINT, bp INT")._1
+    val got2 = StoreRows(spark, dir)._1
       .select("keep_doc_id").collect().map(_.getLong(0)).toSet
     assert(got2 == keepers.values.toSet,
       "the orphan sweep touched a live generation")

@@ -48,8 +48,7 @@ class SwapFenceContractSpec extends SparkSuite {
     assert(!names.exists(_.contains("_retract_pending")), names.mkString(","))
     assert(!names.exists(_.contains("_retract_tmp")), names.mkString(","))
     // the retired keeper is gone; survivors intact (pointer-resolved read)
-    val (store, hasData) = IncrementalDedup.readStoreRaw(spark, dir,
-      "digest BINARY, keep_doc_id BIGINT, bp INT")
+    val (store, hasData) = StoreRows(spark, dir)
     assert(hasData)
     val left = store.select("keep_doc_id").collect().map(_.getLong(0)).toSet
     assert(left == Set(3L), left.toString) // doc 2 was a dup of 1, never kept
@@ -95,8 +94,7 @@ class SwapFenceContractSpec extends SparkSuite {
       new org.apache.hadoop.fs.Path(dir)),
       "pointer-mode compaction must have created the pointer")
     // rows intact through the pointer-resolved read; keeper set exact
-    val (store, has) = IncrementalDedup.readStoreRaw(spark, dir,
-      "digest BINARY, keep_doc_id BIGINT, bp INT")
+    val (store, has) = StoreRows(spark, dir)
     assert(has)
     assert(store.select("keep_doc_id").collect().map(_.getLong(0)).toSet ==
       Set(1L, 2L))
