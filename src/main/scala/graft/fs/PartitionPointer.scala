@@ -370,6 +370,24 @@ object PartitionPointer {
     true
   }
 
+  /** The [[commitSwap]] lines of a whole-table swap: replace every
+    * partition staged under `tmp`, drop every other live one (pointer
+    * entries ≥ 0 plus the legacy dirs no entry names). */
+  def replaceAllLines(fs: FileSystem, root: Path, partCol: String,
+      tmp: Path): Seq[String] = {
+    def parts(dir: Path): Set[String] =
+      if (!fs.exists(dir)) Set.empty
+      else fs.listStatus(dir).map(_.getPath.getName)
+        .filter(_.startsWith(s"$partCol=")).toSet
+    val staged = parts(tmp)
+    val legacy = parts(root)
+    val live = readPtr(fs, root).fold(legacy)(p =>
+      p.entries.collect { case (n, e) if e.live >= 0 => n }.toSet ++
+        (legacy -- p.entries.keySet))
+    staged.toSeq.sorted.map(n => s"replace:$n") ++
+      (live -- staged).toSeq.sorted.map(n => s"drop:$n")
+  }
+
   /** Commit a staged partition swap by pointer flip — the rename-less
     * twin of Retract's marker + rename roll-forward. `lines` is the
     * same `replace:<name>` / `drop:<name>` list the marker path uses;

@@ -26,14 +26,16 @@ import org.apache.spark.sql.functions._
   *   - `_graft_store.json` — variant=bm25 + store_parts (the strict
   *     geometry manifest all stores share).
   *
-  * Append crash order: postings FIRST (row-granular (doc_id, term)
-  * anti-join against the term-pruned store, so a partially-committed
-  * append is REPAIRED by the retry), then `docs/` (a doc is "indexed"
-  * only once its postings are all in), then the stats totals. A crash
-  * between the last two undercounts stats by ≤ one batch until
-  * [[recomputeStats]] — stated, not hidden: BM25 is a ranking function
-  * and N/avgdl drift of one batch moves no rank on any realistic
-  * corpus, but the heal is one cheap 2-column scan of `docs/`.
+  * Append crash order — the shared [[StoreCycle]]'s tail, with
+  * `postings/` as its data table: the term bloom and the doc index,
+  * then the postings (row-granular (doc_id, term) anti-join against the
+  * term-pruned store, so a partially-committed append is REPAIRED by
+  * the retry), then, as the cycle's post-append action, `docs/` (a doc
+  * is "indexed" only once its postings are all in) and the stats
+  * totals. A crash between the last two undercounts stats by ≤ one
+  * batch until [[recomputeStats]] — stated, not hidden: BM25 is a
+  * ranking function and N/avgdl drift of one batch moves no rank on any
+  * realistic corpus, but the heal is one cheap 2-column scan of `docs/`.
   *
   * Search parity contract: [[search]] over an index built from `docs`
   * returns EXACTLY `Bm25.search(docs, …)` — same formula, same 4-dp
@@ -53,13 +55,19 @@ import org.apache.spark.sql.functions._
 object Bm25Index {
 
   private val StatsFile = "_bm25_stats"
-  private val TermBloomFile = "_term_bloom"
-  private val Postings = StoreLayout.named("bm25").tables(0)
-  private val Docs = StoreLayout.named("bm25").tables(1)
+  private val Layout = StoreLayout.named("bm25")
+  private val Postings = Layout.tables(0)
+  private val Docs = Layout.tables(1)
+  private val TermBloom = Layout.bloom.get
 
   /** One locked index cycle: add `docsNew` (novel docs only — replays
     * and id-reuse are doc-granular no-ops) to the index at `dir`,
-    * creating it if absent. Returns the number of NOVEL docs indexed. */
+    * creating it if absent. Returns the number of NOVEL docs indexed.
+    * Runs on the shared [[StoreCycle]] with `postings/` as its data
+    * table: the cycle resolves the term geometry, stamps the manifest,
+    * writes the doc index and then the postings; this step's
+    * post-append action writes `docs/` and then the stats totals — the
+    * crash order in the object doc. */
   def indexBatch(
       docsNew: DataFrame,
       dir: String,
@@ -67,10 +75,33 @@ object Bm25Index {
       textCol: String = "text",
       storeParts: Int = IncrementalDedup.AutoStoreParts,
       compactFiles: Int = 0): Long =
-    graft.fs.StoreLock.withLock(dir,
-      docsNew.sparkSession.sparkContext.hadoopConfiguration) {
-      indexBatchLocked(docsNew, dir, docIdCol, textCol, storeParts,
-        compactFiles)
+    StoreCycle.run(docsNew, dir, storeParts, compactFiles) { mf =>
+      val toks = TextAnalysis.tokens(col(textCol))
+      // id-dedupe BEFORE the explode: a doc_id repeated WITHIN the batch
+      // would otherwise double its tf in the grouped postings (the
+      // docs/-side dropDuplicates can't undo that) — ids are a caller
+      // contract corpus-wide, but an in-batch repeat must not corrupt
+      // fanOut: the token explode + posting aggregation below is the
+      // batch's CPU pass; hash-repartitioning on the id BEFORE the
+      // dropDuplicates lets the dedup aggregate reuse the exchange (same
+      // key), so the spread costs no extra shuffle (no-op on well-split
+      // scans — see Scale.fanOutForCompute)
+      val docsUnique = graft.ops.Scale.fanOutForCompute(docsNew, col(docIdCol))
+        .dropDuplicates(docIdCol)
+      // geometry sizes from POSTING rows (one per (doc, distinct term) —
+      // the ngram store's shape) on creation, and so does the term bloom
+      // (r14 verdict #5 — the ngram gram-bloom pattern; legacy pre-bloom
+      // indexes stay keyless and skip the sidecar, so search skips the
+      // prune, never wrong)
+      StoreCycle.Family(Layout,
+        docsUnique
+          .select(col(docIdCol).as("doc_id"), size(toks).cast("double").as("dl"),
+            explode(toks).as("term"))
+          .groupBy("term", "doc_id", "dl")
+          .agg(count(lit(1)).cast("double").as("tf")),
+        rows => TermBloom.meta(mf, rows),
+        b => indexStep(b, docsUnique.select(col(docIdCol).as("doc_id"),
+          size(toks).cast("double").as("dl")), dir))
     }
 
   /** Streaming twin: one locked cycle per micro-batch, per-epoch novel
@@ -99,91 +130,30 @@ object Bm25Index {
       }
       .start()
 
-  private def indexBatchLocked(
-      docsNew: DataFrame,
-      dir: String,
-      docIdCol: String,
-      textCol: String,
-      requestedParts: Int,
-      compactFiles: Int): Long = {
-    val spark = docsNew.sparkSession
-    val toks = TextAnalysis.tokens(col(textCol))
-    // id-dedupe BEFORE the explode: a doc_id repeated WITHIN the batch
-    // would otherwise double its tf in the grouped postings (the
-    // docs/-side dropDuplicates can't undo that) — ids are a caller
-    // contract corpus-wide, but an in-batch repeat must not corrupt
-    // fanOut: the token explode + posting aggregation below is the
-    // batch's CPU pass; hash-repartitioning on the id BEFORE the
-    // dropDuplicates lets the dedup aggregate reuse the exchange (same
-    // key), so the spread costs no extra shuffle (no-op on well-split
-    // scans — see Scale.fanOutForCompute)
-    val docsUnique = graft.ops.Scale.fanOutForCompute(docsNew, col(docIdCol))
-      .dropDuplicates(docIdCol)
-    // geometry sizes from POSTING rows (one per (doc, distinct term) —
-    // the ngram store's shape) on creation; warm cycles adopt the manifest
-    val mParts = IncrementalDedup.manifestParts(spark, dir)
-    val postingsRaw = docsUnique
-      .select(col(docIdCol).as("doc_id"),
-        size(toks).cast("double").as("dl"), explode(toks).as("term"))
-      .groupBy("term", "doc_id", "dl")
-      .agg(count(lit(1)).cast("double").as("tf"))
-    val (newPostings, touchedParts, storeParts, nPostingRows) =
-      IncrementalDedup.resolveGeometry(
-        IncrementalDedup.knownPartsFrom(mParts, requestedParts),
-        postingsRaw, Seq(col("term")))
-    // term-bloom geometry (r14 verdict #5 — the ngram gram-bloom
-    // pattern): adopt from the manifest, or size at creation from this
-    // batch's posting rows (an upper bound on distinct terms) with 4×
-    // headroom; both constants ride the manifest so later batches build
-    // merge-compatible blooms. Legacy pre-bloom indexes stay keyless
-    // and skip the sidecar (search then skips the prune, never wrong).
-    val manifestExists = mParts.isDefined
-    val bloomGeom: Option[(Long, Long)] =
-      if (manifestExists)
-        for {
-          c <- IncrementalDedup.manifestValue(spark, dir, "term_bloom_cap")
-            .map(_.toLong)
-          b <- IncrementalDedup.manifestValue(spark, dir, "term_bloom_bits")
-            .map(_.toLong)
-        } yield (c, b)
-      else Some(IncrementalDedup.gramBloomGeometry(
-        math.max(1L, nPostingRows)))
-    val bloomMeta = bloomGeom match {
-      case Some((c, b)) if !manifestExists =>
-        Map("term_bloom_cap" -> c.toString, "term_bloom_bits" -> b.toString)
-      case _ => Map.empty[String, String]
-    }
-    // doc→bp retraction index on postings/ (term-hash partitioned —
-    // the bucket-store discovery problem): stamped at creation
-    val mfB = IncrementalDedup.storeManifest(spark, dir)
-    val docIdx = !manifestExists || IncrementalDedup.docIndexEnabled(mfB)
-    val dpParts = mfB.get("doc_index_parts").map(_.toInt)
-      .getOrElse(IncrementalDedup.dpPartsFor(storeParts))
-    IncrementalDedup.checkOrWriteMeta(spark, dir, Map(
-      "variant" -> "bm25", "store_parts" -> storeParts.toString) ++ bloomMeta ++
-      (if (!manifestExists) Map("doc_index" -> "1",
-        "doc_index_parts" -> dpParts.toString) else Map.empty))
-    // doc-granular novelty from docs/ (pruned to the batch's id hashes);
-    // dl NULL for NULL text — the search stats convention: such docs
-    // count in N but not in avgdl
-    val readD = Docs.read(spark, dir, mfB)
-    // docBps rides the checkpoint's own materialization as an observe
-    // metric (the resolveGeometry pattern, r21) — no separate probe job
+  /** The index step: the batch's novel docs (doc-granular, against the
+    * id-pruned `docs/`), then their postings the term-pruned store lacks
+    * (row-granular (doc_id, term), so a crashed append's retry appends
+    * exactly the missing rows; equal terms share a bp, so the pruned
+    * view is a complete witness). A batch whose docs are all indexed
+    * appends nothing and only heals a lost term bloom. `docs` is the
+    * batch's (doc_id, dl). */
+  private def indexStep(b: StoreCycle.Batch, docs: DataFrame,
+      dir: String): StoreCycle.Step[Long] = {
+    val spark = b.rows.sparkSession
+    // doc-granular novelty from docs/ (pruned to the batch's id
+    // hashes); dl NULL for NULL text — the search stats convention:
+    // such docs count in N but not in avgdl. The id hashes ride the
+    // checkpoint's own materialization as an observe metric.
     val docObs = org.apache.spark.sql.Observation()
-    val batchDocs = docsUnique
-      .select(col(docIdCol).as("doc_id"), size(toks).cast("double").as("dl"))
-      .withColumn("bp", IncrementalDedup.bpOf(storeParts, col("doc_id")))
+    val batchDocs = docs
+      .withColumn("bp", IncrementalDedup.bpOf(b.parts, col("doc_id")))
       .observe(docObs, collect_set(col("bp")).as("bps"))
       .localCheckpoint()
-    val docBps = docObs.get("bps") match {
-      case s: scala.collection.Seq[_] =>
-        s.map(_.asInstanceOf[Number].intValue).toIndexedSeq
-      case a: Array[_] => a.toIndexedSeq.map(_.asInstanceOf[Number].intValue)
-      case other => sys.error(s"unexpected bps metric shape: $other")
-    }
+    val docBps = IncrementalDedup.intSeqOf(docObs.get("bps"))
+    val (storedDocs, hasDocs) = Docs.read(spark, dir, b.manifest)
     val storeD =
-      if (readD._2) IncrementalDedup.prune(readD._1, docBps)
-      else readD._1.drop("bp")
+      if (hasDocs) IncrementalDedup.prune(storedDocs, docBps)
+      else storedDocs.drop("bp")
     // stats delta rides the novel-docs checkpoint as observe metrics
     // (doc-granular novelty makes retried batches contribute zero) —
     // one action materializes the frame AND the three totals
@@ -198,106 +168,30 @@ object Bm25Index {
     val deltaM = deltaObs.get
     val (dN, dNt, dTd) = (deltaM("n").asInstanceOf[Long],
       deltaM("nt").asInstanceOf[Long], deltaM("td").asInstanceOf[Double])
-    if (dN == 0L) {
-      // a replay-only cycle returns before the postings section below —
-      // heal a lost sidecar HERE too, or the documented "next locked
-      // cycle self-heals" contract breaks under pure-replay workloads
-      // (indexStream retries are exactly the dN == 0 shape)
-      healTermBloomLocked(spark, dir, bloomGeom, mfB)
-      return 0L
+    // a replay-only cycle appends nothing, but it still heals a lost
+    // sidecar, or the "next locked cycle self-heals" contract breaks
+    // under pure-replay workloads (indexStream retries are exactly the
+    // dN == 0 shape)
+    if (dN == 0L) StoreCycle.Step(0L, b.rows, None, after = () => TermBloom.heal(b, dir))
+    else {
+      // the term bloom prunes the anti-join's read to the partitions of
+      // terms it does not deny, and takes the batch's terms (novel or
+      // not: supersets are free) before the cycle's append
+      val storeP = TermBloom.probe(b, dir)
+      val novelPostings = b.rows
+        .join(novelDocs.select("doc_id"), Seq("doc_id"), "left_semi")
+        .join(storeP.select("doc_id", "term"), Seq("doc_id", "term"), "left_anti")
+      // the doc index takes the whole batch's postings: replays append
+      // duplicate pairs, harmless at the distinct-bps consult
+      StoreCycle.Step(dN, b.rows, Some(novelPostings), after = () => {
+        IncrementalDedup.appendStore(novelDocs, Docs.dir(dir), math.max(1, docBps.size))
+        writeStats(spark, dir, readStats(spark, dir) match {
+          case Some((n, nt, td)) => (n + dN, nt + dNt, td + dTd)
+          case None              => (dN, dNt, dTd)
+        })
+      })
     }
-    // postings of the NOVEL docs only; row-granular (doc_id, term)
-    // anti-join against the term-pruned store so a crashed append's
-    // retry appends exactly the missing rows (equal terms share a bp —
-    // the pruned view is a complete witness)
-    val readP = Postings.read(spark, dir, mfB)
-    // warm cycles probe the term bloom: a MISS term is definitively
-    // absent, so partitions touched only by never-indexed terms drop
-    // out of the anti-join's pruned read (the ngram hitParts pattern).
-    // A missing sidecar under a bloom-keyed manifest (crash between the
-    // sidecar's delete and rename) self-heals here with one term-column
-    // scan of the store.
-    val oldBloomBytes: Option[Array[Byte]] =
-      if (!readP._2) None
-      else bloomGeom.map { case (c, b) =>
-        IncrementalDedup.readBloomSidecar(spark, dir, TermBloomFile)
-          .getOrElse(IncrementalDedup.bloomToBytes(
-            readP._1.select(xxhash64(col("term")).as("th"))
-              .stat.bloomFilter("th", c, b)))
-      }
-    val storeP =
-      if (!readP._2) readP._1.drop("bp")
-      else oldBloomBytes match {
-        case Some(bytes) =>
-          val hitParts = newPostings
-            .filter(graft.functions.SketchExprs
-              .bloomMightContain(xxhash64(col("term")), bytes))
-            .select("bp").distinct().collect()
-            .map(_.getInt(0)).toIndexedSeq
-          IncrementalDedup.prune(readP._1, hitParts)
-        case None => IncrementalDedup.prune(readP._1, touchedParts)
-      }
-    val novelPostings = newPostings
-      .join(novelDocs.select("doc_id"), Seq("doc_id"), "left_semi")
-      .join(storeP.select("doc_id", "term"), Seq("doc_id", "term"), "left_anti")
-    // bloom BEFORE the append it covers (superset-at-every-instant —
-    // the writeBloomSidecar contract): a crash after this write only
-    // leaves the bloom claiming terms whose postings never landed —
-    // false positives cost a pruned scan, never a wrong answer. The
-    // batch bloom folds ALL of the batch's terms, novel or not
-    // (supersets are free; exactness is rebuildStore's job).
-    // empty-batch guard: Spark's bloomFilter aggregate NPEs on a
-    // zero-row frame (an all-NULL-text epoch) — nothing to fold anyway
-    bloomGeom.foreach { case (c, b) =>
-      if (nPostingRows > 0L) {
-        val batchBloom = newPostings
-          .select(xxhash64(col("term")).as("th")).stat.bloomFilter("th", c, b)
-        val merged = oldBloomBytes match {
-          case Some(bytes) =>
-            val old = org.apache.spark.util.sketch.BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(bytes))
-            old.mergeInPlace(batchBloom)
-          case None => batchBloom
-        }
-        IncrementalDedup.writeBloomSidecar(spark, dir, TermBloomFile, merged)
-      }
-    }
-    // retraction index BEFORE the postings it covers (superset rule);
-    // feeding the whole batch's postings is correct — replays append
-    // duplicate pairs, harmless at the distinct-bps consult
-    if (docIdx) IncrementalDedup.appendDocIndex(
-      newPostings, s"$dir/postings", "doc_id", dpParts)
-    IncrementalDedup.appendStore(novelPostings, s"$dir/postings",
-      IncrementalDedup.appendWidth(touchedParts, storeParts))
-    IncrementalDedup.appendStore(novelDocs, s"$dir/docs",
-      math.max(1, docBps.size))
-    writeStats(spark, dir, readStats(spark, dir) match {
-      case Some((n, nt, td)) => (n + dN, nt + dNt, td + dTd)
-      case None              => (dN, dNt, dTd)
-    })
-    if (compactFiles > 0 && touchedParts.nonEmpty)
-      IncrementalDedup.maybeCompactLocked(
-        spark, dir, Postings, mfB, touchedParts, compactFiles)
-    dN
   }
-
-  /** Rebuild a MISSING term-bloom sidecar from the postings store (one
-    * term-column scan) — the self-heal for the delete-before-rename
-    * crash window, shared by the novel-batch path (via its merged
-    * write) and the replay-only early return. Runs under the held
-    * store lock; a present sidecar is a no-op probe. */
-  private def healTermBloomLocked(
-      spark: SparkSession, dir: String,
-      bloomGeom: Option[(Long, Long)], manifest: Map[String, String]): Unit =
-    bloomGeom.foreach { case (c, b) =>
-      if (IncrementalDedup.readBloomSidecar(spark, dir, TermBloomFile).isEmpty) {
-        val readP = Postings.read(spark, dir, manifest)
-        if (readP._2)
-          IncrementalDedup.writeBloomSidecar(spark, dir, TermBloomFile,
-            readP._1.select(xxhash64(col("term")).as("th"))
-              .stat.bloomFilter("th", c, b))
-      }
-    }
 
   /** Per-JVM sidecar byte cache keyed by (path, mtime, length): search
     * is the hot path and the bloom floors at ~4 MB (gramBloomGeometry's
@@ -315,14 +209,14 @@ object Bm25Index {
 
   private def cachedTermBloom(
       spark: SparkSession, dir: String): Option[Array[Byte]] = {
-    val p = new org.apache.hadoop.fs.Path(dir, TermBloomFile)
+    val p = new org.apache.hadoop.fs.Path(dir, TermBloom.file)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     try {
       val st = fs.getFileStatus(p)
       val ver = (st.getModificationTime, st.getLen)
       val key = p.toString
       Option(bloomCache.get(key)).filter(_._1 == ver).map(_._2).orElse {
-        val bytes = IncrementalDedup.readBloomSidecar(spark, dir, TermBloomFile)
+        val bytes = IncrementalDedup.readBloomSidecar(spark, dir, TermBloom.file)
         bytes.foreach(v => bloomCache.put(key, (ver, v)))
         bytes
       }
@@ -481,29 +375,19 @@ object Bm25Index {
       }
 
   /** Retraction arm (runs under the already-held store lock, from
-    * [[Retract.retract]]): drop the retired docs' posting rows
-    * (discovery scan + O(touched partitions) rewrite) and their `docs/`
-    * rows (id-hash pruned end-to-end), then rewrite the stats totals
-    * EXACTLY from the post-rewrite `docs/` (r14 ADVICE: a delta
-    * decrement left a crash window — docs rewrite committed, stats
-    * write lost — where the retry computed a zero delta and the
-    * overcounted totals never healed; the exact recompute is one cheap
-    * 2-column scan and makes any retry, including a 0-row one, the
-    * heal). The term bloom is left a SUPERSET (it may still claim the
-    * retired docs' now-gone terms) — supersets only cost false-positive
-    * scans, never correctness; `rebuildStore` re-derives it tight.
-    * Returns posting+doc rows removed. */
-  private[ops] def retractLocked(
-      spark: SparkSession, dir: String, ids: Seq[Long],
-      mf: Map[String, String]): Long = {
-    val parts = mf.get("store_parts").map(_.toInt).getOrElse(
-      sys.error(s"$dir has no store_parts in its manifest"))
-    val bps = Retract.bpsOf(spark, ids, parts)
-    // No scheme gate here (r17 ADVICE asked for gate-before-arm so a
-    // refused retraction couldn't strand the sentinel — now nothing is
-    // refused: on rename-less schemes the inner rewrites commit by
-    // pointer flip, graft.fs.PartitionPointer, so the arm proceeds on
-    // every scheme).
+    * [[Retract.retract]], whose per-table `takedown` drops the retired
+    * docs' posting rows (doc-index pruned) and their `docs/` rows
+    * (id-hash pruned)), then rewrite the stats totals EXACTLY from the
+    * post-rewrite `docs/` (r14 ADVICE: a delta decrement left a crash
+    * window — docs rewrite committed, stats write lost — where the retry
+    * computed a zero delta and the overcounted totals never healed; the
+    * exact recompute is one cheap 2-column scan and makes any retry,
+    * including a 0-row one, the heal). The term bloom is left a SUPERSET
+    * (it may still claim the retired docs' now-gone terms) — supersets
+    * only cost false-positive scans, never correctness; `rebuildStore`
+    * re-derives it tight. Returns what `takedown` removed. */
+  private[ops] def retractLocked(spark: SparkSession, dir: String)(
+      takedown: => Long): Long = {
     // ARM-BUSY SENTINEL (r16 ADVICE, medium): this arm's consistency
     // surface is postings + docs + stats TOGETHER, but each inner swap's
     // marker/epoch covers only itself — a reader whose whole seqlock
@@ -512,22 +396,7 @@ object Bm25Index {
     // sentinel BEFORE the first swap; search treats it as busy; cleared
     // only after the final bump below. Crash → ensureReadable heals.
     Retract.armRaise(spark, s"$dir/postings")
-    // postings discovery prunes through the doc→bp index when present
-    // (term-hash partitions — the same O(store) discovery the dedup
-    // stores had); legacy indexes keep the full scan
-    val dpParts = mf.get("doc_index_parts").map(_.toInt).getOrElse(parts)
-    val prePost =
-      if (IncrementalDedup.docIndexEnabled(mf))
-        IncrementalDedup.docIndexBps(spark, Postings.dir(dir), ids, dpParts, mf)
-          .map(c => col("bp").isin(c: _*))
-      else None
-    def rewrite(t: StoreTable, prefilter: Option[Column]): Long =
-      Retract.rewriteTouched(spark, t.dir(dir), t.partCol, t.readRaw(spark, dir, mf),
-        Retract.semiOn(spark, ids, "doc_id"), Retract.antiOn(spark, ids, "doc_id"),
-        prefilter = prefilter)
-    val removedP = rewrite(Postings, prePost)
-    val removedD = rewrite(Docs, Some(col("bp").isin(bps: _*)))
-    IncrementalDedup.retractDocIndex(spark, Postings.dir(dir), ids, dpParts, mf)
+    val removed = takedown
     recomputeStatsLocked(spark, dir)
     // the retraction's consistency surface includes the stats the
     // search scores with — re-bump the postings epoch AFTER the stats
@@ -538,7 +407,7 @@ object Bm25Index {
     // part of this arm
     Retract.bumpEpochAt(spark, s"$dir/postings")
     Retract.armClear(spark, s"$dir/postings")
-    removedP + removedD
+    removed
   }
 
   /** Recompute the stats totals exactly from `docs/` — the heal for a

@@ -51,9 +51,6 @@ object IncrementalComponents {
   private val LabelsDir = Labels.rel
   private val MergesDir = "merges"
 
-  private def bpOf(parts: Int, v: org.apache.spark.sql.Column) =
-    IncrementalDedup.bpOf(parts, v)
-
   /** Driver-side union-find resolution of the merge log: collect the
     * (old, new) rows — bounded by merge EVENTS, not corpus — and
     * path-compress every chain to its root. Returns the compressed
@@ -219,7 +216,7 @@ object IncrementalComponents {
       else IncrementalDedup.storePartsFor(
         resolved.map(_.count()).getOrElse(0L))
     resolved.foreach { r =>
-      r.withColumn("bp", bpOf(parts, col("v")))
+      r.withColumn("bp", IncrementalDedup.bpOf(parts, col("v")))
         .repartition(col("bp"))
         .write.partitionBy("bp").mode("errorifexists")
         .parquet(s"$dstDir/$LabelsDir")
@@ -235,7 +232,11 @@ object IncrementalComponents {
     * first use) and return the resolved (v, component) view of THIS
     * batch's vertices. Store partition count fixes at creation via
     * [[IncrementalDedup.storePartsFor]] over the batch's vertex count
-    * (manifest-recorded, explicit wins — the dedup-store discipline). */
+    * (manifest-recorded, explicit wins — the dedup-store discipline).
+    * Runs on the shared [[StoreCycle]] with `labels/` as its data table:
+    * the fresh vertices' label rows are the cycle's append, and the
+    * post-append action writes the merge rows and then folds the log
+    * when it passes `mergeLogCap`. */
   def addPairs(
       pairs: DataFrame,
       storeDir: String,
@@ -243,9 +244,20 @@ object IncrementalComponents {
       bCol: String = "doc_b",
       storeParts: Int = IncrementalDedup.AutoStoreParts,
       mergeLogCap: Long = DefaultMergeLogCap): DataFrame =
-    graft.fs.StoreLock.withLock(storeDir,
-      pairs.sparkSession.sparkContext.hadoopConfiguration) {
-      addPairsLocked(pairs, storeDir, aCol, bCol, storeParts, mergeLogCap)
+    StoreCycle.run(pairs, storeDir, storeParts, compactFiles = 0) { _ =>
+      // heal a crashed compaction swap BEFORE reading anything (the
+      // cycle's labels read heals a crashed retraction)
+      sweepCompact(pairs.sparkSession, storeDir)
+      val edges = pairs
+        .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+        .localCheckpoint()
+      // the batch's distinct vertices, bucketed on v; creation sizes the
+      // store from their count
+      StoreCycle.Family(StoreLayout.named("components"),
+        edges.select(col("a").as("v")).unionAll(edges.select(col("b").as("v")))
+          .distinct(),
+        _ => Map.empty,
+        b => addStep(b, edges, storeDir, mergeLogCap))
     }
 
   /** Merge-log row cap before a cycle auto-compacts (r12 verdict #3):
@@ -258,84 +270,19 @@ object IncrementalComponents {
     * compaction cadence). */
   val DefaultMergeLogCap: Long = 1L << 20
 
-  private def addPairsLocked(
-      pairs: DataFrame,
+  private def addStep(
+      b: StoreCycle.Batch,
+      edges: DataFrame,
       storeDir: String,
-      aCol: String,
-      bCol: String,
-      requestedParts: Int,
-      mergeLogCap: Long = DefaultMergeLogCap): DataFrame = {
-    val spark = pairs.sparkSession
-    // heal a crashed compaction or retraction swap BEFORE reading anything
-    sweepCompact(spark, storeDir)
-    Retract.sweep(spark, s"$storeDir/$LabelsDir")
-    val mf = IncrementalDedup.storeManifest(spark, storeDir)
-    val mParts = mf.get("store_parts").map(_.toInt)
-    val edges = pairs
-      .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
-      .localCheckpoint()
-    val vertsRaw = edges.select(col("a").as("v"))
-      .unionAll(edges.select(col("b").as("v")))
-      .distinct()
-    // explicit beats manifest beats batch-sized auto (the dedup-store
-    // precedence; a mismatched explicit fails loudly in the meta check);
-    // the streaming sentinel adopts the manifest, creates at the default
-    val knownParts: Option[Int] = requestedParts match {
-      case IncrementalDedup.AutoStoreParts => mParts
-      case IncrementalDedup.AdoptOrDefaultStoreParts =>
-        Some(mParts.getOrElse(IncrementalDedup.DefaultStoreParts))
-      case r => Some(r)
-    }
-    // geometry-known cycles ride the touched-partition probe on the
-    // verts checkpoint's own materialization (the resolveGeometry
-    // observe pattern, r21) — the dedicated distinct+collect probe job
-    // below is creation-only, where the store it would prune is empty
-    val (verts, touchedV, storeParts) = knownParts match {
-      case Some(p) =>
-        val obs = org.apache.spark.sql.Observation()
-        val v = vertsRaw
-          .withColumn("__bp", IncrementalDedup.bpOf(p, col("v")))
-          .observe(obs, collect_set(col("__bp")).as("touched"))
-          .localCheckpoint()
-        val t = obs.get("touched") match {
-          case s: scala.collection.Seq[_] =>
-            s.map(_.asInstanceOf[Number].intValue).toIndexedSeq
-          case a: Array[_] => a.toIndexedSeq.map(_.asInstanceOf[Number].intValue)
-          case other => sys.error(s"unexpected touched metric shape: $other")
-        }
-        (v.drop("__bp"), t, p)
-      case None =>
-        val v = vertsRaw.localCheckpoint()
-        (v, Seq.empty[Int], IncrementalDedup.storePartsFor(v.count()))
-    }
-    // the SHARED manifest discipline (actionable corrupt-manifest error,
-    // tmp-orphan sweep, temp-write + rename) — one implementation
-    IncrementalDedup.checkOrWriteMeta(spark, storeDir, Map(
-      "variant" -> "components", "store_parts" -> storeParts.toString))
-
-    val lp = s"$storeDir/$LabelsDir"
+      mergeLogCap: Long): StoreCycle.Step[DataFrame] = {
+    val spark = edges.sparkSession
+    val verts = b.rows
     val (mm, mmRows) = mergeMapCounted(spark, storeDir, locked = true)
     // existing assignments of the batch's endpoints: partition-pruned to
-    // the batch's own hash range, resolved through the merge log —
-    // pointer-aware read (rename-less schemes commit folds/retractions
-    // by pointer flip; a blind listing would miss versioned partitions)
-    val readL = Labels.readRaw(spark, storeDir, mf)
-    val existing =
-      if (!readL._2) readL._1.drop("bp")
-      else {
-        // touched set rode the verts checkpoint (observe); creation-only
-        // cycles never reach here (an absent manifest means no data)
-        val touched =
-          if (touchedV.nonEmpty) touchedV
-          else verts
-            .select(bpOf(storeParts, col("v")).as("bp")).distinct()
-            .collect().map(_.getInt(0)).toIndexedSeq
-        resolve(
-          IncrementalDedup.prune(readL._1, touched).drop("bp")
-            .join(verts, Seq("v"), "left_semi"),
-          mm)
-      }
-    val existingCk = existing.localCheckpoint()
+    // the batch's own hash range, resolved through the merge log
+    val existingCk = (if (b.stored.isEmpty) b.store
+      else resolve(b.store.join(verts, Seq("v"), "left_semi"), mm))
+      .localCheckpoint()
     // local graph: the batch's pairs plus one (v — current root) edge
     // per already-labeled endpoint. Component ids live in the vertex id
     // namespace (cluster-min convention), so a root participates as a
@@ -347,14 +294,10 @@ object IncrementalComponents {
         .select(col("v").as("doc_a"), col("component").as("doc_b")))
     val comp = Components.ofPairs(graph).localCheckpoint()
 
-    // 1. fresh vertices get their first label row
+    // 1. fresh vertices get their first label row (the cycle's append)
     val fresh = comp.join(verts, Seq("v"), "left_semi")
       .join(existingCk.select("v"), Seq("v"), "left_anti")
-      .withColumn("bp", bpOf(storeParts, col("v")))
-    // pointer-aware append (appendStore routes through
-    // PartitionPointer.appendPartitioned on pointer stores)
-    IncrementalDedup.appendStore(fresh, lp,
-      IncrementalDedup.appendWidth(touchedV, storeParts))
+      .withColumn("bp", b.bp)
     // 2. dethroned roots get a merge row: roots whose NEW component is
     //    smaller than themselves. O(touched clusters) rows.
     val dethroned = comp
@@ -362,28 +305,26 @@ object IncrementalComponents {
         "left_semi")
       .filter(col("component") < col("v"))
       .select(col("v").as("old"), col("component").as("new"))
-    // the batch's merge-row count rides the append's own materialization
-    // (observe) — the cap check below needs it and must not re-count
-    val dethObs = org.apache.spark.sql.Observation()
-    dethroned.observe(dethObs, count(lit(1)).as("n"))
-      .write.mode("append").parquet(s"$storeDir/$MergesDir")
-    val dethRows = dethObs.get("n").asInstanceOf[Long]
-
-    // merge-log residence bound: once the log (pre-existing rows — the
-    // RAW count off this cycle's own mergeMap collect — plus this
-    // batch's appended merge rows) passes the cap, fold it into labels
-    // NOW, under the lock we already hold; after the fold the log is
-    // empty, so the next cycle's driver-side collect is bounded by
-    // cap + one batch's merges. (r21: the counts ride actions this
-    // cycle already runs — the dedicated parquet re-count job is gone.)
-    if (mergeLogCap > 0 && mmRows + dethRows > mergeLogCap)
-      compactLocked(spark, storeDir)
-
-    // the batch view: resolved labels for this batch's vertices.
-    // comp already holds the final canonical for every batch vertex —
-    // return it directly (checkpointed above, so later store writes
-    // cannot invalidate it).
-    comp.join(verts, Seq("v"), "left_semi")
+    def mergeRows(): Unit = {
+      // the batch's merge-row count rides the append's own
+      // materialization (observe) — the cap check must not re-count
+      val dethObs = org.apache.spark.sql.Observation()
+      dethroned.observe(dethObs, count(lit(1)).as("n"))
+        .write.mode("append").parquet(s"$storeDir/$MergesDir")
+      val dethRows = dethObs.get("n").asInstanceOf[Long]
+      // merge-log residence bound: once the log (pre-existing rows — the
+      // RAW count off this cycle's own mergeMap collect — plus this
+      // batch's appended merge rows) passes the cap, fold it into labels
+      // NOW, under the lock we already hold; after the fold the log is
+      // empty, so the next cycle's driver-side collect is bounded by
+      // cap + one batch's merges.
+      if (mergeLogCap > 0 && mmRows + dethRows > mergeLogCap)
+        compactLocked(spark, storeDir)
+    }
+    // the batch view: comp already holds the final canonical for every
+    // batch vertex, checkpointed, so the store writes cannot invalidate it
+    StoreCycle.Step(comp.join(verts, Seq("v"), "left_semi"), verts, Some(fresh),
+      after = () => mergeRows())
   }
 
   /** Streaming form: absorb a PAIR STREAM into the label store, one
@@ -445,7 +386,7 @@ object IncrementalComponents {
     // it (its hit count includes renamed members)
     val (labels0, hasData) = Labels.read(spark, storeDir, manifest)
     if (!hasData) return 0L
-    val bps = Retract.bpsOf(spark, ids, parts)
+    val bps = Retract.bpsOf(ids, parts)
     val removed = Retract.semiOn(spark, ids, "v")(
       labels0.filter(col("bp").isin(bps: _*))).count()
     val ownOf = Retract.semiOn(spark, ids, "v")
@@ -494,8 +435,7 @@ object IncrementalComponents {
     }
 
   /** The compaction fold body, for callers that already hold the store
-    * lock (the public [[compact]], and [[addPairsLocked]]'s merge-log
-    * cap). */
+    * lock (the public [[compact]], and [[addPairs]]'s merge-log cap). */
   private[ops] def compactLocked(spark: SparkSession, storeDir: String): Long = {
       val mm = mergeMap(spark, storeDir, locked = true)
       if (mm.isEmpty) 0L
@@ -539,24 +479,11 @@ object IncrementalComponents {
           resolved.repartition(col("bp"))
             .write.partitionBy("bp").parquet(tmp.toString)
           val changed = obs.get("changed").asInstanceOf[Long]
-          val staged = fs.listStatus(tmp).toIndexedSeq
-            .map(_.getPath.getName).filter(_.startsWith("bp="))
           // every live partition restages (the fold preserves rows);
           // drop is defensive completeness for a live partition that
           // somehow staged nothing
-          val liveNow: Set[String] = {
-            val legacy = fs.listStatus(lpRoot).map(_.getPath.getName)
-              .filter(_.startsWith("bp=")).toSet
-            graft.fs.PartitionPointer.readPtr(fs, lpRoot) match {
-              case Some(p) =>
-                p.entries.collect { case (n, e) if e.live >= 0 => n }.toSet ++
-                  (legacy -- p.entries.keySet)
-              case None => legacy
-            }
-          }
-          val lines = staged.map(n => s"replace:$n") ++
-            (liveNow -- staged).toSeq.sorted.map(n => s"drop:$n")
-          graft.fs.PartitionPointer.commitSwap(spark, lpRoot, "bp", lines,
+          graft.fs.PartitionPointer.commitSwap(spark, lpRoot, "bp",
+            graft.fs.PartitionPointer.replaceAllLines(fs, lpRoot, "bp", tmp),
             tmp, () => Retract.bumpEpochAt(spark, lp))
           fs.delete(new Path(root, MergesDir), true)
           changed

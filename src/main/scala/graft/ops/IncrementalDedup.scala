@@ -141,18 +141,6 @@ object IncrementalDedup {
     } catch { case _: Exception => Map.empty }
   }
 
-  /** One manifest value, if the store exists and its manifest parses.
-    * Unparseable manifests yield None here — `checkOrWriteMeta` raises
-    * the actionable error for those. */
-  private[ops] def manifestValue(
-      spark: SparkSession, dir: String, key: String): Option[String] =
-    storeManifest(spark, dir).get(key)
-
-  /** The store's manifest-recorded partition count (`store_parts` is
-    * written by every creation, so its presence ⇔ a manifest exists). */
-  private[ops] def manifestParts(spark: SparkSession, dir: String): Option[Int] =
-    manifestValue(spark, dir, "store_parts").map(_.toInt)
-
   private[ops] def bpOf(parts: Int, keys: Column*): Column =
     pmod(xxhash64(keys: _*), lit(parts)).cast("int")
 
@@ -160,7 +148,7 @@ object IncrementalDedup {
     * rides the batch checkpoint's own materialization (the Components
     * convergence pattern), so warm cycles get their touched-partition
     * set WITHOUT a separate probe job. */
-  private def intSeqOf(v: Any): Seq[Int] = v match {
+  private[ops] def intSeqOf(v: Any): Seq[Int] = v match {
     case s: scala.collection.Seq[_] =>
       s.map(_.asInstanceOf[Number].intValue).toIndexedSeq
     case a: Array[_] =>
@@ -267,18 +255,14 @@ object IncrementalDedup {
       // re-initialize it (the pruned reads would drop its rows as
       // schema-less), exactly the failure the manifest exists to stop.
       val root = new org.apache.hadoop.fs.Path(dir)
-      // a split store keeps its hive dirs one level down — a lost
-      // manifest over postings/vectors must be refused exactly like a
-      // lost manifest over root bp= dirs (re-initializing it would mix
-      // layouts or re-bucket silently)
-      def holdsParts(p: org.apache.hadoop.fs.Path): Boolean =
-        fs.exists(p) && fs.listStatus(p).exists { s =>
-          s.getPath.getName.startsWith("bp=") ||
-            s.getPath.getName.endsWith(".parquet")
-        }
-      val hasData = holdsParts(root) ||
-        Seq("postings", "vectors").exists(sub =>
-          holdsParts(new org.apache.hadoop.fs.Path(root, sub)))
+      // any table of any known layout counts (the split, bm25,
+      // components and IVF stores keep theirs one level down): a lost
+      // manifest over any of them must be refused exactly like one over
+      // root bp= dirs (re-initializing it would mix layouts or re-bucket
+      // silently), as must loose parquet files at the root
+      val hasData = StoreLayout.knownTables.exists(_.holdsData(spark, dir)) ||
+        (fs.exists(root) &&
+          fs.listStatus(root).exists(_.getPath.getName.endsWith(".parquet")))
       require(!hasData,
         s"store $dir holds data but no _graft_store.json manifest — " +
           "refusing to adopt a foreign or pre-manifest store; migrate " +
@@ -438,7 +422,8 @@ object IncrementalDedup {
 
   /** The exact family's compute: verdicts against the pruned store,
     * doc-index pairs from the keepers, the novel digests to append. */
-  private def exactStep(b: StoreCycle.Batch, binKeys: Boolean): StoreCycle.Step = {
+  private def exactStep(b: StoreCycle.Batch,
+      binKeys: Boolean): StoreCycle.Step[DataFrame] = {
     // batch-internal keeper: min doc_id per digest within the batch
     val batchKeep = b.rows.groupBy("digest")
       .agg(min("doc_id").as("batch_keep"))
@@ -483,9 +468,9 @@ object IncrementalDedup {
       // verdicts but whose digests are already stored — append nothing
       // (equal digests share a bp, so the pruned view is a complete
       // witness)
-      keepers.join(b.store.select("digest"), Seq("digest"), "left_anti")
+      Some(keepers.join(b.store.select("digest"), Seq("digest"), "left_anti")
         .select(col("digest"), col("doc_id").as("keep_doc_id"))
-        .withColumn("bp", b.bp))
+        .withColumn("bp", b.bp)))
   }
 
   /** MinHash near-dup pairs of one batch against the signature store at
@@ -572,9 +557,9 @@ object IncrementalDedup {
     * signatures and planes), so the pruned view is a complete per-row
     * witness. */
   private def rowStep(out: DataFrame, b: StoreCycle.Batch,
-      rowKey: String*): StoreCycle.Step =
+      rowKey: String*): StoreCycle.Step[DataFrame] =
     StoreCycle.Step(out, b.rows,
-      b.rows.join(b.store.select(rowKey.map(col): _*), rowKey, "left_anti"))
+      Some(b.rows.join(b.store.select(rowKey.map(col): _*), rowKey, "left_anti")))
 
   /** Exact n-gram Jaccard near-dup pairs of one batch against the
     * posting-list store at `storeDir` (created if absent) — the
@@ -625,21 +610,15 @@ object IncrementalDedup {
     StoreCycle.run(docsNew, storeDir, storeParts, compactFiles) { mf =>
       val grams = graft.functions.SketchExprs
         .gramHashes(col(textCol), n, distinct = true)
-      // gram-bloom geometry (r13): adopt from the manifest, or size at
-      // creation from this batch's posting rows with 4× headroom (rows
-      // upper-bound distinct grams; a store that outgrows the cap only
-      // DEGRADES the bloom's fp rate — probes drift back toward the
-      // touched-partition scan, never toward wrong answers — and
-      // `rebuildStore` re-sizes it). Legacy pre-bloom manifests stay
-      // keyless and skip the sidecar entirely (the vec_type rule).
-      val creating = !mf.contains("store_parts")
-      def bloomGeom(rows: Long): Option[(Long, Long)] =
-        if (!creating)
-          for {
-            c <- mf.get("bloom_cap").map(_.toLong)
-            b <- mf.get("bloom_bits").map(_.toLong)
-          } yield (c, b)
-        else Some(gramBloomGeometry(math.max(1L, rows)))
+      val layout = StoreLayout.named("ngram")
+      // gram-bloom geometry (r13): adopted from the manifest, or sized at
+      // creation from this batch's posting rows (rows upper-bound
+      // distinct grams; a store that outgrows the cap only DEGRADES the
+      // bloom's fp rate — probes drift back toward the touched-partition
+      // scan, never toward wrong answers — and `rebuildStore` re-sizes
+      // it). Legacy pre-bloom manifests stay keyless and skip the
+      // sidecar entirely (the vec_type rule).
+      val bloom = layout.bloom.get
       // one row per (doc, distinct gram), the doc's gram count riding —
       // the posting-row trade (minhash variant doc): sizes are in hand at
       // the pair join, no O(corpus) size-fetch join afterwards. Auto
@@ -647,49 +626,26 @@ object IncrementalDedup {
       // per doc than the banded sketch stores, same 4 Ki target.
       // fanOut: gram hashing is the batch's CPU pass (see
       // Scale.fanOutForCompute — no-op on well-split scans)
-      StoreCycle.Family(StoreLayout.named("ngram"),
+      StoreCycle.Family(layout,
         Scale.fanOutForCompute(docsNew, col("doc_id"))
           .select(col("doc_id"),
             explode(grams).as("shingle"),
             coalesce(size(grams), lit(0)).cast("long").as("nsh")),
-        rows => Map("n" -> n.toString) ++
-          (if (creating) bloomGeom(rows).toSeq.flatMap { case (c, b) =>
-            Seq("bloom_cap" -> c.toString, "bloom_bits" -> b.toString)
-          } else Nil),
-        b => ngramStep(b, storeDir, bloomGeom(b.n), threshold, dfCap))
+        rows => Map("n" -> n.toString) ++ bloom.meta(mf, rows),
+        b => ngramStep(b, bloom.probe(b, storeDir), threshold, dfCap))
     }
 
   private def ngramStep(
       b: StoreCycle.Batch,
-      storeDir: String,
-      bloomGeom: Option[(Long, Long)],
+      store: DataFrame,
       threshold: Double,
-      dfCap: Int): StoreCycle.Step = {
-    val spark = b.rows.sparkSession
+      dfCap: Int): StoreCycle.Step[DataFrame] = {
     val newBatch = b.rows
-    // warm cycles probe the sidecar bloom: a MISS gram is definitively
-    // absent from the store (no false negatives), so partitions touched
-    // only by never-seen grams drop out of every pruned scan below —
-    // the dominant scan cost of fresh-document appends (BASELINE §r12:
-    // ~100 touched buckets per doc vs 16 for the sketch stores). A
-    // missing sidecar under a bloom-keyed manifest (crash between the
-    // sidecar's delete and rename) self-heals with one full posting
-    // scan, the roll-forward discipline of the other store repairs.
-    val oldBloomBytes: Option[Array[Byte]] = b.stored.flatMap { whole =>
-      bloomGeom.map { case (c, bits) =>
-        readGramBloom(spark, storeDir).getOrElse(
-          bloomToBytes(whole.stat.bloomFilter("shingle", c, bits)))
-      }
-    }
-    val store = oldBloomBytes match {
-      case Some(bytes) =>
-        b.pruned(newBatch
-          .filter(graft.functions.SketchExprs
-            .bloomMightContain(col("shingle"), bytes))
-          .select("bp").distinct().collect()
-          .map(_.getInt(0)).toIndexedSeq)
-      case None => b.store
-    }
+    // `store` is the bloom probe's pruned view: a MISS gram is
+    // definitively absent from the store, so partitions touched only by
+    // never-seen grams drop out of every pruned scan below — the
+    // dominant scan cost of fresh-document appends (BASELINE §r12: ~100
+    // touched buckets per doc vs 16 for the sketch stores)
     // novel rows: the append payload AND the batch side of the unified
     // set — checkpointed once (bp riding for the partitioned append),
     // BEFORE the append rewrites the store dir
@@ -734,29 +690,7 @@ object IncrementalDedup {
       // materialize BEFORE the append below rewrites the directory the
       // `store` side reads (unconditional — see the exact variant)
       .localCheckpoint()
-    // bloom BEFORE the append (superset-at-every-instant invariant —
-    // see writeGramBloom): the batch's shingles fold into the sidecar,
-    // built with the manifest's (cap, bits) so the merge is compatible
-    // EMPTY batches skip the fold: Spark's bloomFilter aggregate NPEs
-    // on a zero-row frame (readFrom(null)) — the shape a streaming
-    // epoch hits when every quality survivor was an exact dup (r17
-    // find); an empty batch adds no grams, so skipping preserves the
-    // superset invariant trivially. The emptiness fact rides
-    // resolveGeometry's count metric — no separate isEmpty job.
-    bloomGeom.foreach { case (c, bits) =>
-      if (b.n > 0L) {
-        val batchBloom = newBatch.stat.bloomFilter("shingle", c, bits)
-        val merged = oldBloomBytes match {
-          case Some(bytes) =>
-            val old = org.apache.spark.util.sketch.BloomFilter.readFrom(
-              new java.io.ByteArrayInputStream(bytes))
-            old.mergeInPlace(batchBloom)
-          case None => batchBloom
-        }
-        writeGramBloom(spark, storeDir, merged)
-      }
-    }
-    StoreCycle.Step(out, newBatch, newRows)
+    StoreCycle.Step(out, newBatch, Some(newRows))
   }
 
   /** SimHash near-dup pairs of one batch against the banded-signature
@@ -1021,7 +955,7 @@ object IncrementalDedup {
       newVecs: DataFrame,
       storeDir: String,
       vectors: StoreTable,
-      threshold: Double): StoreCycle.Step = {
+      threshold: Double): StoreCycle.Step[DataFrame] = {
     val spark = b.rows.sparkSession
     val batchP = b.rows.drop("bp")
     // the batch's vectors, one row each, id-hash partitioned; the fused
@@ -1343,19 +1277,8 @@ object IncrementalDedup {
     // outgrown bloom, the retraction tightener (the incremental sidecar
     // stays a superset of retired keys), and the migration path that
     // gives a pre-bloom legacy store its first sidecar
-    val bloomMeta: Map[String, String] = (variant match {
-      case "ngram" => Some((GramBloomFile, col("shingle"), "bloom_cap", "bloom_bits"))
-      case "bm25" => Some(("_term_bloom", xxhash64(col("term")),
-        "term_bloom_cap", "term_bloom_bits"))
-      case _ => None
-    }) match {
-      case Some((file, key, capKey, bitsKey)) if dstHas =>
-        val keys = dstData.select(key.as("__k"))
-        val (c, b) = gramBloomGeometry(math.max(1L, keys.count()))
-        writeBloomSidecar(spark, dstDir, file, keys.stat.bloomFilter("__k", c, b))
-        Map(capKey -> c.toString, bitsKey -> b.toString)
-      case _ => Map.empty
-    }
+    val bloomMeta: Map[String, String] = layout.bloom.filter(_ => dstHas)
+      .fold(Map.empty[String, String])(_.rederive(dstData, dstDir))
     // doc→bp retraction index: re-derived fresh from the rebuilt rows
     // (bp was REHASHED above, so a carried-over index would be wrong) —
     // and the migration path that gives a pre-index legacy store its
@@ -1688,7 +1611,7 @@ object IncrementalDedup {
     val dir = new org.apache.hadoop.fs.Path(storeDir, DocIndexDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) return None
-    val dps = Retract.bpsOf(spark, ids, dpParts) // same pmod(xxhash64) hash
+    val dps = Retract.bpsOf(ids, dpParts) // same pmod(xxhash64) hash
     // pointer-aware (the index is itself a dp-partitioned table and is
     // retracted through rewriteTouched, so on rename-less schemes it
     // carries its own pointer); only the batch's dp partitions are read
@@ -1712,7 +1635,7 @@ object IncrementalDedup {
     val p = new org.apache.hadoop.fs.Path(t.dir(storeDir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
-    val dps = Retract.bpsOf(spark, ids, dpParts)
+    val dps = Retract.bpsOf(ids, dpParts)
     Retract.rewriteTouched(spark, t.dir(storeDir), t.partCol,
       t.readRaw(spark, storeDir, manifest),
       Retract.semiOn(spark, ids, "doc_id"),
@@ -1733,9 +1656,7 @@ object IncrementalDedup {
       .repartition(col("dp")).write.partitionBy("dp").mode("errorifexists")
       .parquet(s"$dataDir/$DocIndexDir")
 
-  // ---------- ngram gram-bloom sidecar (r13) ----------
-
-  private val GramBloomFile = "_gram_bloom"
+  // ---------- bloom sidecars (r13; see BloomSidecar) ----------
 
   /** (cap, bits) for a store whose creation batch carries `rows`
     * posting rows: 4× headroom over the rows (an upper bound on
@@ -1750,12 +1671,7 @@ object IncrementalDedup {
     (cap, bits)
   }
 
-  private def readGramBloom(
-      spark: SparkSession, storeDir: String): Option[Array[Byte]] =
-    readBloomSidecar(spark, storeDir, GramBloomFile)
-
-  /** Generic existence-bloom sidecar read — the gram-bloom pattern for
-    * any store (Bm25Index's `_term_bloom` reuses it). */
+  /** A bloom sidecar's bytes, if present. */
   private[ops] def readBloomSidecar(
       spark: SparkSession, storeDir: String, file: String): Option[Array[Byte]] = {
     val p = new org.apache.hadoop.fs.Path(storeDir, file)
@@ -1777,18 +1693,8 @@ object IncrementalDedup {
   /** Temp-write + delete + rename (rename-onto-existing is not
     * portable across hadoop filesystems). A crash between the delete
     * and the rename leaves the sidecar MISSING under a bloom-keyed
-    * manifest — the batch cycle self-heals that with one full posting
-    * scan; a crash after the rename is simply the new bloom. The bloom
-    * is always written BEFORE the posting append it covers, so it is a
-    * SUPERSET of the store at every instant — supersets only cost fp
-    * scans, never correctness. */
-  private def writeGramBloom(
-      spark: SparkSession, storeDir: String,
-      bloom: org.apache.spark.util.sketch.BloomFilter): Unit =
-    writeBloomSidecar(spark, storeDir, GramBloomFile, bloom)
-
-  /** Generic existence-bloom sidecar write (temp + delete + rename —
-    * see the crash notes above). */
+    * manifest — the batch cycle self-heals that with one full table
+    * scan; a crash after the rename is simply the new bloom. */
   private[ops] def writeBloomSidecar(
       spark: SparkSession, storeDir: String, file: String,
       bloom: org.apache.spark.util.sketch.BloomFilter): Unit = {

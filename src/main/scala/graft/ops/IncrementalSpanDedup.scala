@@ -86,7 +86,7 @@ object IncrementalSpanDedup {
     IncrementalDedup.streamCycles(docsStream, resultsDir, checkpointDir)(
       spanBatch(_, storeDir, w, textCol, storeParts, compactFiles))
 
-  private def spanStep(b: StoreCycle.Batch): StoreCycle.Step = {
+  private def spanStep(b: StoreCycle.Batch): StoreCycle.Step[DataFrame] = {
     // batch-internal keeper per window content
     val batchKeep = b.rows.groupBy("wh")
       .agg(min(struct(col("doc_id"), col("pos"))).as("bk"),
@@ -124,10 +124,10 @@ object IncrementalSpanDedup {
       // the batch's novel window keepers; the anti-join makes a retried
       // batch append nothing (equal wh shares a bp, so the pruned view
       // is a complete witness)
-      batchKeep
+      Some(batchKeep
         .join(b.store.select("wh"), Seq("wh"), "left_anti")
         .select(col("wh"), col("bk_doc").as("keep_doc_id"),
           col("bk_pos").as("keep_pos"))
-        .withColumn("bp", b.bp))
+        .withColumn("bp", b.bp)))
   }
 }

@@ -368,7 +368,7 @@ object IvfIndex {
     // drifted rebuild inherit the decayed count. Pre-manifest legacy
     // indexes keep the old fallback; their first manifest arrives with
     // the next build().
-    val nlist = IncrementalDedup.manifestValue(spark, indexDir, "nlist")
+    val nlist = IncrementalDedup.storeManifest(spark, indexDir).get("nlist")
       .map(_.toInt)
       .getOrElse(centroidsDf(spark, indexDir).count().toInt)
     // build the COMPLETE new generation under tmp — reads the live
@@ -402,23 +402,9 @@ object IvfIndex {
     if (!graft.fs.AtomicRename.isAtomic(root) ||
         graft.fs.PartitionPointer.active(fs, aRoot)) {
       Retract.armRaise(spark, aDir)
-      val staged = fs.listStatus(new Path(tmp, "assignments")).toIndexedSeq
-        .map(_.getPath.getName).filter(_.startsWith("cell="))
-      val liveNow: Set[String] = {
-        val legacy =
-          if (!fs.exists(aRoot)) Set.empty[String]
-          else fs.listStatus(aRoot).map(_.getPath.getName)
-            .filter(_.startsWith("cell=")).toSet
-        graft.fs.PartitionPointer.readPtr(fs, aRoot) match {
-          case Some(p) =>
-            p.entries.collect { case (n, e) if e.live >= 0 => n }.toSet ++
-              (legacy -- p.entries.keySet)
-          case None => legacy
-        }
-      }
-      val lines = staged.map(n => s"replace:$n") ++
-        (liveNow -- staged).toSeq.sorted.map(n => s"drop:$n")
-      graft.fs.PartitionPointer.commitSwap(spark, aRoot, "cell", lines,
+      graft.fs.PartitionPointer.commitSwap(spark, aRoot, "cell",
+        graft.fs.PartitionPointer.replaceAllLines(fs, aRoot, "cell",
+          new Path(tmp, "assignments")),
         new Path(tmp, "assignments"),
         () => Retract.bumpEpochAt(spark, aDir),
         tableStages = Map("centroids" -> new Path(tmp, "centroids")))

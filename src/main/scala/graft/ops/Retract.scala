@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 
 /** Store retraction — the takedown path for DERIVED data (r13 verdict
@@ -95,7 +96,7 @@ object Retract {
         val dataDir = t.dir(storeDir)
         if (t.idHashed)
           del(t, Some(col("bp").isin(
-            bpsOf(spark, ids, manifest("store_parts").toInt): _*)))
+            bpsOf(ids, manifest("store_parts").toInt): _*)))
         else {
           val dpParts = manifest.get("doc_index_parts").map(_.toInt)
             .getOrElse(manifest("store_parts").toInt)
@@ -111,28 +112,27 @@ object Retract {
           n
         }
       }
+      def takedown: Long = StoreLayout.of(manifest)
+        .getOrElse(sys.error(s"unknown store variant in manifest: ${manifest("variant")}"))
+        .tables.map(delTable).sum
       manifest("variant") match {
         case "components" =>
           IncrementalComponents.retractLocked(spark, storeDir, ids, manifest)
-        case "bm25" =>
-          Bm25Index.retractLocked(spark, storeDir, ids, manifest)
-        case v =>
-          StoreLayout.of(manifest)
-            .getOrElse(sys.error(s"unknown store variant in manifest: $v"))
-            .tables.map(delTable).sum
+        // bm25 brackets the same per-table takedown with its arm sentinel
+        // and the stats recompute
+        case "bm25" => Bm25Index.retractLocked(spark, storeDir)(takedown)
+        case _ => takedown
       }
     }
   }
 
-  /** The candidate partition ids a retired-id set hashes into — a tiny
-    * local-relation job (ids are driver-side), the same pmod(xxhash64)
-    * the stores bucket with. */
-  private[ops] def bpsOf(
-      spark: SparkSession, ids: Seq[Long], parts: Int): Seq[Int] = {
-    import spark.implicits._
-    ids.toDF("id").select(IncrementalDedup.bpOf(parts, col("id")).as("bp"))
-      .distinct().collect().map(_.getInt(0)).toIndexedSeq
-  }
+  /** The candidate partition ids a retired-id set hashes into: the
+    * stores' `pmod(xxhash64(id), parts)`, computed on the driver (ids
+    * are driver-side) with the hash and seed Spark's `xxhash64` uses,
+    * so no Spark job starts. */
+  private[ops] def bpsOf(ids: Seq[Long], parts: Int): Seq[Int] =
+    ids.map(id => java.lang.Math.floorMod(XXH64.hashLong(id, 42L), parts.toLong).toInt)
+      .distinct
 
   /** Takedown batches larger than this switch from `isin` predicates to
     * broadcast hash joins (r14 verdict #4): an N-term isin inflates the
@@ -276,7 +276,7 @@ object Retract {
 
   /** Arm-busy sentinel for retraction arms whose consistency surface
     * spans MULTIPLE swaps plus sidecar rewrites (r16 ADVICE, medium):
-    * bm25's arm is postings swap → docs swap → doc-index maintenance →
+    * bm25's arm is postings swap → doc-index maintenance → docs swap →
     * stats rewrite → final epoch bump. Each inner swap's own marker and
     * bump cover only itself, so a lock-free reader whose whole
     * read-and-validate cycle fell BETWEEN the postings swap's bump and

@@ -342,32 +342,22 @@ object StoreFsck {
       }
     }
     // 3. bloom SUPERSETS (no false negative allowed — a miss IS absence)
-    if (variant == "ngram")
-      IncrementalDedup.readBloomSidecar(spark, dir, "_gram_bloom")
-        .foreach { bytes =>
-          val (read, has) = tables.head.readRaw(spark, dir, mf)
-          if (has) {
-            val miss = read.filter(!graft.functions.SketchExprs
-              .bloomMightContain(col("shingle"), bytes)).count()
-            if (miss > 0)
-              out += err(Kind.GramBloomSuperset, s"$dir: $miss stored " +
-                "shingle(s) the _gram_bloom denies — pruned probes " +
-                "silently skip their partitions; rebuildStore re-derives")
-          }
-        }
-    if (variant == "bm25")
-      IncrementalDedup.readBloomSidecar(spark, dir, "_term_bloom")
-        .foreach { bytes =>
-          val (read, has) = tables.head.readRaw(spark, dir, mf)
-          if (has) {
-            val miss = read.filter(!graft.functions.SketchExprs
-              .bloomMightContain(xxhash64(col("term")), bytes)).count()
-            if (miss > 0)
-              out += err(Kind.TermBloomSuperset, s"$dir: $miss stored " +
-                "term posting(s) the _term_bloom denies — searches drop " +
-                "those terms driver-side; rebuildStore re-derives")
-          }
-        }
+    layout.get.bloom.foreach { bloom =>
+      IncrementalDedup.readBloomSidecar(spark, dir, bloom.file).foreach { bytes =>
+        val (read, has) = tables.head.readRaw(spark, dir, mf)
+        val miss = if (!has) 0L else read.filter(!graft.functions.SketchExprs
+          .bloomMightContain(bloom.key, bytes)).count()
+        if (miss > 0)
+          out += (if (variant == "ngram")
+            err(Kind.GramBloomSuperset, s"$dir: $miss stored shingle(s) the " +
+              "_gram_bloom denies — pruned probes silently skip their " +
+              "partitions; rebuildStore re-derives")
+          else
+            err(Kind.TermBloomSuperset, s"$dir: $miss stored term posting(s) " +
+              "the _term_bloom denies — searches drop those terms " +
+              "driver-side; rebuildStore re-derives"))
+      }
+    }
     // 4. bm25: stats exactness + postings⊆docs referential invariant
     if (variant == "bm25") {
       val Seq((postsDf, hasPosts), (docsDf, hasDocs)) =
@@ -575,20 +565,13 @@ object StoreFsck {
       }
       "re-derived _doc_index from a full data scan"
     }
-    def healBloom(file: String, capKey: String, bitsKey: String): String = {
-      val keyExpr =
-        if (variant == "bm25") xxhash64(col("term")).as("__k")
-        else col("shingle").as("__k")
+    def healBloom(): String = {
+      val s = layout.flatMap(_.bloom).get
       val (read, has) = tables.head.readRaw(spark, dir, mf)
       if (!has) return "refused: no data rows to derive the bloom from"
-      val keys = read.select(keyExpr)
-      val (cap, bits) =
-        IncrementalDedup.gramBloomGeometry(math.max(1L, keys.count()))
-      IncrementalDedup.writeBloomSidecar(spark, dir, file,
-        keys.stat.bloomFilter("__k", cap, bits))
-      IncrementalDedup.updateManifest(fs, dir,
-        mf ++ Map(capKey -> cap.toString, bitsKey -> bits.toString))
-      s"re-derived $file tight from the live rows (cap=$cap)"
+      val geometry = s.rederive(read, dir)
+      IncrementalDedup.updateManifest(fs, dir, mf ++ geometry)
+      s"re-derived ${s.file} tight from the live rows (cap=${geometry(s.capKey)})"
     }
     findings.map { f =>
       // STRUCTURAL dispatch (r18 verdict #7): sealed Kind, no default
@@ -613,11 +596,8 @@ object StoreFsck {
         case Kind.DocIndexMissing | Kind.DocIndexSuperset |
             Kind.DocIndexPartitioning =>
           (healDocIndex(indexed.get), true)
-        case Kind.GramBloomSuperset =>
-          val a = healBloom("_gram_bloom", "bloom_cap", "bloom_bits")
-          (a, !a.startsWith("refused"))
-        case Kind.TermBloomSuperset =>
-          val a = healBloom("_term_bloom", "term_bloom_cap", "term_bloom_bits")
+        case Kind.GramBloomSuperset | Kind.TermBloomSuperset =>
+          val a = healBloom()
           (a, !a.startsWith("refused"))
         case Kind.LabelUniqueness =>
           val folded = IncrementalComponents.compactLocked(spark, dir)

@@ -181,7 +181,7 @@ class CompactSpec extends SparkSuite {
     Ingest.run(fs, extra)
     assert(fs.table.count() == rowsAfterCompact + 1)
     // new row got the next ordinal (stamp base survived rowsAdded=0)
-    val maxId = fs.table.agg(max("row_id")).head.getLong(0)
+    val maxId = fs.table.agg(max("row_id")).head().getLong(0)
     assert(maxId == rowsAfterCompact) // dense 0-based stamps
     fs.close()
   }

@@ -72,6 +72,33 @@ class Bm25IndexSpec extends SparkSuite {
       rows(Bm25Index.search(spark, d2, queries, k = 5)))
   }
 
+  test("a legacy index (no term-bloom keys, no doc index) grows, searches and retracts") {
+    val d = dir("legacy")
+    val half = docs.count() / 2
+    assert(Bm25Index.indexBatch(docs.filter(col("doc_id") < half), d) == half)
+    // strip the manifest back to its pre-bloom, pre-index shape
+    val fs = new org.apache.hadoop.fs.Path(d)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val legacy = IncrementalDedup.storeManifest(spark, d)
+      .filter { case (k, _) => k == "variant" || k == "store_parts" }
+    IncrementalDedup.updateManifest(fs, d, legacy)
+    assert(fs.delete(new org.apache.hadoop.fs.Path(d, "_term_bloom"), false))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$d/postings/_doc_index"), true))
+    assert(Bm25Index.indexBatch(docs.filter(col("doc_id") >= half), d) ==
+      docs.count() - half)
+    assert(Bm25Index.indexBatch(docs.filter(col("doc_id") >= half), d) == 0L)
+    // the cycles kept the legacy shape: no key, sidecar or index appeared
+    assert(IncrementalDedup.storeManifest(spark, d) == legacy)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(d, "_term_bloom")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$d/postings/_doc_index")))
+    assert(rows(Bm25Index.search(spark, d, queries, k = 5)) ==
+      rows(Bm25.search(docs, queries, k = 5)))
+    val victim = Bm25Index.search(spark, d, queries, k = 1).collect().head.getLong(1)
+    assert(Retract.retract(spark, d, Seq(victim)) > 0)
+    assert(rows(Bm25Index.search(spark, d, queries, k = 5)) ==
+      rows(Bm25.search(docs.filter(col("doc_id") =!= victim), queries, k = 5)))
+  }
+
   test("an in-batch repeated doc_id indexes once with undoubled tf") {
     val d = dir("dupid")
     val batch = Seq((1L, "spark spark runs"), (1L, "spark spark runs"),
@@ -149,6 +176,35 @@ class Bm25IndexSpec extends SparkSuite {
     // parity with the scan operator over the shrunken corpus
     assert(rows(Bm25Index.search(spark, d, queries, k = 5)) ==
       rows(Bm25.search(docs.filter(col("doc_id") =!= victim), queries, k = 5)))
+  }
+
+  test("a retract finishes a crashed postings compaction first: the retired doc stays gone") {
+    val d = dir("trashretract")
+    val corpus = Seq((40L, "spark engine fast"), (41L, "zebra crossing stripes"),
+      (42L, "engine oil change")).toDF("doc_id", "text")
+    Bm25Index.indexBatch(corpus, d, storeParts = 8)
+    val zebra = Seq((0L, "zebra")).toDF("query_id", "query")
+    assert(Bm25Index.search(spark, d, zebra, k = 5).collect().map(_.getLong(1))
+      .toSeq == Seq(41L))
+    // a compaction crashed between its two renames: the live partition
+    // holding the term sits in `_compact_trash`, its compacted copy in
+    // `_compact_tmp`
+    val bp = spark.read.parquet(s"$d/postings").filter(col("term") === "zebra")
+      .select("bp").head().getInt(0)
+    val postings = new org.apache.hadoop.fs.Path(s"$d/postings")
+    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = new org.apache.hadoop.fs.Path(postings, s"bp=$bp")
+    val trash = new org.apache.hadoop.fs.Path(postings, "_compact_trash")
+    val tmp = new org.apache.hadoop.fs.Path(postings, "_compact_tmp")
+    assert(fs.mkdirs(trash) && fs.mkdirs(tmp))
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, live, fs,
+      new org.apache.hadoop.fs.Path(tmp, s"bp=$bp"), false,
+      spark.sparkContext.hadoopConfiguration))
+    assert(fs.rename(live, new org.apache.hadoop.fs.Path(trash, s"bp=$bp")))
+    Retract.retract(spark, d, Seq(41L))
+    IncrementalDedup.compactStore(spark, d)
+    assert(spark.read.parquet(s"$d/postings").filter(col("doc_id") === 41L).count() == 0)
+    assert(Bm25Index.search(spark, d, zebra, k = 5).isEmpty)
   }
 
   test("a lost stats write after a retract heals on ANY retry (r14 ADVICE)") {
@@ -323,7 +379,7 @@ class Bm25IndexSpec extends SparkSuite {
     val dst = dir("rebuild_dst")
     val parts = IncrementalDedup.rebuildStore(spark, src, dst, 16)
     assert(parts == 16)
-    assert(IncrementalDedup.manifestParts(spark, dst).contains(16))
+    assert(IncrementalDedup.storeManifest(spark, dst).get("store_parts").contains("16"))
     assert(rows(Bm25Index.search(spark, dst, queries, k = 5)) == want)
     assert(Bm25Index.readStats(spark, dst) == Bm25Index.readStats(spark, src))
     // fragment the rebuilt store with a second batch, then compact both

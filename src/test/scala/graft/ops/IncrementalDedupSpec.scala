@@ -867,7 +867,7 @@ class IncrementalDedupSpec extends SparkSuite {
     // split embedding store: both halves re-bucketed, pairs preserved
     val esrc = base.toString + "/esrc"
     val vecs = (0L until 20L).map(i =>
-      (i, Seq.tabulate(8)(d => math.sin(i * 8 + d + 1).abs)))
+      (i, Seq.tabulate(8)(d => math.sin((i * 8 + d + 1).toDouble).abs)))
       .toDF("vec_id", "embedding")
     IncrementalDedup.embeddingBatch(vecs, esrc, layout = "split")
     val edst = base.toString + "/edst"
@@ -1030,6 +1030,15 @@ class IncrementalDedupSpec extends SparkSuite {
       IncrementalDedup.embeddingBatch(vecs, dir)
     }
     assert(e.getMessage.contains("refusing to adopt"), e.getMessage)
+    // the components store keeps its labels one level down as well
+    val cdir = Files.createTempDirectory("incdedup_lostman_cc").toString + "/store"
+    val pairs = Seq((1L, 2L), (3L, 4L)).toDF("doc_a", "doc_b")
+    IncrementalComponents.addPairs(pairs, cdir, storeParts = 64)
+    assert(new java.io.File(cdir, "_graft_store.json").delete())
+    val ec = intercept[IllegalArgumentException] {
+      IncrementalComponents.addPairs(pairs, cdir)
+    }
+    assert(ec.getMessage.contains("refusing to adopt"), ec.getMessage)
   }
 
   test("rebuildStore finishes a crashed compaction sweep before snapshotting") {

@@ -45,7 +45,7 @@ class IvfIndexSpec extends SparkSuite {
       .select("cell").distinct().count()
     assert(allCells > 1)
     val someCell = spark.read.parquet(s"$indexDir/assignments")
-      .select("cell").head.getInt(0).toLong
+      .select("cell").head().getInt(0).toLong
     val scan = IvfIndex.probedAssignments(spark, indexDir, Seq(someCell))
     val p = scan.queryExecution.executedPlan.toString
     // a NON-EMPTY partition filter naming cell — `PartitionFilters: []`
@@ -233,7 +233,7 @@ class IvfIndexSpec extends SparkSuite {
     // new vector lands in the same frozen cell, max/mean occupancy
     // grows. FLOAT vectors, matching the table's stored width (a width
     // mix across appended files would break the parquet schema).
-    val seedF = cands.orderBy("vec_id").select("embedding").head
+    val seedF = cands.orderBy("vec_id").select("embedding").head()
       .getSeq[Float](0)
     val drifted = (0 until 200).map { i =>
       (800000L + i, seedF.updated(0, seedF.head + i * 1e-4f))

@@ -32,7 +32,7 @@ class LayoutSpec extends SparkSuite {
       .collect()
     assert(parts.length > 1)
     val stats = li.agg(min("l_partkey"), max("l_partkey"),
-      min("l_suppkey"), max("l_suppkey")).head
+      min("l_suppkey"), max("l_suppkey")).head()
     val gpSpan = stats.getLong(1) - stats.getLong(0)
     val gsSpan = stats.getLong(3) - stats.getLong(2)
     // every z-ordered partition's bounding box must be a strict subset of

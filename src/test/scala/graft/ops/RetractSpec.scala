@@ -220,7 +220,7 @@ class RetractSpec extends SparkSuite {
     // before any rename — the shape the old two-commit flow could split
     val live = spark.read.schema("v BIGINT, component BIGINT, bp INT").parquet(lp)
     val touched = live.filter(col("v") === 1L || col("component") === 1L)
-      .select("bp").distinct().collect().map(_.getInt(0))
+      .select("bp").distinct().collect().map(_.getInt(0)).toIndexedSeq
     live.filter(col("bp").isin(touched: _*))
       .filter(col("v") =!= 1L)
       .withColumn("component",
@@ -265,6 +265,20 @@ class RetractSpec extends SparkSuite {
     assert(IncrementalComponents.labels(spark, c).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       Map(2000L -> 2000L, 2001L -> 2000L))
+  }
+
+  test("bpsOf buckets ids on the driver exactly as the stores' pmod(xxhash64) does") {
+    val rnd = new scala.util.Random(11)
+    val ids = Seq(0L, 1L, -1L, Long.MinValue, Long.MaxValue) ++
+      Seq.fill(500)(rnd.nextLong())
+    val frame = ids.map(Tuple1(_)).toDF("id")
+    for (parts <- Seq(1, 7, 16, 32, 64, 256, 65536)) {
+      val want = frame.select(IncrementalDedup.bpOf(parts, col("id")))
+        .collect().map(_.getInt(0)).toSeq
+      assert(ids.map(id => Retract.bpsOf(Seq(id), parts)) == want.map(Seq(_)),
+        s"parts=$parts")
+      assert(Retract.bpsOf(ids, parts).sorted == want.distinct.sorted, s"parts=$parts")
+    }
   }
 
   test("ivf manifest dispatches to IvfIndex.retract (r14 ADVICE)") {
@@ -353,7 +367,7 @@ class RetractSpec extends SparkSuite {
     val parts = fs.listStatus(new Path(d))
       .filter(_.getPath.getName.startsWith("bp=")).map(_.getPath.getName)
     val touched = live.filter(col("keep_doc_id") === 1L)
-      .select("bp").distinct().collect().map(r => s"bp=${r.getInt(0)}")
+      .select("bp").distinct().collect().map(r => s"bp=${r.getInt(0)}").toIndexedSeq
     live.filter(col("keep_doc_id") =!= 1L)
       .filter(col("bp").isin(touched.map(_.stripPrefix("bp=").toInt): _*))
       .write.partitionBy("bp").parquet(s"$d/_retract_tmp")

@@ -32,13 +32,17 @@ class StoreCycleJobsSpec extends SparkSuite {
   // a clone of vector 3 and two novel vectors
   private val vecs2 = Seq((101L, vec(3)), (102L, vec(30)), (103L, vec(31)))
 
+  /** The jobs each of `cycles` starts, run in order on one fresh store. */
+  private def jobCounts(name: String, cycles: (String => Any)*): Seq[Int] = {
+    val dir = Files.createTempDirectory(s"cyclejobs_$name").toString + "/store"
+    cycles.map(c => jobsOf(c(dir))._2.size)
+  }
+
   /** (creation jobs, warm jobs) of one variant's cycle. */
   private def cycleJobs(name: String, cycle: (DataFrame, String) => DataFrame,
       b1: DataFrame, b2: DataFrame): (Int, Int) = {
-    val dir = Files.createTempDirectory(s"cyclejobs_$name").toString + "/store"
-    val (_, created) = jobsOf(cycle(b1, dir))
-    val (_, warm) = jobsOf(cycle(b2, dir))
-    (created.size, warm.size)
+    val Seq(created, warm) = jobCounts(name, cycle(b1, _), cycle(b2, _))
+    (created, warm)
   }
 
   private def d1 = docs1.toDF("doc_id", "text")
@@ -66,10 +70,45 @@ class StoreCycleJobsSpec extends SparkSuite {
     }
   }
 
+  // bm25: creation, warm, and the warm batch replayed (every doc already
+  // indexed: the cycle appends nothing)
+  private val bm25Jobs = Seq(18, 19, 6)
+
+  test(s"bm25: creation, warm and all-replay cycles start ${bm25Jobs.mkString("/")} Spark jobs") {
+    val got = jobCounts("bm25", Seq(d1, d2, d2).map(b =>
+      (dir: String) => Bm25Index.indexBatch(b, dir)): _*)
+    assert(got == bm25Jobs, "bm25 (creation, warm, replay) jobs")
+  }
+
+  private def p1 = Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L), (8L, 9L), (10L, 11L))
+    .toDF("doc_a", "doc_b")
+  // joins two stored clusters, grows one, and adds a new one
+  private def p2 = Seq((3L, 4L), (7L, 101L), (102L, 103L), (11L, 12L))
+    .toDF("doc_a", "doc_b")
+  private val componentsJobs = (25, 28)
+
+  test(s"components: a creation cycle starts ${componentsJobs._1} Spark jobs, a warm cycle ${componentsJobs._2}") {
+    val got = cycleJobs("components", (b, d) => IncrementalComponents.addPairs(b, d),
+      p1, p2)
+    assert(got == componentsJobs, "components (creation, warm) jobs")
+  }
+
+  private val bm25RetractJobs = 17
+
+  test(s"retract: a 2-id retract of a bm25 index starts $bm25RetractJobs Spark jobs") {
+    val dir = Files.createTempDirectory("cyclejobs_bm25retract").toString + "/store"
+    Bm25Index.indexBatch(d1, dir)
+    Bm25Index.indexBatch(d2, dir)
+    val (removed, jobs) = jobsOf(Retract.retract(spark, dir, Seq(1L, 104L)))
+    assert(removed == 14L)
+    assert(jobs.size == bm25RetractJobs, jobs.mkString("\n"))
+  }
+
   /** Every table is read with its pinned schema, so the takedown starts
     * no schema-inference job: not for the data table, nor for the doc
-    * index it consults and then rewrites. */
-  private val retractJobs = 15
+    * index it consults and then rewrites; and the candidate partitions
+    * of the retired ids are hashed on the driver. */
+  private val retractJobs = 11
 
   test(s"retract: a 5-id retract of an indexed exact store starts $retractJobs Spark jobs") {
     val dir = Files.createTempDirectory("cyclejobs_retract").toString + "/store"
