@@ -190,40 +190,7 @@ object Main {
         }
 
       case "store-info" :: store :: Nil =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        val manifest = graft.ops.IncrementalDedup.storeManifest(spark, store)
-        if (manifest.isEmpty) println(s"$store: no manifest (not a graft store, or empty)")
-        else manifest.toSeq.sortBy(_._1).foreach { case (k, v) => println(s"$k = $v") }
-        def statsOf(dir: String): Option[String] = {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(conf)
-          if (!fs.exists(p)) None
-          else {
-            val parts = fs.listStatus(p)
-              .filter(s => s.isDirectory && s.getPath.getName.startsWith("bp="))
-            val perPart = parts.map(d => fs.listStatus(d.getPath)
-              .count(_.getPath.getName.endsWith(".parquet")))
-            val sum = fs.getContentSummary(p)
-            Some(s"partitions=${parts.length} files=${sum.getFileCount} " +
-              s"bytes=${sum.getLength} max_files_per_partition=" +
-              s"${if (perPart.isEmpty) 0 else perPart.max}")
-          }
-        }
-        if (manifest.get("store_layout").contains("split")) {
-          statsOf(s"$store/postings").foreach(s => println(s"postings: $s"))
-          statsOf(s"$store/vectors").foreach(s => println(s"vectors: $s"))
-        } else if (manifest.get("variant").contains("components")) {
-          statsOf(s"$store/labels").foreach(s => println(s"labels: $s"))
-          statsOf(s"$store/merges").foreach(s => println(s"merges: $s"))
-        } else if (manifest.get("variant").contains("bm25")) {
-          statsOf(s"$store/postings").foreach(s => println(s"postings: $s"))
-          statsOf(s"$store/docs").foreach(s => println(s"docs: $s"))
-          graft.ops.Bm25Index.readStats(spark, store).foreach {
-            case (n, nt, td) => println(
-              s"stats: n_docs=$n n_text=$nt total_dl=$td " +
-                f"avgdl=${if (nt == 0) 0.0 else td / nt}%.2f")
-          }
-        } else statsOf(store).foreach(println)
+        graft.ops.StoreFsck.info(spark, store).foreach(println)
 
       // geometry migration: re-bucket a store into a fresh dir at a new
       // partition count (omit parts -> auto-size from the store's rows);

@@ -25,8 +25,8 @@ import org.apache.hadoop.fs.{FileAlreadyExistsException, Path}
   */
 /** The lock is HELD by a live (fresher-than-stale) holder — the one
   * acquisition failure that means "defer, the owner will finish" rather
-  * than "something is damaged". Typed (r18 verdict #2) so lock-free
-  * read-heal paths (IvfIndex/Bm25Index.ensureReadable) can catch
+  * than "something is damaged". Typed (r18 verdict #2) so the stores'
+  * lock-free read-heal (`graft.ops.StoreLayout.heal`) can catch
   * exactly this and let every other IllegalStateException — corrupt
   * pointer, corrupt epoch counter, a failed heal inside the lock body —
   * propagate instead of being silently deferred forever. Subclasses

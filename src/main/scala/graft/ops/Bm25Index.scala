@@ -248,11 +248,6 @@ object Bm25Index {
       b: Double = 0.75,
       queryIdCol: String = "query_id",
       queryCol: String = "query"): DataFrame = {
-    // entry heal for a CRASHED retraction's marker — but a marker held
-    // by a LIVE retractor means the lock is busy: that is the seqlock
-    // loop's polite-wait case below, not an error (r16 race test)
-    try ensureReadable(spark, dir)
-    catch { case _: graft.fs.StoreLockBusyException => () }
     val manifest = IncrementalDedup.storeManifest(spark, dir)
     val parts = manifest.get("store_parts").map(_.toInt).getOrElse(
       sys.error(s"$dir has no _graft_store.json manifest — not a bm25 index"))
@@ -307,7 +302,11 @@ object Bm25Index {
     // injectable via spark.graft.seqlock.*).
     val postingsDir = s"$dir/postings"
     val (n, avgdl, postings) = SwapRetry.seqlockRead(spark, postingsDir,
-      s"bm25 search on $dir", () => ensureReadable(spark, dir),
+      s"bm25 search on $dir",
+      // a crashed arm's tail recomputes the stats exactly from the swept
+      // docs/ before the bump and clear, so readers never pair new
+      // postings with stale stats
+      () => Layout.heal(spark, dir, () => recomputeStatsLocked(spark, dir)),
       refreshPath = Some(dir)) { () =>
       val statsOpt = readStats(spark, dir)
       val readP = Postings.readRaw(spark, dir, manifest)
@@ -348,32 +347,6 @@ object Bm25Index {
         col("cosine").as("bm25"), col("rank"))
   }
 
-  /** Read-path self-heal (the ensureReadable discipline): searches are
-    * lock-free, so a crashed retraction's pending marker — or a crashed
-    * ARM's busy sentinel (r16 ADVICE) — is finished under a brief lock
-    * hold only when actually present. The arm heal runs the arm's
-    * idempotent tail: roll the inner swaps forward, recompute the stats
-    * exactly from the post-swap docs/ (any committed rewrite state
-    * yields consistent totals), bump, then clear the sentinel. A crash
-    * BETWEEN the postings and docs rewrites still leaves retired docs/
-    * rows — the caller retries the retraction, same as every other
-    * mid-arm crash in the family — but readers are never again exposed
-    * to new-postings + stale-stats. */
-  private def ensureReadable(spark: SparkSession, dir: String): Unit =
-    if (Retract.pending(spark, s"$dir/postings") ||
-        Retract.pending(spark, s"$dir/docs") ||
-        Retract.armBusy(spark, s"$dir/postings"))
-      graft.fs.StoreLock.withLock(dir,
-        spark.sparkContext.hadoopConfiguration) {
-        Retract.sweep(spark, s"$dir/postings")
-        Retract.sweep(spark, s"$dir/docs")
-        if (Retract.armBusy(spark, s"$dir/postings")) {
-          recomputeStatsLocked(spark, dir)
-          Retract.bumpEpochAt(spark, s"$dir/postings")
-          Retract.armClear(spark, s"$dir/postings")
-        }
-      }
-
   /** Retraction arm (runs under the already-held store lock, from
     * [[Retract.retract]], whose per-table `takedown` drops the retired
     * docs' posting rows (doc-index pruned) and their `docs/` rows
@@ -394,7 +367,7 @@ object Bm25Index {
     // cycle fell between the postings swap's bump and the final bump
     // would pair new postings with stale stats and accept. Raise the
     // sentinel BEFORE the first swap; search treats it as busy; cleared
-    // only after the final bump below. Crash → ensureReadable heals.
+    // only after the final bump below. Crash → the read-heal finishes.
     Retract.armRaise(spark, s"$dir/postings")
     val removed = takedown
     recomputeStatsLocked(spark, dir)

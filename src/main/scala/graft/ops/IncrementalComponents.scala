@@ -47,7 +47,9 @@ import org.apache.spark.sql.functions._
   * idempotent); duplicate log rows are cleared by the next compact. */
 object IncrementalComponents {
 
-  private val Labels = StoreLayout.named("components").data
+  private val Layout = StoreLayout.named("components")
+  private val Labels = Layout.data
+  private val Swap = Layout.swap.get
   private val LabelsDir = Labels.rel
   private val MergesDir = "merges"
 
@@ -116,33 +118,12 @@ object IncrementalComponents {
     }
   }
 
-  /** Read-path self-heal (the IvfIndex.ensureReadable discipline): a
-    * compact crash between the live delete and the rename leaves
-    * `labels/` missing with the ready marker set — a read would
-    * otherwise silently return an EMPTY frame (every document looks
-    * unclustered) until the next locked writer heals it. When — and
-    * only when — the marker is present, take the lock briefly and
-    * finish the swap; normal reads never touch the lock. */
-  private def ensureReadable(spark: SparkSession, storeDir: String): Unit = {
-    val ready = new org.apache.hadoop.fs.Path(storeDir, "_compact_ready")
-    val fs = ready.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(ready) || Retract.pending(spark, s"$storeDir/$LabelsDir"))
-      graft.fs.StoreLock.withLock(storeDir,
-        spark.sparkContext.hadoopConfiguration) {
-        sweepCompact(spark, storeDir)
-        Retract.sweep(spark, s"$storeDir/$LabelsDir")
-      }
-  }
-
   /** The resolved label view: every vertex ever seen, with its CURRENT
     * canonical component (labels joined through the compressed merge
     * log). This is the frame a pipeline joins against to shrink a
     * corpus. */
   def labels(spark: SparkSession, storeDir: String): DataFrame = {
-    ensureReadable(spark, storeDir)
     val lp = s"$storeDir/$LabelsDir"
-    val ready = new org.apache.hadoop.fs.Path(storeDir, "_compact_ready")
-    val fs = ready.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mf = IncrementalDedup.storeManifest(spark, storeDir)
     // SEQLOCK bracket (r19 ADVICE: labels() was lock-free with only the
     // merge-log read retried — a read racing two successive pointer
@@ -155,14 +136,11 @@ object IncrementalComponents {
     // survives any later fold's GC — the price of a consistent
     // lock-free snapshot, proportional to paired vertices, not corpus
     // (and the fold itself rewrites this same table wholesale). The
-    // `_compact_ready` marker joins the signature AND the busy probe:
-    // the rename-path fold's delete→rename window has no pending
-    // marker, so without it a read landing exactly there would fail
-    // unexplained.
+    // fold's `_compact_ready` marker joins the signature and the busy
+    // probe, as IVF's rebuild marker does.
     SwapRetry.seqlockRead(spark, lp, s"clusters label read on $storeDir",
-      () => ensureReadable(spark, storeDir),
-      extraSig = () => fs.exists(ready),
-      busy = () => fs.exists(ready),
+      () => Layout.heal(spark, storeDir),
+      swapMarker = Some(s"$storeDir/${Swap.marker}"),
       refreshPath = Some(storeDir)) { () =>
       // merge map BEFORE the label listing — the lock-free order that
       // makes every interleaving with a concurrent pointer-mode fold
@@ -205,7 +183,7 @@ object IncrementalComponents {
   private[ops] def rebuildLocked(
       spark: SparkSession, srcDir: String, dstDir: String,
       requestedParts: Int, manifest: Map[String, String]): Int = {
-    sweepCompact(spark, srcDir) // finish any crashed compact swap first
+    Swap.sweep(spark, srcDir, Labels) // finish any crashed fold first
     val readL = Labels.read(spark, srcDir, manifest)
     val resolved =
       if (!readL._2) None
@@ -245,15 +223,15 @@ object IncrementalComponents {
       storeParts: Int = IncrementalDedup.AutoStoreParts,
       mergeLogCap: Long = DefaultMergeLogCap): DataFrame =
     StoreCycle.run(pairs, storeDir, storeParts, compactFiles = 0) { _ =>
-      // heal a crashed compaction swap BEFORE reading anything (the
-      // cycle's labels read heals a crashed retraction)
-      sweepCompact(pairs.sparkSession, storeDir)
+      // heal a crashed fold BEFORE reading anything (the cycle's labels
+      // read heals a crashed retraction)
+      Swap.sweep(pairs.sparkSession, storeDir, Labels)
       val edges = pairs
         .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
         .localCheckpoint()
       // the batch's distinct vertices, bucketed on v; creation sizes the
       // store from their count
-      StoreCycle.Family(StoreLayout.named("components"),
+      StoreCycle.Family(Layout,
         edges.select(col("a").as("v")).unionAll(edges.select(col("b").as("v")))
           .distinct(),
         _ => Map.empty,
@@ -377,7 +355,7 @@ object IncrementalComponents {
   private[ops] def retractLocked(
       spark: SparkSession, storeDir: String, ids: Seq[Long],
       manifest: Map[String, String]): Long = {
-    sweepCompact(spark, storeDir)
+    Swap.sweep(spark, storeDir, Labels)
     compactLocked(spark, storeDir)
     val parts = manifest.get("store_parts").map(_.toInt).getOrElse(
       sys.error(s"$storeDir has no store_parts in its manifest"))
@@ -421,119 +399,37 @@ object IncrementalComponents {
 
   /** Fold the merge log into the label table and clear it. Relabeling
     * never moves a row between partitions (bp keys on v, not
-    * component), so this rewrites the labels table in place via the
-    * tmp + ready-marker roll-forward (the IvfIndex rebuild protocol):
-    * a crash either discards the half-built tmp or finishes the swap on
-    * the next locked cycle. Returns the number of rows whose label
-    * changed. */
+    * component), so the fold replaces the whole labels table through the
+    * whole-table swap the IVF rebuild shares ([[TableSwap]]), dropping
+    * the folded log once the new labels are in: a crash either discards
+    * the staged labels or finishes the swap on the next locked cycle or
+    * read-heal. Replaying a stale log over folded labels is a no-op,
+    * since the dethroned roots no longer appear as any row's component.
+    * Returns the number of rows whose label changed. */
   def compact(spark: SparkSession, storeDir: String): Long =
     graft.fs.StoreLock.withLock(storeDir,
       spark.sparkContext.hadoopConfiguration) {
-      sweepCompact(spark, storeDir)
-      Retract.sweep(spark, s"$storeDir/$LabelsDir")
+      Layout.sweep(spark, storeDir)
       compactLocked(spark, storeDir)
     }
 
   /** The compaction fold body, for callers that already hold the store
     * lock (the public [[compact]], and [[addPairs]]'s merge-log cap). */
   private[ops] def compactLocked(spark: SparkSession, storeDir: String): Long = {
-      val mm = mergeMap(spark, storeDir, locked = true)
-      if (mm.isEmpty) 0L
-      else {
-        import org.apache.hadoop.fs.Path
-        val root = new Path(storeDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val lp = s"$storeDir/$LabelsDir"
-        val lpRoot = new Path(lp)
-        // POINTER COMMIT on rename-less schemes (r18 verdict #1,
-        // upgrading the r18-review gate to real support): relabeling
-        // never moves a row between partitions, so the fold is a
-        // replace-every-partition swap — stage it, move each staged bp
-        // to a fresh unreferenced pv= path, and commit with ONE pointer
-        // PUT (no marker: a crash before the PUT rolls BACK to the
-        // unfolded state + intact log; after it, the fold is committed
-        // and the merge-log delete below is GC — replaying a stale log
-        // over folded labels is a no-op, since the dethroned roots no
-        // longer appear as any row's component).
-        val pointerMode = !graft.fs.AtomicRename.isAtomic(root) ||
-          graft.fs.PartitionPointer.active(fs, lpRoot)
-        if (!pointerMode)
-          // swap-fence scheme gate for the rename path (r18 review):
-          // sweepCompact (the heal of a committed _compact_ready) stays
-          // ungated
-          graft.fs.AtomicRename.requireForSwap(root,
-            spark.sparkContext.hadoopConfiguration,
-            "clusters-store compaction fold")
-        val (base0, hasData) = Labels.readRaw(spark, storeDir,
-          IncrementalDedup.storeManifest(spark, storeDir))
-        if (!hasData) return 0L
-        val obs = org.apache.spark.sql.Observation()
-        val resolved = resolve(
-          base0.withColumn("__prev", col("component")), mm)
-          .observe(obs, count(when(col("component") =!= col("__prev"),
-            lit(1))).as("changed"))
-          .drop("__prev")
-        if (pointerMode) {
-          val tmp = new Path(lpRoot, "_fold_tmp")
-          fs.delete(tmp, true)
-          resolved.repartition(col("bp"))
-            .write.partitionBy("bp").parquet(tmp.toString)
-          val changed = obs.get("changed").asInstanceOf[Long]
-          // every live partition restages (the fold preserves rows);
-          // drop is defensive completeness for a live partition that
-          // somehow staged nothing
-          graft.fs.PartitionPointer.commitSwap(spark, lpRoot, "bp",
-            graft.fs.PartitionPointer.replaceAllLines(fs, lpRoot, "bp", tmp),
-            tmp, () => Retract.bumpEpochAt(spark, lp))
-          fs.delete(new Path(root, MergesDir), true)
-          changed
-        } else {
-          val tmp = new Path(root, "_compact_tmp")
-          fs.delete(tmp, true)
-          resolved.repartition(col("bp"))
-            .write.partitionBy("bp").parquet(tmp.toString)
-          val changed = obs.get("changed").asInstanceOf[Long]
-          fs.create(new Path(root, "_compact_ready"), true).close()
-          finishSwap(spark, fs, root)
-          changed
-        }
-      }
+    val mm = mergeMap(spark, storeDir, locked = true)
+    if (mm.isEmpty) return 0L
+    val (base0, hasData) = Labels.readRaw(spark, storeDir,
+      IncrementalDedup.storeManifest(spark, storeDir))
+    if (!hasData) 0L
+    else Swap.commit(spark, storeDir, Labels) { staged =>
+      val obs = org.apache.spark.sql.Observation()
+      resolve(base0.withColumn("__prev", col("component")), mm)
+        .observe(obs, count(when(col("component") =!= col("__prev"),
+          lit(1))).as("changed"))
+        .drop("__prev")
+        .repartition(col("bp"))
+        .write.partitionBy("bp").parquet(staged(LabelsDir))
+      obs.get("changed").asInstanceOf[Long]
     }
-
-  /** Roll the compaction swap forward: place tmp as labels, drop the
-    * folded merge log, bump the labels swap epoch, clear the marker.
-    * Every locked cycle calls [[sweepCompact]] first, so a crash
-    * mid-swap heals on the next cycle. The epoch bump (r20, with the
-    * labels() seqlock bracket) makes the rename-path fold observable
-    * to lock-free readers exactly like the pointer-path fold (whose
-    * commitSwap bumps via its callback): bump BEFORE the marker
-    * delete — the arm ordering — so a reader that saw no marker and
-    * an unchanged epoch can conclude no fold overlapped its read. */
-  private def finishSwap(
-      spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmp = new Path(root, "_compact_tmp")
-    val live = new Path(root, LabelsDir)
-    if (fs.exists(tmp)) {
-      fs.delete(live, true)
-      require(fs.rename(tmp, live), s"rename failed: $tmp -> $live")
-    }
-    fs.delete(new Path(root, MergesDir), true)
-    Retract.bumpEpochAt(spark, live.toString)
-    fs.delete(new Path(root, "_compact_ready"), false)
-  }
-
-  private def sweepCompact(spark: SparkSession, storeDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new Path(root, "_compact_ready"))) finishSwap(spark, fs, root)
-    else fs.delete(new Path(root, "_compact_tmp"), true)
-    // pointer-mode fold staging from a pre-commit crash (roll-back:
-    // the pointer never named it); orphan pv dirs are swept by the
-    // Retract.sweep -> PartitionPointer.sweepGarbage every cycle runs
-    fs.delete(new Path(root, s"$LabelsDir/_fold_tmp"), true)
   }
 }

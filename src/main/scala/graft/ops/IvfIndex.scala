@@ -20,7 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
-  private val Assignments = StoreLayout.named("ivf").data
+  private val Layout = StoreLayout.named("ivf")
+  private val Assignments = Layout.data
+  private val Swap = Layout.swap.get
 
   /** Build the index at `indexDir` (overwrites): assigns every candidate
     * to its nearest centroid (first-`nlist` seed, or `kmeansIters` Lloyd
@@ -41,8 +43,7 @@ object IvfIndex {
     graft.fs.StoreLock.withLock(indexDir,
       candidates.sparkSession.sparkContext.hadoopConfiguration) {
       val spark = candidates.sparkSession
-      sweepRebuild(spark, indexDir)
-      Retract.sweep(spark, s"$indexDir/assignments")
+      Layout.sweep(spark, indexDir)
       val cand = candidates.select(col(idCol).as("id"), col(vecCol).as("vec"))
       // seeding + assignment are the SAME helpers the inline ivfTopK uses —
       // the "persisted index reproduces the inline path" contract
@@ -140,7 +141,7 @@ object IvfIndex {
     * not vectors — and when `rebuildImbalance` > 0 and max/mean
     * occupancy exceeds it, the index is re-clustered IN THE SAME LOCK
     * HOLD (fresh k-means centroids over the full corpus, every vector
-    * re-assigned, atomic-ish roll-forward swap — see [[rebuild]]).
+    * re-assigned, one whole-table swap — see [[rebuild]]).
     * Returns true iff a rebuild ran. The default 0.0 keeps the trigger
     * off: hot-cell growth is expected under planned skew (a product
     * catalog's head), and only the operator knows drift from design.
@@ -163,8 +164,7 @@ object IvfIndex {
       val spark = batch.sparkSession
       // finish (or discard) any crashed rebuild or retraction swap
       // BEFORE reading
-      sweepRebuild(spark, indexDir)
-      Retract.sweep(spark, s"$indexDir/assignments")
+      Layout.sweep(spark, indexDir)
       // width guard (the embeddingBatch vec_type discipline): the
       // assignments table has ONE element width, fixed at build; an
       // append of a different width would commit mixed-width files into
@@ -230,52 +230,6 @@ object IvfIndex {
       trigger
     }
 
-  /** Read-path self-heal: a rebuild crash between a live table's delete
-    * and its rename leaves the table missing with `_rebuild_ready` set.
-    * Locked writers sweep that on their next cycle, but a search-only
-    * deployment (appends nightly, queries all day) would otherwise fail
-    * until the next writer. When — and only when — a live table is
-    * missing alongside the marker, take the lock briefly and finish the
-    * swap; normal reads never touch the lock. */
-  private def ensureReadable(spark: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a table is missing only when NEITHER its legacy dir nor (for
-    // centroids) a pointer-versioned live table exists — on pointer
-    // stores the legacy centroids dir is legitimately absent once a
-    // rebuild versioned it under the assignments pointer
-    val aRoot = new Path(root, "assignments")
-    val missing = !fs.exists(aRoot) ||
-      (!fs.exists(new Path(root, "centroids")) &&
-        graft.fs.PartitionPointer.liveTable(fs, aRoot, "centroids").isEmpty)
-    if ((missing && fs.exists(new Path(root, RebuildReady))) ||
-        Retract.pending(spark, s"$indexDir/assignments") ||
-        Retract.armBusy(spark, s"$indexDir/assignments"))
-      try graft.fs.StoreLock.withLock(indexDir,
-        spark.sparkContext.hadoopConfiguration) {
-        sweepRebuild(spark, indexDir)
-        Retract.sweep(spark, s"$indexDir/assignments")
-        // a crashed rebuild's stranded arm: the swap is healed above —
-        // bump (in-flight readers re-snapshot) then clear
-        if (Retract.armBusy(spark, s"$indexDir/assignments")) {
-          Retract.bumpEpochAt(spark, s"$indexDir/assignments")
-          Retract.armClear(spark, s"$indexDir/assignments")
-        }
-      } catch {
-        // lock busy = a LIVE writer owns the state this heal would
-        // finish — it will complete its own arm/swap; the seqlock loop
-        // (or this read's bracket) observes the movement and retries.
-        // Before the r18 arm check this path was unreachable from a
-        // mid-attempt probe; now a search that raced an arm RAISE could
-        // land here with the rebuilder alive (full-suite race find).
-        // TYPED (r18 verdict #2): only the lock-acquisition failure is
-        // deferrable — a corrupt pointer/epoch or a failed heal inside
-        // the lock body must SURFACE, not retry forever.
-        case _: graft.fs.StoreLockBusyException => ()
-      }
-  }
-
   /** Retract vectors from the index (r13 verdict #1, the IVF arm):
     * removes every assignment row of the given ids, rewriting only the
     * CELL partitions that held one (the [[Retract]] marker roll-forward;
@@ -286,7 +240,7 @@ object IvfIndex {
     require(ids.nonEmpty, "retract: empty id list")
     graft.fs.StoreLock.withLock(indexDir,
       spark.sparkContext.hadoopConfiguration) {
-      sweepRebuild(spark, indexDir)
+      Swap.sweep(spark, indexDir, Assignments)
       val dd = ids.distinct
       // the whole IVF read surface (search, occupancy, rebuild, append
       // anti-join) resolves the partition pointer via
@@ -307,7 +261,7 @@ object IvfIndex {
     * in the centroid table but hold no vectors have no partition
     * directory and so no row here. */
   def cellOccupancy(spark: SparkSession, indexDir: String): DataFrame = {
-    ensureReadable(spark, indexDir)
+    Layout.heal(spark, indexDir)
     assignmentsDf(spark, indexDir)
       .groupBy("cell").agg(count(lit(1)).as("n"))
   }
@@ -322,44 +276,22 @@ object IvfIndex {
   }
 
   /** Re-cluster the index in place: fresh k-means centroids over the
-    * CURRENT corpus (same nlist), every vector re-assigned. The swap is
-    * crash-safe by roll-forward: the new index is fully written under
-    * `_rebuild_tmp` first, then a `_rebuild_ready` marker commits it,
-    * then each live table is replaced by rename; `sweepRebuild` (run by
-    * every locked writer before reading) finishes a crashed swap when
-    * the marker exists and discards a crashed half-written tmp when it
-    * does not — so writers always see a complete index of ONE
-    * generation. Lock-free searches racing the swap window itself can
-    * transiently fail or mix generations (recall dip, never corruption:
-    * both generations hold the same vectors); schedule rebuilds like
-    * any other maintenance. */
+    * CURRENT corpus (same nlist), every vector re-assigned, committed as
+    * one whole-table swap of `assignments/` with `centroids/` alongside
+    * ([[TableSwap]]): a crash either discards the staged generation or
+    * finishes the swap on the next locked cycle or read-heal, so readers
+    * see a complete index of ONE generation. On rename-less schemes the
+    * swap is one pointer PUT covering every cell partition AND the
+    * centroids table, so the recluster needs no override there. */
   def rebuild(spark: SparkSession, indexDir: String, kmeansIters: Int = 2): Unit =
     graft.fs.StoreLock.withLock(indexDir,
       spark.sparkContext.hadoopConfiguration) {
-      // No scheme gate (r18 verdict #1 — the r17 gate upgraded to real
-      // support): on rename-less schemes the whole-layout swap commits
-      // by ONE pointer PUT covering every cell partition AND the
-      // centroids table (see rebuildLocked's pointer branch), so the
-      // recluster runs on object stores with no override and no torn
-      // reader window.
-      sweepRebuild(spark, indexDir)
-      Retract.sweep(spark, s"$indexDir/assignments")
+      Layout.sweep(spark, indexDir)
       rebuildLocked(spark, indexDir, kmeansIters)
     }
 
-  private val RebuildTmp = "_rebuild_tmp"
-  private val RebuildReady = "_rebuild_ready"
-  private val IndexTables = Seq("centroids", "assignments")
-
   private def rebuildLocked(
       spark: SparkSession, indexDir: String, kmeansIters: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def mustRename(src: Path, dst: Path): Unit =
-      require(fs.rename(src, dst), s"rename failed: $src -> $dst")
-    val tmp = new Path(root, RebuildTmp)
-    fs.delete(tmp, true)
     val corpus = assignmentsDf(spark, indexDir)
       .select("id", "vec")
     // nlist comes from the build-time manifest (r14 — the former "known
@@ -371,170 +303,19 @@ object IvfIndex {
     val nlist = IncrementalDedup.storeManifest(spark, indexDir).get("nlist")
       .map(_.toInt)
       .getOrElse(centroidsDf(spark, indexDir).count().toInt)
-    // build the COMPLETE new generation under tmp — reads the live
-    // tables, writes elsewhere, so no read-under-overwrite hazard
+    // the staged generation reads the live tables and writes elsewhere,
+    // so no read-under-overwrite hazard
     val cents =
       if (kmeansIters > 0)
         Similarity.kmeansCentroids(corpus, nlist, kmeansIters, "id", "vec")
       else Similarity.seedCentroids(corpus, nlist)
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$tmp/centroids")
-    val newCents = spark.read.parquet(s"$tmp/centroids")
-    // codes re-derive from vec, so a rebuild also UPGRADES a pre-code
-    // index to the coded layout
-    writeAssignments(Similarity.assignCells(corpus, newCents),
-      s"$tmp/assignments", org.apache.spark.sql.SaveMode.Overwrite)
-    // POINTER COMMIT on rename-less schemes (r18 verdict #1): the
-    // rename path below replaces whole directories, which object-store
-    // schemes implement as file-by-file copy+delete — the r17 gate
-    // refused the recluster there. Here the complete staged generation
-    // commits with ONE pointer PUT instead: every staged cell moves to
-    // a fresh unreferenced pv= path, the centroids table to a fresh
-    // tv= path, and the single publish flips all of them atomically
-    // (graft.fs.PartitionPointer.commitSwap + tableStages). The
-    // assignments DIR is never deleted, so the swap epoch counter
-    // survives — no preEpoch capture, no roll-forward marker: a crash
-    // before the PUT leaves only unreferenced orphans (roll-BACK — the
-    // rebuild simply didn't happen; sweepGarbage collects), a crash
-    // after it is fully committed. The arm sentinel brackets the whole
-    // window exactly like the rename path.
-    val aDir = s"$indexDir/assignments"
-    val aRoot = new Path(aDir)
-    if (!graft.fs.AtomicRename.isAtomic(root) ||
-        graft.fs.PartitionPointer.active(fs, aRoot)) {
-      Retract.armRaise(spark, aDir)
-      graft.fs.PartitionPointer.commitSwap(spark, aRoot, "cell",
-        graft.fs.PartitionPointer.replaceAllLines(fs, aRoot, "cell",
-          new Path(tmp, "assignments")),
-        new Path(tmp, "assignments"),
-        () => Retract.bumpEpochAt(spark, aDir),
-        tableStages = Map("centroids" -> new Path(tmp, "centroids")))
-      // the legacy centroids dir is superseded by the pointer's
-      // versioned table (readers resolve the pointer first) — deleting
-      // it is GC; a crash here is re-swept by sweepRebuild's hygiene
-      fs.delete(new Path(root, "centroids"), true)
-      fs.delete(tmp, true)
-      Retract.armClear(spark, aDir)
-      return
+    Swap.commit(spark, indexDir, Assignments) { staged =>
+      cents.coalesce(1).write.mode("overwrite").parquet(staged("centroids"))
+      // codes re-derive from vec, so a rebuild also UPGRADES a pre-code
+      // index to the coded layout
+      writeAssignments(Similarity.assignCells(corpus, spark.read.parquet(staged("centroids"))),
+        staged(Assignments.rel), org.apache.spark.sql.SaveMode.Overwrite)
     }
-    // the swap DESTROYS assignments/ and its _retract_epoch with it —
-    // capture the old value FIRST and publish old+1 into the fresh dir,
-    // so successive generations stay seqlock-DISTINGUISHABLE (a plain
-    // bump would read 0 in every new generation and write 1: a reader
-    // spanning exactly one whole swap would see epoch 1 -> 1 and
-    // accept a mixed-generation probe set — the ABA the r18 race test
-    // caught).
-    var preEpoch = Retract.epoch(spark, s"$indexDir/assignments")
-    if (preEpoch == 0L) {
-      // never-bumped index: the swap window's "epoch file destroyed"
-      // state ALSO reads 0, so a reader with e0 = 0 spanning the window
-      // could not distinguish it — stamp 1 first (one spurious reader
-      // retry, once per index lifetime)
-      Retract.setEpochAt(spark, s"$indexDir/assignments", 1L)
-      preEpoch = 1L
-    }
-    // commit: from here the swap rolls FORWARD (sweepRebuild finishes
-    // it after any crash); before here a crash discards tmp.
-    // The marker BODY carries the captured pre-swap epoch (r18 ADVICE,
-    // medium): the swap destroys the counter with the old dir, so a
-    // crash-then-heal that re-derived the epoch from the post-swap dir
-    // read 0 and published 1 — REGRESSING the counter onto previously
-    // published values (a cross-process reader holding the seeded
-    // first-generation e0=1 spanning crash+heal would validate no-arm +
-    // epoch==e0 and accept a mixed-generation probe set). Persisting
-    // preEpoch where the swap can't destroy it lets sweepRebuild
-    // publish preEpoch+1, keeping the counter monotone across crashes.
-    // ARM-BUSY SENTINEL (r18, the bm25 arm discipline on the LARGEST
-    // swap window in the codebase): the rebuild replaces BOTH live
-    // tables, and its own _rebuild_ready marker was invisible to the
-    // search seqlock — a search whose read fell inside the swap saw a
-    // transiently-missing table (rethrown: nothing explained it) or a
-    // mixed generation with no marker and an unchanged epoch, and
-    // accepted. Raise the arm BEFORE the first delete; search treats
-    // it as busy; bump-then-clear after the swap so a reader that
-    // validates against no-arm + unchanged-epoch provably saw one
-    // whole generation. A crash mid-swap leaves arm + ready up —
-    // ensureReadable's heal finishes the swap, bumps, and clears.
-    graft.fs.AtomicRename.publishSmallFile(fs, new Path(root, RebuildReady),
-      s"preepoch=$preEpoch"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      s".tmp-${ProcessHandle.current().pid()}")
-    Retract.armRaise(spark, s"$indexDir/assignments")
-    IndexTables.foreach { n =>
-      val live = new Path(root, n)
-      fs.delete(live, true)
-      mustRename(new Path(tmp, n), live)
-    }
-    // the delete above also removed the arm sentinel with the old dir —
-    // re-raise it in the NEW dir before publishing the epoch, so the
-    // no-arm + unchanged-epoch validation stays airtight through the
-    // publish (readers in the deleted-arm window see epoch 0 or the
-    // new value, both != their pre-swap snapshot). Epoch publishes
-    // BEFORE the marker delete: a crash between the two re-runs
-    // sweepRebuild, whose setEpochAt re-publishes the same value —
-    // the old marker-first order left a window (marker gone, epoch
-    // still unset) where the heal could only bump 0 -> 1.
-    Retract.armRaise(spark, s"$indexDir/assignments")
-    Retract.setEpochAt(spark, s"$indexDir/assignments", preEpoch + 1L)
-    fs.delete(new Path(root, RebuildReady), false)
-    fs.delete(tmp, true)
-    Retract.armClear(spark, s"$indexDir/assignments")
-  }
-
-  /** Crash recovery for [[rebuildLocked]]'s swap — run under the lock
-    * before any read. Marker present: the new generation was complete,
-    * finish placing whatever renames the crash interrupted, then
-    * restore the swap-epoch counter from the marker's captured pre-swap
-    * value (the swap destroyed it with the old assignments dir — a heal
-    * that re-derived it from the post-swap dir read 0 and published 1,
-    * regressing the seqlock counter onto previously published values;
-    * r18 ADVICE medium). Marker absent: any tmp is a half-written
-    * build — discard it. */
-  private def sweepRebuild(spark: SparkSession, indexDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(root, RebuildTmp)
-    val ready = new Path(root, RebuildReady)
-    if (fs.exists(ready)) {
-      val preEpoch = {
-        val in = fs.open(ready)
-        val body =
-          try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8).trim
-          finally in.close()
-        if (body.startsWith("preepoch="))
-          body.stripPrefix("preepoch=").toLongOption
-        else None
-      }
-      IndexTables.foreach { n =>
-        val src = new Path(tmp, n)
-        if (fs.exists(src)) {
-          val live = new Path(root, n)
-          fs.delete(live, true)
-          require(fs.rename(src, live), s"rename failed: $src -> $live")
-        } // src absent ⇒ this table was already placed
-      }
-      // epoch BEFORE the marker delete (same ordering as rebuildLocked):
-      // a crash between the two re-runs this sweep, which re-publishes
-      // the same value — idempotent. A body-less legacy marker (none
-      // can exist past one heal) falls back to the old bump: 0 -> 1,
-      // accepted as the one-crash legacy tail.
-      preEpoch match {
-        case Some(e) =>
-          Retract.setEpochAt(spark, s"$indexDir/assignments", e + 1L)
-        case None =>
-          Retract.bumpEpochAt(spark, s"$indexDir/assignments")
-      }
-      fs.delete(ready, false)
-    }
-    fs.delete(tmp, true)
-    // pointer-mode hygiene: a superseded legacy centroids dir (crash
-    // between the pointer PUT and its GC delete) — readers never
-    // resolve it once the pointer names a live versioned table
-    val aRoot = new Path(root, "assignments")
-    if (fs.exists(new Path(root, "centroids")) &&
-        graft.fs.PartitionPointer.liveTable(fs, aRoot, "centroids").isDefined)
-      fs.delete(new Path(root, "centroids"), true)
   }
 
   /** The assignments scan restricted to `cells` — THE partition-pruned
@@ -607,7 +388,8 @@ object IvfIndex {
     // from the analyzer) retries ONLY when marker/arm/epoch movement
     // explains it.
     SwapRetry.seqlockRead(spark, aDir, s"ivf search on $indexDir",
-      () => ensureReadable(spark, indexDir),
+      () => Layout.heal(spark, indexDir),
+      swapMarker = Some(s"$indexDir/${Swap.marker}"),
       refreshPath = Some(indexDir)) { () =>
       searchAttempt(spark, indexDir, queries, k, nprobe,
         idCol, vecCol, rerank)
@@ -623,7 +405,6 @@ object IvfIndex {
       idCol: String,
       vecCol: String,
       rerank: Int): DataFrame = {
-    ensureReadable(spark, indexDir)
     val centroids = broadcast(centroidsDf(spark, indexDir))
     val qcells = queries
       .select(col(idCol).as("query_id"), col(vecCol).as("qvec"))

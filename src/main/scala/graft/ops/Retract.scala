@@ -263,9 +263,9 @@ object Retract {
     graft.fs.PartitionPointer.sweepGarbage(spark, dataDir)
   }
 
-  /** Quick marker probe for lock-free read paths (the ensureReadable
-    * discipline): heal only when a crashed retraction is actually
-    * pending, taking the lock briefly. */
+  /** Quick marker probe for lock-free read paths ([[StoreLayout.heal]]):
+    * heal only when a crashed retraction is actually pending, taking the
+    * lock briefly. */
   private[ops] def pending(spark: SparkSession, dataDir: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(dataDir, RetractPending)
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
@@ -285,9 +285,9 @@ object Retract {
     * the first swap and cleared only AFTER the final bump; readers
     * treat it exactly like a pending marker (busy → wait), so the
     * docs/stats phase is observable. A crashed arm leaves the sentinel
-    * up; the owner's read-heal path (e.g. Bm25Index.ensureReadable)
-    * finishes the arm's idempotent tail (sweep + stats recompute +
-    * bump) under the store lock and clears it. Content is a debug aid
+    * up; the read-heal ([[StoreLayout.heal]]) finishes the arm's
+    * idempotent tail (sweep, the family's tail such as bm25's stats
+    * recompute, bump) under the store lock and clears it. Content is a debug aid
     * (pid); only existence is read, so no write-atomicity is needed. */
   private[ops] def armRaise(spark: SparkSession, dataDir: String): Unit = {
     import org.apache.hadoop.fs.Path
@@ -372,8 +372,8 @@ object Retract {
   }
 
   /** Write an explicit epoch value — for swaps that REPLACE the whole
-    * directory the counter lives in (IvfIndex.rebuild swaps the entire
-    * assignments/ dir, destroying `_retract_epoch` with it; a plain
+    * directory the counter lives in (a rename-mode [[TableSwap]]
+    * replaces the entire table dir, destroying `_retract_epoch` with it; a plain
     * bump would then read 0 and write 1 in EVERY generation, making
     * successive rebuilds seqlock-indistinguishable — the ABA a reader
     * spanning exactly one full swap would accept). The caller captures

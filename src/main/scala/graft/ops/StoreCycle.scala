@@ -55,7 +55,7 @@ private[ops] final case class StoreTable(
 
   /** [[readRaw]] after healing a crashed retraction of the table — for
     * callers holding the store lock. Lock-free readers heal through
-    * their family's ensureReadable instead. */
+    * [[StoreLayout.heal]] instead. */
   def read(spark: SparkSession, storeDir: String,
       manifest: Map[String, String]): (DataFrame, Boolean) = {
     Retract.sweep(spark, dir(storeDir))
@@ -136,15 +136,17 @@ private[ops] final case class BloomSidecar(
   def heal(b: StoreCycle.Batch, storeDir: String): Unit =
     geometry(b.manifest).foreach { case (cap, bits) =>
       val spark = b.rows.sparkSession
-      if (IncrementalDedup.readBloomSidecar(spark, storeDir, file).isEmpty)
+      val p = new org.apache.hadoop.fs.Path(storeDir, file)
+      if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
         b.stored.foreach(whole => IncrementalDedup.writeBloomSidecar(
           spark, storeDir, file, derive(whole, cap, bits)))
     }
 }
 
 /** The physical layout of one store variant: its tables, in the order
-  * cycles read, retract and compact them, and the md5-derived key column
-  * of the exact/span stores (hex on legacy stores, 16-byte binary since).
+  * cycles read, retract and compact them, the md5-derived key column
+  * of the exact/span stores (hex on legacy stores, 16-byte binary since),
+  * its bloom sidecar, and the whole-table swap of its data table.
   *
   * This is the ONE place a variant's layout and its tables' schemas are
   * written down. The batch cycles, `rebuildStore`, `compactStore`,
@@ -155,7 +157,7 @@ private[ops] final case class BloomSidecar(
   * write. */
 private[ops] final case class StoreLayout(
     variant: String, tables: Seq[StoreTable], md5Key: Option[String] = None,
-    bloom: Option[BloomSidecar] = None) {
+    bloom: Option[BloomSidecar] = None, swap: Option[TableSwap] = None) {
   /** The table a batch cycle prunes, appends to and compacts. */
   def data: StoreTable = tables.head
 
@@ -163,6 +165,43 @@ private[ops] final case class StoreLayout(
     * bucketed on content rather than on its id (none for the components
     * labels and the IVF cells). */
   def indexed: Option[StoreTable] = tables.find(t => t.keys.nonEmpty && !t.idHashed)
+
+  /** Finish or discard every crashed swap of the store at `storeDir`:
+    * the whole-table swap, then each table's retraction. Caller holds the
+    * store lock. */
+  def sweep(spark: SparkSession, storeDir: String): Unit = {
+    swap.foreach(_.sweep(spark, storeDir, data))
+    tables.foreach(t => Retract.sweep(spark, t.dir(storeDir)))
+  }
+
+  /** [[sweep]], then finish a stranded arm of the data table: `armTail`
+    * (bm25 recomputes its stats from the swept `docs/`), an epoch bump so
+    * in-flight readers re-snapshot, then the clear. Caller holds the
+    * store lock (the read-heal below, fsck repair). */
+  def healLocked(spark: SparkSession, storeDir: String, armTail: () => Unit): Unit = {
+    val dataDir = data.dir(storeDir)
+    sweep(spark, storeDir)
+    if (Retract.armBusy(spark, dataDir)) {
+      armTail()
+      Retract.bumpEpochAt(spark, dataDir)
+      Retract.armClear(spark, dataDir)
+    }
+  }
+
+  /** The read-heal of every lock-free reader (bm25 and IVF search, the
+    * components label view). Normal reads only probe: a retraction
+    * marker on any table, the data table's arm sentinel, or the swap
+    * marker. When one is up, take the store lock briefly for
+    * [[healLocked]]. A lock held by a live writer defers the heal: that
+    * writer finishes its own swap, and the reader's seqlock waits for
+    * it. Every other failure, such as a corrupt pointer or epoch,
+    * surfaces. */
+  def heal(spark: SparkSession, storeDir: String, armTail: () => Unit = () => ()): Unit =
+    if (swap.exists(_.pending(spark, storeDir)) || Retract.armBusy(spark, data.dir(storeDir)) ||
+        tables.exists(t => Retract.pending(spark, t.dir(storeDir))))
+      try graft.fs.StoreLock.withLock(storeDir, spark.sparkContext.hadoopConfiguration) {
+        healLocked(spark, storeDir, armTail)
+      } catch { case _: graft.fs.StoreLockBusyException => () }
 }
 
 private[ops] object StoreLayout {
@@ -208,10 +247,14 @@ private[ops] object StoreLayout {
       bloom = Some(BloomSidecar("_term_bloom", xxhash64(col("term")),
         "term_bloom_cap", "term_bloom_bits"))),
     "inline" -> StoreLayout("components", Seq(bp("labels", "v")("v")(_ =>
-      "v BIGINT, component BIGINT"))),
+      "v BIGINT, component BIGINT")),
+      swap = Some(TableSwap("_compact_ready", "_compact_tmp", "labels/_fold_tmp",
+        dropAfter = Some("merges")))),
     // IVF keeps no pinned schema: its id and vec types follow the caller,
     // and older indexes lack the `code` column (IvfIndex.assignmentsDf)
-    "inline" -> StoreLayout("ivf", Seq(StoreTable("assignments", "cell", Nil, "id", None)))
+    "inline" -> StoreLayout("ivf", Seq(StoreTable("assignments", "cell", Nil, "id", None)),
+      swap = Some(TableSwap("_rebuild_ready", "_rebuild_tmp", "_rebuild_tmp",
+        aux = Seq("centroids"))))
   ).map { case (layout, l) => (l.variant, layout) -> l }.toMap
 
   /** The doc→bp retraction index (`_doc_index/` under the indexed table's

@@ -439,6 +439,45 @@ object StoreFsck {
     out.toList
   }
 
+  /** The CLI `store-info` report: the manifest's keys, then for each
+    * table of the store's layout its partition count (its own
+    * `<partCol>=` dirs), files, bytes and the most files in one
+    * partition; a components store adds its merge log, a bm25 index its
+    * stats totals. A store of no known layout reports its root. */
+  def info(spark: SparkSession, store: String): Seq[String] = {
+    val manifest = IncrementalDedup.storeManifest(spark, store)
+    def statsOf(dir: String, partCol: String): Option[String] = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) None
+      else {
+        val parts = fs.listStatus(p)
+          .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partCol="))
+        val perPart = parts.map(d => fs.listStatus(d.getPath)
+          .count(_.getPath.getName.endsWith(".parquet")))
+        val sum = fs.getContentSummary(p)
+        Some(s"partitions=${parts.length} files=${sum.getFileCount} " +
+          s"bytes=${sum.getLength} max_files_per_partition=" +
+          s"${if (perPart.isEmpty) 0 else perPart.max}")
+      }
+    }
+    val tables = StoreLayout.of(manifest).fold(Seq(("", "bp")))(_.tables.map(t => (t.rel, t.partCol)))
+    (if (manifest.isEmpty) Seq(s"$store: no manifest (not a graft store, or empty)")
+     else manifest.toSeq.sortBy(_._1).map { case (k, v) => s"$k = $v" }) ++
+      tables.flatMap { case (rel, partCol) =>
+        if (rel.isEmpty) statsOf(store, partCol)
+        else statsOf(s"$store/$rel", partCol).map(s => s"$rel: $s")
+      } ++
+      (manifest.get("variant") match {
+        case Some("components") => statsOf(s"$store/merges", "bp").map(s => s"merges: $s")
+        case Some("bm25") => Bm25Index.readStats(spark, store).map { case (n, nt, td) =>
+          s"stats: n_docs=$n n_text=$nt total_dl=$td " +
+            f"avgdl=${if (nt == 0) 0.0 else td / nt}%.2f"
+        }
+        case _ => None
+      })
+  }
+
   /** One repair decision: what [[repair]] did (or refused to do) about
     * a finding. `applied=false` + an action starting with "refused"
     * marks a finding with no safe automatic remedy. */
@@ -489,23 +528,18 @@ object StoreFsck {
     var refDone = false
     def sweepAll(): String = {
       if (!swept) {
-        dataDirs.foreach { dd =>
-          IncrementalDedup.sweepCompactTrash(spark, dd)
-          Retract.sweep(spark, dd)
-        }
-        if (variant == "bm25" && Retract.armBusy(spark, s"$dir/postings")) {
-          // the crashed arm's idempotent tail (Bm25Index.ensureReadable)
-          Bm25Index.recomputeStatsLocked(spark, dir)
-          Retract.bumpEpochAt(spark, s"$dir/postings")
-          Retract.armClear(spark, s"$dir/postings")
-          statsDone = true
-        }
-        // a stranded arm sentinel on any other data dir has no sidecar
+        dataDirs.foreach(IncrementalDedup.sweepCompactTrash(spark, _))
+        // the read-heal's locked body: every swap rolled forward, and a
+        // crashed arm's idempotent tail (bm25: the stats recompute)
+        layout.fold(Retract.sweep(spark, dir))(_.healLocked(spark, dir, () =>
+          if (variant == "bm25") {
+            Bm25Index.recomputeStatsLocked(spark, dir); statsDone = true
+          }))
+        // a stranded arm sentinel on any other table has no sidecar
         // tail to recompute — the safe heal is bump (force seqlock
         // readers to re-snapshot) then clear
         dataDirs.foreach { dd =>
-          if (Retract.armBusy(spark, dd) &&
-              !(variant == "bm25" && dd == s"$dir/postings")) {
+          if (Retract.armBusy(spark, dd)) {
             Retract.bumpEpochAt(spark, dd)
             Retract.armClear(spark, dd)
           }

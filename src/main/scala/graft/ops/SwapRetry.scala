@@ -20,12 +20,12 @@ import org.apache.spark.sql.SparkSession
   *    message merely CONTAINS "does not exist" — a UDF's own error, a
   *    missing-column analysis message — must NOT be retried).
   *  - '''the seqlock loop''' ([[seqlockRead]]): snapshot the store's
-  *    (pending-marker, arm-sentinel, epoch) signature, attempt the
-  *    read, accept only on an unmoved signature; wait politely while a
-  *    live mutation holds the markers, escalate to the owner's locked
-  *    heal only after sustained stillness; a transient-shaped failure
-  *    retries ONLY when signature movement explains it — anything
-  *    unexplained rethrows.
+  *    (pending-marker, arm-sentinel, epoch, swap-marker) signature,
+  *    attempt the read, accept only on an unmoved signature; wait
+  *    politely while a live mutation holds the markers, escalate to the
+  *    store's locked read-heal only after sustained stillness; a
+  *    transient-shaped failure retries ONLY when signature movement
+  *    explains it — anything unexplained rethrows.
   *  - '''bounds''': a progress deadline that resets whenever the
   *    signature MOVES (live churn gets a fresh window per swap, a
   *    wedged mutator still trips after `deadlineMs` of stillness) and
@@ -150,21 +150,19 @@ object SwapRetry {
     *                   signals (pending marker, arm sentinel, epoch
     *                   counter) — e.g. the bm25 `postings/` dir
     * @param what       error-text subject, e.g. `"bm25 search on <dir>"`
-    * @param heal       the owner's locked read-heal (ensureReadable) —
-    *                   invoked only after the pending/arm state has
-    *                   been still for 5 s (a crashed mutator); a
-    *                   live lock holder throwing
-    *                   [[graft.fs.StoreLockBusyException]] just means
-    *                   keep waiting
-    * @param extraSig   additional signature components for stores with
-    *                   swap evidence beyond the three Retract signals
-    *                   (e.g. the clusters store's `_compact_ready`
-    *                   marker); folded into the movement gate
-    * @param busy       store-specific "a swap is in flight" probe
-    *                   beyond the pending/arm markers (e.g. that same
-    *                   `_compact_ready` marker): while true, WAIT like
-    *                   a pending marker instead of attempting a read
-    *                   the swap window would fail unexplained
+    * @param heal       the store's read-heal ([[StoreLayout.heal]]) —
+    *                   run once on entry (a crashed mutator's markers
+    *                   heal before the first attempt), then again only
+    *                   after the busy state has been still for 5 s; it
+    *                   defers by itself while a live writer holds the
+    *                   lock, so waiting simply continues
+    * @param swapMarker the whole-table swap's ready marker, when the
+    *                   store has one ([[TableSwap]]: the IVF rebuild's,
+    *                   the clusters fold's): while it exists the read
+    *                   WAITS like a pending marker (the rename-mode
+    *                   swap's delete→rename window would otherwise fail
+    *                   an attempt unexplained), and it joins the
+    *                   signature
     * @param refreshPath path whose Spark-side caches (CacheManager
     *                   entries, file-status listings) are invalidated
     *                   via `catalog.refreshByPath` before every retry —
@@ -183,23 +181,26 @@ object SwapRetry {
       signalDir: String,
       what: String,
       heal: () => Unit,
-      extraSig: () => Any = () => (),
-      busy: () => Boolean = () => false,
+      swapMarker: Option[String] = None,
       refreshPath: Option[String] = None)(attempt: () => T): T = {
     val deadlineMs =
       spark.conf.get(DeadlineConf, DefaultDeadlineMs.toString).toLong
     val absoluteCapMs =
       spark.conf.get(AbsoluteCapConf, DefaultAbsoluteCapMs.toString).toLong
+    val marker = swapMarker.map(new org.apache.hadoop.fs.Path(_))
+    def swapping: Boolean = marker.exists(p =>
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+    heal()
     val startedMs = System.currentTimeMillis()
     var out: Option[T] = None
-    var lastSig: (Boolean, Boolean, Long, Any) = null
+    var lastSig: (Boolean, Boolean, Long, Boolean) = null
     var lastProgress = System.currentTimeMillis()
     var pendingSince = 0L
     var unexplainedVanishes = 0
     while (out.isEmpty) {
       val sig = (Retract.pending(spark, signalDir),
         Retract.armBusy(spark, signalDir),
-        Retract.epoch(spark, signalDir), extraSig())
+        Retract.epoch(spark, signalDir), swapping)
       if (sig != lastSig) {
         lastSig = sig; lastProgress = System.currentTimeMillis()
       }
@@ -212,38 +213,30 @@ object SwapRetry {
           "CONTINUOUS store churn — swaps kept settling-and-restarting " +
           "faster than a clean read; pause the mutation loop or " +
           "schedule reads off its cadence")
-      if (sig._1 || sig._2 || busy()) {
+      if (sig._1 || sig._2 || sig._4) {
         // an in-flight swap or a mid-arm mutation: the LIVE holder
         // finishes in moments — just wait. Only a marker/sentinel that
         // stays up with no progress (a crashed mutator) escalates to
-        // the locked heal; a writer holding the lock meanwhile throws
-        // lock-busy, which here just means "keep waiting" (never loop
-        // hot — the sleep below, r16 ADVICE).
+        // the locked heal, which defers while a writer holds the lock
+        // (never loop hot — the sleep below, r16 ADVICE).
         val now = System.currentTimeMillis()
         if (pendingSince == 0L) pendingSince = now
-        if (now - pendingSince > 5000L) {
-          try { heal(); pendingSince = 0L }
-          catch {
-            case _: graft.fs.StoreLockBusyException => Thread.sleep(50L)
-          }
-        } else Thread.sleep(20L)
+        if (now - pendingSince > 5000L) { heal(); pendingSince = 0L }
+        Thread.sleep(20L)
       } else {
         pendingSince = 0L
         val e0 = sig._3
-        val x0 = sig._4
         try {
           val res = attempt()
           if (!Retract.pending(spark, signalDir) &&
               !Retract.armBusy(spark, signalDir) &&
-              Retract.epoch(spark, signalDir) == e0 &&
-              extraSig() == x0) out = Some(res)
+              Retract.epoch(spark, signalDir) == e0 && !swapping) out = Some(res)
           // else: a swap overlapped the read — retry on settled state
         } catch {
           // retry a swap-shaped failure that signature movement
-          // EXPLAINS (a marker/sentinel up, the epoch moved, or the
-          // store-specific extra signal changed) — plus a BOUNDED
-          // allowance for vanished-file failures with NO movement in
-          // evidence: a stale Spark-side cache can hand an attempt a
+          // EXPLAINS (a marker/sentinel up, or the epoch moved) — plus
+          // a BOUNDED allowance for vanished-file failures with NO
+          // movement in evidence: a stale Spark-side cache can hand an attempt a
           // dead generation's file list when every real swap settled
           // long ago (the r19→r20 full-suite find; Spark's own error
           // says "REFRESH TABLE"). Those re-resolve after the refresh
@@ -254,8 +247,7 @@ object SwapRetry {
           case e: Exception if transientShape(e) &&
               (Retract.pending(spark, signalDir) ||
                 Retract.armBusy(spark, signalDir) ||
-                Retract.epoch(spark, signalDir) != e0 ||
-                extraSig() != x0) =>
+                Retract.epoch(spark, signalDir) != e0 || swapping) =>
             refreshPath.foreach(p => spark.catalog.refreshByPath(p))
           case e: Exception
               if fileVanished(e) && unexplainedVanishes < 3 =>
@@ -272,7 +264,7 @@ object SwapRetry {
                 s"(pending=${Retract.pending(spark, signalDir)} " +
                 s"arm=${Retract.armBusy(spark, signalDir)} " +
                 s"epoch e0=$e0 now=${Retract.epoch(spark, signalDir)} " +
-                s"extra x0=$x0 now=${extraSig()})", e)
+                s"swap=$swapping)", e)
         }
       }
     }

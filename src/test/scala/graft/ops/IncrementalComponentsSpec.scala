@@ -204,4 +204,51 @@ class IncrementalComponentsSpec extends SparkSuite {
     assert(labelMap(IncrementalComponents.labels(spark, dir)) ==
       want + (7L -> 0L))
   }
+
+  test("each fold publishes its pre-fold epoch + 1: successive folds never repeat an epoch") {
+    // the rename-path fold deletes labels/ with its _retract_epoch; a
+    // plain bump in the fresh dir would publish 1 after every fold, and a
+    // label read spanning a whole fold would validate 1 == 1
+    val dir = Files.createTempDirectory("inccomp_epoch").toString + "/store"
+    IncrementalComponents.addPairs(Seq((1L, 2L)).toDF("doc_a", "doc_b"), dir)
+    IncrementalComponents.addPairs(Seq((2L, 0L)).toDF("doc_a", "doc_b"), dir)
+    Retract.setEpochAt(spark, s"$dir/labels", 41L)
+    assert(IncrementalComponents.compact(spark, dir) > 0L)
+    assert(Retract.epoch(spark, s"$dir/labels") == 42L)
+    // a second fold moves it on again
+    IncrementalComponents.addPairs(Seq((5L, 6L)).toDF("doc_a", "doc_b"), dir)
+    IncrementalComponents.addPairs(Seq((6L, 1L)).toDF("doc_a", "doc_b"), dir)
+    assert(IncrementalComponents.compact(spark, dir) > 0L)
+    assert(Retract.epoch(spark, s"$dir/labels") == 43L)
+    assert(labelMap(IncrementalComponents.labels(spark, dir)) ==
+      Seq(0L, 1L, 2L, 5L, 6L).map(_ -> 0L).toMap)
+  }
+
+  test("labels() waits out a live writer's fold marker instead of failing lock-busy") {
+    val dir = Files.createTempDirectory("inccomp_wait").toString + "/store"
+    IncrementalComponents.addPairs(Seq((1L, 2L)).toDF("doc_a", "doc_b"), dir)
+    val want = labelMap(IncrementalComponents.labels(spark, dir))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ready = new org.apache.hadoop.fs.Path(dir, "_compact_ready")
+    val fs = ready.getFileSystem(conf)
+    // a live foreign writer mid-fold: it holds the lock and the marker,
+    // and finishes (drops the marker) 1.5 s later
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val writer = new Thread(() =>
+      graft.fs.StoreLock.withLock(dir, conf, owner = "otherhost:999:1") {
+        fs.create(ready, true).close()
+        held.countDown()
+        Thread.sleep(1500L)
+        fs.delete(ready, false)
+      })
+    writer.start()
+    held.await()
+    val t0 = System.nanoTime()
+    try {
+      val got = labelMap(IncrementalComponents.labels(spark, dir))
+      val waitedMs = (System.nanoTime() - t0) / 1000000L
+      assert(got == want)
+      assert(waitedMs >= 1000L, s"label read returned inside the fold after $waitedMs ms")
+    } finally writer.join(30000L)
+  }
 }

@@ -115,6 +115,10 @@ class IvfClustersPointerSpec extends SparkSuite {
     @volatile var rebuilds = 0
     val churner = new Thread(() => {
       try {
+        // job group (thread-local): lets teardown cancel exactly this
+        // thread's in-flight jobs if a cycle outlives the join window
+        spark.sparkContext.setJobGroup("ptr-ivf-rebuild-churner", "ptr-ivf-rebuild-churner race",
+          interruptOnCancel = true)
         while (!stop) {
           IvfIndex.rebuild(spark, dir, kmeansIters = 1)
           rebuilds += 1
@@ -122,6 +126,7 @@ class IvfClustersPointerSpec extends SparkSuite {
       } catch { case t: Throwable => churnError = Some(t) }
     }, "ptr-ivf-rebuild-churner")
     churner.start()
+    var outlived = false
     try {
       var misses = 0
       var n = 0
@@ -136,9 +141,10 @@ class IvfClustersPointerSpec extends SparkSuite {
       assert(misses == 0, s"stable neighbor dropped from $misses results")
       assert(n >= 10, s"race vacuous: only $n searches")
     } finally {
-      stop = true
-      churner.join(120000)
+      // on a contended host one locked cycle can outlive the first join
+      outlived = quiesce(churner, "ptr-ivf-rebuild-churner") { stop = true }
     }
+    assert(!outlived, "churner thread did not terminate")
     assert(churnError.isEmpty, s"rebuild churner failed: $churnError")
     assert(rebuilds >= 2, s"race vacuous: only $rebuilds rebuilds")
     val top = IvfIndex.search(spark, dir, q0, k = 1, nprobe = 4).collect().head
@@ -203,6 +209,10 @@ class IvfClustersPointerSpec extends SparkSuite {
     var next = 1000L
     val churner = new Thread(() => {
       try {
+        // job group (thread-local): lets teardown cancel exactly this
+        // thread's in-flight jobs if a cycle outlives the join window
+        spark.sparkContext.setJobGroup("ptr-cc-fold-churner", "ptr-cc-fold-churner race",
+          interruptOnCancel = true)
         while (!stop) {
           // each wave merges two fresh clusters so the fold has real
           // merge rows to commit (disjoint from the stable cluster)
@@ -216,6 +226,7 @@ class IvfClustersPointerSpec extends SparkSuite {
       } catch { case t: Throwable => churnError = Some(t) }
     }, "ptr-cc-fold-churner")
     churner.start()
+    var outlived = false
     try {
       var reads = 0
       val t0 = System.nanoTime()
@@ -233,9 +244,10 @@ class IvfClustersPointerSpec extends SparkSuite {
       }
       assert(reads >= 10, s"race vacuous: only $reads reads")
     } finally {
-      stop = true
-      churner.join(120000)
+      // on a contended host one locked cycle can outlive the first join
+      outlived = quiesce(churner, "ptr-cc-fold-churner") { stop = true }
     }
+    assert(!outlived, "churner thread did not terminate")
     assert(churnError.isEmpty, s"fold churner failed: $churnError")
     assert(folds >= 2, s"race vacuous: only $folds folds")
     // settled: every churn wave resolved to one cluster of 4

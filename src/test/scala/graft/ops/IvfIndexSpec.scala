@@ -312,6 +312,10 @@ class IvfIndexSpec extends SparkSuite {
     @volatile var churnError: Option[Throwable] = None
     val churner = new Thread(() => {
       try {
+        // job group (thread-local): lets teardown cancel exactly this
+        // thread's in-flight jobs if a cycle outlives the join window
+        spark.sparkContext.setJobGroup("ivf-churner", "ivf-churner race",
+          interruptOnCancel = true)
         while (!stop) {
           IvfIndex.retract(spark, dir, churnIds)
           IvfIndex.append(churn, dir)
@@ -319,6 +323,7 @@ class IvfIndexSpec extends SparkSuite {
       } catch { case t: Throwable => churnError = Some(t) }
     }, "ivf-churner")
     churner.start()
+    var outlived = false
     try {
       var misses = 0
       for (_ <- 1 to 80) {
@@ -328,9 +333,10 @@ class IvfIndexSpec extends SparkSuite {
       }
       assert(misses == 0, s"stable neighbor dropped from $misses results")
     } finally {
-      stop = true
-      churner.join(120000)
+      // on a contended host one locked cycle can outlive the first join
+      outlived = quiesce(churner, "ivf-churner") { stop = true }
     }
+    assert(!outlived, "churner thread did not terminate")
     assert(churnError.isEmpty, s"churner failed: $churnError")
     // settled state consistent: the stable clone still top-1 at 1.0
     val top = IvfIndex.search(spark, dir, q0, k = 1, nprobe = 8).collect().head
@@ -358,6 +364,10 @@ class IvfIndexSpec extends SparkSuite {
     @volatile var rebuilds = 0
     val churner = new Thread(() => {
       try {
+        // job group (thread-local): lets teardown cancel exactly this
+        // thread's in-flight jobs if a cycle outlives the join window
+        spark.sparkContext.setJobGroup("ivf-rebuild-churner", "ivf-rebuild-churner race",
+          interruptOnCancel = true)
         while (!stop) {
           IvfIndex.rebuild(spark, dir, kmeansIters = 1)
           rebuilds += 1
@@ -365,6 +375,7 @@ class IvfIndexSpec extends SparkSuite {
       } catch { case t: Throwable => churnError = Some(t) }
     }, "ivf-rebuild-churner")
     churner.start()
+    var outlived = false
     try {
       var misses = 0
       var n = 0
@@ -379,9 +390,10 @@ class IvfIndexSpec extends SparkSuite {
       assert(misses == 0, s"stable neighbor dropped from $misses results")
       assert(n >= 10, s"race vacuous: only $n searches")
     } finally {
-      stop = true
-      churner.join(120000)
+      // on a contended host one locked cycle can outlive the first join
+      outlived = quiesce(churner, "ivf-rebuild-churner") { stop = true }
     }
+    assert(!outlived, "churner thread did not terminate")
     assert(churnError.isEmpty, s"rebuild churner failed: $churnError")
     assert(rebuilds >= 2, s"race vacuous: only $rebuilds rebuilds")
     // settled state: the stable clone still top-1 at cosine 1.0, and no

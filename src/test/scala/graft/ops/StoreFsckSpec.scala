@@ -41,6 +41,34 @@ class StoreFsckSpec extends SparkSuite {
     }
   }
 
+  test("store-info reports each layout table by its own partition column") {
+    def info(d: String): Seq[String] = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(out) {
+        graft.cli.Main.run(spark, graft.core.DatasetCatalog(), List("store-info", d))
+      }
+      out.toString("UTF-8").linesIterator.filterNot(_.contains(" = ")).toSeq
+    }
+    // IVF partitions by learned cell: its `cell=` dirs are its partitions
+    val iv = tmp("info_ivf")
+    IvfIndex.build((1L to 40L).map { i =>
+      val r = new scala.util.Random(i); (i, Seq.fill(4)(r.nextDouble() + 0.05))
+    }.toDF("vec_id", "embedding"), iv, nlist = 8)
+    val cells = new java.io.File(s"$iv/assignments").list().count(_.startsWith("cell="))
+    assert(cells == 8)
+    val Seq(a) = info(iv)
+    assert(a.startsWith("assignments: partitions=8 files="), a)
+    assert(!a.endsWith("max_files_per_partition=0"), a)
+    // a components store keeps its labels line and its merge-log extra
+    val cc = tmp("info_cc")
+    IncrementalComponents.addPairs(Seq((1L, 2L)).toDF("doc_a", "doc_b"), cc)
+    IncrementalComponents.addPairs(Seq((2L, 0L)).toDF("doc_a", "doc_b"), cc)
+    val Seq(labels, merges) = info(cc)
+    assert(labels.startsWith("labels: partitions=") &&
+      !labels.startsWith("labels: partitions=0 "), labels)
+    assert(merges.startsWith("merges: partitions=0 files="), merges)
+  }
+
   test("a mis-bucketed row is caught by the deep bucketing check") {
     val d = tmp("bucket")
     IncrementalDedup.exactBatch(
