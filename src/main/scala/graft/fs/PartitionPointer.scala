@@ -142,6 +142,24 @@ object PartitionPointer {
   def versionedPath(root: Path, part: String, v: Int): Path =
     new Path(root, s"$PartsDir/$part/pv=$v")
 
+  /** Whether a swap of the table at `root` commits by pointer: always on
+    * a rename-less scheme, and on any scheme once the table has a
+    * pointer — its readers resolve the pointer, so a rename swap of its
+    * legacy dirs would miss the versioned generations. Retraction,
+    * compaction and the whole-table swap all decide by this one rule. */
+  def swapsByPointer(fs: FileSystem, root: Path): Boolean =
+    !AtomicRename.isAtomic(root) || active(fs, root)
+
+  /** The live dir of partition `part` under `ptr` (the table's pointer,
+    * if it has one): the versioned generation an entry names, else the
+    * legacy hive dir; None behind a tombstone. */
+  def liveDir(root: Path, ptr: Option[Ptr], part: String): Option[Path] =
+    ptr.flatMap(_.entries.get(part)) match {
+      case Some(e) if e.live >= 0 => Some(versionedPath(root, part, e.live))
+      case Some(_)                => None
+      case None                   => Some(new Path(root, part))
+    }
+
   /** Does the pointer-or-legacy view hold any live data? (The
     * pointer-aware twin of the `bp=` listing probe.) */
   def hasLive(fs: FileSystem, root: Path): Boolean =
@@ -356,10 +374,8 @@ object PartitionPointer {
     }
     staged.foreach { pd =>
       val name = pd.getName
-      val dst = ptr.entries.get(name) match {
-        case Some(e) if e.live >= 0 => versionedPath(root, name, e.live)
-        case _                      => new Path(root, name) // legacy/new
-      }
+      // the resurrection above left no staged partition tombstoned
+      val dst = liveDir(root, Some(ptr), name).get
       fs.mkdirs(dst)
       fs.listStatus(pd).foreach { f =>
         require(fs.rename(f.getPath, new Path(dst, f.getPath.getName)),

@@ -1141,27 +1141,25 @@ object IncrementalDedup {
     * as the batch cycles, so no reader/writer ever sees a half-swapped
     * store.
     *
-    * Crash discipline, per partition dir: old → `_compact_trash`, then
-    * compacted tmp → place. Both are renames; the window between them
-    * is recovered on the NEXT compact (sweep restores any partition
-    * present in trash but missing from the store), and both staging
-    * dirs are `_`-prefixed so parquet discovery never reads them.
-    * Returns the number of partition directories rewritten. */
+    * Crash discipline: each table's fragmented partitions are rewritten
+    * through the store layer's one partition swap,
+    * [[Retract.replacePartitions]] — staged under `_retract_tmp`, then
+    * committed by the `_retract_pending` marker and its roll-forward (or
+    * one pointer PUT on a pointer store). A crash before the commit
+    * leaves only staging the next sweep discards; after it, every locked
+    * read and the lock-free readers' heal finish the swap, and the
+    * epoch bump lets seqlock readers see it. Tables with a whole-table
+    * swap of their own (the components labels, the IVF assignments) are
+    * left to their modules. Returns the number of partition directories
+    * rewritten. */
   def compactStore(spark: SparkSession, storeDir: String): Int =
     graft.fs.StoreLock.withLock(storeDir,
       spark.sparkContext.hadoopConfiguration) {
       // every table of the layout compacts under the one root lock (the
-      // split embedding and bm25 stores keep theirs one level down); the
-      // components and IVF stores, whose tables their own modules
-      // maintain, are left alone. Heal any crashed retraction first —
-      // compaction lists live dirs directly.
+      // split embedding and bm25 stores keep theirs one level down)
       val mf = storeManifest(spark, storeDir)
-      StoreLayout.of(mf)
-        .filterNot(l => l.variant == "components" || l.variant == "ivf")
-        .toSeq.flatMap(_.tables).map { t =>
-          Retract.sweep(spark, t.dir(storeDir))
-          compactStoreLocked(spark, storeDir, t, mf)
-        }.sum
+      StoreLayout.of(mf).filter(_.swap.isEmpty).toSeq.flatMap(_.tables)
+        .map(compactStoreLocked(spark, storeDir, _, mf)).sum
     }
 
   /** Rebuild a store under NEW partition geometry, into a fresh
@@ -1233,14 +1231,10 @@ object IncrementalDedup {
       .filterNot(_ => manifest.get("key_encoding").contains("binary"))
     val encMeta: Map[String, String] =
       layout.md5Key.fold(Map.empty[String, String])(_ => Map("key_encoding" -> "binary"))
-    // finish any crashed compaction or retraction swap FIRST: partitions
-    // stranded in `_compact_trash` (or mid-retract) are invisible to the
-    // parquet snapshot below, and a rebuild that missed them would
-    // commit a silently smaller store
-    layout.tables.foreach { t =>
-      sweepCompactTrash(spark, t.dir(srcDir))
-      Retract.sweep(spark, t.dir(srcDir))
-    }
+    // finish any crashed partition swap FIRST: partitions stranded
+    // mid-swap are invisible to the parquet snapshot below, and a
+    // rebuild that missed them would commit a silently smaller store
+    layout.tables.foreach(t => Retract.sweep(spark, t.dir(srcDir)))
     // pointer-aware source reads (rename-less schemes): a rebuild that
     // listed only the legacy dirs would silently drop every versioned
     // generation
@@ -1318,147 +1312,42 @@ object IncrementalDedup {
       manifest: Map[String, String], parts: Seq[Int], threshold: Int): Unit = {
     val root = new org.apache.hadoop.fs.Path(table.dir(storeDir))
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // pointer stores: a touched partition's LIVE files may sit in its
-    // versioned generation rather than the legacy hive dir
     val ptr = graft.fs.PartitionPointer.readPtr(fs, root)
-    val frag = parts.exists { p =>
-      val name = s"bp=$p"
-      val loc: Option[org.apache.hadoop.fs.Path] =
-        ptr.flatMap(_.entries.get(name)) match {
-          case Some(e) if e.live >= 0 =>
-            Some(graft.fs.PartitionPointer.versionedPath(root, name, e.live))
-          case Some(_) => None // tombstone: nothing live to fragment
-          case None    => Some(new org.apache.hadoop.fs.Path(root, name))
-        }
-      loc.exists(d => fs.exists(d) && fs.listStatus(d)
-        .count(_.getPath.getName.endsWith(".parquet")) > threshold)
-    }
-    if (frag) { compactStoreLocked(spark, storeDir, table, manifest); () }
+    if (parts.exists(p => fragmented(fs, root, ptr, threshold)(s"${table.partCol}=$p")))
+      compactStoreLocked(spark, storeDir, table, manifest)
   }
 
-  /** Recovery sweep for a crashed [[compactStoreLocked]] swap: restore
-    * partitions left in `_compact_trash` but never re-placed. The
-    * commit witness is `tmp/<name>` (this sweep runs BEFORE tmp is
-    * deleted): the place step renames tmp/<name> → root/<name>, so
-    * tmp/<name> ABSENT while the partition exists means the place
-    * COMMITTED — the live partition already holds the trash rows
-    * compacted, and merging them back would double every row in it
-    * (duplicate pairs, inflated bucket joins, duplicate exact keepers —
-    * silently). Only when tmp/<name> still EXISTS did the crash land
-    * between the two renames; a live dst then means a later append
-    * recreated the partition with new rows only, and the trash rows —
-    * the store's original data — must MERGE in, not be skipped (a skip
-    * hands them to the delete below: silent store data loss). File
-    * names are task-UUID-unique, so per-file moves cannot collide.
-    * Run by every compact AND by `rebuildStore` before snapshotting —
-    * parquet discovery ignores `_`-prefixed dirs, so a snapshot taken
-    * over un-swept trash would silently drop those partitions' rows. */
-  private[ops] def sweepCompactTrash(spark: SparkSession, storeDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val trash = new Path(root, "_compact_trash")
-    val tmp = new Path(root, "_compact_tmp")
-    def mustRename(src: Path, dst: Path): Unit =
-      require(fs.rename(src, dst), s"rename failed: $src -> $dst")
-    if (fs.exists(trash))
-      fs.listStatus(trash).foreach { s =>
-        val name = s.getPath.getName
-        val dst = new Path(root, name)
-        if (!fs.exists(dst)) mustRename(s.getPath, dst)
-        else if (fs.exists(new Path(tmp, name)))
-          fs.listStatus(s.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .foreach(f => mustRename(f.getPath, new Path(dst, f.getPath.getName)))
-        else fs.delete(s.getPath, true) // place committed: trash is a stale copy
-      }
-    fs.delete(trash, true)
-    fs.delete(tmp, true)
-  }
+  /** Whether partition `name` of the table at `root` holds more than
+    * `threshold` parquet files in its live dir ([[graft.fs.PartitionPointer.liveDir]]
+    * under the table's pointer `ptr`; nothing is live behind a tombstone). */
+  private def fragmented(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path, ptr: Option[graft.fs.PartitionPointer.Ptr],
+      threshold: Int)(name: String): Boolean =
+    graft.fs.PartitionPointer.liveDir(root, ptr, name).exists(d => fs.exists(d) &&
+      fs.listStatus(d).count(_.getPath.getName.endsWith(".parquet")) > threshold)
 
+  /** Rewrite each fragmented partition of `table` (more than one parquet
+    * file live) as one file, through [[Retract.replacePartitions]]. The
+    * rows are read with the table's pinned schema, pruned to those
+    * partitions. Sweeps the table first; returns the partitions
+    * rewritten. */
   private def compactStoreLocked(spark: SparkSession, storeDir: String,
       table: StoreTable, manifest: Map[String, String]): Int = {
-    locally {
-      import org.apache.hadoop.fs.Path
-      val dataDir = table.dir(storeDir)
-      val root = new Path(dataDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val trash = new Path(root, "_compact_trash")
-      val tmp = new Path(root, "_compact_tmp")
-      // Hadoop FileSystem.rename reports most failures as `false`, not
-      // an exception — an unchecked false here would silently abandon
-      // rows to the trash delete below, or nest a directory inside a
-      // live partition on the place step. Fail loudly instead.
-      def mustRename(src: Path, dst: Path): Unit =
-        require(fs.rename(src, dst), s"rename failed: $src -> $dst")
-      sweepCompactTrash(spark, dataDir)
-      // rename-less schemes compact by POINTER FLIP (r18, extending the
-      // r17-verdict-#1 swap-by-pointer from retraction to compaction —
-      // object stores need compaction MOST, every append adds files):
-      // stage the re-coalesced partitions to tmp, then commit them as
-      // fresh versioned generations with one pointer PUT. The atomic
-      // fast path below keeps the trash/place rename swap unchanged.
-      val pointerMode = !graft.fs.AtomicRename.isAtomic(root)
-      if (!fs.exists(root)) 0
-      else {
-        val ptr = graft.fs.PartitionPointer.readPtr(fs, root)
-        // fragmented = live partition dirs holding >1 parquet file, in
-        // EITHER arm: legacy hive dirs not superseded/hidden by a
-        // pointer entry, plus live versioned generations
-        def fragged(p: Path): Boolean =
-          fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) > 1
-        val legacyFrag = fs.listStatus(root)
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("bp="))
-          .filter(s => ptr.forall(pt => !pt.entries.contains(s.getPath.getName)))
-          .filter(s => fragged(s.getPath))
-          .map(_.getPath.getName).toIndexedSeq
-        val versFrag = ptr.toSeq.flatMap(_.entries.toSeq.collect {
-          case (n, e) if e.live >= 0 &&
-              fragged(graft.fs.PartitionPointer.versionedPath(root, n, e.live)) => n
-        })
-        val frag = legacyFrag ++ versFrag
-        if (frag.isEmpty) 0
-        else if (pointerMode) {
-          // pointer-aware read pruned to the fragmented partitions
-          // (partition filters push into both arms); one file per
-          // partition via the same repartition-on-bp discipline
-          val fragVals = frag.map(_.stripPrefix("bp=").toInt)
-          table.readRaw(spark, storeDir, manifest)._1
-            .filter(col("bp").isin(fragVals: _*))
-            .repartition(col("bp"))
-            .write.partitionBy("bp").mode("overwrite").parquet(tmp.toString)
-          graft.fs.PartitionPointer.commitSwap(spark, root, "bp",
-            frag.map(n => s"replace:$n"), tmp,
-            () => Retract.bumpEpochAt(spark, dataDir))
-          frag.length
-        } else {
-          val fragNames = frag.toSet
-          // read ONLY the fragmented partitions (basePath keeps the bp
-          // column)
-          spark.read.schema(table.schema(manifest))
-            .option("basePath", dataDir)
-            .parquet(frag.map(n => s"$dataDir/$n"): _*)
-            .repartition(col("bp"))
-            .write.partitionBy("bp").mode("overwrite").parquet(tmp.toString)
-          fs.mkdirs(trash)
-          fs.listStatus(tmp)
-            .filter(s => s.isDirectory && fragNames.contains(s.getPath.getName))
-            .foreach { s =>
-              val name = s.getPath.getName
-              mustRename(new Path(root, name), new Path(trash, name))
-              mustRename(s.getPath, new Path(root, name))
-              // drop this partition's trash the moment its place commits:
-              // shrinks the crashed-after-place window (where only the
-              // tmp-witness sweep above stands between the stale copy and
-              // a row-doubling merge) to the gap between these two calls
-              fs.delete(new Path(trash, name), true)
-            }
-          fs.delete(trash, true)
-          fs.delete(tmp, true)
-          frag.length
-        }
-      }
-    }
+    val dataDir = table.dir(storeDir)
+    val root = new org.apache.hadoop.fs.Path(dataDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Retract.sweep(spark, dataDir)
+    if (!fs.exists(root)) return 0
+    val ptr = graft.fs.PartitionPointer.readPtr(fs, root)
+    val frag = (fs.listStatus(root).map(_.getPath.getName)
+      .filter(_.startsWith(s"${table.partCol}=")).toSeq ++
+      ptr.toSeq.flatMap(_.entries.keys)).distinct
+      .filter(fragmented(fs, root, ptr, 1))
+    if (frag.nonEmpty)
+      Retract.replacePartitions(spark, dataDir, table.partCol, frag,
+        table.readRaw(spark, storeDir, manifest)._1.filter(col(table.partCol)
+          .isin(frag.map(_.stripPrefix(s"${table.partCol}=").toInt): _*)))
+    frag.length
   }
 
   /** Streaming twin of `embeddingBatch` — near-dup pairs of a vector

@@ -40,13 +40,16 @@ import org.apache.spark.sql.functions._
   * false-positive scans, never correctness (the sidecar's standing
   * contract); `rebuildStore` re-derives it tight.
   *
-  * Crash contract — roll-forward, the family discipline: the
-  * replacement partitions are fully staged under `_retract_tmp`, then a
-  * `_retract_pending` marker (listing each touched partition as
-  * `replace:` or `drop:`) commits the retraction; [[sweep]] — run by
-  * every locked cycle's store read and by the index/label read-heal
-  * paths — finishes the swap after any crash. Before the marker a
-  * crash discards the staging dir and the store is untouched.
+  * Crash contract — roll-forward, the family discipline, for every
+  * partition swap of the store layer: a retraction here and a
+  * compaction (`IncrementalDedup.compactStore`) both commit through
+  * [[replacePartitions]]. The replacement partitions are fully staged
+  * under `_retract_tmp`, then a `_retract_pending` marker (listing each
+  * partition as `replace:` or `drop:`) commits the swap; [[sweep]] — run
+  * by every locked cycle's store read and by the index/label read-heal
+  * paths — finishes it after any crash. Before the marker a crash
+  * discards the staging dir and the table is untouched. A pointer store
+  * commits the same lines with one pointer PUT instead.
   */
 object Retract {
 
@@ -75,15 +78,10 @@ object Retract {
         s"$storeDir has no readable _graft_store.json manifest — not a " +
           "graft store")
       val ids = docIds.distinct
-      def del(t: StoreTable, prefilter: Option[Column]): Long = {
-        // finish any crashed compaction swap first: rows stranded in
-        // `_compact_trash` are invisible to the discovery scan, and a
-        // retired row hiding there would resurface on the next compact
-        IncrementalDedup.sweepCompactTrash(spark, t.dir(storeDir))
+      def del(t: StoreTable, prefilter: Option[Column]): Long =
         rewriteTouched(spark, t.dir(storeDir), t.partCol,
           t.readRaw(spark, storeDir, manifest), semiOn(spark, ids, t.idCol),
           antiOn(spark, ids, t.idCol), prefilter = prefilter)
-      }
       // bucket-partitioned tables with a doc→bp index (r16): the index
       // names the exact candidate bps for the batch — the discovery
       // scan prunes to them (O(touched), no full id-column pass) — and
@@ -175,7 +173,7 @@ object Retract {
     * schema ([[StoreTable.readRaw]]; IVF infers its own). `prefilter`
     * (partition-column-only) narrows the discovery scan for
     * id-hash-partitioned stores. Caller holds the store lock; the swap
-    * is the marker roll-forward documented on the object. */
+    * is [[replacePartitions]]. */
   private[ops] def rewriteTouched(
       spark: SparkSession,
       dataDir: String,
@@ -185,18 +183,7 @@ object Retract {
       transform: DataFrame => DataFrame,
       sortCols: Seq[String] = Nil,
       prefilter: Option[Column] = None): Long = {
-    import org.apache.hadoop.fs.Path
     sweep(spark, dataDir)
-    val root = new Path(dataDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // rename-less schemes commit by POINTER FLIP instead of the marker
-    // + rename roll-forward (r17 verdict #1, upgrading the r16 loud
-    // refusal to real support): staging is identical, but each staged
-    // partition moves to a fresh unreferenced versioned path and ONE
-    // small-file PUT of the partition->version map commits the whole
-    // swap — see graft.fs.PartitionPointer. Every store's readers
-    // resolve the pointer, so every caller commits this way.
-    val pointerMode = !graft.fs.AtomicRename.isAtomic(root)
     val (df0, hasData) = read
     if (!hasData) return 0L
     val scan = prefilter.map(df0.filter).getOrElse(df0)
@@ -204,42 +191,60 @@ object Retract {
     val hits = matcher(scan)
       .groupBy(partCol).agg(count(lit(1)).as("__n")).collect()
     if (hits.isEmpty) return 0L
-    val affected = hits.map(_.getLong(1)).sum
     val touchedVals: Seq[Any] = hits.map(_.get(0)).toIndexedSeq
-    val touchedNames = touchedVals.map(v => s"$partCol=$v")
-    // stage: touched partitions only (partition-pruned read), transformed
-    val replaced = transform(df0.filter(col(partCol).isin(touchedVals: _*)))
+    // touched partitions only (partition-pruned read), transformed
+    replacePartitions(spark, dataDir, partCol, touchedVals.map(v => s"$partCol=$v"),
+      transform(df0.filter(col(partCol).isin(touchedVals: _*))), sortCols)
+    hits.map(_.getLong(1)).sum
+  }
+
+  /** The one partition swap of the store layer: partitions `names`
+    * (`<partCol>=<v>`) of the table at `dataDir` take the content of
+    * `rows`, which carry `partCol` and hold rows of those partitions
+    * only. The rows are staged under `_retract_tmp`, one dir per
+    * partition; a named partition that stages nothing is dropped. A
+    * pointer store ([[graft.fs.PartitionPointer.swapsByPointer]]) commits
+    * the swap with one pointer PUT and an epoch bump; any other writes
+    * the `_retract_pending` marker and rolls it forward. Caller holds
+    * the store lock and has run [[sweep]] (a marker still pending would
+    * be overwritten). */
+  private[ops] def replacePartitions(spark: SparkSession, dataDir: String,
+      partCol: String, names: Seq[String], rows: DataFrame,
+      sortCols: Seq[String] = Nil): Unit = {
+    import org.apache.hadoop.fs.Path
+    val root = new Path(dataDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(root, RetractTmp)
     fs.delete(tmp, true)
-    val repart = replaced.repartition(col(partCol))
+    val repart = rows.repartition(col(partCol))
     (if (sortCols.nonEmpty) repart.sortWithinPartitions(sortCols.map(col): _*)
      else repart)
       .write.partitionBy(partCol).mode("overwrite").parquet(tmp.toString)
-    // commit point: a partition whose rows ALL matched stages no tmp dir
-    // and is recorded as drop: — the sweep can then distinguish
-    // "already placed" from "must delete" after any crash
-    val lines = touchedNames.map { n =>
+    // commit point: a partition that stages no tmp dir is recorded as
+    // drop: — the sweep can then distinguish "already placed" from
+    // "must delete" after any crash
+    val lines = names.map { n =>
       if (fs.exists(new Path(tmp, n))) s"replace:$n" else s"drop:$n"
     }
-    if (pointerMode)
+    if (graft.fs.PartitionPointer.swapsByPointer(fs, root))
       graft.fs.PartitionPointer.commitSwap(spark, root, partCol, lines,
         tmp, () => bumpEpoch(fs, root))
     else {
       writeMarker(fs, root, lines)
       finish(fs, root, lines)
     }
-    affected
   }
 
-  /** Heal a crashed retraction: marker present → finish the swap
-    * (roll forward); marker absent → any staging dir is a pre-commit
-    * crash, discard it. Run by every locked store read (private[graft]:
-    * the soak's pointer-GC cadence probe also times it, under its own
-    * lock hold). */
+  /** Heal a crashed partition swap of the table at `dataDir`: marker
+    * present → finish the swap (roll forward); marker absent → any
+    * staging dir is a pre-commit crash, discard it. Run by every locked
+    * store read (private[graft]: the soak's pointer-GC cadence probe
+    * also times it, under its own lock hold). */
   private[graft] def sweep(spark: SparkSession, dataDir: String): Unit = {
     import org.apache.hadoop.fs.Path
     val root = new Path(dataDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    sweepCompactTrash(fs, root)
     val marker = new Path(root, RetractPending)
     if (fs.exists(marker)) {
       val in = fs.open(marker)
@@ -251,16 +256,60 @@ object Retract {
       fs.delete(new Path(root, RetractTmp), true)
       // fenced-out corpses can only outlive their marker if the final
       // marker delete itself crashed mid-metadata-op — hygiene, and the
-      // underscore prefix keeps them invisible to readers either way
+      // underscore prefix keeps them invisible to readers either way;
+      // so is the staging of a compaction that crashed before it
+      // trashed a partition (see sweepCompactTrash)
       if (fs.exists(root))
-        fs.listStatus(root)
-          .filter(_.getPath.getName.startsWith(RetractOldPrefix))
-          .foreach(s => fs.delete(s.getPath, true))
+        fs.listStatus(root).map(_.getPath)
+          .filter(p => p.getName.startsWith(RetractOldPrefix) || p.getName == CompactTmp)
+          .foreach(fs.delete(_, true))
     }
     // pointer-store GC (rename-less schemes): collect grace-expired
     // previous generations, orphan staged versions, dead tombstones —
     // one exists() probe on stores without a pointer
     graft.fs.PartitionPointer.sweepGarbage(spark, dataDir)
+  }
+
+  private val CompactTrash = "_compact_trash"
+  private val CompactTmp = "_compact_tmp"
+
+  /** Heal a compaction that crashed under the trash/place rename swap
+    * compaction ran before it committed through [[replacePartitions]]:
+    * no current code writes `_compact_trash`, so this heals only states
+    * an older writer left, at the cost of one existence probe. It
+    * restores partitions left in `_compact_trash` but never re-placed.
+    * The commit witness is `_compact_tmp/<name>`: the place step renamed
+    * it to `<name>`, so tmp/<name> ABSENT while the partition exists
+    * means the place COMMITTED — the live partition already holds the
+    * trash rows compacted, and merging them back would double every
+    * row. Only when tmp/<name> still EXISTS did the crash land between
+    * the two renames; a live dst then means a later append recreated
+    * the partition with new rows only, and the trash rows — the store's
+    * original data — must MERGE in. File names are task-UUID-unique, so
+    * per-file moves cannot collide. Parquet discovery ignores
+    * `_`-prefixed dirs, so a read or a takedown discovery over un-swept
+    * trash would miss those partitions' rows. */
+  private def sweepCompactTrash(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Unit = {
+    import org.apache.hadoop.fs.Path
+    val trash = new Path(root, CompactTrash)
+    if (!fs.exists(trash)) return
+    val tmp = new Path(root, CompactTmp)
+    def mustRename(src: Path, dst: Path): Unit =
+      require(fs.rename(src, dst), s"rename failed: $src -> $dst")
+    fs.listStatus(trash).foreach { s =>
+      val name = s.getPath.getName
+      val dst = new Path(root, name)
+      if (!fs.exists(dst)) mustRename(s.getPath, dst)
+      else if (fs.exists(new Path(tmp, name)))
+        fs.listStatus(s.getPath)
+          .filter(_.getPath.getName.endsWith(".parquet"))
+          .foreach(f => mustRename(f.getPath, new Path(dst, f.getPath.getName)))
+      else fs.delete(s.getPath, true) // place committed: trash is a stale copy
+    }
+    fs.delete(trash, true)
+    fs.delete(tmp, true)
   }
 
   /** Quick marker probe for lock-free read paths ([[StoreLayout.heal]]):
@@ -467,24 +516,21 @@ object Retract {
     fs.delete(tmp, true)
   }
 
-  /** Marker write — temp + rename (the manifest discipline): a crash
-    * mid-write must leave either no marker (pre-commit) or a complete
-    * one (roll forward), never a truncated line list. */
+  /** Marker write — temp + rename (the manifest discipline; the marker
+    * is written only on rename-atomic schemes): a crash mid-write must
+    * leave either no marker (pre-commit) or a complete one (roll
+    * forward), never a truncated line list. A crashed writer's orphan
+    * temp goes first. */
   private def writeMarker(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       lines: Seq[String]): Unit = {
-    import org.apache.hadoop.fs.Path
     fs.listStatus(root)
       .filter(_.getPath.getName.startsWith(s"$RetractPending.tmp-"))
       .foreach(s => fs.delete(s.getPath, false))
-    val tmp = new Path(root,
-      s"$RetractPending.tmp-${ProcessHandle.current().pid()}")
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    require(fs.rename(tmp, new Path(root, RetractPending)),
-      s"retract marker rename failed under $root")
+    graft.fs.AtomicRename.publishSmallFile(fs,
+      new org.apache.hadoop.fs.Path(root, RetractPending),
+      lines.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      s".tmp-${ProcessHandle.current().pid()}")
   }
 }

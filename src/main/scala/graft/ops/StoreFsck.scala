@@ -228,15 +228,24 @@ object StoreFsck {
           ("_retract_arm", "a retraction arm that crashed mid-flight " +
             "(stats may be stale until the read-heal runs)"),
           ("_compact_trash", "a crashed compaction's displaced rows " +
-            "(swept by the next locked cycle — rows are NOT lost)"),
-          ("_fold_tmp", "a pointer-mode fold's staging (pre-commit " +
-            "crash — the committed state is unchanged; swept by the " +
-            "next locked cycle)"))
+            "(swept by the next locked cycle — rows are NOT lost)"))
           .foreach { case (m, why) =>
             if (fs.exists(new Path(p, m))) out += warn(Kind.Markers,
               s"${abs(rel)}/$m present: $why")
           }
       }
+    }
+    // the whole-table swap's marker and staging dirs, named by the layout
+    layout.get.swap.foreach { sw =>
+      ((sw.marker, "a committed whole-table swap awaiting its " +
+        "roll-forward (the next locked read finishes it)") +:
+        Seq(sw.tmp, sw.pointerTmp).distinct.map((_, "whole-table swap " +
+          "staging (a pre-commit crash leaves the committed state " +
+          "unchanged; swept by the next locked cycle)")))
+        .foreach { case (m, why) =>
+          if (fs.exists(new Path(root, m))) out += warn(Kind.Markers,
+            s"$dir/$m present: $why")
+        }
     }
     // store-root lock + tmp corpses
     graft.fs.StoreLock.holder(dir,
@@ -528,7 +537,6 @@ object StoreFsck {
     var refDone = false
     def sweepAll(): String = {
       if (!swept) {
-        dataDirs.foreach(IncrementalDedup.sweepCompactTrash(spark, _))
         // the read-heal's locked body: every swap rolled forward, and a
         // crashed arm's idempotent tail (bm25: the stats recompute)
         layout.fold(Retract.sweep(spark, dir))(_.healLocked(spark, dir, () =>

@@ -59,8 +59,7 @@ private[ops] final case class TableSwap(
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = table.dir(storeDir)
     val tRoot = new Path(dir)
-    val pointer = !graft.fs.AtomicRename.isAtomic(root) ||
-      graft.fs.PartitionPointer.active(fs, tRoot)
+    val pointer = graft.fs.PartitionPointer.swapsByPointer(fs, tRoot)
     fs.delete(new Path(root, if (pointer) pointerTmp else tmp), true)
     val out = write(n => staged(root, pointer, n).toString)
     if (pointer) {

@@ -207,6 +207,20 @@ class Bm25IndexSpec extends SparkSuite {
     assert(Bm25Index.search(spark, d, zebra, k = 5).isEmpty)
   }
 
+  test("a compaction moves the postings swap epoch: seqlock readers see it") {
+    val d = dir("compactepoch")
+    val corpus = docs.orderBy("doc_id").limit(30).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    // three batches into one partition: three files in each table
+    corpus.grouped(10).foreach(b => Bm25Index.indexBatch(b.toDF("doc_id", "text"), d, storeParts = 1))
+    val before = rows(Bm25Index.search(spark, d, queries, k = 5))
+    val e0 = Retract.epoch(spark, s"$d/postings")
+    assert(IncrementalDedup.compactStore(spark, d) == 2)
+    assert(Retract.epoch(spark, s"$d/postings") > e0,
+      "a compaction swapped postings without moving the seqlock epoch")
+    assert(rows(Bm25Index.search(spark, d, queries, k = 5)) == before)
+  }
+
   test("a lost stats write after a retract heals on ANY retry (r14 ADVICE)") {
     val d = dir("statsdrift")
     Bm25Index.indexBatch(docs, d)

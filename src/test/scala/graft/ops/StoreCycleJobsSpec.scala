@@ -119,4 +119,28 @@ class StoreCycleJobsSpec extends SparkSuite {
     assert(removed == 5L)
     assert(jobs.size == retractJobs, jobs.mkString("\n"))
   }
+
+  /** `compactStore` of a store fragmented by three batches: (Spark jobs,
+    * partitions rewritten) of the first compaction, then of a second one
+    * that finds nothing left to rewrite. The fragmented partitions are
+    * read with the table's pinned schema and rewritten in one write. */
+  private def compactJobs(name: String, batch: (DataFrame, String) => Any,
+      size: Int): Seq[(Int, Int)] = {
+    val dir = Files.createTempDirectory(s"cyclejobs_$name").toString + "/store"
+    (0 until 3).foreach(b =>
+      batch((1 to size).map(i => (1000L * b + i, s"batch $b doc $i ${text(i)}"))
+        .toDF("doc_id", "text"), dir))
+    Seq.fill(2)(jobsOf(IncrementalDedup.compactStore(spark, dir)))
+      .map { case (n, jobs) => (jobs.size, n) }
+  }
+
+  test("compactStore: an 8-part exact store fragmented by three batches compacts in 2 Spark jobs, then 0") {
+    assert(compactJobs("compact_exact",
+      (b, d) => IncrementalDedup.exactBatch(b, d, storeParts = 8), 40) == Seq((2, 8), (0, 0)))
+  }
+
+  test("compactStore: an 8-part bm25 index fragmented by three batches compacts in 4 Spark jobs") {
+    assert(compactJobs("compact_bm25",
+      (b, d) => Bm25Index.indexBatch(b, d, storeParts = 8), 20).head == (4, 16))
+  }
 }

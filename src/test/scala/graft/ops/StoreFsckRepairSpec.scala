@@ -116,6 +116,51 @@ class StoreFsckRepairSpec extends SparkSuite {
     assert(!Retract.armBusy(spark, d))
   }
 
+  test("an unfinished whole-table swap is found by fsck and finished by repair (IVF, components)") {
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    def swapFindings(d: String) =
+      StoreFsck.fsck(spark, d).filter(_.check == "markers").map(_.detail)
+    def repairs(d: String) = StoreFsck.repair(spark, d)
+      .exists(a => a.finding.check == "markers" && a.applied)
+    // IVF: a recluster's new generation staged in full, its marker up
+    val iv = tmp("ivfswap")
+    IvfIndex.build((1L to 40L).map { i =>
+      val r = new scala.util.Random(i); (i, Seq.fill(4)(r.nextDouble() + 0.05))
+    }.toDF("vec_id", "embedding"), iv, nlist = 8)
+    val ivRows = spark.read.parquet(s"$iv/assignments").count()
+    val fs = new Path(iv).getFileSystem(conf)
+    Seq("assignments", "centroids").foreach(t => assert(FileUtil.copy(fs,
+      new Path(iv, t), fs, new Path(iv, s"_rebuild_tmp/$t"), false, conf)))
+    fs.create(new Path(iv, "_rebuild_ready"), true).close()
+    val ivf = swapFindings(iv)
+    assert(ivf.exists(_.contains("/_rebuild_ready present")) &&
+      ivf.exists(_.contains("/_rebuild_tmp present")), ivf)
+    assert(repairs(iv))
+    cleanBoth(iv)
+    assert(!fs.exists(new Path(iv, "_rebuild_tmp")))
+    assert(spark.read.parquet(s"$iv/assignments").count() == ivRows)
+    // components: a fold's folded labels staged, its marker up
+    val cc = tmp("ccswap")
+    IncrementalComponents.addPairs(Seq((1L, 2L)).toDF("doc_a", "doc_b"), cc)
+    IncrementalComponents.addPairs(Seq((2L, 0L)).toDF("doc_a", "doc_b"), cc)
+    def labels() = IncrementalComponents.labels(spark, cc).collect()
+      .map(r => r.getAs[Long]("v") -> r.getAs[Long]("component")).toMap
+    val want = labels()
+    spark.read.schema("v BIGINT, component BIGINT, bp INT").parquet(s"$cc/labels")
+      .withColumn("component", when(col("component") === 1L, 0L)
+        .otherwise(col("component")))
+      .repartition(col("bp")).write.partitionBy("bp").parquet(s"$cc/_compact_tmp")
+    fs.create(new Path(cc, "_compact_ready"), true).close()
+    val ccf = swapFindings(cc)
+    assert(ccf.exists(_.contains("/_compact_ready present")) &&
+      ccf.exists(_.contains("/_compact_tmp present")), ccf)
+    assert(repairs(cc))
+    cleanBoth(cc)
+    assert(!fs.exists(new Path(cc, "merges")))
+    assert(labels() == want)
+  }
+
   test("double-committed keeper and mis-bucketed rows are refused with reasons") {
     val d = tmp("refuse")
     IncrementalDedup.exactBatch(
